@@ -56,8 +56,8 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine.  Overflow bound: per-nation scaled revenue reaches
     ~9e15 of int64's 9.2e18 at the 100 TB point (SF ~100) — 3 orders of
     headroom; the decimal `dsum` path remains the swap-in above that.
-    Oracle changed round 6 → re-queued for driver certification via
-    registry._ORACLE_CHANGED.
+    Oracle changed round 6; the driver has since recorded its hash match
+    (an oracle change requeues through registry._RECERT_ROUND).
     """
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")

@@ -42,6 +42,15 @@ def test_settle_bounded_by_max_wait(monkeypatch):
     assert ctx["settle_threshold"] == -1
 
 
+def test_settle_default_scales_with_nproc(monkeypatch):
+    """Unset, the load threshold is 0.5 x nproc: the busy rule
+    perfbench/run.py uses, so a 4-vCPU host settles below 2.0."""
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_MAX_LOAD", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_SETTLE_S", "0")
+    monkeypatch.setattr(bench.os, "cpu_count", lambda: 4)
+    assert bench._settle_host()["settle_threshold"] == 2.0
+
+
 def test_bench_module_reports_settle_in_schema():
     """The output JSON contract includes the settle stamp (keys only —
     running the full bench is the driver's job, not the suite's)."""

@@ -2,7 +2,7 @@
 
 The driver certifies only the FIRST 50 registry entries per round, so the
 ordering logic in secdb_spark/registry.py is itself load-bearing: a drifted
-certified-set or a displaced slate entry silently starves an operator of its
+certified set or a misordered queue silently starves an operator of its
 CORRECTNESS row.  These tests pin the contract.
 """
 
@@ -59,18 +59,6 @@ def test_exact_certified_is_hash_match_subset():
         assert n not in registry._DRIVER_EXACT_CERTIFIED
 
 
-def test_upgraded_ops_requeue_for_certification():
-    """An op holding only a rows-only green that NOW registers an oracle
-    is unsettled — it must re-enter the first-50 window (round-6's
-    dedup_simhash / sample_* / embed_kmeans upgrades depend on this)."""
-    order = list(registry.all_queries())
-    for name in ("dedup_simhash", "sample_fraction", "sample_stratified",
-                 "embed_kmeans"):
-        if name in registry._ORACLES and name not in registry._DRIVER_EXACT_CERTIFIED:
-            assert not registry.certified_at_current_class(name)
-            assert order.index(name) < 50, f"{name} outside the driver window"
-
-
 def test_first_50_are_all_unsettled():
     """No settled op may occupy one of the driver's 50 certification
     slots while any registered op is still unsettled at its class."""
@@ -80,19 +68,6 @@ def test_first_50_are_all_unsettled():
     assert all(
         not registry.certified_at_current_class(n) for n in order[:n_slots]
     )
-
-
-def test_slate_ops_hold_their_slots():
-    """Unsettled slate ops must occupy the earliest slots, in slate
-    order, so later-registered extras can never displace a SURVEY §2 op
-    out of the first-50 window."""
-    order = list(registry.all_queries())
-    slate_pending = [
-        n for n in registry._CERT_SLATE
-        if not registry.certified_at_current_class(n)
-        and not registry._recert_pending(n)  # recert bucket, not slate (r14)
-    ]
-    assert order[: len(slate_pending)] == slate_pending
 
 
 def test_no_complex_typed_columns_in_any_registered_output(spark):
@@ -141,142 +116,6 @@ def test_every_query_key_is_registered_and_oracles_subset():
     assert shared == list(ors)
 
 
-def test_oracle_changed_ops_requeue_behind_fresh_coverage():
-    """An op in _ORACLE_CHANGED whose only green records predate the
-    change is unsettled (the old record certified the OLD oracle), but
-    it must queue BEHIND every never-certified op: recert housekeeping
-    may not displace first-time coverage from the 50-slot window."""
-    order = list(registry.all_queries())
-    fresh_pending = [
-        n for n in order
-        if not registry.certified_at_current_class(n)
-        and not registry._recert_pending(n)
-    ]
-    slated = set(registry._CERT_SLATE + registry._CERT_SLATE_R6 + registry._CERT_SLATE_R7)
-    for name in registry._ORACLE_CHANGED:
-        if not registry._recert_pending(name):
-            continue  # post-change green record landed; entry is stale
-        assert not registry.certified_at_current_class(name)
-        if name in slated:
-            # a slate pin supersedes the behind-everything rule: the
-            # recert holds a GUARANTEED slot (last in its slate) and
-            # post-pin registrations queue for the following round
-            continue
-        idx = order.index(name)
-        assert all(order.index(f) < idx for f in fresh_pending), (
-            f"{name} (recert) queued ahead of never-certified ops"
-        )
-
-
-def test_oracle_changed_entries_expire_on_post_change_green():
-    """_recert_pending consults only CORRECTNESS files from the round of
-    the change onward — a pre-change green must NOT settle the op, and a
-    post-change green must."""
-    for name, rnd in registry._ORACLE_CHANGED.items():
-        import json
-        from pathlib import Path
-
-        root = Path(registry.__file__).resolve().parent.parent
-        post = False
-        for f in sorted(root.glob("CORRECTNESS_r*.json")):
-            file_rnd = int(f.stem.split("_r")[1])
-            rows = json.loads(f.read_text())
-            row = rows.get(name) if isinstance(rows, dict) else None
-            green = isinstance(row, dict) and bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            if green and file_rnd >= rnd:
-                post = True
-        assert registry._recert_pending(name) == (not post)
-
-
-def test_round7_slate_holds_its_window():
-    """The round-7 slate (50 ops incl. the join_inner recert, pinned
-    LAST) must occupy queue positions immediately after any unsettled
-    round-6 slate entries — ops registered after the freeze queue for
-    round 8 and can never displace the recert out of round 7's
-    window."""
-    order = list(registry.all_queries())
-    # recert-pending ops re-enter via the recert bucket, never their
-    # historical slate slot (r14) — exclude them from the expectation
-    r6_pending = [
-        n for n in registry._CERT_SLATE_R6
-        if not registry.certified_at_current_class(n)
-        and not registry._recert_pending(n)
-    ]
-    r7_pending = [
-        n for n in registry._CERT_SLATE_R7
-        if not registry.certified_at_current_class(n)
-        and not registry._recert_pending(n)
-    ]
-    start = len(r6_pending)
-    assert order[start : start + len(r7_pending)] == r7_pending
-    if r7_pending:
-        assert r7_pending[-1] == "join_inner" or "join_inner" not in r7_pending
-
-
-def test_round8_slate_holds_its_window():
-    """The round-8 slate (49 ops: the §2.AD stragglers, the round-7
-    batches, and the rows-only→exact upgrades) must occupy queue
-    positions immediately after any unsettled round-6/7 slate entries —
-    ops registered after the round-7 freeze queue for round 9 and can
-    never displace these."""
-    order = list(registry.all_queries())
-    earlier_pending = [
-        n for n in (
-            registry._CERT_SLATE
-            + registry._CERT_SLATE_R6
-            + registry._CERT_SLATE_R7
-        )
-        if not registry.certified_at_current_class(n)
-        and not registry._recert_pending(n)
-    ]
-    r8_pending = [
-        n for n in registry._CERT_SLATE_R8
-        if not registry.certified_at_current_class(n)
-        and not registry._recert_pending(n)  # recert bucket, not slate (r14)
-    ]
-    start = len(earlier_pending)
-    assert order[start : start + len(r8_pending)] == r8_pending
-    # the slate leaves headroom inside a 50-slot driver window
-    assert len(registry._CERT_SLATE_R8) <= 50
-
-
-def test_every_pending_op_is_slate_addressed():
-    """Round-8 invariant: the whole certification backlog holds numbered
-    slots (R8/R9/R10/R11 slates) — a newly registered op that is not
-    appended to the current round's slate fails here, so the backlog can
-    only drain (round-8 judge directive #4)."""
-    slated = set(
-        registry._CERT_SLATE
-        + registry._CERT_SLATE_R6
-        + registry._CERT_SLATE_R7
-        + registry._CERT_SLATE_R8
-        + registry._CERT_SLATE_R9
-        + registry._CERT_SLATE_R10
-        + registry._CERT_SLATE_R11
-        + registry._CERT_SLATE_R12
-        + registry._CERT_SLATE_R12B
-    )
-    unslated = [
-        n for n in registry.all_queries()
-        if not registry.certified_at_current_class(n)
-        and n not in slated
-        # recert candidates (_ORACLE_CHANGED / _IMPL_CHANGED) are
-        # queue-addressed by their changed-round bookkeeping, not by
-        # slates: they already HOLD a green record and re-enter the
-        # window via the recert bucket, whose fit is pinned by
-        # test_impl_changed_ops_requeue_until_post_change_green.
-        and not registry._recert_pending(n)
-    ]
-    assert not unslated, (
-        f"pending ops without a slate slot (append to the CURRENT round's "
-        f"widening slate — _CERT_SLATE_R12B as of round 12): {unslated}"
-    )
-
-
 def _survey_s2_op_ids() -> set[str]:
     """Parse SURVEY §2's op-id inventory: every backticked token in the
     first column of a §2 table row, expanding the two grouped-row forms —
@@ -314,16 +153,6 @@ def test_survey_s2_equals_registry():
     assert reg - survey == set(), (
         f"registered ops missing a SURVEY §2 row: {sorted(reg - survey)}"
     )
-
-
-def test_r11_slate_within_driver_window():
-    assert len(registry._CERT_SLATE_R11) <= 50
-
-
-def test_r12_slate_within_driver_window():
-    assert len(registry._CERT_SLATE_R12) <= 50
-    # round-12 widening cap: backlog (36) + widening must pend <= 50
-    assert len(registry._CERT_SLATE_R12B) <= 14
 
 
 def test_never_certified_ops_precede_every_recert_candidate():
@@ -393,45 +222,61 @@ def test_no_uninterpolated_placeholders_in_oracles():
     )
 
 
-def test_impl_changed_ops_requeue_until_post_change_green():
-    """Round-14 invariant (r13 judge directive #1): an op whose SPARK
-    implementation was restructured after its last green driver record
-    (_IMPL_CHANGED) is unsettled until a CORRECTNESS record from the
-    change round or later is green — the exact triple for oracle-backed
-    ops, err == "no_oracle" (a clean rows-only run) for R/D-class ops.
-    While the registry has no never-certified backlog, every pending
-    recert must land inside the driver's 50-slot window."""
-    import json
-    from pathlib import Path
+def test_settled_registry_keeps_registration_order():
+    """With every op certified at its class (the state the CORRECTNESS
+    files record), the order the driver sees is plain registration
+    order."""
+    assert list(registry.all_queries()) == list(registry._QUERIES)
+    assert list(registry.all_oracles()) == list(registry._ORACLES)
 
-    registry.all_queries()  # ensure operators (and _ORACLES) are loaded
-    root = Path(registry.__file__).resolve().parent.parent
-    records = []
-    for f in sorted(root.glob("CORRECTNESS_r*.json")):
-        records.append((int(f.stem.split("_r")[1]), json.loads(f.read_text())))
-    for name, rnd in registry._IMPL_CHANGED.items():
-        assert name in registry._QUERIES, f"_IMPL_CHANGED entry {name} not registered"
-        post = False
-        for file_rnd, rows in records:
-            row = rows.get(name) if isinstance(rows, dict) else None
-            green = isinstance(row, dict) and bool(
-                (row.get("rows_match") and row.get("schema_match") and row.get("hash_match"))
-                or row.get("err") == "no_oracle"
-            )
-            if green and file_rnd >= rnd:
-                post = True
-        assert registry._recert_pending(name) == (not post), name
-        assert registry.certified_at_current_class(name) == post, name
 
-    order = list(registry.all_queries())
-    never = [
-        n for n in order
-        if n not in registry._DRIVER_CERTIFIED
-        and not registry.certified_at_current_class(n)
+def test_impl_changed_ops_requeue_until_post_change_green(monkeypatch):
+    """Synthetic certification state, since the real one is settled: an op
+    changed after its green record (_RECERT_ROUND) stays unsettled until a
+    record from the change round or later is green, queues behind
+    never-certified ops, and every unsettled op lands in the driver's
+    50-slot window even when registered after 60 settled ops."""
+    registry.all_queries()  # load the operators before swapping state
+    exact = {"rows_match": True, "schema_match": True, "hash_match": True}
+    settled = [f"settled_{i}" for i in range(60)]
+    # unsettled ops registered last, never-certified ones after the recerts
+    names = settled + ["recert_rows", "recert", "upgraded", "new_rows", "new_exact"]
+    oracles = {n: "SELECT 1" for n in names if n not in ("recert_rows", "new_rows")}
+    records = [
+        (1, {**{n: exact for n in settled}, "recert": exact,
+             "upgraded": {"err": "no_oracle"}}),
+        (2, {"recert_rows": {"err": "no_oracle"}}),
     ]
-    if not never:
-        pending = [n for n in order if registry._recert_pending(n)]
-        outside = [n for n in pending if n not in order[:50]]
-        assert not outside, (
-            f"pending recerts outside the driver's 50-slot window: {outside}"
-        )
+    monkeypatch.setattr(registry, "_QUERIES", {n: None for n in names})
+    monkeypatch.setattr(registry, "_ORACLES", oracles)
+    monkeypatch.setattr(registry, "_RECERT_ROUND", {"recert": 3, "recert_rows": 3})
+
+    def use(recs):
+        monkeypatch.setattr(registry, "_CORRECTNESS", recs)
+        green, exact_green = registry._certified_sets(recs)
+        monkeypatch.setattr(registry, "_DRIVER_CERTIFIED", green)
+        monkeypatch.setattr(registry, "_DRIVER_EXACT_CERTIFIED", exact_green)
+        return list(registry.all_queries())
+
+    order = use(records)
+    pending = ["new_exact", "new_rows", "recert_rows", "recert", "upgraded"]
+    assert order == pending + settled
+    assert list(registry.all_oracles()) == [
+        n for n in order if n in oracles
+    ]
+    assert registry._recert_pending("recert")  # only a pre-change green
+    assert not registry._recert_pending("upgraded")  # class, not round
+    assert not any(registry.certified_at_current_class(n) for n in pending)
+    assert set(pending) <= set(order[:50])
+
+    # a green in the change round settles each recert at its own class
+    order = use(records + [(3, {"recert": exact, "recert_rows": {"err": "no_oracle"}})])
+    assert order == ["new_exact", "new_rows", "upgraded"] + settled + [
+        "recert_rows", "recert"
+    ]
+    assert registry.certified_at_current_class("recert")
+    assert registry.certified_at_current_class("recert_rows")
+    # a red row in the change round does not
+    order = use(records + [(3, {"recert": {**exact, "hash_match": False}})])
+    assert registry._recert_pending("recert")
+    assert order.index("recert") < 50

@@ -35,7 +35,7 @@ BASELINE_Q = {
 }
 
 
-def cpu_stamp() -> str:
+def cpu_stamp(cpus: str) -> str:
     t0 = time.time()
     hashlib.sha256(b"\0" * (200 * 1024 * 1024)).hexdigest()
     t_sha = time.time() - t0
@@ -46,7 +46,7 @@ def cpu_stamp() -> str:
     _ = a @ a
     t_mm = time.time() - t0
     return (
-        f"local[32], 32 vCPU; sha256 200MB {t_sha:.3f}s, "
+        f"local[{cpus}], {os.cpu_count()} vCPU; sha256 200MB {t_sha:.3f}s, "
         f"numpy 2000x2000 matmul {t_mm:.3f}s "
         "(single-session microbench for cross-round host comparison)"
     )
@@ -56,6 +56,7 @@ def main() -> int:
     rnd = sys.argv[1]
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     cooldown = int(sys.argv[3]) if len(sys.argv) > 3 else 120
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     runs = []
     for i in range(n_runs):
         if i:
@@ -64,7 +65,7 @@ def main() -> int:
             load = fh.read().split()[0]
         env = dict(os.environ)
         env.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        env.setdefault("SPARK_GRAFT_CPUS", "32")
+        env["SPARK_GRAFT_CPUS"] = cpus
         out = subprocess.run(
             [sys.executable, "bench.py"],
             capture_output=True,
@@ -72,10 +73,15 @@ def main() -> int:
             env=env,
             cwd="/root/repo",
         )
-        line = [
+        lines = [
             l for l in out.stdout.splitlines() if l.startswith('{"metric"')
-        ][-1]
-        payload = json.loads(line)
+        ]
+        if not lines:
+            raise RuntimeError(
+                f"bench.py run {i + 1} printed no JSON line "
+                f"(exit {out.returncode}); stderr tail:\n{out.stderr[-4000:]}"
+            )
+        payload = json.loads(lines[-1])
         payload["loadavg_before"] = load
         runs.append(payload)
         print(f"run {i + 1}/{n_runs}: {payload['value']} s (load {load})")
@@ -110,7 +116,7 @@ def main() -> int:
         "cpus": best.get("cpus"),
         "vs_baseline_headline_run": vs,
         "geomean_vs_baseline": geo,
-        "host": cpu_stamp(),
+        "host": cpu_stamp(cpus),
         "date": time.strftime("%Y-%m-%d"),
     }
     path = f"/root/repo/BENCH_IDLE_r{rnd}.json"
