@@ -15,11 +15,23 @@ DataFrame-out functions a user points at THEIR columns:
     asof    = api.asof_join(trades, quotes, on="sym",
                             left_ts="t", right_ts="t")
 
-Every function is a thin column-renaming adapter over the operator
-kernels certified by the DuckDB differential suite (the registry entry
-named in each docstring), so behavior and scale properties are the
-tested ones: no all-pairs joins, no single-partition windows above the
-gates, broadcast where model-sized.
+Most functions carry the algebra of the registry operator named in
+their docstring, generalized to caller-chosen columns and constants, in
+one of three forms:
+
+- Shared kernels (the block of operator imports below): the operator
+  module holds the ONE body, its registered op is a binding that calls
+  it on the corpus columns, and this module re-exports it — so the
+  DuckDB differential suite certifies exactly the code a caller runs.
+- Thin wrappers over an operator kernel: jaccard_pairs, cosine_topk,
+  the global-order functions and a few more.
+- Twins: the rest are still written a second time here, and
+  tests/test_api_twins.py pins each to its registry op on the fixture
+  corpus.
+
+In every form the scale properties are the certified ones: no all-pairs
+joins, no single-partition windows above the gates, broadcast where
+model-sized.
 
 Reserved column prefix: names starting with ``__secdb_`` are reserved
 for internal helper columns that functions here may join onto the
@@ -32,14 +44,43 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from .operators._helpers import he4, pin
+from .registry import _load_operators
 
-from .operators._global_order import (
+# The shared kernels' modules register their ops on import: load every
+# operator module first, in the registry's order, so the op order that
+# all_queries() returns does not depend on whether this module was
+# imported first.
+_load_operators()
+
+from .operators._helpers import he4, pin  # noqa: E402
+
+from .operators._global_order import (  # noqa: E402
     bucketed_global_rank,
     bucketed_prefix_sum,
     grouped_bucketed_topk,
     grouped_range_prefix_sum,
 )
+
+# Shared kernels: one body each, beside the registry op bound to it.
+from .operators.ivm_extras import topk_ties  # noqa: E402
+from .operators.llm_pipeline import exact_dup_clusters  # noqa: E402
+from .operators.timeseries import (  # noqa: E402
+    funnel,
+    retention_cohorts,
+    scd2,
+    sessionize,
+    twap,
+    zscore_outliers,
+)
+from .operators.warehouse_extras import running_distinct  # noqa: E402
+from .operators.warehouse_extras2 import streaks  # noqa: E402
+from .operators.warehouse_extras4 import drawdown  # noqa: E402
+from .operators.warehouse_extras7 import (  # noqa: E402
+    fill_forward,
+    moving_median,
+    reset_cumsum,
+)
+from .operators.windows import ewma  # noqa: E402
 
 
 def _require_integral_id(df: DataFrame, id_col: str, fn_name: str) -> None:
@@ -618,15 +659,6 @@ def dedup_corpus(
     return reps.join(nd_losers, id_col, "anti")
 
 
-def exact_dup_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """dedup_exact on any (id, text): sha256 content clusters with the
-    min-id keeper.  Returns (content_hash, keeper_id, n_copies)."""
-    return df.groupBy(F.sha2(F.col(text_col), 256).alias("content_hash")).agg(
-        F.min(id_col).alias("keeper_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-    )
-
-
 def jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, threshold: float = 0.9
 ) -> DataFrame:
@@ -667,130 +699,6 @@ def quality_flags(df: DataFrame, text_col: str, min_toks: int = 20,
 
 
 # --- events ----------------------------------------------------------------
-
-
-def sessionize(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap_minutes: int = 30,
-    out_col: str = "session_id",
-) -> DataFrame:
-    """events_sessionize's gap rule on any (user, timestamp): adds a
-    per-user integer session id that increments after gap_minutes of
-    inactivity.  One shuffle on the user key.  TIMESTAMP_NTZ columns
-    (parquet's timezone-naive default) are accepted — the gap only ever
-    compares two casts of the same column, so under a FIXED-OFFSET
-    session timezone (UTC, the engine default) the interpretation
-    cancels exactly.  Under a DST-observing session tz, the two casts of
-    a gap spanning a transition land on different UTC offsets, skewing
-    that one gap by the offset change (and spring-forward local times
-    don't exist) — run with spark.sql.session.timeZone=UTC for NTZ
-    inputs, or pre-cast to instants yourself."""
-    gap_us = gap_minutes * 60 * 1_000_000
-    t = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    w = Window.partitionBy(user_col).orderBy(ts_col)
-    boundary = F.when(
-        (t - F.lag(t).over(w)).isNull() | ((t - F.lag(t).over(w)) > gap_us), 1
-    ).otherwise(0)
-    return df.withColumn(
-        out_col,
-        F.sum(boundary).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-
-
-def funnel(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    stage_col: str,
-    stages: list[str],
-    tie_col: str | None = None,
-) -> DataFrame:
-    """Ordered-funnel counts on ANY event table (funnel_events' algebra
-    with the stage list parameterized): returns one row per funnel
-    prefix — (stage, n_users) where stage is 'a', 'a>b', 'a>b>c', … and
-    n_users counts users who reached that stage IN ORDER (each stage
-    strictly after a row completing the previous prefix).
-
-    Scale shape: ONE pass — k per-user ordered windows computing
-    'seen prefix k strictly before this row' flags, then one per-user
-    aggregation; every window and the groupBy share the user partitioning
-    so there is a single Exchange regardless of k (no per-stage
-    self-joins).  `tie_col` breaks equal-timestamp ordering
-    deterministically (defaults to the stage column)."""
-    if not stages:
-        raise ValueError("stages must name at least one funnel step")
-    tie = tie_col or stage_col
-    before = (
-        Window.partitionBy(user_col)
-        .orderBy(ts_col, tie)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cur = df.withColumn(
-        "_r0", F.when(F.col(stage_col) == stages[0], 1).otherwise(0)
-    )
-    for k in range(1, len(stages)):
-        cur = cur.withColumn(f"_seen{k}", F.max(f"_r{k - 1}").over(before))
-        cur = cur.withColumn(
-            f"_r{k}",
-            F.when(
-                (F.col(stage_col) == stages[k]) & (F.col(f"_seen{k}") == 1), 1
-            ).otherwise(0),
-        )
-    per_user = cur.groupBy(user_col).agg(
-        *[F.max(f"_r{k}").alias(f"_f{k}") for k in range(len(stages))]
-    )
-    totals = per_user.agg(
-        *[F.sum(f"_f{k}").cast("long").alias(f"_n{k}")
-          for k in range(len(stages))]
-    )
-    labels = [">".join(stages[: k + 1]) for k in range(len(stages))]
-    return totals.select(
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(lb) for lb in labels]),
-                F.array(*[F.col(f"_n{k}") for k in range(len(stages))]),
-            )
-        ).alias("stage", "n_users")
-    )
-
-
-def retention_cohorts(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    grain: str = "week",
-) -> DataFrame:
-    """Cohort retention matrix on ANY (user, timestamp) table
-    (retention_cohort's algebra with the grain parameterized): users
-    bucket by first-seen period, counted in each period they were
-    active — returns (cohort, periods_since, n_users).
-
-    Scale shape: the narrow (user, period) projection repartitions on
-    the user key ONCE and both branches (cohort min, active distinct)
-    derive from it — hash(user) satisfies both clustered distributions,
-    so AQE reuses the exchange and raw events shuffle once; only the
-    tiny |periods|² matrix aggregation re-shuffles."""
-    days_per = {"day": 1, "week": 7, "month": None}
-    if grain not in days_per:
-        raise ValueError(f"grain must be one of {sorted(days_per)}")
-    by_user = df.select(
-        F.col(user_col).alias("_u"),
-        F.date_trunc(grain, F.col(ts_col)).alias("_p"),
-    ).repartition("_u")
-    cohort = by_user.groupBy("_u").agg(F.min("_p").alias("cohort"))
-    active = by_user.distinct()
-    joined = active.join(cohort, "_u")
-    if grain == "month":
-        since = F.round(F.months_between("_p", "cohort")).cast("long")
-    else:
-        since = (F.datediff("_p", "cohort") / days_per[grain]).cast("long")
-    return joined.groupBy("cohort", since.alias("periods_since")).agg(
-        F.count(F.lit(1)).alias("n_users")
-    )
 
 
 def chunk_text(
@@ -2047,74 +1955,6 @@ def latest_by_key(
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def scd2(
-    df: DataFrame,
-    key_cols: list[str],
-    state_col: str,
-    ts_col: str,
-    tie_col: str | None = None,
-) -> DataFrame:
-    """Slowly-changing-dimension type-2 reconstruction from ANY change
-    log (scd2_history's algebra): collapse consecutive duplicate states
-    per key, then each surviving row is valid from its own timestamp to
-    the next change (valid_to NULL = current state).  Returns
-    (key_cols..., state_col, valid_from, valid_to).
-
-    Scale shape: both window passes and the filter between them share
-    the key partitioning — one Exchange total; this is the batch
-    backfill of what a stateful stream maintains incrementally."""
-    order = [ts_col] + ([tie_col] if tie_col else [])
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    # row_number==1 (not _prev IS NULL) marks the first row per key, and
-    # the state comparison is null-safe: lag() cannot distinguish "no
-    # previous row" from "previous state was NULL", and (_prev != state)
-    # evaluates to NULL when either side is NULL — which would silently
-    # drop transitions INTO a NULL state and duplicate consecutive NULLs.
-    changes = (
-        df.withColumn("_prev", F.lag(state_col).over(w))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(
-            (F.col("_rn") == 1)
-            | ~F.col("_prev").eqNullSafe(F.col(state_col))
-        )
-        .select(*key_cols, state_col, *order)
-    )
-    return changes.select(
-        *key_cols,
-        state_col,
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w).alias("valid_to"),
-    )
-
-
-def fill_forward(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    val_col: str,
-    out_col: str | None = None,
-    tie_col: str | None = None,
-) -> DataFrame:
-    """LOCF (last-observation-carried-forward) on ANY keyed series
-    (win_fill_forward's algebra): adds `out_col` carrying the most
-    recent non-null `val_col` forward within each key, in (ts, tie)
-    order.  Rows before a key's first observation stay NULL — LOCF's
-    defining edge.
-
-    Scale shape: one key exchange, running frame with O(1) state (the
-    single last non-null value)."""
-    out = out_col or f"{val_col}_ffill"
-    order = [ts_col] + ([tie_col] if tie_col else [])
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(
-        out, F.last(val_col, ignorenulls=True).over(w)
     )
 
 
@@ -4015,37 +3855,6 @@ def cramers_v(
     )
 
 
-def zscore_outliers(
-    df: DataFrame,
-    val_col: str,
-    by: list[str] | None = None,
-    threshold: float = 2.5,
-) -> DataFrame:
-    """Rows whose value lies beyond `threshold` sigma of their group's
-    own mean (anomaly_zscore's algebra on ANY pre-aggregated frame):
-    the stats side is |groups| rows, broadcast back, so the input is
-    scanned and shuffled exactly once.  Feed it a continuous aggregate
-    (e.g. hourly counts), not a raw log — the monitoring query a
-    100 TB event store runs every hour.  Returns the flagged input
-    rows + zscore (round 4)."""
-    by = by or []
-    stats = df.groupBy(*by).agg(
-        F.avg(val_col).alias("_mu"),
-        F.stddev_samp(val_col).alias("_sigma"),
-    )
-    z = (F.col(val_col) - F.col("_mu")) / F.col("_sigma")
-    joined = (
-        df.join(F.broadcast(stats), by)
-        if by
-        else df.crossJoin(F.broadcast(stats))
-    )
-    return (
-        joined.filter(F.abs(z) > threshold)
-        .withColumn("zscore", F.round(z, 4))
-        .drop("_mu", "_sigma")
-    )
-
-
 def abc_classify(
     df: DataFrame,
     key_cols: list[str],
@@ -4082,89 +3891,6 @@ def abc_classify(
         .when(F.col("cum_share") <= break_b, "B")
         .otherwise("C")
         .alias("abc_class"),
-    )
-
-
-def ewma(
-    df: DataFrame,
-    val_col: str,
-    order_cols: list[str],
-    by: list[str] | None = None,
-    alpha: float = 0.5,
-    k: int = 5,
-) -> DataFrame:
-    """Bounded-lookback exponentially-weighted moving average of ANY
-    value column (win_ewma's algebra with columns, alpha and the
-    lookback K parameterized).  The infinite recursion
-    ewma_t = a*x_t + (1-a)*ewma_{t-1} is not window-expressible without
-    per-row recursion; the bounded-K form weights lag i by (1-a)^i —
-    the recursion's own decay, renormalized at partition heads — as an
-    exact K-term lag expression.  (At a=0.5 this equals the certified
-    twin's 0.5^i weighting; for other alphas the recursion basis is the
-    correct one — a^i would INVERT the decay.)  All K lags share ONE
-    window spec, so Catalyst plans a single Window node over a single
-    `by` shuffle+sort with per-row state of K doubles; truncation error
-    is bounded at (1-a)^K of total weight.  Pass tie-breaking
-    order_cols (e.g. [ts, id]) — a non-deterministic sort makes the
-    smoothing non-reproducible.  Returns the input rows + `ewma`
-    (round 4)."""
-    by = by or []
-    beta = 1.0 - alpha
-    w = Window.partitionBy(*by).orderBy(*order_cols)
-    num = sum(
-        (
-            F.when(
-                F.lag(val_col, i).over(w).isNotNull(),
-                F.lit(beta**i) * F.lag(val_col, i).over(w),
-            ).otherwise(F.lit(0.0))
-            for i in range(k)
-        ),
-        start=F.lit(0.0),
-    )
-    den = sum(
-        (
-            F.when(
-                F.lag(val_col, i).over(w).isNotNull(), F.lit(beta**i)
-            ).otherwise(F.lit(0.0))
-            for i in range(k)
-        ),
-        start=F.lit(0.0),
-    )
-    return df.withColumn("ewma", F.round(num / den, 4))
-
-
-def drawdown(
-    df: DataFrame,
-    val_col: str,
-    order_cols: list[str],
-    by: list[str],
-    cumulate: bool = True,
-) -> DataFrame:
-    """Maximum drawdown per group of ANY ordered series (win_drawdown's
-    algebra with columns parameterized): equity is the running sum of
-    `val_col` (cumulate=True, e.g. per-trade P&L) or the raw value
-    itself (cumulate=False, e.g. an already-cumulative price level);
-    drawdown(t) = running-peak(equity) - equity(t), reported as the
-    per-group max.  Feed an exactly-representable series (ints /
-    fixed-point cents) for cross-engine determinism — float running
-    sums are order-dependent.  Pass tie-breaking order_cols.
-
-    Scale shape: ONE shuffle on `by` shared by both window passes and
-    the final aggregate (same partitioning expression — Catalyst plans
-    a single Exchange); within-partition sort once.  Never a global
-    window.  Returns (by..., n_rows, max_dd)."""
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    equity = F.sum(val_col).over(w) if cumulate else F.col(val_col)
-    eq = df.withColumn("_equity", equity).withColumn(
-        "_peak", F.max("_equity").over(w)
-    )
-    return eq.groupBy(*by).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.max(F.col("_peak") - F.col("_equity")).alias("max_dd"),
     )
 
 
@@ -4958,40 +4684,6 @@ def rfm_scores(
     )
 
 
-def streaks(
-    df: DataFrame,
-    by: list[str],
-    date_col: str,
-) -> DataFrame:
-    """Longest consecutive-active-days streak per group of ANY
-    (group, date) frame (win_streak's algebra with columns
-    parameterized) — the classic gaps-and-islands shape: distinct
-    active days, island key = day number minus row_number (constant
-    within a consecutive run), then two aggregates.  Returns
-    (by..., longest_streak, n_active_days).
-
-    Scale: every step — distinct, window, both groupBys — shares the
-    `by` partitioning, so the whole kernel is ONE full-data Exchange
-    over the (group, day) DISTINCT aggregate."""
-    days = df.select(
-        *by,
-        F.datediff(
-            F.col(date_col), F.to_date(F.lit("1970-01-01"))
-        ).alias("_d"),
-    ).distinct()
-    w = Window.partitionBy(*by).orderBy("_d")
-    islands = days.withColumn(
-        "_island", F.col("_d") - F.row_number().over(w)
-    )
-    runs = islands.groupBy(*by, "_island").agg(
-        F.count(F.lit(1)).alias("_len")
-    )
-    return runs.groupBy(*by).agg(
-        F.max("_len").cast("long").alias("longest_streak"),
-        F.sum("_len").cast("long").alias("n_active_days"),
-    )
-
-
 def markov_stationary(
     df: DataFrame,
     src_col: str,
@@ -5142,43 +4834,6 @@ def ohlc(
         F.max(F.when(F.col("_rn_d") == 1, F.col(val_col))).alias("close"),
         F.count(F.lit(1)).alias("n_ticks"),
         r4(dsum(F.col(val_col))).alias("volume"),
-    )
-
-
-def twap(
-    df: DataFrame,
-    val_col: str,
-    time_col: str,
-    by: list[str],
-    tie_cols: list[str] | None = None,
-    time_scale: float = 1e6,
-) -> DataFrame:
-    """Time-weighted average of ANY irregularly-spaced value series (the
-    twap operator's algebra with columns parameterized): the
-    step-function integral (each observation holds until the next one)
-    divided by the covered duration — the correct summary when a plain
-    avg() would over-weight bursts.  `time_col` is numeric (e.g. epoch
-    micros with time_scale=1e6 for per-second weighting).  Entities with
-    a single observation drop out (no holding period), as do
-    zero-duration histories (guards the 0/0).  Returns (by..., twap).
-
-    Scale: one lead() window and the per-entity aggregate share the
-    `by` hash partitioning — one Exchange, one sort, combinable sums."""
-    tie_cols = tie_cols or []
-    w = Window.partitionBy(*by).orderBy(time_col, *tie_cols)
-    dt = (F.lead(time_col).over(w) - F.col(time_col)) / F.lit(time_scale)
-    return (
-        df.select(*by, F.col(val_col).alias("_v"), dt.alias("_dt"))
-        .filter(F.col("_dt").isNotNull())
-        .groupBy(*by)
-        .agg(
-            F.sum(F.col("_v") * F.col("_dt")).alias("_wsum"),
-            F.sum("_dt").alias("_dur"),
-        )
-        .filter(F.col("_dur") > 0)
-        .select(
-            *by, F.round(F.col("_wsum") / F.col("_dur"), 4).alias("twap")
-        )
     )
 
 
@@ -6258,145 +5913,6 @@ def gap_stats(
             r4(F.median("_gap")).alias("median_gap_days"),
         )
         .filter(F.col("n_gaps") >= 1)
-    )
-
-
-def moving_median(
-    df: DataFrame,
-    val_col: str,
-    order_col: str,
-    by: list[str],
-    days: int = 7,
-) -> DataFrame:
-    """Moving median over ANY pre-bucketed INTEGER series
-    (win_moving_median's algebra with columns and frame width
-    parameterized) — the robust trend line (a median frame shrugs off
-    the single-point spikes that drag a moving average).  Spark cannot
-    window `median` with a frame (INVALID_WINDOW_SPEC), so the kernel
-    collects the BOUNDED frame into a sorted array and picks the middle
-    element(s) — exact for integers, interpolating two ints as (a+b)/2
-    (exact in binary).  Pass ONE row per (by, order_col).  Returns the
-    input rows + `moving_median` (round 4).
-
-    Scale: the frame is bounded (`days` rows), so the collected array
-    is O(1) per row — the one place a collect_list window is
-    scale-legitimate; feed the pre-bucketed aggregate, never the raw
-    stream."""
-    fr = (
-        Window.partitionBy(*by)
-        .orderBy(order_col)
-        .rowsBetween(-(days - 1), Window.currentRow)
-    )
-    arr = F.sort_array(F.collect_list(val_col).over(fr))
-    n = F.size(arr)
-    lo = F.element_at(arr, ((n + 1) / 2).cast("int"))
-    hi = F.element_at(arr, (n / 2 + 1).cast("int"))
-    return df.withColumn("moving_median", F.round((lo + hi) / 2.0, 4))
-
-
-def reset_cumsum(
-    df: DataFrame,
-    val_col: str,
-    time_col: str,
-    by: list[str],
-    gap: int,
-    tie_cols: list[str] | None = None,
-    scale: int = 4,
-) -> DataFrame:
-    """Cumulative value per group that RESETS whenever an inactivity gap
-    larger than `gap` opens in the NUMERIC time column
-    (win_reset_cumsum's algebra with columns, gap and fixed-point scale
-    parameterized) — the session-scoped running total behind "spend so
-    far this visit".  SQL has no RESET clause, so the canonical
-    composition is gaps-and-islands: flag boundaries with a lag, number
-    sessions with a running sum of flags, then run the cumulative
-    inside the (by, session) partition.  Values quantize to fixed-point
-    bigints at `scale`, so every running total is exact.  Returns the
-    input rows + (session_id, running_value).
-
-    Scale: all three windows order by the same (time, ties) within the
-    `by` partition — ONE hash exchange serves the whole chain (the
-    session_id repartition is a subset-key refinement evaluated within
-    the same sorted run).  State per window is O(1)."""
-    tie_cols = tie_cols or []
-    w = Window.partitionBy(*by).orderBy(time_col, *tie_cols)
-    gap_expr = F.col(time_col) - F.lag(time_col).over(w)
-    flagged = df.withColumn(
-        "_new_session",
-        F.when(gap_expr.isNull() | (gap_expr > gap), 1).otherwise(0),
-    )
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = flagged.withColumn(
-        "session_id", F.sum("_new_session").over(run).cast("long")
-    ).drop("_new_session")
-    wrun = (
-        Window.partitionBy(*by, "session_id")
-        .orderBy(time_col, *tie_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return sess.withColumn(
-        "running_value",
-        F.sum(F.floor(F.col(val_col) * (10**scale) + 0.5).cast("long"))
-        .over(wrun)
-        .cast("long"),
-    )
-
-
-def running_distinct(
-    df: DataFrame,
-    dist_col: str,
-    order_cols: list[str],
-    by: list[str],
-) -> DataFrame:
-    """Running COUNT(DISTINCT dist_col) per group under the given order
-    (win_running_distinct's algebra with columns parameterized) — not
-    directly expressible in any engine (distinct aggregates are barred
-    from window frames), so it compiles to the first-occurrence trick:
-    flag each (by, value)'s first row, then running-sum the flags.
-    Both windows partition by `by` ALONE — a (by, value) window would
-    pay a second Exchange (hashpartitioning(by, value) does NOT satisfy
-    hashpartitioning(by)); this plans ONE Exchange + two Sorts.  State
-    per frame is one counter, never a distinct-set.  Returns the input
-    rows + `n_distinct`."""
-    w_first = Window.partitionBy(*by).orderBy(dist_col, *order_cols)
-    w_run = (
-        Window.partitionBy(*by)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    prev = F.lag(dist_col).over(w_first)
-    flagged = df.withColumn(
-        "_is_first",
-        F.when(prev.isNull() | (prev != F.col(dist_col)), 1).otherwise(0),
-    )
-    return flagged.withColumn(
-        "n_distinct", F.sum("_is_first").over(w_run).cast("long")
-    ).drop("_is_first")
-
-
-def topk_ties(
-    df: DataFrame,
-    key_col: str,
-    by: list[str],
-    k: int,
-    desc: bool = True,
-) -> DataFrame:
-    """Ties-INCLUDED top-k per group of ANY frame (win_topk_ties'
-    algebra with columns parameterized): `rank() <= k` admits every row
-    tying the k-th value — the semantics a leaderboard or compliance
-    report needs, vs row_number (grouped_topk) which silently drops
-    tied rows by an arbitrary key.  Because rank assigns equal rows
-    equal ranks, the result is deterministic WITHOUT a tiebreak column
-    — the VALUE ordering alone defines the set; output size varies with
-    tie density.  Returns the input rows + `rk`.
-
-    Scale: one `by` exchange; Spark's WindowGroupLimit pushes the
-    rank()<=k bound into the sort (bounded per-partition state)."""
-    order = F.col(key_col).desc() if desc else F.col(key_col).asc()
-    w = Window.partitionBy(*by).orderBy(order)
-    return (
-        df.withColumn("rk", F.rank().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
     )
 
 

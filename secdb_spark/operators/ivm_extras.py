@@ -152,6 +152,32 @@ def result_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOPK_TIES = 2
 
 
+def topk_ties(
+    df: DataFrame,
+    key_col: str,
+    by: list[str],
+    k: int,
+    desc: bool = True,
+) -> DataFrame:
+    """Ties-INCLUDED top-k per group of ANY frame (win_topk_ties'
+    algebra with columns parameterized): `rank() <= k` admits every row
+    tying the k-th value — the semantics a leaderboard or compliance
+    report needs, vs row_number (grouped_topk) which silently drops
+    tied rows by an arbitrary key.  Because rank assigns equal rows
+    equal ranks, the result is deterministic WITHOUT a tiebreak column
+    — the VALUE ordering alone defines the set; output size varies with
+    tie density.  Returns the input rows + `rk`.
+
+    Scale: one `by` exchange; Spark's WindowGroupLimit pushes the
+    rank()<=k bound into the sort (bounded per-partition state)."""
+    order = F.col(key_col).desc() if desc else F.col(key_col).asc()
+    w = Window.partitionBy(*by).orderBy(order)
+    return (
+        df.withColumn("rk", F.rank().over(w).cast("long"))
+        .filter(F.col("rk") <= k)
+    )
+
+
 @register(
     "win_topk_ties",
     oracle=f"""
@@ -166,32 +192,13 @@ TOPK_TIES = 2
     """,
 )
 def win_topk_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ties-INCLUDED top-{TOPK_TIES} per customer: `rank() <= k` admits
-    every order tying the k-th value — the semantics a leaderboard or
-    compliance report needs, vs `row_number() <= k` (win_topk_group)
-    which silently drops tied rows by an arbitrary key.  Because rank
-    assigns equal rows equal ranks, the result is deterministic WITHOUT
-    a tiebreak column — the tie-safety convention inverted: here the
-    VALUE ordering alone defines the set, and the output size varies
-    with tie density (the semantic difference this op exists to pin).
-
-    Scale: one custkey exchange; Spark's WindowGroupLimit pushes the
-    rank()<=k bound into the sort (bounded per-partition state), same
-    as the row_number variant."""
-    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc())
-    return (
-        table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.rank().over(w).alias("rk"),
-        )
-        .filter(F.col("rk") <= TOPK_TIES)
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.col("rk").cast("long").alias("rk"),
-        )
+    """Ties-INCLUDED top-{TOPK_TIES} orders by price per customer: the
+    `topk_ties` kernel.  `rank() <= k` admits every order tying the k-th
+    value, vs `row_number() <= k` (win_topk_group) which silently drops
+    tied rows by an arbitrary key — here the VALUE ordering alone
+    defines the set, and the output size varies with tie density (the
+    semantic difference this op exists to pin)."""
+    o = table(spark, sf_dir, "orders").select(
+        "o_custkey", "o_orderkey", "o_totalprice"
     )
+    return topk_ties(o, "o_totalprice", by=["o_custkey"], k=TOPK_TIES)

@@ -41,6 +41,15 @@ def _tokens(col: str = "text"):
     return F.sort_array(F.array_distinct(F.split(F.col(col), " ")))
 
 
+def exact_dup_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """dedup_exact on any (id, text): sha256 content clusters with the
+    min-id keeper.  Returns (content_hash, keeper_id, n_copies)."""
+    return df.groupBy(F.sha2(F.col(text_col), 256).alias("content_hash")).agg(
+        F.min(id_col).alias("keeper_id"),
+        F.count(F.lit(1)).alias("n_copies"),
+    )
+
+
 @register(
     "dedup_exact",
     oracle="""
@@ -52,19 +61,15 @@ def _tokens(col: str = "text"):
     """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup by content hash, deterministic keeper (min doc_id).
+    """Exact dedup by content hash, deterministic keeper (min doc_id): the
+    `exact_dup_clusters` kernel over the documents table.
     NOT dropDuplicates(): that keeps an arbitrary row per key — fine for
     throughput, wrong for a reproducible pipeline. groupBy(hash) hash-
     partitions by content hash, so each duplicate cluster lands in one
     partition regardless of corpus size."""
     d = table(spark, sf_dir, "documents")
-    return (
-        d.withColumn("content_hash", F.sha2("text", 256))
-        .groupBy("content_hash")
-        .agg(
-            F.min("doc_id").alias("keeper_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
+    return exact_dup_clusters(d, "doc_id", "text").withColumnRenamed(
+        "keeper_id", "keeper_doc_id"
     )
 
 

@@ -26,7 +26,45 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import table
 from ..registry import register
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matches stream_session
+SESSION_GAP_MIN = 30  # matches stream_session
+
+
+def sessionize(
+    df: DataFrame,
+    user_col: str,
+    ts_col: str,
+    gap_minutes: int = 30,
+    out_col: str = "session_id",
+) -> DataFrame:
+    """events_sessionize's gap rule on any (user, timestamp): adds a
+    per-user integer session id that increments after gap_minutes of
+    inactivity.  One shuffle on the user key.  TIMESTAMP_NTZ columns
+    (parquet's timezone-naive default) are accepted — the gap only ever
+    compares two casts of the same column, so under a FIXED-OFFSET
+    session timezone (UTC, the engine default) the interpretation
+    cancels exactly.  Under a DST-observing session tz, the two casts of
+    a gap spanning a transition land on different UTC offsets, skewing
+    that one gap by the offset change (and spring-forward local times
+    don't exist) — run with spark.sql.session.timeZone=UTC for NTZ
+    inputs, or pre-cast to instants yourself.
+
+    The window orders by the timestamp alone: rows tied on it may sort
+    either way, but a tied row's gap is 0, so it never opens a session
+    and the ids do not depend on the tie order.  The timestamp is
+    projected to epoch-µs once, so the lag and the running sum operate
+    on plain longs; per-user state is a running sum, never a
+    materialized session list."""
+    gap_us = gap_minutes * 60 * 1_000_000
+    t = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    w = Window.partitionBy(user_col).orderBy(ts_col)
+    gap = t - F.lag(t).over(w)
+    boundary = F.when(gap.isNull() | (gap > gap_us), 1).otherwise(0)
+    return df.withColumn(
+        out_col,
+        F.sum(boundary).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
 
 
 @register(
@@ -55,23 +93,14 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matches stream_session
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch 30-min-gap sessionization — the historical-store counterpart
-    of stream_session, expressed as window algebra: flag a session break
-    where the gap to the previous event exceeds the threshold, running-sum
-    the flags into a per-user session sequence, then aggregate per session.
+    of stream_session: the `sessionize` kernel numbers each user's
+    sessions, then one aggregate summarizes each session.
 
     Both windows and the final groupBy hash-partition on user_id, so the
-    whole pipeline is one Exchange + one sort; ts is projected to epoch-µs
-    once so the lag/running-sum operate on plain longs."""
-    ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.col("us") - F.lag("us").over(w)
-    flagged = ev.withColumn(
-        "new_sess",
-        F.when(gap.isNull() | (gap > SESSION_GAP_US), F.lit(1)).otherwise(F.lit(0)),
-    )
-    sess = flagged.withColumn(
-        "session_seq", F.sum("new_sess").over(run).cast("long")
+    whole pipeline is one Exchange + one sort."""
+    ev = table(spark, sf_dir, "events")
+    sess = sessionize(
+        ev, "user_id", "ts", SESSION_GAP_MIN, out_col="session_seq"
     )
     return sess.groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -153,6 +182,67 @@ def rollup_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def funnel(
+    df: DataFrame,
+    user_col: str,
+    ts_col: str,
+    stage_col: str,
+    stages: list[str],
+    tie_col: str | None = None,
+) -> DataFrame:
+    """Ordered-funnel counts on ANY event table (funnel_events' algebra
+    with the stage list parameterized): returns one row per funnel
+    prefix — (stage, n_users) where stage is 'a', 'a>b', 'a>b>c', … and
+    n_users counts users who reached that stage IN ORDER (each stage
+    strictly after a row completing the previous prefix).
+
+    Scale shape: ONE pass — k per-user ordered windows computing
+    'seen prefix k strictly before this row' flags, then one per-user
+    aggregation; every window and the groupBy share the user partitioning
+    so there is a single Exchange regardless of k (no per-stage
+    self-joins).  `tie_col` breaks equal-timestamp ordering
+    deterministically (defaults to the stage column)."""
+    if not stages:
+        raise ValueError("stages must name at least one funnel step")
+    tie = tie_col or stage_col
+    before = (
+        Window.partitionBy(user_col)
+        .orderBy(ts_col, tie)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    # reached[k]: this row completes prefix k.  reached[0] stays an
+    # expression (re-evaluated from the stage column, not carried through
+    # the window sorts); the later ones read a window output, so they
+    # are columns.
+    reached = [F.when(F.col(stage_col) == stages[0], 1).otherwise(0)]
+    cur = df
+    for k in range(1, len(stages)):
+        cur = cur.withColumn(f"_seen{k}", F.max(reached[k - 1]).over(before))
+        cur = cur.withColumn(
+            f"_r{k}",
+            F.when(
+                (F.col(stage_col) == stages[k]) & (F.col(f"_seen{k}") == 1), 1
+            ).otherwise(0),
+        )
+        reached.append(F.col(f"_r{k}"))
+    per_user = cur.groupBy(user_col).agg(
+        *[F.max(r).alias(f"_f{k}") for k, r in enumerate(reached)]
+    )
+    totals = per_user.agg(
+        *[F.sum(f"_f{k}").cast("long").alias(f"_n{k}")
+          for k in range(len(stages))]
+    )
+    labels = [">".join(stages[: k + 1]) for k in range(len(stages))]
+    return totals.select(
+        F.explode(
+            F.map_from_arrays(
+                F.array(*[F.lit(lb) for lb in labels]),
+                F.array(*[F.col(f"_n{k}") for k in range(len(stages))]),
+            )
+        ).alias("stage", "n_users")
+    )
+
+
 @register(
     "funnel_events",
     oracle="""
@@ -189,53 +279,56 @@ def rollup_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def funnel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-funnel analysis (view -> click -> purchase) in ONE pass:
-    instead of per-stage self-joins (k-1 joins, each a shuffle), a single
-    per-user ordered window computes 'seen stage k strictly before this
-    row' flags, and one aggregation counts users reaching each stage IN
-    ORDER.  All windows and the final groupBy share the user_id
-    partitioning — one Exchange total, the same discipline as
+    """Ordered-funnel analysis (view -> click -> purchase): the `funnel`
+    kernel over the events table, ties on time broken by event_id.
+    Instead of per-stage self-joins (k-1 joins, each a shuffle), per-user
+    ordered windows compute 'seen stage k strictly before this row'
+    flags and one aggregation counts users reaching each stage IN
+    ORDER.  All windows and the per-user groupBy share the user_id
+    partitioning — one Exchange over the events, the same discipline as
     events_sessionize.  At 100 TB the state per user is k bits, not an
-    event list."""
+    event list.  The order key is epoch-µs: the same order as ts, and
+    the long key sorted measurably faster than the timestamp column at
+    sf0.1 (4 cores)."""
     ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
-    before = (
-        Window.partitionBy("user_id")
-        .orderBy("us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    return funnel(
+        ev, "user_id", "us", "event_type", ["view", "click", "purchase"],
+        tie_col="event_id",
     )
-    is_view = F.when(F.col("event_type") == "view", 1).otherwise(0)
-    s1 = ev.withColumn("seen_view", F.max(is_view).over(before))
-    is_cav = F.when(
-        (F.col("event_type") == "click") & (F.col("seen_view") == 1), 1
-    ).otherwise(0)
-    s2 = s1.withColumn("cav", is_cav).withColumn(
-        "seen_click_after", F.max("cav").over(before)
-    )
-    per_user = s2.groupBy("user_id").agg(
-        F.max(is_view).alias("f1"),
-        F.max("cav").alias("f2"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase")
-                & (F.col("seen_click_after") == 1),
-                1,
-            ).otherwise(0)
-        ).alias("f3"),
-    )
-    totals = per_user.agg(
-        F.sum("f1").cast("long").alias("view"),
-        F.sum("f2").cast("long").alias("vc"),
-        F.sum("f3").cast("long").alias("vcp"),
-    )
-    return totals.select(
-        F.explode(
-            F.map_from_arrays(
-                F.array(
-                    F.lit("view"), F.lit("view>click"), F.lit("view>click>purchase")
-                ),
-                F.array("view", "vc", "vcp"),
-            )
-        ).alias("stage", "n_users")
+
+
+def retention_cohorts(
+    df: DataFrame,
+    user_col: str,
+    ts_col: str,
+    grain: str = "week",
+) -> DataFrame:
+    """Cohort retention matrix on ANY (user, timestamp) table
+    (retention_cohort's algebra with the grain parameterized): users
+    bucket by first-seen period, counted in each period they were
+    active — returns (cohort, periods_since, n_users).
+
+    Scale shape: the narrow (user, period) projection repartitions on
+    the user key ONCE and both branches (cohort min, active distinct)
+    derive from it — hash(user) satisfies both clustered distributions,
+    so AQE reuses the exchange and raw events shuffle once; only the
+    tiny |periods|² matrix aggregation re-shuffles."""
+    days_per = {"day": 1, "week": 7, "month": None}
+    if grain not in days_per:
+        raise ValueError(f"grain must be one of {sorted(days_per)}")
+    by_user = df.select(
+        F.col(user_col).alias("_u"),
+        F.date_trunc(grain, F.col(ts_col)).alias("_p"),
+    ).repartition("_u")
+    cohort = by_user.groupBy("_u").agg(F.min("_p").alias("cohort"))
+    active = by_user.distinct()
+    joined = active.join(cohort, "_u")
+    if grain == "month":
+        since = F.round(F.months_between("_p", "cohort")).cast("long")
+    else:
+        since = (F.datediff("_p", "cohort") / days_per[grain]).cast("long")
+    return joined.groupBy("cohort", since.alias("periods_since")).agg(
+        F.count(F.lit(1)).alias("n_users")
     )
 
 
@@ -258,34 +351,21 @@ def funnel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users bucketed by first-seen week, counted
-    in each subsequent active week.  Three aggregations, ONE logical
-    partitioning: cohort assignment (groupBy user), distinct active weeks
-    (groupBy user+week), and the cohort-week join all hash on user_id, so
-    the join is co-partitioned with its inputs; only the final (tiny:
-    |weeks|²) matrix aggregation re-shuffles.
-
-    The narrow (user_id, ts-week) projection is explicitly repartitioned
-    on user_id ONCE and both branches derive from it: hash(user_id)
-    satisfies the clustered distribution of BOTH the cohort groupBy and
-    the (user_id, week) distinct (subset rule), and AQE's exchange reuse
-    feeds the second branch a ReusedExchange — so raw events are shuffled
-    once, not twice (pinned on the executed plan in tests/test_plans.py)."""
-    ev = table(spark, sf_dir, "events")
-    by_user = ev.select(
-        "user_id", F.date_trunc("week", "ts").alias("active_week")
-    ).repartition("user_id")
-    cohort = by_user.groupBy("user_id").agg(
-        F.min("active_week").alias("cohort_week")
+    """Cohort retention matrix: the `retention_cohorts` kernel at weekly
+    grain — users bucketed by first-seen week, counted in each
+    subsequent active week.  Three aggregations, ONE logical
+    partitioning: cohort assignment (groupBy user), distinct active
+    weeks (groupBy user+week), and the cohort-week join all hash on
+    user_id, so the join is co-partitioned with its inputs; only the
+    final (tiny: |weeks|²) matrix aggregation re-shuffles.  Raw events
+    are shuffled once, not twice (the ReusedExchange is pinned on the
+    executed plan in tests/test_plans.py)."""
+    m = retention_cohorts(table(spark, sf_dir, "events"), "user_id", "ts")
+    return m.select(
+        F.col("cohort").alias("cohort_week"),
+        F.col("periods_since").alias("weeks_since"),
+        "n_users",
     )
-    active = by_user.distinct()
-    joined = active.join(cohort, "user_id")
-    return joined.groupBy(
-        "cohort_week",
-        (F.datediff("active_week", "cohort_week") / 7)
-        .cast("long")
-        .alias("weeks_since"),
-    ).agg(F.count(F.lit(1)).alias("n_users"))
 
 
 @register(
@@ -359,6 +439,37 @@ def rollup_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def zscore_outliers(
+    df: DataFrame,
+    val_col: str,
+    by: list[str] | None = None,
+    threshold: float = 2.5,
+) -> DataFrame:
+    """Rows whose value lies beyond `threshold` sigma of their group's
+    own mean (anomaly_zscore's algebra on ANY pre-aggregated frame):
+    the stats side is |groups| rows, broadcast back, so the input is
+    scanned and shuffled exactly once.  Feed it a continuous aggregate
+    (e.g. hourly counts), not a raw log — the monitoring query a
+    100 TB event store runs every hour.  Returns the flagged input
+    rows + zscore (round 4)."""
+    by = by or []
+    stats = df.groupBy(*by).agg(
+        F.avg(val_col).alias("_mu"),
+        F.stddev_samp(val_col).alias("_sigma"),
+    )
+    z = (F.col(val_col) - F.col("_mu")) / F.col("_sigma")
+    joined = (
+        df.join(F.broadcast(stats), by)
+        if by
+        else df.crossJoin(F.broadcast(stats))
+    )
+    return (
+        joined.filter(F.abs(z) > threshold)
+        .withColumn("zscore", F.round(z, 4))
+        .drop("_mu", "_sigma")
+    )
+
+
 @register(
     "anomaly_zscore",
     oracle="""
@@ -380,29 +491,16 @@ def rollup_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Volume-anomaly detection: hourly event counts per type, z-scored
-    against the type's own mean/stddev, buckets beyond 2.5σ flagged.
-    The stats side is |types| rows — broadcast back onto the hourly
-    aggregate, so raw events are scanned and shuffled exactly once (the
-    hourly groupBy); the monitoring query a 100 TB event store runs every
-    hour against its continuous aggregate, not its raw log."""
+    against the type's own mean/stddev by the `zscore_outliers` kernel,
+    buckets beyond 2.5σ flagged.  Raw events are scanned and shuffled
+    exactly once (the hourly groupBy); the stats side is |types| rows,
+    broadcast back onto the hourly aggregate."""
     ev = table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("bucket")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    stats = hourly.groupBy("event_type").agg(
-        F.avg("n_events").alias("mu"),
-        F.stddev_samp("n_events").alias("sigma"),
-    )
-    z = (F.col("n_events") - F.col("mu")) / F.col("sigma")
-    return (
-        hourly.join(F.broadcast(stats), "event_type")
-        .filter(F.abs(z) > 2.5)
-        .select(
-            "event_type",
-            "bucket",
-            "n_events",
-            F.round(z, 4).alias("zscore"),
-        )
+    return zscore_outliers(
+        hourly, "n_events", by=["event_type"], threshold=2.5
     )
 
 
@@ -465,6 +563,43 @@ def concurrent_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def twap(
+    df: DataFrame,
+    val_col: str,
+    time_col: str,
+    by: list[str],
+    tie_cols: list[str] | None = None,
+    time_scale: float = 1e6,
+) -> DataFrame:
+    """Time-weighted average of ANY irregularly-spaced value series (the
+    twap operator's algebra with columns parameterized): the
+    step-function integral (each observation holds until the next one)
+    divided by the covered duration — the correct summary when a plain
+    avg() would over-weight bursts.  `time_col` is numeric (e.g. epoch
+    micros with time_scale=1e6 for per-second weighting).  Entities with
+    a single observation drop out (no holding period), as do
+    zero-duration histories (guards the 0/0).  Returns (by..., twap).
+
+    Scale: one lead() window and the per-entity aggregate share the
+    `by` hash partitioning — one Exchange, one sort, combinable sums."""
+    tie_cols = tie_cols or []
+    w = Window.partitionBy(*by).orderBy(time_col, *tie_cols)
+    dt = (F.lead(time_col).over(w) - F.col(time_col)) / F.lit(time_scale)
+    return (
+        df.select(*by, F.col(val_col).alias("_v"), dt.alias("_dt"))
+        .filter(F.col("_dt").isNotNull())
+        .groupBy(*by)
+        .agg(
+            F.sum(F.col("_v") * F.col("_dt")).alias("_wsum"),
+            F.sum("_dt").alias("_dur"),
+        )
+        .filter(F.col("_dur") > 0)
+        .select(
+            *by, F.round(F.col("_wsum") / F.col("_dur"), 4).alias("twap")
+        )
+    )
+
+
 @register(
     "twap",
     oracle="""
@@ -482,30 +617,53 @@ def concurrent_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING sum((nxt - us) / 1e6) > 0
     """,
 )
-def twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average of `value` per user — the step-function
-    integral (each observation holds until the next one) divided by the
-    covered duration; the correct summary when observations are
-    irregularly spaced and a plain avg() over-weights bursts.  One
-    lead() window and the per-user aggregate share the user_id hash
-    partitioning: one Exchange, one sort, partial-combinable sums.
-    Users with a single observation (no holding period) drop out, as do
-    zero-duration histories (guards the 0/0)."""
+def twap_op(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-weighted average of `value` per user: the `twap` kernel over
+    epoch-µs timestamps, ties broken by event_id, weighted per second.
+    One lead() window and the per-user aggregate share the user_id
+    hash partitioning: one Exchange, one sort, partial-combinable
+    sums."""
     ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    dt = (F.lead("us").over(w) - F.col("us")) / F.lit(1e6)
-    return (
-        ev.select("user_id", "value", dt.alias("dt"))
-        .filter(F.col("dt").isNotNull())
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.col("value") * F.col("dt")).alias("wsum"),
-            F.sum("dt").alias("dur"),
+    return twap(ev, "value", "us", by=["user_id"], tie_cols=["event_id"])
+
+
+def scd2(
+    df: DataFrame,
+    key_cols: list[str],
+    state_col: str,
+    ts_col: str,
+    tie_col: str | None = None,
+) -> DataFrame:
+    """Slowly-changing-dimension type-2 reconstruction from ANY change
+    log (scd2_history's algebra): collapse consecutive duplicate states
+    per key, then each surviving row is valid from its own timestamp to
+    the next change (valid_to NULL = current state).  Returns
+    (key_cols..., state_col, valid_from, valid_to).
+
+    Scale shape: both window passes and the filter between them share
+    the key partitioning — one Exchange total; this is the batch
+    backfill of what a stateful stream maintains incrementally."""
+    order = [ts_col] + ([tie_col] if tie_col else [])
+    w = Window.partitionBy(*key_cols).orderBy(*order)
+    # row_number==1 (not _prev IS NULL) marks the first row per key, and
+    # the state comparison is null-safe: lag() cannot distinguish "no
+    # previous row" from "previous state was NULL", and (_prev != state)
+    # evaluates to NULL when either side is NULL — which would silently
+    # drop transitions INTO a NULL state and duplicate consecutive NULLs.
+    changes = (
+        df.withColumn("_prev", F.lag(state_col).over(w))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(
+            (F.col("_rn") == 1)
+            | ~F.col("_prev").eqNullSafe(F.col(state_col))
         )
-        .filter(F.col("dur") > 0)
-        .select(
-            "user_id", F.round(F.col("wsum") / F.col("dur"), 4).alias("twap")
-        )
+        .select(*key_cols, state_col, *order)
+    )
+    return changes.select(
+        *key_cols,
+        state_col,
+        F.col(ts_col).alias("valid_from"),
+        F.lead(ts_col).over(w).alias("valid_to"),
     )
 
 
@@ -528,27 +686,17 @@ def twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type 2 reconstruction from a change
-    log: collapse consecutive duplicate states per user (keep only rows
-    where event_type differs from its predecessor), then each surviving
-    row's validity runs from its own timestamp to the next change
-    (NULL = current).  Both window passes and the filter between them
-    share the user_id partitioning — Catalyst plans ONE Exchange; the
-    second Window adds only a sort (and since the filter preserves
-    order, the sort is of already-sorted runs).  This is the batch
-    backfill of what stream_stateful maintains incrementally."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    changes = (
-        ev.withColumn("prev", F.lag("event_type").over(w))
-        .filter(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
-        .select("user_id", "event_type", "ts", "event_id")
-    )
-    return changes.select(
-        "user_id",
-        "event_type",
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"),
+    """Slowly-changing-dimension type 2 reconstruction from the event
+    log: the `scd2` kernel with user_id as the key, event_type as the
+    state and (ts, event_id) as the order.  Both window passes and the
+    filter between them share the user_id partitioning — Catalyst plans
+    ONE Exchange; the second Window adds only a sort (and since the
+    filter preserves order, the sort is of already-sorted runs).  This
+    is the batch backfill of what stream_stateful maintains
+    incrementally."""
+    return scd2(
+        table(spark, sf_dir, "events"), ["user_id"], "event_type", "ts",
+        tie_col="event_id",
     )
 
 

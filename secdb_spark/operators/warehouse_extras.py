@@ -536,6 +536,38 @@ def dedup_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def running_distinct(
+    df: DataFrame,
+    dist_col: str,
+    order_cols: list[str],
+    by: list[str],
+) -> DataFrame:
+    """Running COUNT(DISTINCT dist_col) per group under the given order
+    (win_running_distinct's algebra with columns parameterized) — not
+    directly expressible in any engine (distinct aggregates are barred
+    from window frames), so it compiles to the first-occurrence trick:
+    flag each (by, value)'s first row, then running-sum the flags.
+    Both windows partition by `by` ALONE — a (by, value) window would
+    pay a second Exchange (hashpartitioning(by, value) does NOT satisfy
+    hashpartitioning(by)); this plans ONE Exchange + two Sorts.  State
+    per frame is one counter, never a distinct-set.  Returns the input
+    rows + `n_distinct`."""
+    w_first = Window.partitionBy(*by).orderBy(dist_col, *order_cols)
+    w_run = (
+        Window.partitionBy(*by)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    prev = F.lag(dist_col).over(w_first)
+    flagged = df.withColumn(
+        "_is_first",
+        F.when(prev.isNull() | (prev != F.col(dist_col)), 1).otherwise(0),
+    )
+    return flagged.withColumn(
+        "n_distinct", F.sum("_is_first").over(w_run).cast("long")
+    ).drop("_is_first")
+
+
 @register(
     "win_running_distinct",
     oracle="""
@@ -554,37 +586,14 @@ def dedup_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running COUNT(DISTINCT) over a window — not directly expressible in
-    either engine (distinct aggregates are barred from window frames), so
-    it compiles to the first-occurrence trick: flag each (user, type)'s
-    first event, then running-sum the flags.  Both windows partition by
-    user_id ALONE — the first-occurrence flag comes from lag(event_type)
-    under a (event_type, ts, event_id) sort, not a (user, type) window
-    (hashpartitioning(user, type) does NOT satisfy hashpartitioning(user),
-    so that formulation pays a second Exchange; this one plans ONE
-    Exchange + two Sorts, plan-pinned).  State per frame is one counter,
-    never a distinct-set."""
+    """Running COUNT(DISTINCT event_type) per user: the
+    `running_distinct` kernel in (ts, event_id) order.  One Exchange +
+    two Sorts, plan-pinned."""
     ev = table(spark, sf_dir, "events")
-    w_first = Window.partitionBy("user_id").orderBy(
-        "event_type", "ts", "event_id"
-    )
-    w_run = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    flagged = ev.withColumn(
-        "is_first",
-        F.when(
-            F.lag("event_type").over(w_first).isNull()
-            | (F.lag("event_type").over(w_first) != F.col("event_type")),
-            1,
-        ).otherwise(0),
-    )
-    return flagged.select(
-        "user_id",
-        "event_id",
-        F.sum("is_first").over(w_run).cast("long").alias("n_distinct_types"),
+    return running_distinct(
+        ev, "event_type", ["ts", "event_id"], by=["user_id"]
+    ).select(
+        "user_id", "event_id", F.col("n_distinct").alias("n_distinct_types")
     )
 
 

@@ -660,6 +660,40 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def streaks(
+    df: DataFrame,
+    by: list[str],
+    date_col: str,
+) -> DataFrame:
+    """Longest consecutive-active-days streak per group of ANY
+    (group, date) frame (win_streak's algebra with columns
+    parameterized) — the classic gaps-and-islands shape: distinct
+    active days, island key = day number minus row_number (constant
+    within a consecutive run), then two aggregates.  Returns
+    (by..., longest_streak, n_active_days).
+
+    Scale: every step — distinct, window, both groupBys — shares the
+    `by` partitioning, so the whole kernel is ONE full-data Exchange
+    over the (group, day) DISTINCT aggregate."""
+    days = df.select(
+        *by,
+        F.datediff(
+            F.col(date_col), F.to_date(F.lit("1970-01-01"))
+        ).alias("_d"),
+    ).distinct()
+    w = Window.partitionBy(*by).orderBy("_d")
+    islands = days.withColumn(
+        "_island", F.col("_d") - F.row_number().over(w)
+    )
+    runs = islands.groupBy(*by, "_island").agg(
+        F.count(F.lit(1)).alias("_len")
+    )
+    return runs.groupBy(*by).agg(
+        F.max("_len").cast("long").alias("longest_streak"),
+        F.sum("_len").cast("long").alias("n_active_days"),
+    )
+
+
 @register(
     "win_streak",
     oracle="""
@@ -682,26 +716,13 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def win_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive-active-days streak per user — the classic
-    gaps-and-islands shape: distinct active days, island key = day number
-    minus row_number (constant within a consecutive run), then two
-    aggregates.  Every step — distinct, window, both groupBys — shares
-    the user_id partitioning, so the whole op is ONE full-data Exchange
-    over the (user, day) DISTINCT aggregate (never raw events past the
-    first dedup)."""
+    """Longest consecutive-active-days streak per user: the `streaks`
+    kernel over each event's calendar day.  The whole op is ONE
+    full-data Exchange over the (user, day) DISTINCT aggregate (never
+    raw events past the first dedup)."""
     ev = table(spark, sf_dir, "events")
-    days = ev.select(
-        "user_id",
-        F.datediff(F.to_date("ts"), F.to_date(F.lit("1970-01-01"))).alias("d"),
-    ).distinct()
-    w = Window.partitionBy("user_id").orderBy("d")
-    islands = days.withColumn("island", F.col("d") - F.row_number().over(w))
-    runs = islands.groupBy("user_id", "island").agg(
-        F.count(F.lit(1)).alias("len")
-    )
-    return runs.groupBy("user_id").agg(
-        F.max("len").cast("long").alias("longest_streak"),
-        F.sum("len").cast("long").alias("n_active_days"),
+    return streaks(
+        ev.select("user_id", F.to_date("ts").alias("day")), ["user_id"], "day"
     )
 
 

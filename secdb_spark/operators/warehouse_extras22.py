@@ -184,11 +184,13 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its pin (the un-hinted plan sort-merge-joined the edge list by a
     # then by b every round).  Join strategy never changes results;
     # above the gate the distributed shape is unchanged.
-    # Gate proxy: the live set is bounded by the node count, itself
-    # bounded by |customers| + |suppliers| < the orders footer row
-    # count — a driver-side footer read, never a Spark job.
+    # Gate size: the live set is bounded by the node count, itself
+    # bounded by |customers| + |suppliers| — two parquet-footer reads,
+    # taken once before the rounds, never a Spark job.
     from .warehouse_extras4 import PR_BROADCAST_NODES
 
+    n_node_bound = sum(table_rows(sf_dir, t) for t in ("customer", "supplier"))
+    broadcast_live = n_node_bound <= PR_BROADCAST_NODES
     lives = []
     for i in range(1, KCORE_ROUNDS + 1):
         live = pin(
@@ -197,11 +199,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_d") >= KCORE_K)
             .select(F.col("a").alias("node"))
         )
-        bl = (
-            F.broadcast(live)
-            if table_rows(sf_dir, "orders") <= PR_BROADCAST_NODES
-            else live
-        )
+        bl = F.broadcast(live) if broadcast_live else live
         u = pin(
             u.join(bl.select(F.col("node").alias("a")), "a")
             .join(bl.select(F.col("node").alias("b")), "b")

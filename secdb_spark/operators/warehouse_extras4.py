@@ -501,6 +501,41 @@ def corpus_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def drawdown(
+    df: DataFrame,
+    val_col: str,
+    order_cols: list[str],
+    by: list[str],
+    cumulate: bool = True,
+) -> DataFrame:
+    """Maximum drawdown per group of ANY ordered series (win_drawdown's
+    algebra with columns parameterized): equity is the running sum of
+    `val_col` (cumulate=True, e.g. per-trade P&L) or the raw value
+    itself (cumulate=False, e.g. an already-cumulative price level);
+    drawdown(t) = running-peak(equity) - equity(t), reported as the
+    per-group max.  Feed an exactly-representable series (ints /
+    fixed-point cents) for cross-engine determinism — float running
+    sums are order-dependent.  Pass tie-breaking order_cols.
+
+    Scale shape: ONE shuffle on `by` shared by both window passes and
+    the final aggregate (same partitioning expression — Catalyst plans
+    a single Exchange); within-partition sort once.  Never a global
+    window.  Returns (by..., n_rows, max_dd)."""
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    equity = F.sum(val_col).over(w) if cumulate else F.col(val_col)
+    eq = df.withColumn("_equity", equity).withColumn(
+        "_peak", F.max("_equity").over(w)
+    )
+    return eq.groupBy(*by).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.max(F.col("_peak") - F.col("_equity")).alias("max_dd"),
+    )
+
+
 @register(
     "win_drawdown",
     oracle="""
@@ -531,32 +566,19 @@ def corpus_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum drawdown per customer over the running sum of order value
-    (fixed-point cents): drawdown(t) = running-peak(equity) - equity(t),
-    reported as the per-customer max.  The canonical nested-window
-    pattern (max-over-running-sum) on an exactly-integer series; order
-    is tie-safe via (o_orderdate, o_orderkey).
-
-    Scale shape: ONE shuffle on o_custkey shared by both window passes
-    and the final aggregate (same partitioning expression — Catalyst
-    plans a single Exchange); within-partition sort once.  Never a
-    global window."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    (fixed-point cents): the `drawdown` kernel, order tie-safe via
+    (o_orderdate, o_orderkey).  Cents keep the running sums exact."""
     c = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
         "o_orderdate",
         "o_orderkey",
     )
-    eq = c.withColumn("equity", F.sum("cents").over(w)).withColumn(
-        "peak", F.max("equity").over(w)
-    )
-    return eq.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.max(F.col("peak") - F.col("equity")).cast("bigint").alias("max_dd_c"),
+    dd = drawdown(c, "cents", ["o_orderdate", "o_orderkey"], by=["o_custkey"])
+    return dd.select(
+        "o_custkey",
+        F.col("n_rows").alias("n_orders"),
+        F.col("max_dd").alias("max_dd_c"),
     )
 
 

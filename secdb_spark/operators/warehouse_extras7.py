@@ -26,6 +26,54 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity boundary
 # win_reset_cumsum — cumulative sum that RESETS at session boundaries
 # ---------------------------------------------------------------------------
 
+def reset_cumsum(
+    df: DataFrame,
+    val_col: str,
+    time_col: str,
+    by: list[str],
+    gap: int,
+    tie_cols: list[str] | None = None,
+    scale: int = 4,
+) -> DataFrame:
+    """Cumulative value per group that RESETS whenever an inactivity gap
+    larger than `gap` opens in the NUMERIC time column
+    (win_reset_cumsum's algebra with columns, gap and fixed-point scale
+    parameterized) — the session-scoped running total behind "spend so
+    far this visit".  SQL has no RESET clause, so the canonical
+    composition is gaps-and-islands: flag boundaries with a lag, number
+    sessions with a running sum of flags, then run the cumulative
+    inside the (by, session) partition.  Values quantize to fixed-point
+    bigints at `scale`, so every running total is exact.  Returns the
+    input rows + (session_id, running_value).
+
+    Scale: all three windows order by the same (time, ties) within the
+    `by` partition — ONE hash exchange serves the whole chain (the
+    session_id repartition is a subset-key refinement evaluated within
+    the same sorted run).  State per window is O(1)."""
+    tie_cols = tie_cols or []
+    w = Window.partitionBy(*by).orderBy(time_col, *tie_cols)
+    gap_expr = F.col(time_col) - F.lag(time_col).over(w)
+    flagged = df.withColumn(
+        "_new_session",
+        F.when(gap_expr.isNull() | (gap_expr > gap), 1).otherwise(0),
+    )
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    sess = flagged.withColumn(
+        "session_id", F.sum("_new_session").over(run).cast("long")
+    ).drop("_new_session")
+    wrun = (
+        Window.partitionBy(*by, "session_id")
+        .orderBy(time_col, *tie_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return sess.withColumn(
+        "running_value",
+        F.sum(F.floor(F.col(val_col) * (10**scale) + 0.5).cast("long"))
+        .over(wrun)
+        .cast("long"),
+    )
+
+
 @register(
     "win_reset_cumsum",
     oracle=f"""
@@ -54,46 +102,17 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity boundary
 def win_reset_cumsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative value per user that RESETS whenever a 30-minute
     inactivity gap opens — the session-scoped running total behind
-    "spend so far this visit".  SQL has no RESET clause, so the
-    canonical composition is gaps-and-islands: flag boundaries with a
-    lag, number sessions with a running sum of flags, then run the
-    cumulative inside the (user, session) partition.  Values are 1e4
-    fixed-point bigints, so every running total is exact.
-
-    Scale: all three windows order by the same (ts, event_id) within
-    the user partition — ONE hash exchange on user_id serves the whole
-    chain (the session_id repartition is a subset-key refinement Spark
-    evaluates within the same sorted run).  State per window is O(1)."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    us = F.unix_micros("ts")
-    gap = us - F.lag(us).over(w)
-    flagged = ev.select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(gap.isNull() | (gap > SESSION_GAP_US), 1)
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = flagged.withColumn(
-        "session_id", F.sum("new_session").over(run)
-    )
-    wrun = (
-        Window.partitionBy("user_id", "session_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return sess.select(
-        "user_id",
-        "event_id",
-        F.col("session_id").cast("long").alias("session_id"),
-        F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long"))
-        .over(wrun)
-        .cast("long")
-        .alias("running_value_e4"),
+    "spend so far this visit": the `reset_cumsum` kernel over epoch-µs
+    timestamps, ties broken by event_id, values as 1e4 fixed-point
+    bigints so every running total is exact.  ONE hash exchange on
+    user_id serves the whole window chain."""
+    ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
+    return reset_cumsum(
+        ev, "value", "us", by=["user_id"], gap=SESSION_GAP_US,
+        tie_cols=["event_id"], scale=4,
+    ).select(
+        "user_id", "event_id", "session_id",
+        F.col("running_value").alias("running_value_e4"),
     )
 
 
@@ -235,6 +254,39 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 MOVMED_DAYS = 7
 
 
+def moving_median(
+    df: DataFrame,
+    val_col: str,
+    order_col: str,
+    by: list[str],
+    days: int = 7,
+) -> DataFrame:
+    """Moving median over ANY pre-bucketed INTEGER series
+    (win_moving_median's algebra with columns and frame width
+    parameterized) — the robust trend line (a median frame shrugs off
+    the single-point spikes that drag a moving average).  Spark cannot
+    window `median` with a frame (INVALID_WINDOW_SPEC), so the kernel
+    collects the BOUNDED frame into a sorted array and picks the middle
+    element(s) — exact for integers, interpolating two ints as (a+b)/2
+    (exact in binary).  Pass ONE row per (by, order_col).  Returns the
+    input rows + `moving_median` (round 4).
+
+    Scale: the frame is bounded (`days` rows), so the collected array
+    is O(1) per row — the one place a collect_list window is
+    scale-legitimate; feed the pre-bucketed aggregate, never the raw
+    stream."""
+    fr = (
+        Window.partitionBy(*by)
+        .orderBy(order_col)
+        .rowsBetween(-(days - 1), Window.currentRow)
+    )
+    arr = F.sort_array(F.collect_list(val_col).over(fr))
+    n = F.size(arr)
+    lo = F.element_at(arr, ((n + 1) / 2).cast("int"))
+    hi = F.element_at(arr, (n / 2 + 1).cast("int"))
+    return df.withColumn("moving_median", F.round((lo + hi) / 2.0, 4))
+
+
 @register(
     "win_moving_median",
     oracle=f"""
@@ -252,42 +304,50 @@ MOVMED_DAYS = 7
 )
 def win_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moving median of the daily event count ({MOVMED_DAYS}-day
-    trailing frame) — the robust trend line (a median frame shrugs off
-    the single-day spikes that drag a moving average).  Spark cannot
-    window `median` with a frame (INVALID_WINDOW_SPEC), so the engine
-    collects the bounded frame into a sorted array and picks the
-    middle element(s) — exact for integer counts, interpolating two
-    ints as (a+b)/2 (exact in binary), matching DuckDB's native
-    windowed `median` semantics.
-
-    Scale: the frame is BOUNDED ({MOVMED_DAYS} rows), so the collected
-    array is O(1) per row — this is the one place a collect_list window
-    is scale-legitimate; the window input is the daily aggregate
-    (model-sized per type), not the raw stream."""
+    trailing frame): the `moving_median` kernel over the per-type daily
+    aggregate (model-sized per type), not the raw stream.  Exact for
+    integer counts, interpolating two ints as (a+b)/2 (exact in
+    binary), matching DuckDB's native windowed `median` semantics."""
     ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("c"))
-    fr = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(-(MOVMED_DAYS - 1), Window.currentRow)
-    )
-    arr = F.sort_array(F.collect_list("c").over(fr))
-    n = F.size(arr)
-    lo = F.element_at(arr, ((n + 1) / 2).cast("int"))
-    hi = F.element_at(arr, (n / 2 + 1).cast("int"))
-    return daily.select(
-        "event_type",
-        "day",
-        F.col("c").cast("long").alias("c"),
-        F.round((lo + hi) / 2.0, 4).alias("moving_median"),
+    return moving_median(
+        daily, "c", "day", by=["event_type"], days=MOVMED_DAYS
     )
 
 
 # ---------------------------------------------------------------------------
 # win_fill_forward — LOCF imputation via IGNORE NULLS window
 # ---------------------------------------------------------------------------
+
+def fill_forward(
+    df: DataFrame,
+    key_cols: list[str],
+    ts_col: str,
+    val_col: str,
+    out_col: str | None = None,
+    tie_col: str | None = None,
+) -> DataFrame:
+    """LOCF (last-observation-carried-forward) on ANY keyed series
+    (win_fill_forward's algebra): adds `out_col` carrying the most
+    recent non-null `val_col` forward within each key, in (ts, tie)
+    order.  Rows before a key's first observation stay NULL — LOCF's
+    defining edge.
+
+    Scale shape: one key exchange, running frame with O(1) state (the
+    single last non-null value)."""
+    out = out_col or f"{val_col}_ffill"
+    order = [ts_col] + ([tie_col] if tie_col else [])
+    w = (
+        Window.partitionBy(*key_cols)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return df.withColumn(
+        out, F.last(val_col, ignorenulls=True).over(w)
+    )
+
 
 @register(
     "win_fill_forward",
@@ -312,15 +372,12 @@ def win_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     row carries the user's most recent PURCHASE value forward — the
     fill-forward idiom behind as-of feature joins and sensor-gap
     imputation, and the IGNORE NULLS window surface (§2.E's last
-    uncovered modifier).  Spark expresses it as `last(col,
-    ignorenulls=True)` over the running frame, DuckDB as `last_value(x
-    IGNORE NULLS)` — identical semantics; the carried value is a 1e4
-    fixed-point bigint so equality is exact.  Rows before a user's
-    first purchase stay NULL (LOCF's defining edge).
-
-    Scale: one user_id exchange, running frame with O(1) state (the
-    single last non-null).  Contrast rollup_gapfill, which fills a
-    generated SPINE — this fills in-stream rows; the two compose."""
+    uncovered modifier).  The `fill_forward` kernel expresses it as
+    `last(col, ignorenulls=True)` over the running frame, DuckDB as
+    `last_value(x IGNORE NULLS)` — identical semantics; the carried
+    value is a 1e4 fixed-point bigint so equality is exact.  Contrast
+    rollup_gapfill, which fills a generated SPINE — this fills
+    in-stream rows; the two compose."""
     ev = table(spark, sf_dir, "events")
     marked = ev.select(
         "user_id",
@@ -331,19 +388,10 @@ def win_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 10000 + 0.5).cast("long"),
         ).alias("purchase_e4"),
     )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return marked.select(
-        "user_id",
-        "event_id",
-        "purchase_e4",
-        F.last("purchase_e4", ignorenulls=True)
-        .over(w)
-        .alias("last_purchase_e4"),
-    )
+    return fill_forward(
+        marked, ["user_id"], "ts", "purchase_e4",
+        out_col="last_purchase_e4", tie_col="event_id",
+    ).drop("ts")
 
 
 # ---------------------------------------------------------------------------

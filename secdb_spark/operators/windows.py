@@ -334,6 +334,9 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("band_total"),
         )
     )
+    # Inner equi-join: a NULL status or price would drop the row, which the
+    # native RANGE frame keeps.  The corpus cannot hold one: TPC-H
+    # declares both columns NOT NULL, and the test data has none.
     return o.join(band, ["o_orderstatus", "o_totalprice"]).select(
         "o_orderkey",
         "o_orderstatus",
@@ -422,6 +425,54 @@ def _ewma_sql_terms() -> tuple[str, str]:
 _EWMA_NUM, _EWMA_DEN = _ewma_sql_terms()
 
 
+def ewma(
+    df: DataFrame,
+    val_col: str,
+    order_cols: list[str],
+    by: list[str] | None = None,
+    alpha: float = 0.5,
+    k: int = 5,
+) -> DataFrame:
+    """Bounded-lookback exponentially-weighted moving average of ANY
+    value column (win_ewma's algebra with columns, alpha and the
+    lookback K parameterized).  The infinite recursion
+    ewma_t = a*x_t + (1-a)*ewma_{t-1} is not window-expressible without
+    per-row recursion; the bounded-K form weights lag i by (1-a)^i —
+    the recursion's own decay, renormalized at partition heads — as an
+    exact K-term lag expression.  (At a=0.5 this equals win_ewma's
+    oracle weighting 0.5^i; for other alphas the recursion basis is the
+    correct one — a^i would INVERT the decay.)  All K lags share ONE
+    window spec, so Catalyst plans a single Window node over a single
+    `by` shuffle+sort with per-row state of K doubles; truncation error
+    is bounded at (1-a)^K of total weight.  Pass tie-breaking
+    order_cols (e.g. [ts, id]) — a non-deterministic sort makes the
+    smoothing non-reproducible.  Returns the input rows + `ewma`
+    (round 4)."""
+    by = by or []
+    beta = 1.0 - alpha
+    w = Window.partitionBy(*by).orderBy(*order_cols)
+    num = sum(
+        (
+            F.when(
+                F.lag(val_col, i).over(w).isNotNull(),
+                F.lit(beta**i) * F.lag(val_col, i).over(w),
+            ).otherwise(F.lit(0.0))
+            for i in range(k)
+        ),
+        start=F.lit(0.0),
+    )
+    den = sum(
+        (
+            F.when(
+                F.lag(val_col, i).over(w).isNotNull(), F.lit(beta**i)
+            ).otherwise(F.lit(0.0))
+            for i in range(k)
+        ),
+        start=F.lit(0.0),
+    )
+    return df.withColumn("ewma", F.round(num / den, 4))
+
+
 @register(
     "win_ewma",
     oracle=f"""
@@ -433,38 +484,13 @@ _EWMA_NUM, _EWMA_DEN = _ewma_sql_terms()
 )
 def win_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-lookback exponentially-weighted moving average per user —
-    the smoothing primitive of monitoring/feature pipelines.  The infinite
-    recursion ewma_t = α·x_t + (1-α)·ewma_{t-1} is NOT window-expressible
-    without per-row recursion; the bounded-K form (weights α^i over the
-    last K observations, renormalized at partition heads) is an exact
-    K-term lag expression — all K lags share ONE window spec, so Catalyst
-    plans a single Window node over a single user_id shuffle+sort, with
-    per-row state of K doubles.  K bounds the truncation error at
-    (1-α)·α^K ≈ 1.6 % of weight for α=0.5, K=5."""
+    the smoothing primitive of monitoring/feature pipelines: the `ewma`
+    kernel over each user's (epoch-µs, event_id)-ordered values.  At
+    α=0.5 the kernel's recursion weights (1-α)^i equal the oracle's α^i.
+    K bounds the truncation error at (1-α)·α^K ≈ 1.6 % of weight for
+    α=0.5, K=5."""
     ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    num = sum(
-        (
-            F.when(
-                F.lag("value", i).over(w).isNotNull(),
-                F.lit(EWMA_ALPHA**i) * F.lag("value", i).over(w),
-            ).otherwise(F.lit(0.0))
-            for i in range(EWMA_K)
-        ),
-        start=F.lit(0.0),
-    )
-    den = sum(
-        (
-            F.when(
-                F.lag("value", i).over(w).isNotNull(), F.lit(EWMA_ALPHA**i)
-            ).otherwise(F.lit(0.0))
-            for i in range(EWMA_K)
-        ),
-        start=F.lit(0.0),
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        "value",
-        F.round(num / den, 4).alias("ewma"),
-    )
+    return ewma(
+        ev, "value", ["us", "event_id"], by=["user_id"],
+        alpha=EWMA_ALPHA, k=EWMA_K,
+    ).select("event_id", "user_id", "value", "ewma")

@@ -117,7 +117,25 @@ _DRIVER_CERTIFIED, _DRIVER_EXACT_CERTIFIED = _certified_sets(_CORRECTNESS)
 # row for it.  Add an entry in the commit that changes an already-certified
 # op; remove it once that post-change green lands.  A rows-only -> exact
 # upgrade needs no entry: certified_at_current_class already requeues it.
-_RECERT_ROUND: dict[str, int] = {}
+_RECERT_ROUND: dict[str, int] = {
+    # round 15: the op became a binding of the kernel secdb_spark.api
+    # re-exports (one body for the op and the composable API)
+    "dedup_exact": 15,
+    "events_sessionize": 15,
+    "funnel_events": 15,
+    "retention_cohort": 15,
+    "anomaly_zscore": 15,
+    "twap": 15,
+    "scd2_history": 15,
+    "win_ewma": 15,
+    "win_drawdown": 15,
+    "win_streak": 15,
+    "win_fill_forward": 15,
+    "win_reset_cumsum": 15,
+    "win_moving_median": 15,
+    "win_running_distinct": 15,
+    "win_topk_ties": 15,
+}
 
 
 def _recert_pending(name: str) -> bool:

@@ -145,8 +145,8 @@ FROZEN_ROUND_DIV_SITES = {
     ("warehouse_extras6.py", "ts_autocorr"),
     ("warehouse_extras7.py", "corpus_zipf_slope"),
     ("warehouse_extras7.py", "events_props_stats"),
+    ("warehouse_extras7.py", "moving_median"),
     ("warehouse_extras7.py", "orders_seasonality_index"),
-    ("warehouse_extras7.py", "win_moving_median"),
     ("warehouse_extras8.py", "brand_return_rate"),
     ("warehouse_extras8.py", "customer_reorder_rate"),
     ("warehouse_extras8.py", "funnel_latency"),
@@ -158,7 +158,7 @@ FROZEN_ROUND_DIV_SITES = {
     ("warehouse_extras9.py", "part_supplier_concentration"),
     ("warehouse_extras9.py", "ts_cusum"),
     ("warehouse_extras9.py", "ts_stochastic"),
-    ("windows.py", "win_ewma"),
+    ("windows.py", "ewma"),
 }
 
 

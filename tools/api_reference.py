@@ -109,23 +109,34 @@ FAMILIES = [
 ]
 
 
-def main() -> int:
+def render() -> str:
+    """The text of docs/API.md, built from secdb_spark.api's signatures
+    and docstrings.  Raises ValueError if FAMILIES misses an api name."""
     from secdb_spark import api
 
     listed = {n for _, names in FAMILIES for n in names}
     missing = sorted(set(api.__all__) - listed)
     if missing:
-        print(f"api_reference: add these to FAMILIES: {missing}")
-        return 1
+        raise ValueError(f"api_reference: add these to FAMILIES: {missing}")
 
+    n_shared = sum(
+        getattr(api, n).__module__.startswith("secdb_spark.operators.")
+        for n in api.__all__
+    )
+    n_other = len(api.__all__) - n_shared
     out = [
         "# secdb_spark.api reference",
         "",
         "Composable DataFrame-in/DataFrame-out functions over ARBITRARY",
         "tables — the certified registry kernels with the columns and",
         "constants parameterized.  Generated by `python",
-        "tools/api_reference.py`; adapter-vs-kernel equality is pinned by",
-        "`tests/test_api_twins.py`.",
+        "tools/api_reference.py`.",
+        "",
+        f"{n_shared} functions are their registry op's own body, re-exported",
+        "from `secdb_spark/operators/`, so the DuckDB oracle certifies them",
+        f"directly.  The other {n_other} are written in `api.py`;",
+        "`tests/test_api_twins.py` pins each one that has a registry twin",
+        "to it.",
         "",
     ]
     for family, names in FAMILIES:
@@ -145,14 +156,23 @@ def main() -> int:
                 out.append("")
                 out.append(scale[0].replace("\n", " ").strip())
             out.append("")
+    return "\n".join(out) + "\n"
+
+
+def main() -> int:
+    try:
+        text = render()
+    except ValueError as e:
+        print(e)
+        return 1
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "docs", "API.md",
     )
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote {path} ({len(api.__all__)} functions)")
+        f.write(text)
+    print(f"wrote {path}")
     return 0
 
 
