@@ -62,8 +62,10 @@ from .operators._global_order import (  # noqa: E402
 )
 
 # Shared kernels: one body each, beside the registry op bound to it.
+from .operators.aggregations import histogram  # noqa: E402
 from .operators.ivm_extras import topk_ties  # noqa: E402
 from .operators.llm_pipeline import exact_dup_clusters  # noqa: E402
+from .operators.stats_extras2 import welch_ttest  # noqa: E402
 from .operators.timeseries import (  # noqa: E402
     funnel,
     retention_cohorts,
@@ -72,13 +74,57 @@ from .operators.timeseries import (  # noqa: E402
     twap,
     zscore_outliers,
 )
-from .operators.warehouse_extras import running_distinct  # noqa: E402
-from .operators.warehouse_extras2 import streaks  # noqa: E402
-from .operators.warehouse_extras4 import drawdown  # noqa: E402
+from .operators.warehouse_extras import (  # noqa: E402
+    last_touch,
+    rolling_active,
+    running_distinct,
+    window_conversion,
+)
+from .operators.warehouse_extras2 import linfit, streaks  # noqa: E402
+from .operators.warehouse_extras3 import skew_kurt  # noqa: E402
+from .operators.warehouse_extras4 import (  # noqa: E402
+    burst_detect,
+    drawdown,
+    gini,
+    hhi,
+    vwap,
+)
+from .operators.warehouse_extras6 import autocorr  # noqa: E402
 from .operators.warehouse_extras7 import (  # noqa: E402
+    cumulative_entities,
     fill_forward,
     moving_median,
     reset_cumsum,
+)
+from .operators.warehouse_extras8 import (  # noqa: E402
+    bounce_rate,
+    dispersion_index,
+    geomean,
+    rolling_corr,
+    rsi,
+    stage_latency,
+    trend_slope,
+)
+from .operators.warehouse_extras9 import cusum, gap_hist  # noqa: E402
+from .operators.warehouse_extras13 import theil  # noqa: E402
+from .operators.warehouse_extras36 import (  # noqa: E402
+    binom_test,
+    fisher_exact,
+)
+from .operators.warehouse_extras37 import (  # noqa: E402
+    ar1_fit,
+    kendall_tau,
+    mode_exact,
+)
+from .operators.warehouse_extras38 import (  # noqa: E402
+    drawdown_duration,
+    ols_forecast,
+    weighted_percentiles,
+)
+from .operators.warehouse_extras39 import (  # noqa: E402
+    adf_stat,
+    bartlett,
+    jarque_bera,
 )
 from .operators.windows import ewma  # noqa: E402
 
@@ -2285,141 +2331,6 @@ def trimmed_mean(
     )
 
 
-def _logfact_joined(df: DataFrame, pairs: list[tuple[str, "Column"]],
-                    max_n: int) -> DataFrame:
-    """Join the DEC12-exact log-factorial table (stat_fisher_exact's
-    machinery, operators/warehouse_extras36._logfact) once per requested
-    (alias, key expression)."""
-    from .operators.warehouse_extras36 import _logfact
-
-    lf = pin(_logfact(df.sparkSession, max_n))
-    out = df
-    for alias, key in pairs:
-        lfa = lf.select(
-            F.col("m").alias(f"_m_{alias}"), F.col("lf").alias(alias)
-        )
-        out = out.join(
-            F.broadcast(lfa), key == F.col(f"_m_{alias}")
-        ).drop(f"_m_{alias}")
-    return out
-
-
-def binom_test(
-    df: DataFrame,
-    group_cols: list[str],
-    success_col: str,
-    p0: float = 0.5,
-) -> DataFrame:
-    """Exact one-sided binomial tail P(X >= x | n, p0) per group on ANY
-    table (stat_binom_test's algebra with p0 parameterized):
-    `success_col` is a boolean column.  he4-presented p (exp() is
-    1-ulp engine-dependent — the kernel's documented caveat).
-    Returns (group_cols..., n, x, p_upper).
-
-    Exactness limit: the shared log-factorial table refuses any group
-    with n > 100,000 (ValueError at call time) — the table build goes
-    quadratic and an exact tail adds nothing at that sample size; use
-    the certified asymptotic siblings (abtest_ztest, stat_welch_ttest,
-    chi2_independence) instead."""
-    import math
-
-    if not 0 < p0 < 1:
-        raise ValueError("p0 must be in (0, 1)")
-    g = pin(
-        df.groupBy(*group_cols).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.col(success_col)).alias("x"),
-        )
-    )
-    max_n = g.agg(F.max("n")).head()[0] or 0
-    tail = g.select(
-        *group_cols, "n", "x",
-        F.explode(F.sequence(F.col("x"), F.col("n"))).alias("_k"),
-    )
-    t = _logfact_joined(
-        tail,
-        [
-            ("_ln", F.col("n")),
-            ("_lk", F.col("_k")),
-            ("_lnk", F.col("n") - F.col("_k")),
-        ],
-        int(max_n),
-    )
-    logp = (
-        F.col("_ln") - F.col("_lk") - F.col("_lnk")
-        + F.col("_k") * math.log(p0)
-        + (F.col("n") - F.col("_k")) * math.log(1.0 - p0)
-    )
-    return (
-        t.withColumn("_p", F.exp(logp).cast("decimal(38,18)"))
-        .groupBy(*group_cols, "n", "x")
-        .agg(he4(F.sum("_p").cast("double")).alias("p_upper"))
-        .select(
-            *group_cols,
-            F.col("n").cast("long").alias("n"),
-            F.col("x").cast("long").alias("x"),
-            "p_upper",
-        )
-    )
-
-
-def fisher_exact(
-    df: DataFrame,
-    row_flag: "Column | str",
-    col_flag: "Column | str",
-) -> DataFrame:
-    """One-sided Fisher exact test of the 2x2 built from two boolean
-    columns/expressions on ANY table (stat_fisher_exact's algebra):
-    P(X >= a) under the hypergeometric null, exact lf-table tail sum,
-    he4-presented p.  Returns one row (a, r1, c1, n, p_one_sided).
-
-    Exactness limit: the shared log-factorial table refuses tables with
-    n > 100,000 total rows (ValueError at call time) — the table build
-    goes quadratic and an exact test adds nothing at that sample size;
-    use the certified asymptotic sibling chi2_independence (or
-    abtest_ztest for two-proportion designs) instead."""
-    rf = F.col(row_flag) if isinstance(row_flag, str) else row_flag
-    cf = F.col(col_flag) if isinstance(col_flag, str) else col_flag
-    cells = pin(
-        df.agg(
-            F.count_if(rf & cf).alias("a"),
-            F.count_if(rf).alias("r1"),
-            F.count_if(cf).alias("c1"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    n = int(cells.head()["n"])
-    tail = cells.select(
-        "a", "r1", "c1", "n",
-        F.explode(F.sequence(F.col("a"), F.least("r1", "c1"))).alias("_k"),
-    )
-    t = _logfact_joined(
-        tail,
-        [
-            ("_lc1", F.col("c1")),
-            ("_lk", F.col("_k")),
-            ("_lc1k", F.col("c1") - F.col("_k")),
-            ("_lnc1", F.col("n") - F.col("c1")),
-            ("_lr1k", F.col("r1") - F.col("_k")),
-            ("_lrest", F.col("n") - F.col("c1") - F.col("r1") + F.col("_k")),
-            ("_ln", F.col("n")),
-            ("_lr1", F.col("r1")),
-            ("_lnr1", F.col("n") - F.col("r1")),
-        ],
-        n,
-    )
-    logp = (
-        F.col("_lc1") - F.col("_lk") - F.col("_lc1k")
-        + F.col("_lnc1") - F.col("_lr1k") - F.col("_lrest")
-        - (F.col("_ln") - F.col("_lr1") - F.col("_lnr1"))
-    )
-    return (
-        t.withColumn("_p", F.exp(logp).cast("decimal(38,18)"))
-        .groupBy("a", "r1", "c1", "n")
-        .agg(he4(F.sum("_p").cast("double")).alias("p_one_sided"))
-    )
-
-
 def jaccard_neighbors(
     df: DataFrame,
     node_col: str,
@@ -2866,41 +2777,6 @@ def pagerank(
     return r
 
 
-def histogram(
-    df: DataFrame,
-    val_col: str,
-    width: float,
-) -> DataFrame:
-    """Equi-width histogram of ANY numeric column (agg_histogram's
-    algebra with the width parameterized) — the profiling primitive
-    behind skew detection and partition sizing.  Returns (bucket,
-    bucket_lo, n, lo, hi).  bucket_lo rounds to enough decimals for the
-    width (>= 2, widening for sub-0.01 widths so adjacent buckets never
-    share a label); `bucket` is the exact key either way.
-
-    Scale shape: the bucket id is floor(x/width) inside the scan's
-    codegen, so the whole histogram is ONE map-side-combinable groupBy
-    on a small key domain — a histogram for the cost of one scan at any
-    size."""
-    import math
-
-    if width <= 0:
-        raise ValueError("width must be > 0")
-    # label precision follows the width: 2 decimals for width >= 0.01
-    # (the kernel's presentation), more below it so bucket_lo stays
-    # faithful (ADVICE r9: width=0.001 buckets shared a rounded label)
-    decimals = max(2, -math.floor(math.log10(width)) + 2)
-    bucket = F.floor(F.col(val_col) / F.lit(width))
-    return df.groupBy(
-        bucket.cast("bigint").alias("bucket"),
-        F.round(bucket * F.lit(width), decimals).alias("bucket_lo"),
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.round(F.min(val_col), 2).alias("lo"),
-        F.round(F.max(val_col), 2).alias("hi"),
-    )
-
-
 def interval_merge(
     df: DataFrame,
     key_cols: list[str],
@@ -3024,73 +2900,6 @@ def triangle_count(
     )
 
 
-def kendall_tau(
-    df: DataFrame,
-    key_col: str,
-    x_col: str,
-    y_col: str,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """Exact Kendall tau-b between two INTEGER-VALUED columns on ANY
-    table (ts_kendall_tau's algebra with the series parameterized):
-    concordant/discordant pairs counted by integer comparison over all
-    unordered row pairs (keyed a<b on `key_col` so each pair counts
-    once), ties removed from the denominator.  Returns one row per
-    group (group_cols..., n_pairs, concordant, discordant, tau_b).
-    Cast float inputs to fixed-point integers first — tau is
-    rank-based, so any order-preserving integerization is exact.
-
-    Scale shape: the O(n^2) pair join runs per group and is only
-    appropriate for model-sized groups (daily/monthly series, cohort
-    summaries — the certified kernel's calendar-bounded shape); an
-    O(n log n) merge-inversion count only pays past ~10^5 rows per
-    group."""
-    group_cols = list(group_cols or [])
-    base = df.select(
-        *group_cols,
-        F.col(key_col).alias("_k"),
-        F.col(x_col).alias("_x"),
-        F.col(y_col).alias("_y"),
-    )
-    a, b = base.alias("a"), base.alias("b")
-    cond = F.col("a._k") < F.col("b._k")
-    for g in group_cols:
-        cond = cond & (F.col(f"a.{g}") == F.col(f"b.{g}"))
-    prod = (F.col("b._x") - F.col("a._x")) * (F.col("b._y") - F.col("a._y"))
-    p = a.join(b, cond).select(
-        *[F.col(f"a.{g}").alias(g) for g in group_cols],
-        F.when(prod > 0, 1).otherwise(0).alias("conc"),
-        F.when(prod < 0, 1).otherwise(0).alias("disc"),
-        F.when(F.col("a._x") == F.col("b._x"), 1).otherwise(0).alias("tx"),
-        F.when(F.col("a._y") == F.col("b._y"), 1).otherwise(0).alias("ty"),
-    )
-    s = p.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("long").alias("n0"),
-        F.sum("conc").cast("long").alias("c"),
-        F.sum("disc").cast("long").alias("dd"),
-        F.sum("tx").cast("long").alias("stx"),
-        F.sum("ty").cast("long").alias("sty"),
-    )
-    from .operators._helpers import he4
-
-    return s.select(
-        *group_cols,
-        F.col("n0").alias("n_pairs"),
-        F.col("c").alias("concordant"),
-        F.col("dd").alias("discordant"),
-        F.when(
-            (F.col("n0") - F.col("stx") > 0) & (F.col("n0") - F.col("sty") > 0),
-            he4(
-                (F.col("c") - F.col("dd"))
-                / F.sqrt(
-                    ((F.col("n0") - F.col("stx")) * (F.col("n0") - F.col("sty")))
-                    .cast("double")
-                )
-            ),
-        ).alias("tau_b"),
-    )
-
-
 def association_rules(
     df: DataFrame,
     basket_col: str,
@@ -3192,92 +3001,6 @@ def interval_overlap_join(
             (
                 F.least("l_end", "r_end") - F.greatest("l_start", "r_start") + 1
             ).alias("overlap"),
-        )
-    )
-
-
-def ar1_fit(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str,
-    val_col: str,
-) -> DataFrame:
-    """AR(1) fit on ANY integer-valued keyed series (ts_ar1_fit's
-    algebra with the series parameterized): x_t = c + phi * x_{t-1}
-    over consecutive OBSERVED rows (ordered by order_col within each
-    group), exact-integer OLS moment sums, he4 phi/intercept, and the
-    mean-reversion half-life -ln2/ln(phi) when 0 < phi < 1.  Returns
-    (group_cols..., n_pairs, phi, intercept, halflife).
-
-    Scale shape: one lag window per group over the (pre-aggregated)
-    series, one combinable moment aggregate — series length is the
-    only size that matters; gaps are treated as consecutive
-    (pre-gapfill with api.gapfill when calendar spacing matters)."""
-    from .operators._helpers import he4
-
-    w = Window.partitionBy(*group_cols).orderBy(order_col)
-    lagged = df.select(
-        *group_cols, F.col(val_col).alias("_x"),
-        F.lag(F.col(val_col)).over(w).alias("_xl"),
-    ).filter(F.col("_xl").isNotNull())
-    d0 = "decimal(38,0)"
-    # operands widen to DECIMAL BEFORE the multiply (and the moment sums
-    # and closing products stay decimal): LONG products wrap silently
-    # above |value| ~3.03e9 (r10 judge)
-    xd = F.col("_x").cast(d0)
-    xld = F.col("_xl").cast(d0)
-    s = lagged.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(xld).alias("sx"),
-        F.sum(xd).alias("sy"),
-        F.sum(xd * xld).alias("sxy"),
-        F.sum(xld * xld).alias("sxx"),
-    )
-    nd = F.col("n").cast(d0)
-    den = (nd * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-    phi = (nd * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    ) / den
-    return s.select(
-        *group_cols,
-        F.col("n").alias("n_pairs"),
-        F.when(den > 0, he4(phi)).alias("phi"),
-        F.when(
-            den > 0, he4((F.col("sy") - phi * F.col("sx")) / F.col("n"))
-        ).alias("intercept"),
-        F.when(
-            (den > 0) & (phi > 0) & (phi < 1),
-            he4(-F.log(F.lit(2.0)) / F.log(phi)),
-        ).alias("halflife"),
-    )
-
-
-def mode_exact(
-    df: DataFrame,
-    group_cols: list[str],
-    val_col: str,
-) -> DataFrame:
-    """Exact per-group mode of ANY column (agg_mode_exact's algebra
-    with group/value parameterized), deterministic tie-break (smallest
-    value wins).  Returns (group_cols..., mode_value, n_at_mode).
-
-    Scale shape: count-then-rank — the inner count is map-side
-    combinable on (group, value); the rank window runs over the count
-    table, whose size is the VALUE DOMAIN per group, never the fact
-    table."""
-    c = df.groupBy(*group_cols, F.col(val_col).alias("_v")).agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.col("_n").desc(), F.col("_v").asc()
-    )
-    return (
-        c.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            *group_cols,
-            F.col("_v").alias("mode_value"),
-            F.col("_n").cast("long").alias("n_at_mode"),
         )
     )
 
@@ -3608,74 +3331,6 @@ def kcore(
     )
 
 
-def gini(
-    df: DataFrame,
-    val_col: str,
-    by: list[str] | None = None,
-    tiebreak_col: str | None = None,
-) -> DataFrame:
-    """Gini inequality coefficient of ANY integer-valued column per
-    group (agg_gini's algebra with columns parameterized): the rank
-    formula G = 2*sum(i*x_i)/(n*sum x) - (n+1)/n with tie-safe ranks
-    (x, tiebreak) — tied values contribute identically under any
-    within-tie order, so pass any unique `tiebreak_col` (default: the
-    value column alone, deterministic only when values are unique).
-    Pass x in exact integer units (e.g. cents) for exact moment sums.
-    Returns (by..., n, gini6) with gini6 = floor(G * 1e6 + 0.5).
-
-    Scale shape: per-group rank windows — never a global sort — and
-    one combinable closing aggregate."""
-    by = by or []
-    order = [F.col(val_col)] + (
-        [F.col(tiebreak_col)] if tiebreak_col else []
-    )
-    w = (
-        Window.partitionBy(*by).orderBy(*order)
-        if by
-        else Window.partitionBy().orderBy(*order)
-    )
-    ranked = df.withColumn("_i", F.row_number().over(w))
-    n = F.count(F.lit(1))
-    return ranked.groupBy(*by).agg(
-        n.cast("bigint").alias("n"),
-        F.floor(
-            (
-                (F.lit(2.0) * F.sum(F.col("_i") * F.col(val_col)))
-                / (n * F.sum(val_col))
-                - (n + F.lit(1.0)) / n
-            )
-            * 1e6
-            + 0.5
-        )
-        .cast("bigint")
-        .alias("gini6"),
-    )
-
-
-def hhi(
-    df: DataFrame,
-    val_col: str,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Herfindahl-Hirschman concentration index of ANY integer-valued
-    column per group (agg_hhi's algebra, 0..10000 regulator scale):
-    HHI = 10000 * sum(x^2)/sum(x)^2 from the integer identity — no
-    per-row float share; x^2 accumulates in DECIMAL(38,0) (int64
-    overflows at ~9.6e9 units per row).  Returns (by..., n, hhi4).
-
-    Scale shape: one fully map-side-combinable aggregate — no window,
-    no second pass."""
-    by = by or []
-    s = F.sum(val_col).cast("double")
-    q = F.sum(F.col(val_col).cast("decimal(38,0)") * F.col(val_col)).cast(
-        "double"
-    )
-    return df.groupBy(*by).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(q / (s * s) * 10000, 4).alias("hhi4"),
-    )
-
-
 def benford(df: DataFrame, val_col: str) -> DataFrame:
     """Benford's-law first-digit audit of ANY numeric column >= 1
     (audit_benford's algebra): observed first-digit shares against the
@@ -3767,37 +3422,6 @@ def spearman(
         * (F.col("n") * F.col("_syy") - F.col("_sy") * F.col("_sy"))
     )
     return m.select(*by, "n", r4(num / den).alias("rho"))
-
-
-def theil(
-    df: DataFrame,
-    val_col: str,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Theil T inequality index of ANY positive integer-valued column
-    per group (agg_theil's algebra with columns parameterized) — the
-    decomposable cousin of gini (Theil sums across subgroups; Gini does
-    not): T = sum(x*ln(x))/X + ln(n/X) with X = sum(x).  Pass x in
-    exact integer units; the x*ln(x) terms quantize to DECIMAL(38,12)
-    before the exact (shuffle-order-free) sum and the closing
-    expression is one shared IEEE tree (round 4).  T = 0 is perfect
-    equality; ln(n) the maximum.  Returns (by..., n, theil).
-
-    Scale shape: one fully map-side-combinable aggregate — no window,
-    no second pass."""
-    from .operators._helpers import r4
-
-    by = by or []
-    dec12 = "decimal(38,12)"
-    n = F.count(F.lit(1))
-    big_x = F.sum(val_col)
-    s = F.sum(
-        (F.col(val_col) * F.log(F.col(val_col).cast("double"))).cast(dec12)
-    ).cast("double")
-    return df.groupBy(*by).agg(
-        n.cast("long").alias("n"),
-        r4(s / big_x + F.log(n.cast("double") / big_x)).alias("theil"),
-    )
 
 
 def cramers_v(
@@ -3894,39 +3518,6 @@ def abc_classify(
     )
 
 
-def vwap(
-    df: DataFrame,
-    amount_col: str,
-    qty_col: str,
-    by: list[str],
-    scale: int = 2,
-) -> DataFrame:
-    """Volume-weighted average price per group on ANY (amount, qty)
-    frame (ts_vwap's algebra with columns parameterized):
-    sum(amount)/sum(qty) with both sums accumulated in int64
-    fixed-point at `scale` decimal digits, so the ratio is ONE double
-    division of two exact integers — deterministic at any partition
-    count, then round(4).  `amount_col` is the EXTENDED amount
-    (price x qty, e.g. l_extendedprice) — passing a per-unit price
-    here computes a plain mean, NOT a VWAP; multiply price*qty into a
-    column first.  Overflow bound: |sum| * 10^scale < 2^63.  Bucket
-    the time axis yourself (pass e.g. date_trunc('month', ts) as a by
-    column).  Returns (by..., price_c, qty_c, vwap4) where the _c
-    columns are the raw fixed-point sums.
-
-    Scale shape: single hash aggregate, fully map-side combinable —
-    the textbook partial-agg-then-tiny-shuffle plan at 100 TB."""
-    from .operators._helpers import dsum_scaled
-
-    amount = dsum_scaled(F.col(amount_col), scale)
-    qty = dsum_scaled(F.col(qty_col), scale)
-    return df.groupBy(*by).agg(
-        amount.alias("price_c"),
-        qty.alias("qty_c"),
-        F.round(amount.cast("double") / qty, 4).alias("vwap4"),
-    )
-
-
 def bollinger(
     df: DataFrame,
     val_col: str,
@@ -4018,109 +3609,6 @@ def weighted_median(
             ).alias("w_median"),
             F.max("_totw").cast("double").alias("total_weight"),
         )
-    )
-
-
-def skew_kurt(
-    df: DataFrame,
-    val_col: str,
-    by: list[str] | None = None,
-    scale: int = 2,
-) -> DataFrame:
-    """Grouped skewness and excess kurtosis of ANY value column from the
-    four raw power sums (agg_skew_kurt's algebra with columns and the
-    fixed-point scale parameterized) — the one-pass map-side-combinable
-    formulation.  Inputs quantize to exact fixed-point bigints at
-    `scale` digits (the quantization factor cancels in both statistics);
-    power sums accumulate in DECIMAL(38,0) (x^4 overflows an int64 sum
-    well below large row counts); the closing arithmetic is one double
-    expression tree, so the result is identical at any partition count —
-    unlike float-accumulated skewness()/kurtosis() built-ins.  Returns
-    (by..., n, skewness, kurtosis), round 4."""
-    from .operators._helpers import r4
-
-    by = by or []
-    d0 = "decimal(38,0)"
-    x = F.floor(F.col(val_col) * (10**scale) + 0.5).cast("long").cast(d0)
-    # operands widen to DECIMAL BEFORE the powers: a LONG x^4 wraps
-    # silently above |quantized| ~55e3 — raw |v| ~551 at scale=2 (r10
-    # judge); decimal powers stay exact to |quantized| ~3.1e9
-    s = df.groupBy(*by).agg(
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(x).cast("double").alias("_s1"),
-        F.sum(x * x).cast("double").alias("_s2"),
-        F.sum(x * x * x).cast("double").alias("_s3"),
-        F.sum(x * x * x * x).cast("double").alias("_s4"),
-    )
-    n, s1, s2, s3, s4 = (F.col(c) for c in ("_n", "_s1", "_s2", "_s3", "_s4"))
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m3 = s3 / n - F.lit(3) * mu * (s2 / n) + F.lit(2) * mu * mu * mu
-    m4 = (
-        s4 / n
-        - F.lit(4) * mu * (s3 / n)
-        + F.lit(6) * mu * mu * (s2 / n)
-        - F.lit(3) * mu * mu * mu * mu
-    )
-    # + 0.0: round() may yield -0.0 in one engine only
-    return s.select(
-        *by,
-        n.cast("long").alias("n"),
-        (r4(m3 / (m2 * F.sqrt(m2))) + 0.0).alias("skewness"),
-        (r4(m4 / (m2 * m2) - 3) + 0.0).alias("kurtosis"),
-    )
-
-
-def welch_ttest(
-    df: DataFrame,
-    group_col: str,
-    group_a: str,
-    group_b: str,
-    val_col: str,
-    scale: int = 2,
-) -> DataFrame:
-    """Welch's unequal-variance t-test between two named groups of ANY
-    value column (stat_welch_ttest's algebra with columns and groups
-    parameterized), with the Welch-Satterthwaite degrees of freedom.
-    One combinable global aggregate — conditional integer moments at
-    `scale` fixed-point digits, no join, no window; the t and df
-    expressions are pure IEEE trees over six exact integers (the
-    quantization factor cancels in t and df; only mean_diff divides
-    back to original units).  Sum-of-squares bound: 2^63 — widen the
-    moment casts to DECIMAL(38,0) past ~1e9 rows of 1e4-sized values.
-    Returns one row (n1, n2, mean_diff, t, df), round 4."""
-    from .operators._helpers import r4
-
-    ev = df.filter(F.col(group_col).isin(group_a, group_b)).select(
-        F.col(group_col).alias("_g"),
-        F.floor(F.col(val_col) * (10**scale) + 0.5).cast("long").alias("_vc"),
-    )
-    is1 = F.col("_g") == group_a
-    is2 = F.col("_g") == group_b
-    vc = F.col("_vc")
-    a = ev.agg(
-        F.count(F.when(is1, 1)).alias("n1"),
-        F.count(F.when(is2, 1)).alias("n2"),
-        F.sum(F.when(is1, vc)).cast("long").alias("_s1"),
-        F.sum(F.when(is2, vc)).cast("long").alias("_s2"),
-        F.sum(F.when(is1, vc * vc)).cast("long").alias("_q1"),
-        F.sum(F.when(is2, vc * vc)).cast("long").alias("_q2"),
-    )
-    n1, n2 = F.col("n1"), F.col("n2")
-    s1, s2 = F.col("_s1"), F.col("_s2")
-    q1, q2 = F.col("_q1"), F.col("_q2")
-    vt1 = (q1.cast("double") - s1.cast("double") * s1 / n1) / (n1 - 1) / n1
-    vt2 = (q2.cast("double") - s2.cast("double") * s2 / n2) / (n2 - 1) / n2
-    mdiff = s1.cast("double") / n1 - s2.cast("double") / n2
-    se2 = vt1 + vt2
-    return a.select(
-        "n1",
-        "n2",
-        r4(mdiff / (10**scale)).alias("mean_diff"),
-        r4(mdiff / F.sqrt(se2)).alias("t"),
-        r4(se2 * se2 / (vt1 * vt1 / (n1 - 1) + vt2 * vt2 / (n2 - 1))).alias(
-            "df"
-        ),
     )
 
 
@@ -4460,125 +3948,6 @@ def corr_matrix(
     return s.select(*out)
 
 
-def autocorr(
-    df: DataFrame,
-    val_col: str,
-    order_col: str,
-    by: list[str] | None = None,
-    lag: int = 1,
-) -> DataFrame:
-    """Lag-k autocorrelation of ANY pre-bucketed integer series
-    (ts_autocorr's algebra with columns and the lag parameterized) —
-    the seasonality/persistence screen (acf ~ 0 is white noise, high
-    acf means momentum).  Consecutive observations pair via a window
-    lag over the ordered series; the Pearson correlation closes from
-    five DECIMAL(38,0) moments of EXACT integers with one IEEE tree.
-    Pass ONE row per (by, order_col) with integer values (quantize
-    fixed-point first) — e.g. a daily count or a cents total.  Returns
-    (by..., n_pairs, acf), round 4.
-
-    Scale: the lag window and the moment rollup both ride the `by`
-    partitioning over the pre-bucketed series, never the raw stream."""
-    from .operators._helpers import r4
-
-    by = by or []
-    d0 = "decimal(38,0)"
-    w = Window.partitionBy(*by).orderBy(order_col)
-    pairs = df.select(
-        *by,
-        F.lag(val_col, lag).over(w).alias("_x"),
-        F.col(val_col).alias("_y"),
-    ).filter(F.col("_x").isNotNull())
-    xd = F.col("_x").cast(d0)
-    yd = F.col("_y").cast(d0)
-    # operands widen to DECIMAL BEFORE the multiply: the LONG product
-    # wraps silently above |value| ~3.03e9 (r10 judge)
-    m = pairs.groupBy(*by).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(xd).alias("_sx"),
-        F.sum(yd).alias("_sy"),
-        F.sum(xd * xd).alias("_sxx"),
-        F.sum(yd * yd).alias("_syy"),
-        F.sum(xd * yd).alias("_sxy"),
-    )
-    nd = F.col("_n").cast(d0)
-    num = nd * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    da = nd * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    db = nd * F.col("_syy") - F.col("_sy") * F.col("_sy")
-    return m.select(
-        *by,
-        F.col("_n").cast("long").alias("n_pairs"),
-        r4(
-            num.cast("double") / F.sqrt(da.cast("double") * db.cast("double"))
-        ).alias("acf"),
-    )
-
-
-def cusum(
-    df: DataFrame,
-    val_col: str,
-    order_col: str,
-    by: list[str],
-) -> DataFrame:
-    """Cumulative-deviation change-point scan over ANY pre-bucketed
-    integer series (ts_cusum's algebra with columns parameterized): the
-    running sum of (value - overall mean) peaks where the rate regime
-    shifts.  Entirely exact integer arithmetic — the deviation cusum at
-    step t is (n*cum_t - t*total)/n, so the scan maximizes the integer
-    |n*cum_t - t*total| and only the reported peak_dev divides at the
-    end.  Peak ties resolve to the earliest order key.  Pass ONE row
-    per (by, order_col) with integer values.  Returns
-    (by..., n_points, peak_at, peak_dev).
-
-    Scale: windows run over the pre-bucketed series; the argmax join
-    broadcasts the |groups|-row max frame."""
-    from .operators._helpers import pin, r4
-
-    series = pin(
-        df.select(
-            *by, F.col(order_col).alias("_o"), F.col(val_col).alias("_c")
-        )
-    )
-    tot = series.groupBy(*by).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("_c").cast("long").alias("_total"),
-    )
-    w = (
-        Window.partitionBy(*by)
-        .orderBy("_o")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = (
-        series.withColumn("_cumc", F.sum("_c").over(w).cast("long"))
-        .withColumn(
-            "_idx",
-            F.row_number().over(Window.partitionBy(*by).orderBy("_o")),
-        )
-        .join(F.broadcast(tot), list(by))
-        .withColumn(
-            "_ex",
-            F.abs(
-                F.col("_n") * F.col("_cumc") - F.col("_idx") * F.col("_total")
-            ),
-        )
-    )
-    cum = pin(cum)
-    m = cum.groupBy(*by).agg(F.max("_ex").alias("_mex"))
-    mj = m.select(*[F.col(g).alias(f"_m_{g}") for g in by], "_mex")
-    jc = F.col("_ex") == F.col("_mex")
-    for g in by:
-        jc = jc & (F.col(g) == F.col(f"_m_{g}"))
-    return (
-        cum.join(F.broadcast(mj), jc)
-        .groupBy(*by)
-        .agg(
-            F.max("_n").alias("n_points"),
-            F.min("_o").alias("peak_at"),
-            r4(F.max("_mex").cast("double") / F.max("_n")).alias("peak_dev"),
-        )
-    )
-
-
 def calendar_gaps(
     df: DataFrame,
     date_col: str,
@@ -4837,103 +4206,6 @@ def ohlc(
     )
 
 
-def rsi(
-    df: DataFrame,
-    close_col: str,
-    order_col: str,
-    by: list[str] | None = None,
-    days: int = 14,
-    scale: int = 4,
-) -> DataFrame:
-    """Relative Strength Index over ANY pre-bucketed close series
-    (ts_rsi's algebra with columns, window and fixed-point scale
-    parameterized; the SMA variant — windowable and engine-exact, unlike
-    Wilder's sequential recursion).  Closes quantize to int64 at `scale`
-    digits, so gains/losses and their `days`-window sums are exact
-    integers and `100 - 100/(1+sg/sl)` is one IEEE tree; the
-    all-loss-zero edge pins to 100 exactly.  Pass ONE row per
-    (by, order_col).  Returns (by..., order, rsi) for rows with a full
-    lookback.
-
-    Scale: lag + one ROWS frame over the pre-bucketed series."""
-    from .operators._helpers import r4
-
-    by = by or []
-    fixed = F.floor(F.col(close_col) * (10**scale) + 0.5).cast("long")
-    wo = Window.partitionBy(*by).orderBy(order_col)
-    delta = (
-        df.select(*by, order_col, fixed.alias("_c"))
-        .withColumn("_d", F.col("_c") - F.lag("_c").over(wo))
-        .filter(F.col("_d").isNotNull())
-    )
-    gl = delta.select(
-        *by,
-        order_col,
-        F.when(F.col("_d") > 0, F.col("_d")).otherwise(0).alias("_gain"),
-        F.when(F.col("_d") < 0, -F.col("_d")).otherwise(0).alias("_loss"),
-        F.row_number().over(wo).alias("_rn"),
-    )
-    fr = wo.rowsBetween(-(days - 1), 0)
-    win = gl.select(
-        *by,
-        order_col,
-        "_rn",
-        F.sum("_gain").over(fr).alias("_sg"),
-        F.sum("_loss").over(fr).alias("_sl"),
-    ).filter(F.col("_rn") >= days)
-    out = F.when(F.col("_sl") == 0, F.lit(100.0)).otherwise(
-        100.0 - 100.0 / (1.0 + F.col("_sg").cast("double") / F.col("_sl"))
-    )
-    return win.select(*by, order_col, r4(out).alias("rsi"))
-
-
-def rolling_corr(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    order_col: str,
-    by: list[str] | None = None,
-    days: int = 28,
-) -> DataFrame:
-    """Rolling `days`-point Pearson correlation between two INTEGER
-    series of ANY pre-bucketed frame (ts_rolling_corr's algebra with
-    columns and window parameterized) — the coupling monitor (a collapse
-    says x stopped driving y; cross-correlation finds the LAG, this
-    tracks strength over time).  All five windowed moments are exact
-    integer sums; the correlation closes in one shared IEEE tree.
-    Quantize non-integer inputs fixed-point first.  Returns
-    (by..., order, corr) for rows with a full lookback, round 4.
-
-    Scale: a single ROWS frame over the pre-bucketed series."""
-    from .operators._helpers import r4
-
-    by = by or []
-    wo = Window.partitionBy(*by).orderBy(order_col)
-    fr = wo.rowsBetween(-(days - 1), 0)
-    d0 = "decimal(38,0)"
-    # operands widen to DECIMAL BEFORE the multiply: the LONG product
-    # wraps silently above |value| ~3.03e9 (r10 judge)
-    x, y = F.col(x_col).cast(d0), F.col(y_col).cast(d0)
-    w = df.select(
-        *by,
-        order_col,
-        F.count(F.lit(1)).over(fr).alias("_n"),
-        F.sum(x).over(fr).alias("_sx"),
-        F.sum(y).over(fr).alias("_sy"),
-        F.sum(x * x).over(fr).alias("_sxx"),
-        F.sum(y * y).over(fr).alias("_syy"),
-        F.sum(x * y).over(fr).alias("_sxy"),
-        F.row_number().over(wo).alias("_rn"),
-    ).filter(F.col("_rn") >= days)
-    nd = F.col("_n").cast(d0)
-    sx, sy = F.col("_sx"), F.col("_sy")
-    corr = (nd * F.col("_sxy") - sx * sy).cast("double") / (
-        F.sqrt((nd * F.col("_sxx") - sx * sx).cast("double"))
-        * F.sqrt((nd * F.col("_syy") - sy * sy).cast("double"))
-    )
-    return w.select(*by, order_col, r4(corr).alias("corr"))
-
-
 def pmi_bigrams(
     df: DataFrame,
     text_col: str,
@@ -5098,39 +4370,6 @@ def readability(
                 / F.greatest(F.lit(1), F.col("n_words"))
             )
         ),
-    )
-
-
-def geomean(
-    df: DataFrame,
-    val_col: str,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Geometric mean of ANY POSITIVE value column per group
-    (agg_geomean's algebra with columns parameterized) — the right
-    average for multiplicative quantities (log-normal-ish
-    distributions, where the arithmetic mean over-weights whales).
-    Each ln quantizes to an e6 BIGINT before summation, so the
-    accumulation is exact integer in any order and exp(sum/n/1e6) is
-    one IEEE tree — deterministic at any partition count.  Returns
-    (by..., n, geomean), round 4.
-
-    Scale: one map-side-combinable aggregate — the same quantized-log
-    trick keeps any log-domain statistic hash-certifiable."""
-    from .operators._helpers import r4
-
-    by = by or []
-    q = 10**6
-    lq = F.floor(F.log(F.col(val_col)) * q + 0.5).cast("long")
-    return (
-        df.select(*by, lq.alias("_lq"))
-        .groupBy(*by)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            r4(
-                F.exp(F.sum("_lq").cast("double") / F.count(F.lit(1)) / q)
-            ).alias("geomean"),
-        )
     )
 
 
@@ -5827,50 +5066,6 @@ def stickiness(
     )
 
 
-def rolling_active(
-    df: DataFrame,
-    id_col: str,
-    ts_col: str,
-    days: int = 7,
-) -> DataFrame:
-    """Rolling `days`-day active entities of ANY activity stream
-    (rolling_active_users' algebra with columns and window
-    parameterized) — the WAU curve: an entity active on day d is active
-    for windows ending d .. d+days-1.  Rolling DISTINCT cannot run in a
-    window frame, so the scalable compilation is contribution
-    expansion: distinct (id, day) pairs explode to their window days,
-    dedup, and count per window day (restricted to days the data
-    actually covers).  The day key crosses as 'yyyy-MM-dd' strings
-    (DATE dtype portability).  Returns (window_day, active).
-
-    Scale: raw events reduce to (id, day) FIRST (one combinable
-    shuffle); the expansion carries days x the aggregate — a vanishing
-    fraction of the stream; the day-domain join broadcasts."""
-    day = F.to_date(ts_col)
-    user_days = df.select(F.col(id_col).alias("_id"), day.alias("_d")).distinct()
-    contrib = (
-        user_days.select(
-            "_id",
-            F.explode(F.sequence(F.lit(0), F.lit(days - 1))).alias("_k"),
-            "_d",
-        )
-        .select(
-            "_id",
-            F.date_format(F.date_add(F.col("_d"), F.col("_k")), "yyyy-MM-dd")
-            .alias("window_day"),
-        )
-        .distinct()
-    )
-    domain = df.select(
-        F.date_format(day, "yyyy-MM-dd").alias("window_day")
-    ).distinct()
-    return (
-        contrib.join(F.broadcast(domain), "window_day")
-        .groupBy("window_day")
-        .agg(F.count(F.lit(1)).alias("active"))
-    )
-
-
 def gap_stats(
     df: DataFrame,
     id_col: str,
@@ -6054,40 +5249,6 @@ def iqr_outliers(
     )
 
 
-def burst_detect(
-    df: DataFrame,
-    id_col: str,
-    time_col: str,
-    window: int = 3_600_000_000,
-) -> DataFrame:
-    """Burst detection over ANY (entity, numeric time) stream
-    (events_burst's algebra with columns and window parameterized):
-    each entity's maximum row count inside any trailing `window` of the
-    time axis — the rate-limit / fraud-velocity signal.  A RANGE frame
-    over the integer time column (not ROWS) so simultaneous rows are
-    window peers deterministically.  Pass epoch micros with the default
-    1-hour window, or any integer axis with a matching span.  Returns
-    (id, max_burst, n_rows).
-
-    Scale: one shuffle on the id shared by the range-frame window and
-    the final aggregate; the frame scan is the two-pointer sliding
-    count inside each sorted partition — linear, no self-join
-    materialization of the neighborhood."""
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy(time_col)
-        .rangeBetween(-window, 0)
-    )
-    return (
-        df.withColumn("_c", F.count(F.lit(1)).over(w))
-        .groupBy(id_col)
-        .agg(
-            F.max("_c").cast("bigint").alias("max_burst"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        )
-    )
-
-
 def quantile_bins(
     df: DataFrame,
     val_col: str,
@@ -6121,213 +5282,6 @@ def quantile_bins(
         F.count(F.lit(1)).alias("n"),
         F.min("_v").alias("lo"),
         F.max("_v").alias("hi"),
-    )
-
-
-def last_touch(
-    df: DataFrame,
-    id_col: str,
-    event_col: str,
-    val_col: str,
-    order_cols: list[str],
-    conversion: str,
-    default: str = "direct",
-) -> DataFrame:
-    """Last-touch attribution over ANY event stream
-    (attribution_last_touch's algebra with columns and the conversion
-    event parameterized): each conversion's value is credited to the
-    entity's most recent preceding non-conversion event type (`default`
-    when the conversion is the entity's first event).
-    last(ignorenulls) over a [unbounded, -1] row frame finds the touch
-    without a self-join.  Pass tie-breaking order_cols.  Returns
-    (channel, n_conversions, attributed_value).
-
-    Scale: the window and nothing else shuffles the stream (one
-    Exchange on the id), then the tiny channel aggregate map-side
-    combines."""
-    from .operators._helpers import dsum, r4
-
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    touch = F.last(
-        F.when(F.col(event_col) != conversion, F.col(event_col)),
-        ignorenulls=True,
-    ).over(w)
-    attributed = df.withColumn("channel", F.coalesce(touch, F.lit(default)))
-    return (
-        attributed.filter(F.col(event_col) == conversion)
-        .groupBy("channel")
-        .agg(
-            F.count(F.lit(1)).alias("n_conversions"),
-            r4(dsum(F.col(val_col))).alias("attributed_value"),
-        )
-    )
-
-
-def window_conversion(
-    df: DataFrame,
-    id_col: str,
-    event_col: str,
-    time_col: str,
-    trigger: str,
-    conversion: str,
-    window: int = 3_600_000_000,
-) -> DataFrame:
-    """Time-window conversion over ANY event stream with a NUMERIC time
-    column (conversion_window's algebra with columns, events and window
-    parameterized): a conversion 'converts' when the same entity fired
-    the trigger event within the preceding `window` of the time axis.
-    A RANGE frame counts in-window triggers per row — no per-stage
-    self-join, and a range frame needs no tie-breaker (peers are
-    handled by value).  Returns (id, n_conversions, n_converted,
-    conv_rate).
-
-    Scale: one shuffle on the id shared by the window and the final
-    per-entity aggregate."""
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy(time_col)
-        .rangeBetween(-window, -1)
-    )
-    flagged = df.withColumn(
-        "_trig",
-        F.sum(F.when(F.col(event_col) == trigger, 1).otherwise(0)).over(w),
-    )
-    conv = F.sum(F.when(F.col("_trig") >= 1, 1).otherwise(0))
-    return (
-        flagged.filter(F.col(event_col) == conversion)
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_conversions"),
-            conv.cast("long").alias("n_converted"),
-            F.round(conv.cast("double") / F.count(F.lit(1)), 4).alias(
-                "conv_rate"
-            ),
-        )
-    )
-
-
-def stage_latency(
-    df: DataFrame,
-    id_col: str,
-    event_col: str,
-    time_col: str,
-    stages: list[str],
-    time_scale: float = 1e6,
-) -> DataFrame:
-    """Funnel LATENCY between ordered stages of ANY event stream
-    (funnel_latency's algebra with columns and an arbitrary stage list
-    parameterized): per adjacent stage pair, how long entities take
-    from the first occurrence of one stage to the first SUBSEQUENT
-    occurrence of the next, as p50/p95 — the companion of funnel()
-    (who converts) that measures how fast (the metric that decides
-    nudge timing).  The time column is numeric (e.g. epoch micros with
-    time_scale=1e6 to report seconds).  Gaps are exact integers;
-    interpolated percentiles over integers are exact binary arithmetic.
-    Returns (stage, n_entities, p50, p95).
-
-    Scale: one combinable per-entity min-aggregate per stage, chained
-    by id equi-joins (co-partitioned — one shuffle lineage); each
-    stage frame is pinned because it feeds the next stage AND its gap
-    projection."""
-    from .operators._helpers import pin, r4
-
-    if len(stages) < 2:
-        raise ValueError(
-            f"stage_latency needs >= 2 stages to measure a gap "
-            f"(got {stages!r})"
-        )
-    ev = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(event_col).alias("_ev"),
-        F.col(time_col).alias("_t"),
-    )
-    prev = pin(
-        ev.filter(F.col("_ev") == stages[0])
-        .groupBy("_id")
-        .agg(F.min("_t").alias("_t0"))
-    )
-    gaps = None
-    for i, stage in enumerate(stages[1:], start=1):
-        cur = pin(
-            ev.filter(F.col("_ev") == stage)
-            .join(prev, "_id")
-            .filter(F.col("_t") >= F.col("_t0"))
-            .groupBy("_id")
-            .agg(F.min("_t").alias("_t1"))
-        )
-        g = prev.join(cur, "_id").select(
-            F.lit(f"{stages[i - 1]}->{stage}").alias("stage"),
-            (F.col("_t1") - F.col("_t0")).alias("_gap"),
-        )
-        gaps = g if gaps is None else gaps.unionAll(g)
-        prev = cur.select("_id", F.col("_t1").alias("_t0"))
-    return gaps.groupBy("stage").agg(
-        F.count(F.lit(1)).alias("n_entities"),
-        r4(F.percentile("_gap", F.lit(0.50)) / time_scale).alias("p50"),
-        r4(F.percentile("_gap", F.lit(0.95)) / time_scale).alias("p95"),
-    )
-
-
-def bounce_rate(
-    df: DataFrame,
-    id_col: str,
-    event_col: str,
-    time_col: str,
-    tie_col: str,
-    gap: int = 30 * 60 * 1_000_000,
-) -> DataFrame:
-    """Bounce rate by session ENTRY type over ANY event stream with a
-    NUMERIC time column (session_bounce_rate's algebra with columns and
-    the inactivity gap parameterized): sessionize on the gap, classify
-    each session by its first event, and report the share that ended
-    after one event — the landing-quality metric per acquisition
-    surface.  The entry pick is a tie-safe min-struct on
-    (time, tie_col); session ids are per-entity running sums of
-    boundary flags.  Returns (entry_type, n_sessions, n_bounce,
-    bounce_rate).
-
-    Scale: ONE id shuffle shared by the lag, the cumsum, and the
-    per-session aggregate.  Exact integers throughout."""
-    from .operators._helpers import r4
-
-    ev = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(tie_col).alias("_tie"),
-        F.col(event_col).alias("_ev"),
-        F.col(time_col).alias("_t"),
-    )
-    w = Window.partitionBy("_id").orderBy("_t", "_tie")
-    g = F.col("_t") - F.lag("_t").over(w)
-    marked = ev.withColumn(
-        "_is_new", F.when(g.isNull() | (g > gap), 1).otherwise(0)
-    )
-    sess = marked.withColumn(
-        "_sid",
-        F.sum("_is_new").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    per = sess.groupBy("_id", "_sid").agg(
-        F.count(F.lit(1)).alias("_n_events"),
-        F.min(F.struct("_t", "_tie", "_ev")).alias("_first"),
-    )
-    bounce = F.when(F.col("_n_events") == 1, 1).otherwise(0)
-    return (
-        per.select(
-            F.col("_first._ev").alias("entry_type"), F.col("_n_events")
-        )
-        .groupBy("entry_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_sessions"),
-            F.sum(bounce).cast("long").alias("n_bounce"),
-            r4(F.sum(bounce).cast("double") / F.count(F.lit(1))).alias(
-                "bounce_rate"
-            ),
-        )
     )
 
 
@@ -6737,47 +5691,6 @@ def top_share(
     )
 
 
-def dispersion_index(
-    df: DataFrame,
-    by: list[str],
-    bucket_col: str,
-) -> DataFrame:
-    """Index of dispersion (variance-to-mean ratio) of per-bucket
-    counts of ANY event frame (events_dispersion's algebra with columns
-    parameterized; pre-compute the time bucket) — the burstiness test:
-    ~1 is Poisson-like arrivals, >1 clumped (campaign spikes, incident
-    storms), <1 regularized (rate-limited).  burst_detect finds WHEN,
-    this scores HOW MUCH overall.  Integer count moments, one IEEE
-    closing tree.  Groups with fewer than 2 buckets drop out.  Returns
-    (by..., n_buckets, dispersion), round 4.
-
-    Scale: a bucket-keyed combinable aggregate + a per-group moment
-    rollup; no window."""
-    from .operators._helpers import r4
-
-    bucketed = df.groupBy(*by, F.col(bucket_col).alias("_b")).agg(
-        F.count(F.lit(1)).alias("_y")
-    )
-    # bucket counts widen to DECIMAL BEFORE the square: the LONG product
-    # wraps silently above ~3.03e9 rows per bucket (r10 judge)
-    yd = F.col("_y").cast("decimal(38,0)")
-    m = (
-        bucketed.groupBy(*by)
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("_y").cast("long").alias("_sy"),
-            F.sum(yd * yd).alias("_syy"),
-        )
-        .filter(F.col("_n") >= 2)
-    )
-    n = F.col("_n").cast("double")
-    sy = F.col("_sy").cast("double")
-    disp = (F.col("_syy") - sy * F.col("_sy") / n) / (n - 1) / (sy / n)
-    return m.select(
-        *by, F.col("_n").alias("n_buckets"), r4(disp).alias("dispersion")
-    )
-
-
 def vocab_overlap(
     df: DataFrame,
     group_col: str,
@@ -7112,53 +6025,6 @@ def size_dist(
         .over(Window.partitionBy())
         .cast("long")
         .alias("total_groups"),
-    )
-
-
-def gap_hist(
-    df: DataFrame,
-    by: list[str],
-    stream_cols: list[str],
-    time_col: str,
-    tie_cols: list[str] | None = None,
-    unit: int = 1_000_000,
-) -> DataFrame:
-    """Log2-bucketed histogram of the inter-event gap per stream,
-    rolled up per group (event_gap_hist's algebra with columns
-    parameterized) — the burstiness / session-boundary profile behind
-    sessionize-threshold tuning.  The gap divides by `unit` (micros ->
-    seconds by default); the bucket is floor(log2(gap)) + 1 computed
-    EXACTLY as the bit length of the integer gap (no float log; <= 0
-    gaps take bucket 0).  `stream_cols` define the lag partitioning
-    (high-cardinality, scale-safe); `by` defines the reported rollup.
-    Returns (by..., bucket, n, share).
-
-    Scale: the lag runs per stream; the histogram is one combinable
-    aggregate on |by| x ~40 bucket keys; the final share divides exact
-    counts over the model-sized aggregate."""
-    from .operators._helpers import r4
-
-    tie_cols = tie_cols or []
-    wl = Window.partitionBy(*stream_cols).orderBy(time_col, *tie_cols)
-    g = df.withColumn(
-        "_gap",
-        F.floor(
-            (F.col(time_col) - F.lag(time_col).over(wl)) / unit
-        ).cast("long"),
-    ).filter(F.col("_gap").isNotNull())
-    b = g.withColumn(
-        "bucket",
-        F.when(F.col("_gap") <= 0, 0)
-        .otherwise(F.length(F.bin(F.col("_gap"))))
-        .cast("int"),
-    )
-    h = b.groupBy(*by, "bucket").agg(F.count(F.lit(1)).alias("n"))
-    wt = Window.partitionBy(*by)
-    return h.select(
-        *by,
-        "bucket",
-        "n",
-        r4(F.col("n").cast("double") / F.sum("n").over(wt)).alias("share"),
     )
 
 
@@ -7692,50 +6558,6 @@ def aging_buckets(
     )
 
 
-def cumulative_entities(
-    df: DataFrame,
-    id_col: str,
-    ts_col: str,
-) -> DataFrame:
-    """Daily active entities + cumulative distinct entities of ANY
-    activity stream (users_cumulative's algebra with columns
-    parameterized) — the growth chart every product dashboard opens
-    with.  Cumulative DISTINCT is made windowable by the
-    first-occurrence trick: an entity contributes exactly once, at
-    min(day), so the cumulative is a running SUM of per-day first-seen
-    counts — exact integers end to end.  Returns
-    (day, dau, new_entities, cum_entities).
-
-    Scale: first-day and DAU are combinable aggregates; the running sum
-    rides the per-DAY aggregate, whose cardinality is calendar-bounded
-    — structurally model-sized."""
-    firstd = df.groupBy(F.col(id_col).alias("_id")).agg(
-        F.min(F.date_trunc("day", ts_col)).alias("_d")
-    )
-    newu = firstd.groupBy(F.col("_d").alias("day")).agg(
-        F.count(F.lit(1)).alias("new_entities")
-    )
-    act = df.groupBy(F.date_trunc("day", ts_col).alias("day")).agg(
-        F.countDistinct(id_col).alias("dau")
-    )
-    j = act.join(newu, "day", "left").select(
-        "day",
-        F.col("dau").cast("long").alias("dau"),
-        F.coalesce("new_entities", F.lit(0))
-        .cast("long")
-        .alias("new_entities"),
-    )
-    w = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return j.select(
-        "day",
-        "dau",
-        "new_entities",
-        F.sum("new_entities").over(w).cast("long").alias("cum_entities"),
-    )
-
-
 def assortativity(
     edges: DataFrame,
     src_col: str,
@@ -7867,105 +6689,6 @@ def json_field_stats(
         r4(F.sum(k).cast("double") / F.count(F.lit(1))).alias("avg"),
         F.min(k).cast("long").alias("min"),
         F.max(k).cast("long").alias("max"),
-    )
-
-
-def linfit(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    by: list[str] | None = None,
-    scale: int = 2,
-) -> DataFrame:
-    """Grouped least-squares regression of ANY (x, y) pair
-    (agg_regression's algebra with columns and fixed-point scale
-    parameterized) — slope and r^2 from the five summable moments, the
-    map-side-combinable formulation that scales where a two-pass
-    covariance doesn't.  Inputs quantize to exact fixed-point bigints
-    (the scale factors cancel in slope up to the x/y scale ratio — use
-    one scale for both, as here); moment sums accumulate in
-    DECIMAL(38,0) (sum(y^2) overflows int64 under ANSI just above test
-    scale); closing products run in decimal and the final divisions are
-    single IEEE ops — deterministic at any partition count, unlike
-    float-accumulated regr_* built-ins.  Returns (by..., n, slope, r2),
-    round 4.
-
-    Scale: ONE pass, one combinable aggregate."""
-    from .operators._helpers import r4
-
-    by = by or []
-    d0 = "decimal(38,0)"
-    x = F.floor(F.col(x_col) * (10**scale) + 0.5).cast("long").cast(d0)
-    y = F.floor(F.col(y_col) * (10**scale) + 0.5).cast("long").cast(d0)
-    # operands widen to DECIMAL BEFORE the multiply: a LONG product wraps
-    # silently above |quantized| ~3.03e9 in non-ANSI Spark (r10 judge)
-    s = df.groupBy(*by).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(x).alias("_sx"),
-        F.sum(y).alias("_sy"),
-        F.sum(x * x).alias("_sxx"),
-        F.sum(y * y).alias("_syy"),
-        F.sum(x * y).alias("_sxy"),
-    )
-    num = (
-        F.col("_n").cast(d0) * F.col("_sxy")
-        - F.col("_sx").cast(d0) * F.col("_sy")
-    )
-    den_x = (
-        F.col("_n").cast(d0) * F.col("_sxx")
-        - F.col("_sx").cast(d0) * F.col("_sx")
-    )
-    den_y = (
-        F.col("_n").cast(d0) * F.col("_syy")
-        - F.col("_sy").cast(d0) * F.col("_sy")
-    )
-    slope = num.cast("double") / den_x.cast("double")
-    r2 = slope * (num.cast("double") / den_y.cast("double"))
-    return s.select(
-        *by,
-        F.col("_n").cast("long").alias("n"),
-        r4(slope).alias("slope"),
-        r4(r2).alias("r2"),
-    )
-
-
-def trend_slope(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    by: list[str] | None = None,
-) -> DataFrame:
-    """Least-squares trend of ANY pre-bucketed INTEGER series
-    (ts_trend_slope's algebra with columns parameterized) — the single
-    number behind every "is this metric trending" question; linfit fits
-    arbitrary (x, y), this fits value-vs-TIME with both axes already
-    exact integers (e.g. x = days since an epoch, y = a daily count),
-    so all four moments are exact bigints and the slope closes in one
-    IEEE tree.  Returns (by..., n_points, slope), round 4.
-
-    Scale: a per-group moment rollup over the pre-bucketed aggregate —
-    no window at all."""
-    from .operators._helpers import r4
-
-    by = by or []
-    d0 = "decimal(38,0)"
-    # operands widen to DECIMAL BEFORE the multiply (and the sums stay
-    # decimal): LONG products/sums wrap silently above ~9.2e18 (r10 judge)
-    xd = F.col(x_col).cast(d0)
-    yd = F.col(y_col).cast(d0)
-    m = df.groupBy(*by).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(xd).alias("_sx"),
-        F.sum(yd).alias("_sy"),
-        F.sum(xd * xd).alias("_sxx"),
-        F.sum(xd * yd).alias("_sxy"),
-    )
-    nd = F.col("_n").cast(d0)
-    num = nd * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    den = nd * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    slope = num.cast("double") / den.cast("double")
-    return m.select(
-        *by, F.col("_n").alias("n_points"), r4(slope).alias("slope")
     )
 
 
@@ -8209,73 +6932,6 @@ def bfs_layers(
     return out
 
 
-def ols_forecast(
-    df: DataFrame,
-    by: list[str],
-    x_col: str,
-    y_col: str,
-    horizon: int = 7,
-) -> DataFrame:
-    """Per-group linear-trend forecast of ANY pre-bucketed INTEGER
-    series `horizon` steps past the last observation, with the
-    in-sample residual sigma (ts_ols_forecast's algebra with columns
-    and horizon parameterized).  OLS from the five DECIMAL-widened
-    moment sums (LONG products wrap above ~3e9 — the r10 discipline);
-    slope / intercept / forecast / sigma close in one shared IEEE
-    tree, he4.  Returns (by..., n_points, slope, forecast, resid_sd).
-
-    Scale: one combinable moment aggregate over the pre-bucketed
-    series; no window."""
-    from .operators._helpers import he4 as _he4
-
-    d0 = "decimal(38,0)"
-    xd = F.col(x_col).cast(d0)
-    yd = F.col(y_col).cast(d0)
-    m = df.groupBy(*by).agg(
-        F.count(F.lit(1)).cast("long").alias("_n"),
-        F.sum(xd).alias("_sx"),
-        F.sum(yd).alias("_sy"),
-        F.sum(xd * xd).alias("_sxx"),
-        F.sum(xd * yd).alias("_sxy"),
-        F.sum(yd * yd).alias("_syy"),
-        F.max(x_col).cast("long").alias("_xmax"),
-    )
-    nd = F.col("_n").cast(d0)
-    num = nd * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    den = nd * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    fit = m.filter(den > 0).select(
-        *by,
-        "_n",
-        "_xmax",
-        (num.cast("double") / den.cast("double")).alias("_slope"),
-        F.col("_sy").cast("double").alias("_sy_d"),
-        F.col("_sx").cast("double").alias("_sx_d"),
-        F.col("_sxy").cast("double").alias("_sxy_d"),
-        F.col("_syy").cast("double").alias("_syy_d"),
-        F.col("_n").cast("double").alias("_n_d"),
-    )
-    cl = fit.withColumn(
-        "_a",
-        (F.col("_sy_d") - F.col("_slope") * F.col("_sx_d")) / F.col("_n_d"),
-    )
-    sse = (
-        F.col("_syy_d")
-        - F.col("_a") * F.col("_sy_d")
-        - F.col("_slope") * F.col("_sxy_d")
-    )
-    return cl.select(
-        *by,
-        F.col("_n").alias("n_points"),
-        _he4(F.col("_slope")).alias("slope"),
-        _he4(
-            F.col("_a") + F.col("_slope") * (F.col("_xmax") + horizon)
-        ).alias("forecast"),
-        _he4(F.sqrt(F.greatest(F.lit(0.0), sse / F.col("_n_d")))).alias(
-            "resid_sd"
-        ),
-    )
-
-
 def nearest_value_join(
     left: DataFrame,
     right: DataFrame,
@@ -8486,123 +7142,6 @@ def largest_remainder_alloc(
         )
         .cast("long")
         .alias("alloc"),
-    )
-
-
-def drawdown_duration(
-    df: DataFrame,
-    by: list[str],
-    order_col: str,
-    val_col: str,
-) -> DataFrame:
-    """Maximum drawdown depth AND duration of ANY pre-bucketed keyed
-    series (ts_drawdown_duration's algebra with columns parameterized):
-    a running max flags at-peak points, a running count of those
-    numbers the peak-to-peak runs, and each run's below-peak length is
-    its drawdown duration — the recovery-time number next to
-    win_drawdown's depth.  Feed exact integer values (cents, counts).
-    Returns (by..., n_points, max_dd_depth he4, max_dd_days).
-
-    Scale: both windows and the run rollup ride one `by`-keyed exchange
-    over the pre-bucketed series."""
-    from .operators._helpers import he4 as _he4
-
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pk = df.select(
-        *by, order_col, F.col(val_col).alias("__secdb_v")
-    ).withColumn("__secdb_peak", F.max("__secdb_v").over(w))
-    at_peak = F.when(
-        F.col("__secdb_v") == F.col("__secdb_peak"), 1
-    ).otherwise(0)
-    grp = pk.select(
-        *by,
-        "__secdb_v",
-        "__secdb_peak",
-        at_peak.alias("__secdb_at_peak"),
-        F.sum(at_peak).over(w).alias("__secdb_g"),
-    )
-    # depth is only defined against a POSITIVE peak (a relative loss
-    # from a <= 0 level has no percentage meaning): guard instead of
-    # emitting sign-flipped or divide-by-zero-NULL depths (r11 review)
-    depth = F.when(
-        F.col("__secdb_peak") > 0,
-        (F.col("__secdb_peak") - F.col("__secdb_v")).cast("double")
-        / F.col("__secdb_peak").cast("double"),
-    )
-    runs = grp.groupBy(*by, "__secdb_g").agg(
-        F.sum(1 - F.col("__secdb_at_peak")).cast("long").alias("__secdb_dd"),
-        F.max(depth).alias("__secdb_depth"),
-    )
-    return runs.groupBy(*by).agg(
-        (F.sum("__secdb_dd") + F.count(F.lit(1)))
-        .cast("long")
-        .alias("n_points"),
-        _he4(F.max("__secdb_depth")).alias("max_dd_depth"),
-        F.max("__secdb_dd").cast("long").alias("max_dd_days"),
-    )
-
-
-def weighted_percentiles(
-    df: DataFrame,
-    by: list[str],
-    val_col: str,
-    weight_col: str,
-    ps: tuple[int, ...] = (25, 50, 75, 90),
-    scale: int = 2,
-    weight_scale: int = 2,
-) -> DataFrame:
-    """Weighted percentiles of ANY (value, weight) pair per group
-    (agg_weighted_percentile's algebra with columns, percentile vector
-    and fixed-point scales parameterized): the p-th percentile is the
-    smallest value whose cumulative weight reaches p% of the group
-    total — the lower-bound convention, so everything is EXACT integer
-    arithmetic (quantized values x quantized weights, 100*cum >= p*tot
-    compares), no interpolation, no floats.  Returns
-    (by..., p{{p}}_q ...) in quantized value units.
-
-    Scale: values pre-aggregate per (group, value) — the window runs
-    over the value-domain-bounded weight table, not the raw rows."""
-    d0 = "decimal(38,0)"
-    q = df.groupBy(
-        *by,
-        F.floor(F.col(val_col) * (10**scale) + 0.5)
-        .cast("long")
-        .alias("__secdb_v"),
-    ).agg(
-        F.sum(
-            F.floor(F.col(weight_col) * (10**weight_scale) + 0.5)
-            .cast("long")
-        )
-        .cast("long")
-        .alias("__secdb_wv")
-    )
-    wc = (
-        Window.partitionBy(*by)
-        .orderBy("__secdb_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy(*by)
-    c = q.select(
-        *by,
-        "__secdb_v",
-        F.sum("__secdb_wv").over(wc).alias("__secdb_cum"),
-        F.sum("__secdb_wv").over(wt).alias("__secdb_tot"),
-    )
-    # threshold compare widens to DECIMAL: 100*cum in LONG wraps above
-    # ~9.2e16 cumulative weight (round-11 close-out review)
-    cum_d = F.col("__secdb_cum").cast(d0)
-    tot_d = F.col("__secdb_tot").cast(d0)
-    return c.groupBy(*by).agg(
-        *[
-            F.min(F.when(100 * cum_d >= p * tot_d, F.col("__secdb_v")))
-            .cast("long")
-            .alias(f"p{p}_q")
-            for p in ps
-        ]
     )
 
 
@@ -9028,97 +7567,6 @@ def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     )
 
 
-def jarque_bera(
-    df: DataFrame, group_cols: list[str], value_col: str, scale: int = 100
-) -> DataFrame:
-    """Grouped Jarque–Bera normality statistic for ANY numeric column
-    (stat_jarque_bera's algebra with the fixed-point scale
-    parameterized): skewness, excess kurtosis, and JB = n/6·(S²+K²/4)
-    from four exact DECIMAL(38,0) power sums of the scale-quantized
-    values.  Returns (group_cols..., n, skewness, ex_kurtosis,
-    jb_stat), all he4.
-
-    Scale: ONE combinable aggregate — map-side partials, no window."""
-    from .operators._helpers import he4
-
-    x = (
-        F.floor(F.col(value_col) * scale + 0.5)
-        .cast("long")
-        .cast("decimal(38,0)")
-    )
-    s = df.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(x).cast("double").alias("_s1"),
-        F.sum(x * x).cast("double").alias("_s2"),
-        F.sum(x * x * x).cast("double").alias("_s3"),
-        F.sum(x * x * x * x).cast("double").alias("_s4"),
-    )
-    n, s1, s2, s3, s4 = (F.col(c) for c in ("_n", "_s1", "_s2", "_s3", "_s4"))
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m3 = s3 / n - F.lit(3) * mu * (s2 / n) + F.lit(2) * mu * mu * mu
-    m4 = (
-        s4 / n
-        - F.lit(4) * mu * (s3 / n)
-        + F.lit(6) * mu * mu * (s2 / n)
-        - F.lit(3) * mu * mu * mu * mu
-    )
-    skew = m3 / (m2 * F.sqrt(m2))
-    exk = m4 / (m2 * m2) - 3
-    jb = n / F.lit(6.0) * (skew * skew + exk * exk / F.lit(4.0))
-    return s.select(
-        *group_cols,
-        n.cast("long").alias("n"),
-        he4(skew).alias("skewness"),
-        he4(exk).alias("ex_kurtosis"),
-        he4(jb).alias("jb_stat"),
-    )
-
-
-def adf_stat(
-    df: DataFrame,
-    group_cols: list[str],
-    time_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Dickey–Fuller unit-root t-statistic (lag 0) over ANY keyed series
-    (ts_adf_stat's algebra with the series parameterized): per group,
-    regress Δy on y_{t-1} with intercept; returns (group_cols..., n_obs,
-    gamma, t_stat), he4.  Series rows must be unique per (group, time).
-
-    Scale: one per-key lag window + ONE combinable moment aggregate."""
-    from .operators._helpers import he4
-
-    w = Window.partitionBy(*group_cols).orderBy(time_col)
-    lagd = df.select(
-        *group_cols,
-        (F.col(value_col) - F.lag(value_col).over(w)).alias("_dy"),
-        F.lag(value_col).over(w).alias("_x"),
-    ).filter(F.col("_x").isNotNull())
-    p = lagd.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum("_x").cast("double").alias("_sx"),
-        F.sum("_dy").cast("double").alias("_sy"),
-        F.sum(F.col("_x") * F.col("_dy")).cast("double").alias("_sxy"),
-        F.sum(F.col("_x") * F.col("_x")).cast("double").alias("_sxx"),
-        F.sum(F.col("_dy") * F.col("_dy")).cast("double").alias("_syy"),
-    )
-    n, sx, sy, sxy, sxx, syy = (
-        F.col(c) for c in ("_n", "_sx", "_sy", "_sxy", "_sxx", "_syy")
-    )
-    sxy_c = sxy - sx * sy / n
-    sxx_c = sxx - sx * sx / n
-    syy_c = syy - sy * sy / n
-    g = sxy_c / sxx_c
-    t = g / F.sqrt(((syy_c - g * sxy_c) / (n - 2)) / sxx_c)
-    return p.select(
-        *group_cols,
-        n.cast("long").alias("n_obs"),
-        he4(g).alias("gamma"),
-        he4(t).alias("t_stat"),
-    )
-
-
 def cooccur_pairs(
     df: DataFrame, key_col: str, node_col: str, min_count: int = 2
 ) -> DataFrame:
@@ -9133,58 +7581,6 @@ def cooccur_pairs(
     from .operators.warehouse_extras37 import cooccur_pairs as _kernel
 
     return _kernel(df, key_col, node_col, min_count)
-
-
-def bartlett(
-    df: DataFrame, group_col: str, value_col: str, scale: int = 100
-) -> DataFrame:
-    """Bartlett's equal-variance test across the groups of ANY numeric
-    column (stat_bartlett's algebra with the fixed-point scale
-    parameterized) — the parametric complement to a robust Levene
-    screen; chi-square with k-1 df under H0.  Returns one row (k,
-    n_total, df, bartlett_stat he4).
-
-    Scale: one combinable per-group moment aggregate, then a k-row
-    closing aggregate whose cross-group double sums quantize
-    DECIMAL(38,18) PRE-SUM — shuffle-order free."""
-    from .operators._helpers import he4
-
-    x = (
-        F.floor(F.col(value_col) * scale + 0.5)
-        .cast("long")
-        .cast("decimal(38,0)")
-    )
-    g = df.groupBy(group_col).agg(
-        F.count(F.lit(1)).cast("double").alias("_n"),
-        F.sum(x).cast("double").alias("_s1"),
-        F.sum(x * x).cast("double").alias("_s2"),
-    )
-    n = F.col("_n")
-    s2i = (F.col("_s2") - F.col("_s1") * F.col("_s1") / n) / (n - 1)
-    v = g.select("_n", s2i.alias("_s2i"))
-    dec18 = "decimal(38,18)"
-    agg = v.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum(n.cast("long")).cast("long").alias("n_total"),
-        F.sum(((n - 1) * F.col("_s2i")).cast(dec18))
-        .cast("double")
-        .alias("_pn"),
-        F.sum(((n - 1) * F.log(F.col("_s2i"))).cast(dec18))
-        .cast("double")
-        .alias("_sl"),
-        F.sum((F.lit(1.0) / (n - 1)).cast(dec18))
-        .cast("double")
-        .alias("_si"),
-    )
-    k, nt = F.col("k"), F.col("n_total")
-    stat = ((nt - k) * F.log(F.col("_pn") / (nt - k)) - F.col("_sl")) / (
-        F.lit(1) + (F.col("_si") - F.lit(1.0) / (nt - k)) / (3 * (k - 1))
-    )
-    return agg.select(
-        "k", "n_total",
-        (k - 1).cast("long").alias("df"),
-        he4(stat).alias("bartlett_stat"),
-    )
 
 
 def seed_closeness(

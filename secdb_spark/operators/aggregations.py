@@ -502,6 +502,41 @@ def agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 HIST_WIDTH = 25_000.0  # equi-width bucket size over o_totalprice
 
 
+def histogram(
+    df: DataFrame,
+    val_col: str,
+    width: float,
+) -> DataFrame:
+    """Equi-width histogram of ANY numeric column (agg_histogram's
+    algebra with the width parameterized) — the profiling primitive
+    behind skew detection and partition sizing.  Returns (bucket,
+    bucket_lo, n, lo, hi).  bucket_lo rounds to enough decimals for the
+    width (>= 2, widening for sub-0.01 widths so adjacent buckets never
+    share a label); `bucket` is the exact key either way.
+
+    Scale shape: the bucket id is floor(x/width) inside the scan's
+    codegen, so the whole histogram is ONE map-side-combinable groupBy
+    on a small key domain — a histogram for the cost of one scan at any
+    size."""
+    import math
+
+    if width <= 0:
+        raise ValueError("width must be > 0")
+    # label precision follows the width: 2 decimals for width >= 0.01
+    # (the kernel's presentation), more below it so bucket_lo stays
+    # faithful (ADVICE r9: width=0.001 buckets shared a rounded label)
+    decimals = max(2, -math.floor(math.log10(width)) + 2)
+    bucket = F.floor(F.col(val_col) / F.lit(width))
+    return df.groupBy(
+        bucket.cast("bigint").alias("bucket"),
+        F.round(bucket * F.lit(width), decimals).alias("bucket_lo"),
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.round(F.min(val_col), 2).alias("lo"),
+        F.round(F.max(val_col), 2).alias("hi"),
+    )
+
+
 @register(
     "agg_histogram",
     oracle=f"""
@@ -516,27 +551,12 @@ HIST_WIDTH = 25_000.0  # equi-width bucket size over o_totalprice
     """,
 )
 def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram of order totals — the profiling primitive
-    behind skew detection and partition sizing.  The bucket id is plain
-    arithmetic (floor(x/width)) evaluated inside the scan's codegen
-    stage, so the whole histogram is ONE map-side-combinable groupBy on
-    a small key domain: partial counts per bucket combine before the
-    (tiny) shuffle, and the exchange moves |buckets| rows per task, not
-    |orders|.  The same shape at 100 TB yields a histogram for the cost
-    of one scan."""
-    o = table(spark, sf_dir, "orders")
-    bucket = F.floor(F.col("o_totalprice") / F.lit(HIST_WIDTH))
-    return (
-        o.groupBy(
-            bucket.cast("bigint").alias("bucket"),
-            F.round(bucket * F.lit(HIST_WIDTH), 2).alias("bucket_lo"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.min("o_totalprice"), 2).alias("lo"),
-            F.round(F.max("o_totalprice"), 2).alias("hi"),
-        )
-    )
+    """Equi-width histogram of order totals — the `histogram` kernel at
+    HIST_WIDTH: ONE map-side-combinable groupBy on a small bucket key
+    domain."""
+    return histogram(
+        table(spark, sf_dir, "orders"), "o_totalprice", HIST_WIDTH
+    ).withColumnRenamed("n", "n_orders")
 
 
 @register(

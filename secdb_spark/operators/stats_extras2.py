@@ -234,6 +234,57 @@ def stat_ks_2samp(spark: SparkSession, sf_dir: str) -> DataFrame:
 WT_A, WT_B = "view", "purchase"
 
 
+def welch_ttest(
+    df: DataFrame,
+    group_col: str,
+    group_a: str,
+    group_b: str,
+    val_col: str,
+    scale: int = 2,
+) -> DataFrame:
+    """Welch's unequal-variance t-test between two named groups of ANY
+    value column (stat_welch_ttest's algebra with columns and groups
+    parameterized), with the Welch-Satterthwaite degrees of freedom.
+    One combinable global aggregate — conditional integer moments at
+    `scale` fixed-point digits, no join, no window; the t and df
+    expressions are pure IEEE trees over six exact integers (the
+    quantization factor cancels in t and df; only mean_diff divides
+    back to original units).  Sum-of-squares bound: 2^63 — widen the
+    moment casts to DECIMAL(38,0) past ~1e9 rows of 1e4-sized values.
+    Returns one row (n1, n2, mean_diff, t, df), round 4."""
+    ev = df.filter(F.col(group_col).isin(group_a, group_b)).select(
+        F.col(group_col).alias("_g"),
+        F.floor(F.col(val_col) * (10**scale) + 0.5).cast("long").alias("_vc"),
+    )
+    is1 = F.col("_g") == group_a
+    is2 = F.col("_g") == group_b
+    vc = F.col("_vc")
+    a = ev.agg(
+        F.count(F.when(is1, 1)).alias("n1"),
+        F.count(F.when(is2, 1)).alias("n2"),
+        F.sum(F.when(is1, vc)).cast("long").alias("_s1"),
+        F.sum(F.when(is2, vc)).cast("long").alias("_s2"),
+        F.sum(F.when(is1, vc * vc)).cast("long").alias("_q1"),
+        F.sum(F.when(is2, vc * vc)).cast("long").alias("_q2"),
+    )
+    n1, n2 = F.col("n1"), F.col("n2")
+    s1, s2 = F.col("_s1"), F.col("_s2")
+    q1, q2 = F.col("_q1"), F.col("_q2")
+    vt1 = (q1.cast("double") - s1.cast("double") * s1 / n1) / (n1 - 1) / n1
+    vt2 = (q2.cast("double") - s2.cast("double") * s2 / n2) / (n2 - 1) / n2
+    mdiff = s1.cast("double") / n1 - s2.cast("double") / n2
+    se2 = vt1 + vt2
+    return a.select(
+        "n1",
+        "n2",
+        r4(mdiff / (10**scale)).alias("mean_diff"),
+        r4(mdiff / F.sqrt(se2)).alias("t"),
+        r4(se2 * se2 / (vt1 * vt1 / (n1 - 1) + vt2 * vt2 / (n2 - 1))).alias(
+            "df"
+        ),
+    )
+
+
 @register(
     "stat_welch_ttest",
     oracle=f"""
@@ -279,46 +330,10 @@ WT_A, WT_B = "view", "purchase"
     """,
 )
 def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t-test between the '{WT_A}' and '{WT_B}'
-    value distributions, with the Welch-Satterthwaite degrees of freedom.
-    One combinable global aggregate (conditional integer moments in
-    cents — no join, no window): n/Σv/Σv² per group as exact BIGINTs,
-    then the t and df expressions are pure IEEE trees over those six
-    integers, written term-for-term identically in the oracle.  The
-    cents scale cancels in t and df; only mean_diff divides by 100 to
-    report original units.  Σv² bound: 2^63 at ~2e9 rows of max-value
-    490 — past that the moment sums widen to DECIMAL(38,0)."""
-    ev = (
-        table(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin(WT_A, WT_B))
-        .select(
-            "event_type",
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("vc"),
-        )
-    )
-    is1 = F.col("event_type") == WT_A
-    is2 = F.col("event_type") == WT_B
-    a = ev.agg(
-        F.count(F.when(is1, 1)).alias("n1"),
-        F.count(F.when(is2, 1)).alias("n2"),
-        F.sum(F.when(is1, F.col("vc"))).cast("long").alias("s1"),
-        F.sum(F.when(is2, F.col("vc"))).cast("long").alias("s2"),
-        F.sum(F.when(is1, F.col("vc") * F.col("vc"))).cast("long").alias("q1"),
-        F.sum(F.when(is2, F.col("vc") * F.col("vc"))).cast("long").alias("q2"),
-    )
-    n1, n2 = F.col("n1"), F.col("n2")
-    s1, s2 = F.col("s1"), F.col("s2")
-    q1, q2 = F.col("q1"), F.col("q2")
-    vt1 = (q1.cast("double") - s1.cast("double") * s1 / n1) / (n1 - 1) / n1
-    vt2 = (q2.cast("double") - s2.cast("double") * s2 / n2) / (n2 - 1) / n2
-    mdiff = s1.cast("double") / n1 - s2.cast("double") / n2
-    se2 = vt1 + vt2
-    return a.select(
-        "n1",
-        "n2",
-        r4(mdiff / 100).alias("mean_diff"),
-        r4(mdiff / F.sqrt(se2)).alias("t"),
-        r4(se2 * se2 / (vt1 * vt1 / (n1 - 1) + vt2 * vt2 / (n2 - 1))).alias(
-            "df"
-        ),
+    """Welch's unequal-variance t-test between the WT_A and WT_B event
+    types' value distributions, with the Welch-Satterthwaite degrees of
+    freedom — the `welch_ttest` kernel in cents."""
+    return welch_ttest(
+        table(spark, sf_dir, "events"), "event_type", WT_A, WT_B, "value",
+        scale=2,
     )

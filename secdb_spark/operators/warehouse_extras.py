@@ -267,6 +267,47 @@ def invert_index_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def last_touch(
+    df: DataFrame,
+    id_col: str,
+    event_col: str,
+    val_col: str,
+    order_cols: list[str],
+    conversion: str,
+    default: str = "direct",
+) -> DataFrame:
+    """Last-touch attribution over ANY event stream
+    (attribution_last_touch's algebra with columns and the conversion
+    event parameterized): each conversion's value is credited to the
+    entity's most recent preceding non-conversion event type (`default`
+    when the conversion is the entity's first event).
+    last(ignorenulls) over a [unbounded, -1] row frame finds the touch
+    without a self-join.  Pass tie-breaking order_cols.  Returns
+    (channel, n_conversions, attributed_value).
+
+    Scale: the window and nothing else shuffles the stream (one
+    Exchange on the id), then the tiny channel aggregate map-side
+    combines."""
+    w = (
+        Window.partitionBy(id_col)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    touch = F.last(
+        F.when(F.col(event_col) != conversion, F.col(event_col)),
+        ignorenulls=True,
+    ).over(w)
+    attributed = df.withColumn("channel", F.coalesce(touch, F.lit(default)))
+    return (
+        attributed.filter(F.col(event_col) == conversion)
+        .groupBy("channel")
+        .agg(
+            F.count(F.lit(1)).alias("n_conversions"),
+            r4(dsum(F.col(val_col))).alias("attributed_value"),
+        )
+    )
+
+
 @register(
     "attribution_last_touch",
     oracle=f"""
@@ -290,28 +331,53 @@ def invert_index_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: each purchase's value is credited to the
     user's most recent preceding non-purchase event type ('direct' when
-    the purchase is the user's first event).  last(ignorenulls) over a
-    [unbounded, -1] row frame finds the touch without a self-join; the
-    window and nothing else shuffles the events (one Exchange on
-    user_id), then the tiny channel aggregate map-side-combines.
-    Tie-safe ordering: (ts, event_id) per §4.4.3."""
-    ev = table(spark, sf_dir, "events")
+    the purchase is the user's first event) — the `last_touch` kernel on
+    the events table.  Tie-safe ordering: (ts, event_id) per §4.4.3."""
+    return last_touch(
+        table(spark, sf_dir, "events"), "user_id", "event_type", "value",
+        ["ts", "event_id"], conversion="purchase", default="direct",
+    ).withColumnRenamed("n_conversions", "n_purchases")
+
+
+def window_conversion(
+    df: DataFrame,
+    id_col: str,
+    event_col: str,
+    time_col: str,
+    trigger: str,
+    conversion: str,
+    window: int = 3_600_000_000,
+) -> DataFrame:
+    """Time-window conversion over ANY event stream with a NUMERIC time
+    column (conversion_window's algebra with columns, events and window
+    parameterized): a conversion 'converts' when the same entity fired
+    the trigger event within the preceding `window` of the time axis.
+    A RANGE frame counts in-window triggers per row — no per-stage
+    self-join, and a range frame needs no tie-breaker (peers are
+    handled by value).  Returns (id, n_conversions, n_converted,
+    conv_rate).
+
+    Scale: one shuffle on the id shared by the window and the final
+    per-entity aggregate."""
     w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
+        Window.partitionBy(id_col)
+        .orderBy(time_col)
+        .rangeBetween(-window, -1)
     )
-    touch = F.last(
-        F.when(F.col("event_type") != "purchase", F.col("event_type")),
-        ignorenulls=True,
-    ).over(w)
-    attributed = ev.withColumn("channel", F.coalesce(touch, F.lit("direct")))
+    flagged = df.withColumn(
+        "_trig",
+        F.sum(F.when(F.col(event_col) == trigger, 1).otherwise(0)).over(w),
+    )
+    conv = F.sum(F.when(F.col("_trig") >= 1, 1).otherwise(0))
     return (
-        attributed.filter(F.col("event_type") == "purchase")
-        .groupBy("channel")
+        flagged.filter(F.col(event_col) == conversion)
+        .groupBy(id_col)
         .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            r4(dsum(F.col("value"))).alias("attributed_value"),
+            F.count(F.lit(1)).alias("n_conversions"),
+            conv.cast("long").alias("n_converted"),
+            F.round(conv.cast("double") / F.count(F.lit(1)), 4).alias(
+                "conv_rate"
+            ),
         )
     )
 
@@ -340,33 +406,13 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def conversion_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-window conversion: a purchase 'converts' when the same user
-    viewed within the preceding hour.  A RANGE frame over epoch-µs counts
-    the in-window views per event — no per-stage self-join, and a range
-    frame needs no tie-breaker (peers are handled by value, identically
-    in both engines).  One shuffle on user_id shared by the window and
-    the final per-user aggregate."""
+    viewed within the preceding hour — the `window_conversion` kernel
+    over epoch-µs."""
     ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("us")
-        .rangeBetween(-3_600_000_000, -1)
-    )
-    flagged = ev.withColumn(
-        "views_1h",
-        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0)).over(w),
-    )
-    conv = F.sum(F.when(F.col("views_1h") >= 1, 1).otherwise(0))
-    return (
-        flagged.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            conv.cast("long").alias("n_converted"),
-            F.round(
-                conv.cast("double") / F.count(F.lit(1)), 4
-            ).alias("conv_rate"),
-        )
-    )
+    return window_conversion(
+        ev, "user_id", "event_type", "us",
+        trigger="view", conversion="purchase", window=3_600_000_000,
+    ).withColumnRenamed("n_conversions", "n_purchases")
 
 
 @register(
@@ -600,6 +646,50 @@ def win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROLLING_DAYS = 7
 
 
+def rolling_active(
+    df: DataFrame,
+    id_col: str,
+    ts_col: str,
+    days: int = 7,
+) -> DataFrame:
+    """Rolling `days`-day active entities of ANY activity stream
+    (rolling_active_users' algebra with columns and window
+    parameterized) — the WAU curve: an entity active on day d is active
+    for windows ending d .. d+days-1.  Rolling DISTINCT cannot run in a
+    window frame, so the scalable compilation is contribution
+    expansion: distinct (id, day) pairs explode to their window days,
+    dedup, and count per window day (restricted to days the data
+    actually covers).  The day key crosses as 'yyyy-MM-dd' strings
+    (DATE dtype portability).  Returns (window_day, active).
+
+    Scale: raw events reduce to (id, day) FIRST (one combinable
+    shuffle); the expansion carries days x the aggregate — a vanishing
+    fraction of the stream; the day-domain join broadcasts."""
+    day = F.to_date(ts_col)
+    user_days = df.select(F.col(id_col).alias("_id"), day.alias("_d")).distinct()
+    contrib = (
+        user_days.select(
+            "_id",
+            F.explode(F.sequence(F.lit(0), F.lit(days - 1))).alias("_k"),
+            "_d",
+        )
+        .select(
+            "_id",
+            F.date_format(F.date_add(F.col("_d"), F.col("_k")), "yyyy-MM-dd")
+            .alias("window_day"),
+        )
+        .distinct()
+    )
+    domain = df.select(
+        F.date_format(day, "yyyy-MM-dd").alias("window_day")
+    ).distinct()
+    return (
+        contrib.join(F.broadcast(domain), "window_day")
+        .groupBy("window_day")
+        .agg(F.count(F.lit(1)).alias("active"))
+    )
+
+
 @register(
     "rolling_active_users",
     oracle=f"""
@@ -620,41 +710,12 @@ ROLLING_DAYS = 7
     """,
 )
 def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 7-day active users (the WAU curve): a user active on day d
-    is active for windows ending d .. d+6.  Rolling DISTINCT cannot run
-    in a window frame, so the scalable compilation is contribution
-    expansion: distinct (user, day) pairs — the aggregate, ~|users| x
-    |days|, NOT raw events — explode to their 7 window days, dedup, and
-    count per window day (restricted to days the data actually covers).
-
-    Scale: raw events reduce to (user, day) FIRST (one shuffle,
-    map-side-combinable); the x7 expansion runs on the reduced table, so
-    the second shuffle carries 7x the aggregate, a vanishing fraction of
-    the event stream.  The day-domain join is a broadcast (|days| rows)."""
-    ev = table(spark, sf_dir, "events")
-    day = F.to_date("ts")
-    user_days = ev.select("user_id", day.alias("d")).distinct()
-    contrib = user_days.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(ROLLING_DAYS - 1))
-        ).alias("k"),
-        "d",
-    ).select(
-        "user_id",
-        # DATE values map to different pandas dtypes per engine (README
-        # determinism #4) — the day key crosses as 'YYYY-MM-DD' strings
-        F.date_format(F.date_add(F.col("d"), F.col("k")), "yyyy-MM-dd")
-        .alias("window_day"),
-    ).distinct()
-    days = ev.select(
-        F.date_format(day, "yyyy-MM-dd").alias("window_day")
-    ).distinct()
-    return (
-        contrib.join(F.broadcast(days), "window_day")
-        .groupBy("window_day")
-        .agg(F.count(F.lit(1)).alias("active_users_7d"))
-    )
+    """Rolling 7-day active users (the WAU curve): the `rolling_active`
+    kernel on the events table — a user active on day d is active for
+    windows ending d .. d+6."""
+    return rolling_active(
+        table(spark, sf_dir, "events"), "user_id", "ts", days=ROLLING_DAYS
+    ).withColumnRenamed("active", "active_users_7d")
 
 
 PATH_TOPK = 10

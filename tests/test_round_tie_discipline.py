@@ -65,7 +65,7 @@ FROZEN_ROUND_DIV_SITES = {
     ("stats_extras.py", "abtest_ztest"),
     ("stats_extras.py", "conversion_rate_ci"),
     ("stats_extras2.py", "stat_mannwhitney"),
-    ("stats_extras2.py", "stat_welch_ttest"),
+    ("stats_extras2.py", "welch_ttest"),
     ("stats_extras3.py", "abtest_cuped"),
     ("stats_extras3.py", "abtest_srm"),
     ("stats_extras3.py", "stat_levene"),
@@ -74,7 +74,7 @@ FROZEN_ROUND_DIV_SITES = {
     ("variance_extras.py", "anova_dow"),
     ("variance_extras.py", "error_rate_daily"),
     ("variance_extras.py", "first_touch_mix"),
-    ("warehouse_extras.py", "conversion_window"),
+    ("warehouse_extras.py", "window_conversion"),
     ("warehouse_extras10.py", "graph_assortativity"),
     ("warehouse_extras10.py", "markov_entropy_rate"),
     ("warehouse_extras10.py", "source_cross_entropy"),
@@ -125,7 +125,7 @@ FROZEN_ROUND_DIV_SITES = {
     ("warehouse_extras27.py", "forecast_snaive_mase"),
     ("warehouse_extras27.py", "win_exclude_current"),
     ("warehouse_extras28.py", "quality_band_mix"),
-    ("warehouse_extras3.py", "agg_skew_kurt"),
+    ("warehouse_extras3.py", "skew_kurt"),
     ("warehouse_extras30.py", "brand_nation_lift"),
     ("warehouse_extras30.py", "winback_rate"),
     ("warehouse_extras31.py", "dedup_savings_report"),
@@ -136,27 +136,27 @@ FROZEN_ROUND_DIV_SITES = {
     ("warehouse_extras34.py", "ecdf_lookup"),
     ("warehouse_extras34.py", "langid_confusion"),
     ("warehouse_extras34.py", "minhash_jaccard_calibration"),
-    ("warehouse_extras4.py", "ts_vwap"),
+    ("warehouse_extras4.py", "vwap"),
     ("warehouse_extras5.py", "corr"),
     ("warehouse_extras5.py", "customer_churn"),
     ("warehouse_extras5.py", "purchase_gaps"),
     ("warehouse_extras5.py", "ts_bollinger"),
+    ("warehouse_extras6.py", "autocorr"),
     ("warehouse_extras6.py", "mix_temperature"),
-    ("warehouse_extras6.py", "ts_autocorr"),
     ("warehouse_extras7.py", "corpus_zipf_slope"),
     ("warehouse_extras7.py", "events_props_stats"),
     ("warehouse_extras7.py", "moving_median"),
     ("warehouse_extras7.py", "orders_seasonality_index"),
+    ("warehouse_extras8.py", "bounce_rate"),
     ("warehouse_extras8.py", "brand_return_rate"),
     ("warehouse_extras8.py", "customer_reorder_rate"),
-    ("warehouse_extras8.py", "funnel_latency"),
     ("warehouse_extras8.py", "nation_tax_rate"),
-    ("warehouse_extras8.py", "session_bounce_rate"),
     ("warehouse_extras8.py", "source_vocab_overlap"),
+    ("warehouse_extras8.py", "stage_latency"),
     ("warehouse_extras8.py", "supplier_otd"),
-    ("warehouse_extras9.py", "event_gap_hist"),
+    ("warehouse_extras9.py", "cusum"),
+    ("warehouse_extras9.py", "gap_hist"),
     ("warehouse_extras9.py", "part_supplier_concentration"),
-    ("warehouse_extras9.py", "ts_cusum"),
     ("warehouse_extras9.py", "ts_stochastic"),
     ("windows.py", "ewma"),
 }

@@ -25,6 +25,15 @@ from pyspark.sql import Window, functions as F  # noqa: E402
 
 from secdb_spark import layout  # noqa: E402
 from secdb_spark.catalog import table  # noqa: E402
+from secdb_spark.operators.timeseries import (  # noqa: E402
+    SESSION_GAP_MIN,
+    funnel,
+    sessionize,
+)
+from secdb_spark.operators.warehouse_extras import (  # noqa: E402
+    last_touch,
+    window_conversion,
+)
 from secdb_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
@@ -123,42 +132,23 @@ def q_window(ev):
 
 
 def q_sessionize(ev):
-    """events_sessionize's algebra (one Exchange: lag + running sum + agg)."""
-    ev = ev.withColumn("us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    gap = F.col("us") - F.lag("us").over(w)
-    flagged = ev.withColumn(
-        "ns", F.when(gap.isNull() | (gap > 1_800_000_000), 1).otherwise(0)
+    """events_sessionize: the shared `sessionize` kernel with its
+    binding's arguments, summarized per session (one Exchange: lag +
+    running sum + agg)."""
+    sess = sessionize(
+        ev, "user_id", "ts", SESSION_GAP_MIN, out_col="session_seq"
     )
-    return (
-        flagged.withColumn("sid", F.sum("ns").over(run))
-        .groupBy("user_id", "sid")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("s"))
+    return sess.groupBy("user_id", "session_seq").agg(
+        F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("s")
     )
 
 
 def q_funnel(ev):
-    """funnel_events' algebra (stage-seen flags, one event shuffle)."""
-    before = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    is_view = F.when(F.col("event_type") == "view", 1).otherwise(0)
-    s1 = ev.withColumn("sv", F.max(is_view).over(before))
-    s2 = s1.withColumn(
-        "cav",
-        F.when((F.col("event_type") == "click") & (F.col("sv") == 1), 1).otherwise(0),
-    ).withColumn("sca", F.max("cav").over(before))
-    return s2.groupBy("user_id").agg(
-        F.max(is_view).alias("f1"),
-        F.max("cav").alias("f2"),
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("sca") == 1), 1
-            ).otherwise(0)
-        ).alias("f3"),
+    """funnel_events: the shared `funnel` kernel with its binding's
+    arguments (stage-seen flags, one event shuffle)."""
+    return funnel(
+        ev.withColumn("us", F.unix_micros("ts")), "user_id", "us",
+        "event_type", ["view", "click", "purchase"], tie_col="event_id",
     )
 
 
@@ -269,37 +259,20 @@ def q_cdc(o):
 
 
 def q_attribution(ev):
-    """attribution_last_touch's algebra (last-ignorenulls window + agg)."""
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    touch = F.last(
-        F.when(F.col("event_type") != "purchase", F.col("event_type")), True
-    ).over(w)
-    return (
-        ev.withColumn("ch", F.coalesce(touch, F.lit("direct")))
-        .filter(F.col("event_type") == "purchase")
-        .groupBy("ch")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("v"))
+    """attribution_last_touch: the shared `last_touch` kernel with its
+    binding's arguments (last-ignorenulls window + agg)."""
+    return last_touch(
+        ev, "user_id", "event_type", "value", ["ts", "event_id"],
+        conversion="purchase", default="direct",
     )
 
 
 def q_conversion(ev):
-    """conversion_window's algebra (range frame over epoch-us)."""
-    ev = ev.withColumn("us", F.unix_micros("ts"))
-    w = Window.partitionBy("user_id").orderBy("us").rangeBetween(-3_600_000_000, -1)
-    flagged = ev.withColumn(
-        "v1h", F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0)).over(w)
-    )
-    return (
-        flagged.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("v1h") >= 1, 1).otherwise(0)).alias("c"),
-        )
+    """conversion_window: the shared `window_conversion` kernel with its
+    binding's arguments (range frame over epoch-us)."""
+    return window_conversion(
+        ev.withColumn("us", F.unix_micros("ts")), "user_id", "event_type",
+        "us", trigger="view", conversion="purchase", window=3_600_000_000,
     )
 
 
