@@ -829,8 +829,10 @@ def gini(
     Pass x in exact integer units (e.g. cents) for exact moment sums.
     Returns (by..., n, gini6) with gini6 = floor(G * 1e6 + 0.5).
 
-    Scale shape: per-group rank windows — never a global sort — and
-    one combinable closing aggregate."""
+    Scale shape: per-group rank windows and one combinable closing
+    aggregate.  With by=None the rank window spans the whole frame in
+    ONE partition: pass a model-sized population (e.g. a per-entity
+    aggregate) or group it."""
     by = by or []
     order = [F.col(val_col)] + (
         [F.col(tiebreak_col)] if tiebreak_col else []

@@ -444,9 +444,10 @@ def ewma(
     correct one — a^i would INVERT the decay.)  All K lags share ONE
     window spec, so Catalyst plans a single Window node over a single
     `by` shuffle+sort with per-row state of K doubles; truncation error
-    is bounded at (1-a)^K of total weight.  Pass tie-breaking
-    order_cols (e.g. [ts, id]) — a non-deterministic sort makes the
-    smoothing non-reproducible.  Returns the input rows + `ewma`
+    is bounded at (1-a)^K of total weight.  With by=None the window is
+    the whole frame in ONE partition: pass `by` for a stream.  Pass
+    tie-breaking order_cols (e.g. [ts, id]) — a non-deterministic sort
+    makes the smoothing non-reproducible.  Returns the input rows + `ewma`
     (round 4)."""
     by = by or []
     beta = 1.0 - alpha

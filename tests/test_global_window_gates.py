@@ -9,6 +9,7 @@ model-sized-input justification."""
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import io
 import pathlib
@@ -126,8 +127,10 @@ def test_scale_kernels_have_no_single_partition_window(spark, monkeypatch):
 
 # --- source sweep: the class is closed -----------------------------------
 #
-# Every global (partition-less) Window.orderBy site in the operators
-# package must be either (a) inside a function that dispatches on
+# Every global (partition-less) window ordering in the operators package
+# — `Window.orderBy`, `Window.partitionBy().orderBy`, or
+# `Window.partitionBy(*by).orderBy` whose `by` defaults to None/empty —
+# must be either (a) inside a function that dispatches on
 # GLOBAL_WINDOW_GATE (the below-gate branch of a dual kernel), or
 # (b) allowlisted here with a model-sized-input justification.  Adding a
 # new ungated site anywhere fails this test until it is gated or
@@ -148,7 +151,7 @@ MODEL_SIZED_ALLOWLIST = {
     ("warehouse_extras4.py", "orders_open_backlog"): "running sum over the per-day aggregate (calendar-bounded)",
     ("warehouse_extras7.py", "corpus_zipf_slope"): "rank over the top-N term aggregate (N-bounded)",
     ("warehouse_extras7.py", "cumulative_entities"): "running sum over the per-day aggregate (calendar-bounded)",
-    ("warehouse_extras8.py", "rolling_corr"): "moment windows over the per-day aggregate (calendar-bounded)",
+    ("warehouse_extras8.py", "rolling_corr"): "by=None: moment windows over ONE pre-bucketed series; ts_rolling_corr passes the per-day aggregate (calendar-bounded)",
     ("warehouse_extras9.py", "brand_rank_shift"): "ranking windows over the |brands|-row aggregate (model-sized)",
     ("warehouse_extras16.py", "customer_lorenz_deciles"): "cumulative share over the 10-row decile aggregate (customer ranking itself is the bucketed kernel)",
     ("corpus_extras2.py", "corpus_stopword_coverage"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention)",
@@ -157,6 +160,11 @@ MODEL_SIZED_ALLOWLIST = {
     ("warehouse_extras36.py", "bpe_merge_topk"): "row_number over the 50-row TakeOrderedAndProject result (sample_bottomk convention)",
     ("curation_extras2.py", "vocab_topk_coverage"): "rank over the |vocab|-row frequency aggregate (corpus_zipf_slope convention — vocabulary, not corpus, sizes the window)",
     ("warehouse_extras35.py", "ts_macd"): "EWMA lag chains over the |days|-row daily revenue aggregate (calendar-bounded series, win_ewma convention)",
+    ("warehouse_extras38.py", "mix_token_budget"): "largest-remainder row_number over the |sources|-row allocation aggregate (model-sized)",
+    ("warehouse_extras4.py", "gini"): "by=None ranks the caller's whole frame as ONE population in one partition (docstring says so); agg_gini binds by=['c_nationkey'] over the per-customer spend aggregate",
+    ("warehouse_extras6.py", "autocorr"): "by=None lags ONE pre-bucketed series (one row per order_col by contract, calendar-bounded); ts_autocorr binds by=['event_type'] over the daily aggregate",
+    ("warehouse_extras8.py", "rsi"): "by=None windows ONE pre-bucketed close series (one row per order_col by contract, calendar-bounded); ts_rsi binds by=['event_type'] over the daily aggregate",
+    ("windows.py", "ewma"): "by=None smooths the caller's whole frame as ONE series in one partition (docstring says so); win_ewma binds by=['user_id']",
     ("warehouse_extras38.py", "sample_weighted_topk"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention; priorities are map-side, the orderBy+limit is partial top-k per partition)",
 }
 
@@ -178,26 +186,67 @@ GATED_FUNCS = {
 }
 
 
+def _empty_default_params(fn) -> set[str]:
+    """Parameters of `fn` that default to None or an empty list/tuple."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+    pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+    return {
+        p.arg
+        for p, d in pairs
+        if (isinstance(d, ast.Constant) and d.value is None)
+        or (isinstance(d, (ast.List, ast.Tuple)) and not d.elts)
+    }
+
+
+def _is_window(node) -> bool:
+    return isinstance(node, ast.Name) and node.id == "Window"
+
+
+def _is_global_order_by(node, stack) -> bool:
+    """`Window.orderBy(...)`, `Window.partitionBy().orderBy(...)`, or
+    `Window.partitionBy(*by).orderBy(...)` where every starred name is a
+    parameter of an enclosing def that defaults to None or empty — the
+    call's own default is a partition-less window."""
+    if not (isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "orderBy"):
+        return False
+    target = node.func.value
+    if _is_window(target):
+        return True
+    if not (isinstance(target, ast.Call)
+            and isinstance(target.func, ast.Attribute)
+            and target.func.attr == "partitionBy"
+            and _is_window(target.func.value)
+            and not target.keywords):
+        return False
+    empty = set().union(*(_empty_default_params(f) for f in stack))
+    return all(
+        isinstance(a, ast.Starred)
+        and isinstance(a.value, ast.Name)
+        and a.value.id in empty
+        for a in target.args
+    )
+
+
 def _global_window_sites():
-    """(file, enclosing def, lineno) for every partition-less
-    Window.orderBy in the operators package (kernel module excluded —
-    its windows are partitionBy(_bucket) by construction and its
-    docstring mentions the pattern by name)."""
+    """(file, enclosing top-level def, lineno) for every partition-less
+    window ordering in the operators package."""
     sites = []
     for path in sorted(OPS_DIR.glob("*.py")):
-        if path.name == "_global_order.py":
-            continue
-        lines = path.read_text().splitlines()
-        for i, line in enumerate(lines):
-            if "Window.orderBy(" not in line or "partitionBy" in line:
-                continue
-            func = None
-            for j in range(i, -1, -1):
-                m = re.match(r"def (\w+)", lines[j])
-                if m:
-                    func = m.group(1)
-                    break
-            sites.append((path.name, func, i + 1))
+
+        def visit(node, stack):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                stack = stack + [node]
+            if _is_global_order_by(node, stack):
+                func = stack[0].name if stack else None
+                sites.append((path.name, func, node.lineno))
+            for child in ast.iter_child_nodes(node):
+                visit(child, stack)
+
+        visit(ast.parse(path.read_text()), [])
     return sites
 
 
@@ -209,6 +258,15 @@ def test_no_ungated_global_windows_in_registry():
         "ungated global Window.orderBy outside the allowlist — gate it on "
         f"GLOBAL_WINDOW_GATE or justify it in MODEL_SIZED_ALLOWLIST: {unknown}"
     )
+
+
+def test_allowlist_has_no_stale_entries():
+    """An allowlist entry that matches no site hides nothing today and
+    would silently admit a future one; GATED_FUNCS is exempt (its
+    partitioned funnels are checked by the dispatch test below)."""
+    live = {(f, fn) for f, fn, _ in _global_window_sites()}
+    stale = sorted(set(MODEL_SIZED_ALLOWLIST) - live)
+    assert not stale, f"MODEL_SIZED_ALLOWLIST entries match no site: {stale}"
 
 
 def test_gated_funcs_actually_dispatch_on_the_gate():

@@ -207,6 +207,14 @@ def test_no_new_round_over_division_sites():
     )
 
 
+def test_frozen_sites_have_no_stale_entries():
+    """A frozen entry that matches no site would silently admit a new
+    round-over-division site in that function."""
+    live = {(f, fn) for f, fn, _ in _round_div_sites()}
+    stale = sorted(FROZEN_ROUND_DIV_SITES - live)
+    assert not stale, f"FROZEN_ROUND_DIV_SITES entries match no site: {stale}"
+
+
 def test_changepoint_binary_migrated():
     """The precedent op must not reappear in the frozen list."""
     assert ("warehouse_extras21.py", "changepoint_binary") not in FROZEN_ROUND_DIV_SITES

@@ -206,26 +206,33 @@ def main() -> None:
             )
 
     if "bbit" in only:
-        # §69 follow-up: the b-bit calibration on the HONEST axis.  The
-        # generic probe's verbatim duplication grows true candidate
-        # pairs ~16x at 4x (measured: 5.96M -> 95.4M); disjoint vocab
-        # grows them exactly 4x, so the wall ratio here reads the
-        # plan's scaling, not the problem's.
-        import os as _os
-        sys.path.insert(0, _os.path.dirname(_os.path.abspath(__file__)))
-        from scale_probe import q_bbit_calibration
+        # §69 follow-up: dedup_minhash_b_bit on the HONEST axis.  The
+        # verbatim-copy scale probe grows true candidate pairs ~16x at
+        # 4x (measured: 5.96M -> 95.4M); disjoint vocab grows them
+        # exactly 4x, so the wall ratio here reads the plan's scaling,
+        # not the problem's.  The op reads only `documents`.
+        import shutil
+        import tempfile
 
-        def _t(df):
-            t0 = time.time()
-            df.write.mode("overwrite").format("noop").save()
-            return time.time() - t0
+        from op_ab import time_op
 
-        big = synth_docs(spark, 4)
-        w1 = _t(q_bbit_calibration(base))
-        w4 = _t(q_bbit_calibration(big))
+        from secdb_spark.registry import all_queries
+
+        op = all_queries()["dedup_minhash_b_bit"]
+        tmp = tempfile.mkdtemp(prefix="secdb_bbit_")
+        try:
+            walls = {}
+            for mult in (1, 4):
+                sf_dir = f"{tmp}/{mult}x"
+                synth_docs(spark, mult).write.parquet(
+                    f"{sf_dir}/documents.parquet"
+                )
+                walls[mult] = sum(time_op(spark, op, sf_dir, 1))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         print(
-            f"bbit_calibration[disjoint-vocab]: 1x wall={w1:.1f}s | "
-            f"4x wall={w4:.1f}s | ratio={w4 / w1:.2f}"
+            f"dedup_minhash_b_bit[disjoint-vocab]: 1x wall={walls[1]:.1f}s | "
+            f"4x wall={walls[4]:.1f}s | ratio={walls[4] / walls[1]:.2f}"
         )
 
     if "vs" in only:

@@ -16,6 +16,25 @@ import time
 sys.path.insert(0, "/root/repo")
 
 
+def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float]:
+    """(build_s, exec_s) of `fn(spark, sf_dir)` to the noop sink: n + 1
+    runs, the first discarded (file listing, codegen), the best of the
+    rest by total."""
+    best = None
+    for i in range(n + 1):
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        df.write.mode("overwrite").format("noop").save()
+        t2 = time.time()
+        if i == 0:
+            continue
+        cur = (t1 - t0, t2 - t1)
+        if best is None or sum(cur) < sum(best):
+            best = cur
+    return best
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
@@ -34,20 +53,8 @@ def main() -> int:
     ).save()
 
     for op in args.ops:
-        fn = queries[op]
         spark.sparkContext.setJobDescription(f"op_ab: {op}")
-        best = None
-        for i in range(args.n + 1):
-            t0 = time.time()
-            df = fn(spark, args.sf)
-            t1 = time.time()
-            df.write.mode("overwrite").format("noop").save()
-            t2 = time.time()
-            if i == 0:
-                continue  # discard cold run (file listing, codegen)
-            cur = (t1 - t0, t2 - t1)
-            if best is None or sum(cur) < sum(best):
-                best = cur
+        best = time_op(spark, queries[op], args.sf, args.n)
         print(
             f"{op:36s} build {best[0]:7.2f}  exec {best[1]:7.2f}  "
             f"total {sum(best):7.2f}",
