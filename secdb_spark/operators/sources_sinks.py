@@ -7,8 +7,8 @@ no sqlite-jdbc jar and no network, so the SQLite sink uses stdlib sqlite3
 via foreachPartition (the documented fallback, SURVEY §7.M5) and the XBRL
 ETL parses local fixture filings.
 
-Round-trip ops write under a per-call temp dir (driver may invoke each
-query multiple times — never reuse a fixed path). Read-back queries give
+Round-trip ops write under a per-call `session.scratch_dir` (driver may
+invoke each query multiple times — never reuse a fixed path). Read-back queries give
 the driver a comparable DataFrame; the write itself is the op under test.
 
 100 TB notes:
@@ -26,7 +26,6 @@ the driver a comparable DataFrame; the write itself is the op under test.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from collections.abc import Iterator
 
@@ -37,13 +36,10 @@ from pyspark.sql import types as T
 
 from ..catalog import SCHEMAS, table
 from ..registry import register
+from ..session import scratch_dir
 from ._helpers import dsum, pin, sql_dsum
 
 FIXTURES_DIR = os.path.join(os.path.dirname(__file__), "..", "..", "fixtures")
-
-
-def _tmpdir(tag: str) -> str:
-    return tempfile.mkdtemp(prefix=f"secdb_{tag}_{uuid.uuid4().hex[:8]}_")
 
 
 @register(
@@ -78,7 +74,7 @@ def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV ingest with header + explicit schema (EDGAR index files are
     delimited — the reference's delimited-ingest path). Round-trip: nation
     -> csv -> explicit-schema read -> filter."""
-    d = _tmpdir("csv")
+    d = scratch_dir("csv")
     table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option(
         "header", True
     ).csv(d)
@@ -100,7 +96,7 @@ def src_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines ingest with explicit schema (no inference pass)."""
-    d = _tmpdir("json")
+    d = scratch_dir("json")
     ev = table(spark, sf_dir, "events").filter(F.col("event_id") < 200)
     ev.select("event_id", "event_type", "value").coalesce(1).write.mode(
         "overwrite"
@@ -125,7 +121,7 @@ def src_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw text-line ingest (document corpus ingest path)."""
-    d = _tmpdir("text")
+    d = scratch_dir("text")
     table(spark, sf_dir, "documents").select("text").coalesce(1).write.mode(
         "overwrite"
     ).text(d)
@@ -151,7 +147,7 @@ def snk_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering on the partition column skip whole directories (the 100 TB
     layout primitive; SURVEY §4.3 prescribes date-derived partitioning
     for the fact tables)."""
-    d = _tmpdir("parquet")
+    d = scratch_dir("parquet")
     li = table(spark, sf_dir, "lineitem")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(d)
     back = spark.read.parquet(d)
@@ -173,7 +169,7 @@ def snk_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snk_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV sink + schema'd read-back (values survive text round-trip:
     Spark prints doubles with full precision)."""
-    d = _tmpdir("snkcsv")
+    d = scratch_dir("snkcsv")
     agg = (
         table(spark, sf_dir, "orders")
         .groupBy("o_orderstatus")
@@ -294,7 +290,7 @@ def snk_sqlite(spark: SparkSession, sf_dir: str) -> DataFrame:
     trip is lossless and hash-comparable."""
     import sqlite3
 
-    d = _tmpdir("sqlite")  # local mode: driver tempdir IS executor-visible
+    d = scratch_dir("sqlite")  # local mode: driver tempdir IS executor-visible
     supp = table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
@@ -337,7 +333,7 @@ def src_stream_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = f"stream_src_{uuid.uuid4().hex[:8]}"
     # the file source monitors a DIRECTORY (arrivals land as new files);
     # stage the single test file into one via symlink
-    stage = _tmpdir("stream")
+    stage = scratch_dir("stream")
     os.symlink(f"{sf_dir}/events.parquet", os.path.join(stage, "events.parquet"))
     stream = (
         spark.readStream.schema(SCHEMAS["events"])
@@ -439,7 +435,7 @@ def _parse_filing(path: str) -> list[tuple]:
     return out
 
 
-#: parsed-facts memo per Spark application (the _ORC_SINK_CACHE pattern):
+#: parsed-facts memo per Spark application (key: applicationId):
 #: the seven consumers (src_xbrl_etl, xbrl_filings, xbrl_supersede,
 #: xbrl_metrics, build_secdb, and the xbrl_q_* analytics quartet) each
 #: used to re-run the full ElementTree parse of the 104 fixture
@@ -954,7 +950,7 @@ def build_secdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations); persistence is parquet partitioned per table with the
     SQLite export sharded per partition; each fingerprint is a 1-row
     map-side-combinable aggregate over its read-back scan."""
-    out = _tmpdir("secdb_db")
+    out = scratch_dir("db")
     # pinned (r13): the parse -> supersede pipeline feeds BOTH the facts
     # write and the entities rollup write — unpinned it re-parsed the
     # fixture corpus once per consumer (SCALE.md §50).
@@ -1053,7 +1049,7 @@ def snk_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
-    out = _tmpdir("snk_part")
+    out = scratch_dir("snk_part")
     (
         o.repartition("o_year")
         .write.mode("overwrite")
@@ -1096,11 +1092,11 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
-    fact_dir = _tmpdir("dpp_fact")
+    fact_dir = scratch_dir("dpp_fact")
     o.repartition("o_year").write.mode("overwrite").partitionBy("o_year").parquet(
         fact_dir
     )
-    dim_dir = _tmpdir("dpp_dim")
+    dim_dir = scratch_dir("dpp_dim")
     (
         o.select("o_year")
         .distinct()

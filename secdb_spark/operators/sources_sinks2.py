@@ -4,40 +4,20 @@ evolution, corrupt-record auditing, CSV quoting round-trip.
 Reference semantics: SURVEY §2.A extension (mount empty).  Real feeds
 evolve columns, ship malformed lines, and embed every delimiter in
 text fields; an engine that only reads clean fixtures hasn't
-implemented ingestion.  Each op materializes a deterministic fixture
-derived from the corpus into a process-local cached tmp dir (snk_json's
-sink-cache + atexit discipline), reads it back through the edge-case
-path under test, and aggregates — so the DuckDB oracle over the
-ORIGINAL table certifies the whole round trip.
+implemented ingestion.  Each call writes a deterministic fixture
+derived from the corpus into a fresh `session.scratch_dir`, reads it
+back through the edge-case path under test, and aggregates — so the
+DuckDB oracle over the ORIGINAL table certifies the whole round trip.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import scratch_dir
 from ._helpers import r4
-
-_EVO_CACHE: dict[str, str] = {}
-_CORRUPT_CACHE: dict[str, str] = {}
-_QUOTE_CACHE: dict[str, str] = {}
-
-
-def _cached_dir(cache: dict[str, str], sf_dir: str, prefix: str):
-    import atexit
-    import shutil
-    import tempfile
-
-    d = cache.get(sf_dir)
-    if d is not None and os.path.isdir(d):
-        return d, False
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    cache[sf_dir] = d
-    return d, True
 
 
 # ---------------------------------------------------------------------------
@@ -68,16 +48,13 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeSchema costs one footer read per file — schema unions are
     footer-sized, never data-sized."""
     p = table(spark, sf_dir, "part")
-    d, fresh = _cached_dir(_EVO_CACHE, sf_dir, "secdb_evo_")
-    if fresh:
-        old = p.filter(F.col("p_partkey") % 2 == 0).select(
-            "p_partkey", "p_brand"
-        )
-        new = p.filter(F.col("p_partkey") % 2 == 1).select(
-            "p_partkey", "p_brand", "p_retailprice"
-        )
-        old.write.mode("overwrite").parquet(f"{d}/batch=0")
-        new.write.mode("overwrite").parquet(f"{d}/batch=1")
+    d = scratch_dir("evo")
+    old = p.filter(F.col("p_partkey") % 2 == 0).select("p_partkey", "p_brand")
+    new = p.filter(F.col("p_partkey") % 2 == 1).select(
+        "p_partkey", "p_brand", "p_retailprice"
+    )
+    old.write.mode("overwrite").parquet(f"{d}/batch=0")
+    new.write.mode("overwrite").parquet(f"{d}/batch=1")
     back = spark.read.option("mergeSchema", "true").parquet(
         f"{d}/batch=0", f"{d}/batch=1"
     )
@@ -127,18 +104,17 @@ def src_csv_corrupt_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one.  PERMISSIVE parsing is map-only; the quarantine column prunes
     away when untouched downstream."""
     o = table(spark, sf_dir, "orders")
-    d, fresh = _cached_dir(_CORRUPT_CACHE, sf_dir, "secdb_corrupt_")
-    if fresh:
-        line = F.concat_ws(
-            ",",
-            F.when(
-                F.col("o_orderkey") % 7 == 0, F.lit("BADKEY")
-            ).otherwise(F.col("o_orderkey").cast("string")),
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-            .cast("string"),
-            F.col("o_orderpriority"),
-        )
-        o.select(line.alias("value")).write.mode("overwrite").text(d)
+    d = scratch_dir("corrupt")
+    line = F.concat_ws(
+        ",",
+        F.when(
+            F.col("o_orderkey") % 7 == 0, F.lit("BADKEY")
+        ).otherwise(F.col("o_orderkey").cast("string")),
+        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
+        .cast("string"),
+        F.col("o_orderpriority"),
+    )
+    o.select(line.alias("value")).write.mode("overwrite").text(d)
     back = (
         spark.read.schema(
             "okey LONG, cents LONG, pri STRING, _corrupt_record STRING"
@@ -193,11 +169,10 @@ def snk_csv_quoting(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('a,"b"\n'), F.col("p_name"), F.lit(',"tail'), F.lit("\nend")
     )
     src = p.select("p_partkey", torture.alias("payload"))
-    d, fresh = _cached_dir(_QUOTE_CACHE, sf_dir, "secdb_quote_")
-    if fresh:
-        src.write.mode("overwrite").option("header", "true").option(
-            "escape", '"'
-        ).csv(d)
+    d = scratch_dir("quote")
+    src.write.mode("overwrite").option("header", "true").option(
+        "escape", '"'
+    ).csv(d)
     back = (
         spark.read.option("header", "true")
         .option("multiLine", "true")

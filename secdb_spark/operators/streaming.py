@@ -27,15 +27,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import SCHEMAS, events_ts_to_us, table
 from ..registry import register
+from ..session import scratch_dir
 from ._helpers import DEC
 
 
 def _events_stream(spark: SparkSession, sf_dir: str):
     """readStream over the events file (staged dir) with the ns->us fix."""
     import os
-    import tempfile
 
-    stage = tempfile.mkdtemp(prefix=f"secdb_stream_{uuid.uuid4().hex[:8]}_")
+    stage = scratch_dir("stream")
     os.symlink(f"{sf_dir}/events.parquet", os.path.join(stage, "events.parquet"))
     raw = spark.readStream.schema(SCHEMAS["events"]).parquet(stage)
     return raw.withColumn("ts", events_ts_to_us(sf_dir))
@@ -379,12 +379,10 @@ def stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     real streaming run an exact oracle.  State size is |keys|, not
     |events|; each merge shuffles only state+batch on user_id."""
     import os
-    import tempfile
-    import uuid as _uuid
 
     from pyspark.sql import Window
 
-    stage = tempfile.mkdtemp(prefix=f"secdb_fb_{_uuid.uuid4().hex[:8]}_")
+    stage = scratch_dir("fb")
     ev = table(spark, sf_dir, "events")
     ev.repartition(4).write.mode("overwrite").parquet(os.path.join(stage, "in"))
     stream = (

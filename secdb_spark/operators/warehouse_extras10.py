@@ -11,12 +11,12 @@ on both engines, quantized to DECIMAL(38,12) BEFORE summation so the
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import scratch_dir
 from ._helpers import pin, dsum, r4, sql_dsum
 
 LN2 = repr(math.log(2))  # shared literal, bit-identical both engines
@@ -27,9 +27,6 @@ DEC12 = "decimal(38,12)"
 # ---------------------------------------------------------------------------
 # snk_json — JSON-lines sink + read-back aggregation (round-trip proof)
 # ---------------------------------------------------------------------------
-
-_JSON_SINK_CACHE: dict[str, str] = {}
-
 
 @register(
     "snk_json",
@@ -49,19 +46,10 @@ def snk_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     their ISO string form — survived the format conversion.  Read-back
     supplies the original schema explicitly (schema inference on JSON is
     both slow and lossy at scale — a second full pass just to guess
-    types).  Same process-local sink cache + atexit reclaim as snk_orc
-    (sources_sinks leak discipline)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = _JSON_SINK_CACHE.get(sf_dir)
+    types).  Every call writes to a fresh `scratch_dir`, as snk_orc."""
+    d = scratch_dir("json")
     o = table(spark, sf_dir, "orders")
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="secdb_json_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        o.write.mode("overwrite").partitionBy("o_orderstatus").json(d)
-        _JSON_SINK_CACHE[sf_dir] = d
+    o.write.mode("overwrite").partitionBy("o_orderstatus").json(d)
     back = spark.read.schema(o.schema).json(d)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),

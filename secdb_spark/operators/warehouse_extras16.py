@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table, table_rows, table_split_units
 from ..registry import register
+from ..session import scratch_dir
 from ._global_order import bucketed_global_rank, ntile_from_rank
 from ._helpers import pin, dsum_scaled, r4
 from .llm_pipeline import _emb
@@ -57,11 +58,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch split/order yields exactly the batch answer — the streaming
     family's batch-equivalence doctrine extended to deletes.  State
     size is |keys|; each merge shuffles state+batch on the key."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     log = o.select(
@@ -81,8 +78,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise("U").alias("op"),
         F.round(F.col("o_totalprice") + F.col("seq"), 4).alias("val"),
     )
-    stage = tempfile.mkdtemp(prefix=f"secdb_cdc_{_uuid.uuid4().hex[:8]}_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    stage = scratch_dir("cdc")
     typed.repartition(3).write.mode("overwrite").parquet(
         os.path.join(stage, "in")
     )

@@ -35,16 +35,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table, table_rows, table_split_units
 from ..registry import register
+from ..session import scratch_dir
 from ._helpers import pin, DEC, dsum, r4, sql_dsum
-
-# snk_orc round-trip sink, written once per process per sf_dir (see op)
-_ORC_SINK_CACHE: dict[str, str] = {}
 
 TOPK_PAIRS = 20
 MIN_PAIR_SUPPORT = 2  # baskets a pair must co-occur in (assoc/graph ops)
@@ -1125,26 +1121,11 @@ def snk_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ROUND-TRIP: the read-back aggregate must equal the aggregate of
     the original table, which it does only if every value survived the
     format conversion bit-exactly.  Same partitionBy layout discipline
-    as snk_parquet.
-
-    The sink directory is cached PER PROCESS per sf_dir: the registry
-    shape-invariant test instantiates every op each sweep, and an
-    unconditional mkdtemp+write leaked a full ORC copy of orders per
-    sweep.  A process-local cache (not a stable cross-process path)
-    avoids the leak without staleness risk — the driver regenerates
-    testdata between rounds, so a /tmp path surviving processes could
-    serve bytes from the previous corpus.  atexit reclaims the dirs."""
-    import atexit
-    import shutil
-    import tempfile
-
-    d = _ORC_SINK_CACHE.get(sf_dir)
-    if d is None or not os.path.isdir(d):
-        d = tempfile.mkdtemp(prefix="secdb_orc_")
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        o = table(spark, sf_dir, "orders")
-        o.write.mode("overwrite").partitionBy("o_orderstatus").orc(d)
-        _ORC_SINK_CACHE[sf_dir] = d
+    as snk_parquet.  Every call writes to a fresh `scratch_dir`, which
+    the process removes when it exits."""
+    d = scratch_dir("orc")
+    o = table(spark, sf_dir, "orders")
+    o.write.mode("overwrite").partitionBy("o_orderstatus").orc(d)
     back = spark.read.orc(d)
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import scratch_dir
 from ._helpers import he4, pin, sql_he4
 
 D0 = "decimal(38,0)"
@@ -606,19 +607,14 @@ def src_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corrupt-record column is the per-file quarantine hook (route
     non-null _corrupt_record rows to a dead-letter sink in production).
     """
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
 
     ev = (
         table(spark, sf_dir, "events")
         .filter(F.col("event_id") % JSONL_MOD == 0)
         .select("event_id", "user_id", "value")
     )
-    stage = tempfile.mkdtemp(prefix=f"secdb_jsonl_{_uuid.uuid4().hex[:8]}_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    stage = scratch_dir("jsonl")
     in_dir = os.path.join(stage, "in")
     # the corrupt lines go through Spark's OWN writer (unioned into the
     # same single write), so the staging works on any Hadoop-FS target,

@@ -9,7 +9,10 @@ local assumptions beyond this factory.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -36,6 +39,23 @@ RUNTIME_CONFS = {
 }
 
 
+_scratch_root: str | None = None
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh directory for files an op stages (sink round trips, stream
+    inputs, the default warehouse).  Every directory lives under one
+    ``secdb_*`` root per process, made on the first call under
+    ``tempfile.gettempdir()`` (so ``TMPDIR`` moves it) and removed when
+    the process exits.  Each call gets its own directory, so a repeated
+    op never reads what an earlier call wrote."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="secdb_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{tag}_", dir=_scratch_root)
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply required dynamic configs to an existing session (driver-owned)."""
     for k, v in RUNTIME_CONFS.items():
@@ -51,8 +71,6 @@ def get_spark(app_name: str = "secdb_spark", shuffle_partitions: int | None = No
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
-    import tempfile
-
     b = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -68,13 +86,12 @@ def get_spark(app_name: str = "secdb_spark", shuffle_partitions: int | None = No
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
         )
-        # saveAsTable targets (bucketed tables, layout tests) land in /tmp,
-        # not the repo working dir (static conf — builder-time only)
+        # saveAsTable targets (bucketed tables, layout tests) land in the
+        # scratch root, not the repo working dir (static conf — builder-time
+        # only)
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE", tempfile.mkdtemp(prefix="secdb_wh_")
-            ),
+            os.environ.get("SPARK_GRAFT_WAREHOUSE") or scratch_dir("wh"),
         )
     )
     for k, v in RUNTIME_CONFS.items():

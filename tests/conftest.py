@@ -2,12 +2,8 @@
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()

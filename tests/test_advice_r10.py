@@ -18,11 +18,8 @@
 from __future__ import annotations
 
 import datetime
-import sys
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark import api  # noqa: E402
+from secdb_spark import api
 
 
 def test_fk_check_caller_pk_column_no_collision(spark):

@@ -4,14 +4,10 @@ every test here builds its own DataFrames with its own column names
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark import api  # noqa: E402
+from secdb_spark import api
 
 
 def test_normalize_and_quality_flags(spark):
@@ -904,18 +900,14 @@ def test_scd2_null_state_transitions(spark):
     assert u2.st.tolist() == [None, "b"]
 
 
-def test_stream_windowed_counts_batch_equivalence(spark):
+def test_stream_windowed_counts_batch_equivalence(spark, tmp_path):
     """The streaming windowed count through availableNow must equal the
     batch computation on the same data — the D-class equivalence rule."""
-    import os
-    import tempfile
-    import uuid
-
     rows = [
         (i, datetime(2025, 1, 1, 10 + (i % 3), 5 * (i % 7))) for i in range(60)
     ]
     df = spark.createDataFrame(rows, "eid int, t timestamp")
-    d = tempfile.mkdtemp(prefix=f"api_stream_{uuid.uuid4().hex[:8]}_")
+    d = str(tmp_path)
     df.coalesce(1).write.mode("overwrite").parquet(d)
     sdf = spark.readStream.schema(df.schema).parquet(d)
 
@@ -933,8 +925,6 @@ def test_stream_windowed_counts_batch_equivalence(spark):
         .set_index("window_start")["n"]
     )
     assert streamed.sort_index().to_dict() == batch.sort_index().to_dict()
-    for f in os.listdir(d):
-        pass  # leave tempdir for the OS; parquet stays readable mid-test
 
 
 def test_stream_dedupe_batch(spark):
@@ -1089,15 +1079,12 @@ def test_resample_on_custom_table(spark):
         api.resample(df, "t", "v", grain="fortnight")
 
 
-def test_write_partitioned_roundtrip(spark):
-    import tempfile
-    import uuid
-
+def test_write_partitioned_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, 2020 + i % 3, f"p{i}") for i in range(30)],
         "rid int, yr int, payload string",
     )
-    d = tempfile.mkdtemp(prefix=f"api_part_{uuid.uuid4().hex[:8]}_")
+    d = str(tmp_path)
     back = api.write_partitioned(df, d, "yr")
     assert back.count() == 30
     # partition pruning surface: one directory per year
@@ -1419,12 +1406,10 @@ def test_histogram_sub_centi_width_labels_distinct(spark):
         assert abs(r.bucket_lo - r.bucket * 0.001) < 1e-12
 
 
-def test_stream_running_stats_batch_equivalence(spark):
+def test_stream_running_stats_batch_equivalence(spark, tmp_path):
     """classic backend through availableNow: the FINAL update-mode row
     per key must equal the batch twin (stream_stateful's D-class rule,
     generic columns)."""
-    import tempfile
-    import uuid
     from datetime import datetime
 
     rows = [
@@ -1432,7 +1417,7 @@ def test_stream_running_stats_batch_equivalence(spark):
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "uid int, value double, t timestamp")
-    d = tempfile.mkdtemp(prefix=f"api_rstats_{uuid.uuid4().hex[:8]}_")
+    d = str(tmp_path)
     df.coalesce(2).write.mode("overwrite").parquet(d)
     sdf = spark.readStream.schema(df.schema).parquet(d)
 
@@ -1483,19 +1468,17 @@ def test_stream_running_stats_matches_certified_kernel(spark):
     assert got["total_value"].to_dict() == want["total_value"].to_dict()
 
 
-def test_stream_running_stats_tws_gate(spark):
+def test_stream_running_stats_tws_gate(spark, tmp_path):
     """backend='tws' needs protobuf; without it the gate must raise the
     documented RuntimeError (and never a cryptic worker crash).  If the
     environment HAS protobuf the call must at least build the plan."""
-    import tempfile
-    import uuid
     from datetime import datetime
 
     import pytest
 
     rows = [(1, 2.0, datetime(2025, 1, 1))]
     df = spark.createDataFrame(rows, "uid int, value double, t timestamp")
-    d = tempfile.mkdtemp(prefix=f"api_tws_{uuid.uuid4().hex[:8]}_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(d)
     sdf = spark.readStream.schema(df.schema).parquet(d)
     try:
@@ -1520,13 +1503,10 @@ def test_stream_running_stats_rejects_unknown_backend(spark):
         api.stream_running_stats(sdf, ["value"], "value", backend="nope")
 
 
-def test_plan_scan_census_counts_duplicate_scans(spark):
+def test_plan_scan_census_counts_duplicate_scans(spark, tmp_path):
     """An unpinned two-consumer self-union must show 2 scans of the same
     parquet source; the census sees exactly what the repo audit sees."""
-    import tempfile
-    import uuid
-
-    d = tempfile.mkdtemp(prefix=f"api_census_{uuid.uuid4().hex[:8]}_")
+    d = str(tmp_path)
     spark.range(100).write.mode("overwrite").parquet(d)
     base = spark.read.parquet(d)
     two = base.unionByName(base)
@@ -1545,13 +1525,10 @@ def test_plan_scan_census_counts_duplicate_scans(spark):
     assert sum(one.values()) == 1
 
 
-def test_assert_single_scan_gate(spark):
-    import tempfile
-    import uuid
-
+def test_assert_single_scan_gate(spark, tmp_path):
     import pytest
 
-    d = tempfile.mkdtemp(prefix=f"api_gate_{uuid.uuid4().hex[:8]}_")
+    d = str(tmp_path)
     spark.range(50).write.mode("overwrite").parquet(d)
     base = spark.read.parquet(d)
     api.assert_single_scan(base)  # 1 scan: passes

@@ -12,11 +12,7 @@ table >= 3 times in its final plan outside the tool's allowlist.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from tools.api_plan_audit import run_sweep  # noqa: E402
+from tools.api_plan_audit import run_sweep
 
 
 def test_api_surface_multiscan_free(spark):

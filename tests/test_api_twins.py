@@ -12,15 +12,11 @@ second copy from coming back into api.py."""
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark import api  # noqa: E402
-from secdb_spark.operators import (  # noqa: E402
+from secdb_spark import api
+from secdb_spark.operators import (
     aggregations,
     ivm_extras,
     llm_pipeline,
@@ -41,9 +37,9 @@ from secdb_spark.operators import (  # noqa: E402
     warehouse_extras39,
     windows,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
-from conftest import SF_DIR  # noqa: E402
+from conftest import SF_DIR
 
 QUERIES = all_queries()
 

@@ -8,15 +8,11 @@ before any view, interleaved users.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

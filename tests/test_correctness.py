@@ -5,18 +5,12 @@ match DuckDB at sf0.001 exactly the way the driver compares at sf0.01
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+from conftest import SF_DIR
 
-from selfcheck import canon_rows  # noqa: E402
-
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.registry import all_oracles, all_queries  # noqa: E402
+from secdb_spark.registry import all_oracles, all_queries
+from tools.selfcheck import canon_rows
 
 QUERIES = all_queries()
 ORACLES = all_oracles()

@@ -7,18 +7,15 @@ from __future__ import annotations
 
 import hashlib
 import json
-import sys
 from collections import Counter
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.curation_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.curation_extras import (
     CHUNK_DEDUP_W,
     MRL_HALF_D,
     PQ_K,
@@ -27,8 +24,8 @@ from secdb_spark.operators.curation_extras import (  # noqa: E402
     QG_MAX_TOKS,
     QG_MIN_TOKS,
 )
-from secdb_spark.operators.llm_pipeline import N_CENTROIDS  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.operators.llm_pipeline import N_CENTROIDS
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -3,19 +3,16 @@
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter, defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.econ_extras import LN_SCALE  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.econ_extras import LN_SCALE
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -3,13 +3,9 @@ user switches to: ad-hoc SQL, table access, operator invocation."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
-from conftest import SF_DIR  # noqa: E402
+from conftest import SF_DIR
 
 
 @pytest.fixture(scope="module")

@@ -3,17 +3,14 @@
 from __future__ import annotations
 
 import hashlib
-import sys
 from collections import Counter
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.geo_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.geo_extras import (
     CELL_MD,
     GEO_RADIUS_MD,
     GEO_RADIUS_MD2,
@@ -21,7 +18,7 @@ from secdb_spark.operators.geo_extras import (  # noqa: E402
     LAT_RANGE,
     LON_RANGE,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

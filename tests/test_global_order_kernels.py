@@ -8,12 +8,9 @@ in a single createDataFrame round-trip per scenario.)"""
 from __future__ import annotations
 
 import random
-import sys
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark.operators._global_order import (  # noqa: E402
+from secdb_spark.operators._global_order import (
     bucketed_global_rank,
     bucketed_prefix_min,
     bucketed_prefix_sum,

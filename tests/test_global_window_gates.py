@@ -3,8 +3,9 @@ ops gated in round 7 (win_ntile, seq_pack, vocab_growth,
 feat_quantile_bin, skyline_2d — VERDICT r6 "What's wrong" #2), plan pins
 that the scale kernels contain no single-partition Sort/Window feed, and
 a source-level sweep that CLOSES THE CLASS: any new ungated global
-`Window.orderBy(...)` in the operators package fails the sweep until it
-is either gated on GLOBAL_WINDOW_GATE or consciously allowlisted with a
+window in the operators package — a partition-less ordering or a bare
+whole-frame `Window.partitionBy()` — fails the sweep until it is either
+gated on GLOBAL_WINDOW_GATE or consciously allowlisted with a
 model-sized-input justification."""
 
 from __future__ import annotations
@@ -14,13 +15,10 @@ import contextlib
 import io
 import pathlib
 import re
-import sys
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.operators import (  # noqa: E402
+from secdb_spark.operators import (
     curation_extras,
     similarity_extras,
     text_analysis,
@@ -29,7 +27,7 @@ from secdb_spark.operators import (  # noqa: E402
     warehouse_extras5,
     windows,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 
@@ -127,14 +125,15 @@ def test_scale_kernels_have_no_single_partition_window(spark, monkeypatch):
 
 # --- source sweep: the class is closed -----------------------------------
 #
-# Every global (partition-less) window ordering in the operators package
-# — `Window.orderBy`, `Window.partitionBy().orderBy`, or
-# `Window.partitionBy(*by).orderBy` whose `by` defaults to None/empty —
-# must be either (a) inside a function that dispatches on
-# GLOBAL_WINDOW_GATE (the below-gate branch of a dual kernel), or
-# (b) allowlisted here with a model-sized-input justification.  Adding a
-# new ungated site anywhere fails this test until it is gated or
-# consciously added below.
+# Every global (partition-less) window in the operators package —
+# `Window.orderBy`, `Window.rowsBetween`/`rangeBetween`, or
+# `Window.partitionBy()` / `Window.partitionBy(*by)` whose `by` defaults
+# to None/empty, ordered or not (an unordered one is a whole-frame
+# aggregate, which also runs in one partition) — must be either
+# (a) inside a function that dispatches on GLOBAL_WINDOW_GATE (the
+# below-gate branch of a dual kernel), or (b) allowlisted here with a
+# model-sized-input justification.  Adding a new ungated site anywhere
+# fails this test until it is gated or consciously added below.
 
 OPS_DIR = pathlib.Path(__file__).resolve().parent.parent / "secdb_spark" / "operators"
 
@@ -146,7 +145,7 @@ OPS_DIR = pathlib.Path(__file__).resolve().parent.parent / "secdb_spark" / "oper
 # / pytest logs is EXPECTED for these ops and benign by construction —
 # the single partition holds an already-reduced frame, not the base scan.
 MODEL_SIZED_ALLOWLIST = {
-    ("stats_extras.py", "survival_km"): "windows over the distinct-event-time aggregate (study-duration-bounded)",
+    ("stats_extras.py", "survival_km"): "ordered and whole-frame windows over the distinct-event-time aggregates (study-duration-bounded)",
     ("sketch_extras.py", "sample_bottomk"): "row_number over the k-row TakeOrderedAndProject result",
     ("warehouse_extras4.py", "orders_open_backlog"): "running sum over the per-day aggregate (calendar-bounded)",
     ("warehouse_extras7.py", "corpus_zipf_slope"): "rank over the top-N term aggregate (N-bounded)",
@@ -160,11 +159,19 @@ MODEL_SIZED_ALLOWLIST = {
     ("warehouse_extras36.py", "bpe_merge_topk"): "row_number over the 50-row TakeOrderedAndProject result (sample_bottomk convention)",
     ("curation_extras2.py", "vocab_topk_coverage"): "rank over the |vocab|-row frequency aggregate (corpus_zipf_slope convention — vocabulary, not corpus, sizes the window)",
     ("warehouse_extras35.py", "ts_macd"): "EWMA lag chains over the |days|-row daily revenue aggregate (calendar-bounded series, win_ewma convention)",
-    ("warehouse_extras38.py", "mix_token_budget"): "largest-remainder row_number over the |sources|-row allocation aggregate (model-sized)",
+    ("warehouse_extras38.py", "mix_token_budget"): "largest-remainder row_number and whole-frame total over the |sources|-row allocation aggregate (model-sized)",
     ("warehouse_extras4.py", "gini"): "by=None ranks the caller's whole frame as ONE population in one partition (docstring says so); agg_gini binds by=['c_nationkey'] over the per-customer spend aggregate",
     ("warehouse_extras6.py", "autocorr"): "by=None lags ONE pre-bucketed series (one row per order_col by contract, calendar-bounded); ts_autocorr binds by=['event_type'] over the daily aggregate",
     ("warehouse_extras8.py", "rsi"): "by=None windows ONE pre-bucketed close series (one row per order_col by contract, calendar-bounded); ts_rsi binds by=['event_type'] over the daily aggregate",
     ("windows.py", "ewma"): "by=None smooths the caller's whole frame as ONE series in one partition (docstring says so); win_ewma binds by=['user_id']",
+    ("econ_extras.py", "chi2_independence"): "whole-frame margins over the |segments| x |priorities| contingency aggregate (25 cells)",
+    ("ml_prep.py", "mix_apply"): "whole-frame total over the |sources|-row count aggregate (model-sized)",
+    ("variance_extras.py", "first_touch_mix"): "whole-frame share over the |event types|-row first-event aggregate",
+    ("warehouse_extras15.py", "session_depth_dist"): "whole-frame share over the <=10-row capped session-depth histogram",
+    ("warehouse_extras15.py", "customer_order_count_dist"): "whole-frame share over the <=20-row capped orders-per-customer histogram",
+    ("warehouse_extras32.py", "part_sourcing_breadth"): "whole-frame share over the <=|nations|-row sourcing-breadth histogram",
+    ("warehouse_extras6.py", "mix_temperature"): "whole-frame totals over the |sources|-row count aggregate (model-sized)",
+    ("warehouse_extras7.py", "orders_linecount_dist"): "whole-frame total over the lines-per-order histogram (max fan-out rows, ~7 in TPC-H)",
     ("warehouse_extras38.py", "sample_weighted_topk"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention; priorities are map-side, the orderBy+limit is partial top-k per partition)",
 }
 
@@ -204,43 +211,47 @@ def _is_window(node) -> bool:
     return isinstance(node, ast.Name) and node.id == "Window"
 
 
-def _is_global_order_by(node, stack) -> bool:
-    """`Window.orderBy(...)`, `Window.partitionBy().orderBy(...)`, or
-    `Window.partitionBy(*by).orderBy(...)` where every starred name is a
-    parameter of an enclosing def that defaults to None or empty — the
-    call's own default is a partition-less window."""
+def _is_partitionless(node, stack) -> bool:
+    """`Window.partitionBy()`, or `Window.partitionBy(*by)` where every
+    starred name is a parameter of an enclosing def that defaults to None
+    or empty — the call's own default is a partition-less window."""
     if not (isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "orderBy"):
-        return False
-    target = node.func.value
-    if _is_window(target):
-        return True
-    if not (isinstance(target, ast.Call)
-            and isinstance(target.func, ast.Attribute)
-            and target.func.attr == "partitionBy"
-            and _is_window(target.func.value)
-            and not target.keywords):
+            and node.func.attr == "partitionBy"
+            and _is_window(node.func.value)
+            and not node.keywords):
         return False
     empty = set().union(*(_empty_default_params(f) for f in stack))
     return all(
         isinstance(a, ast.Starred)
         and isinstance(a.value, ast.Name)
         and a.value.id in empty
-        for a in target.args
+        for a in node.args
     )
+
+
+def _is_global_window(node, stack) -> bool:
+    """A window spec with no partition: `Window.orderBy(...)`,
+    `Window.rowsBetween(...)`, `Window.rangeBetween(...)`, or a
+    partition-less `Window.partitionBy(...)` (ordered or bare)."""
+    if (isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("orderBy", "rowsBetween", "rangeBetween")
+            and _is_window(node.func.value)):
+        return True
+    return _is_partitionless(node, stack)
 
 
 def _global_window_sites():
     """(file, enclosing top-level def, lineno) for every partition-less
-    window ordering in the operators package."""
+    window in the operators package."""
     sites = []
     for path in sorted(OPS_DIR.glob("*.py")):
 
         def visit(node, stack):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 stack = stack + [node]
-            if _is_global_order_by(node, stack):
+            if _is_global_window(node, stack):
                 func = stack[0].name if stack else None
                 sites.append((path.name, func, node.lineno))
             for child in ast.iter_child_nodes(node):
@@ -255,7 +266,7 @@ def test_no_ungated_global_windows_in_registry():
     sites = _global_window_sites()
     unknown = [(f, fn, ln) for f, fn, ln in sites if (f, fn) not in allowed]
     assert not unknown, (
-        "ungated global Window.orderBy outside the allowlist — gate it on "
+        "ungated global window outside the allowlist — gate it on "
         f"GLOBAL_WINDOW_GATE or justify it in MODEL_SIZED_ALLOWLIST: {unknown}"
     )
 

@@ -11,12 +11,9 @@ These are proved here over generated inputs, not just the shipped corpus.
 from __future__ import annotations
 
 import math
-import sys
 from decimal import Decimal
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 # -- claim 1: the fixed-point kernel (pure-python twin of _helpers) ---------
 

@@ -24,12 +24,9 @@ kernel.  The claims:
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 vals = st.integers(min_value=0, max_value=30)  # heavy ties on purpose
 

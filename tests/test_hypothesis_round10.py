@@ -14,12 +14,9 @@ from __future__ import annotations
 
 import itertools
 import math
-import sys
 from fractions import Fraction
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 
 # ---------------------------------------------------------------------------

@@ -12,12 +12,9 @@ running-peak formula, xyz_classify's rational-threshold boundaries.
 from __future__ import annotations
 
 import math
-import sys
 from fractions import Fraction
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 
 # ---------------------------------------------------------------------------

@@ -11,12 +11,9 @@ Wilson interval's containment properties.
 from __future__ import annotations
 
 import math
-import sys
 from fractions import Fraction
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 
 # ---------------------------------------------------------------------------

@@ -13,12 +13,9 @@ calc_check's delta algebra.
 from __future__ import annotations
 
 import math
-import sys
 from collections import deque
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 
 # ---------------------------------------------------------------------------

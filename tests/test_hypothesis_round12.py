@@ -18,8 +18,6 @@ import sys
 
 from hypothesis import example, given, settings, strategies as st
 
-sys.path.insert(0, "/root/repo")
-
 
 # ---------------------------------------------------------------------------
 # text_chunk_sliding: geometry + exact reconstruction

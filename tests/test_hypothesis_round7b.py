@@ -22,12 +22,9 @@ methodology of test_hypothesis_rank_kernels.py.  Claims:
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter, defaultdict
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 vals = st.integers(min_value=0, max_value=25)  # heavy ties on purpose
 

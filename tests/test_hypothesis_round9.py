@@ -7,11 +7,8 @@ test_hypothesis_round7b.py."""
 from __future__ import annotations
 
 import math
-import sys
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 
 def _lf(m: int) -> float:

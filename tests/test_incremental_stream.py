@@ -5,13 +5,10 @@ availableNow run cannot exercise (SURVEY §2.I D-class honesty).
 
 from __future__ import annotations
 
-import sys
 import uuid
 
 import pandas as pd
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 @pytest.fixture()

@@ -4,18 +4,15 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import defaultdict
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.ivm_extras import FP_SPACE, IVM_CUTOFF, TOPK_TIES  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.ivm_extras import FP_SPACE, IVM_CUTOFF, TOPK_TIES
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -6,19 +6,16 @@ from __future__ import annotations
 import contextlib
 import io
 import re
-import sys
 import uuid
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from secdb_spark import layout  # noqa: E402
-from secdb_spark.catalog import table  # noqa: E402
+from secdb_spark import layout
+from secdb_spark.catalog import table
 
 
 def _plan(df) -> str:

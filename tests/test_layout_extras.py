@@ -3,24 +3,21 @@
 
 from __future__ import annotations
 
-import sys
 from collections import Counter, defaultdict
 from datetime import date
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.layout_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.layout_extras import (
     CHAR_TOPK,
     Z_BITS,
     Z_BLOCK,
     Z_DATE_DIV,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

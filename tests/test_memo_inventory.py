@@ -1,0 +1,136 @@
+"""Every process-level memo under secdb_spark/ is listed here, with what it
+is keyed on and what invalidates it.  A memo holds state across calls, so
+any harness that warms up and then times a call measures the memo's hit,
+not the op's work; the list keeps that state visible.  The AST scan
+fails on an unlisted memo — a module-level empty container that a
+function stores into, or an `lru_cache` / `functools.cache` — and on a
+listed entry that no longer exists."""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+PKG = Path(__file__).resolve().parents[1] / "secdb_spark"
+
+#: (path under secdb_spark/, name) -> (key, invalidation rule)
+MEMOS = {
+    ("operators/llm_pipeline.py", "_VOCAB_CACHE"): (
+        "(sf_dir, MASK_MAX_VOCAB)",
+        "never within the process: a corpus rewritten at the same sf_dir "
+        "keeps the old dictionary",
+    ),
+    ("operators/sources_sinks.py", "_XBRL_FACTS_CACHE"): (
+        "Spark applicationId",
+        "a new Spark application re-parses; the parsed filings are the "
+        "repo fixtures, immutable within a run",
+    ),
+    ("operators/warehouse_extras37.py", "_COSUPPLY_MEMO"): (
+        "(applicationId, abspath(sf_dir), lineitem.parquet mtime and size, "
+        "SECDB_SPARK_NO_PIN)",
+        "a rewritten lineitem file changes the key; at most "
+        "_COSUPPLY_MEMO_MAX entries, the oldest evicted and unpersisted",
+    ),
+    ("operators/curation_extras.py", "_PQ_SEED_CACHE"): (
+        "(applicationId, sf_dir)",
+        "a new Spark application; a corpus rewritten at the same sf_dir "
+        "inside one application keeps the old seeds",
+    ),
+    ("catalog.py", "table_rows"): (
+        "(sf_dir, table name) via lru_cache",
+        "never within the process: a footer read, so a stale count can "
+        "change only which exact kernel a gate picks",
+    ),
+    ("catalog.py", "table_split_units"): (
+        "(sf_dir, table name) via lru_cache",
+        "never within the process: a footer read feeding the scan-spread "
+        "gates, which change speed only",
+    ),
+    ("catalog.py", "events_ts_unit"): (
+        "sf_dir via lru_cache",
+        "never within the process: events.ts's footer unit at first read",
+    ),
+}
+
+#: module-level containers filled at import time by `@register`: the op
+#: tables themselves, not memos of computed results
+REGISTRIES = {
+    ("registry.py", "_QUERIES"),
+    ("registry.py", "_ORACLES"),
+}
+
+_EMPTY_CALLS = {"dict", "list", "set", "OrderedDict", "defaultdict"}
+_MUTATORS = {"append", "add", "update", "setdefault", "extend", "insert"}
+_CACHE_DECORATORS = {"lru_cache", "cache"}
+
+
+def _is_empty_container(node) -> bool:
+    if isinstance(node, (ast.Dict, ast.List, ast.Set)):
+        return not getattr(node, "keys", None) and not getattr(node, "elts", None)
+    if isinstance(node, ast.Call) and not node.keywords:
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        return name in _EMPTY_CALLS and (
+            not node.args or name == "defaultdict"
+        )
+    return False
+
+
+def _module_containers(tree) -> set[str]:
+    names = set()
+    for stmt in tree.body:
+        if isinstance(stmt, ast.Assign) and _is_empty_container(stmt.value):
+            names |= {t.id for t in stmt.targets if isinstance(t, ast.Name)}
+        elif (isinstance(stmt, ast.AnnAssign) and stmt.value is not None
+              and isinstance(stmt.target, ast.Name)
+              and _is_empty_container(stmt.value)):
+            names.add(stmt.target.id)
+    return names
+
+
+def _stored_into(func) -> set[str]:
+    """Names a function stores into by subscript or a mutating method."""
+    names = set()
+    for node in ast.walk(func):
+        if (isinstance(node, ast.Subscript) and isinstance(node.ctx, ast.Store)
+                and isinstance(node.value, ast.Name)):
+            names.add(node.value.id)
+        elif (isinstance(node, ast.Call)
+              and isinstance(node.func, ast.Attribute)
+              and node.func.attr in _MUTATORS
+              and isinstance(node.func.value, ast.Name)):
+            names.add(node.func.value.id)
+    return names
+
+
+def _is_cache_decorator(dec) -> bool:
+    target = dec.func if isinstance(dec, ast.Call) else dec
+    name = target.id if isinstance(target, ast.Name) else getattr(target, "attr", None)
+    return name in _CACHE_DECORATORS
+
+
+def _scan() -> set[tuple[str, str]]:
+    found = set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        tree = ast.parse(path.read_text())
+        containers = _module_containers(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                found |= {(rel, n) for n in _stored_into(node) & containers}
+                if any(_is_cache_decorator(d) for d in node.decorator_list):
+                    found.add((rel, node.name))
+    return found
+
+
+def test_every_memo_is_listed():
+    unlisted = sorted(_scan() - set(MEMOS) - REGISTRIES)
+    assert not unlisted, (
+        "process-level memos missing from MEMOS (give each its key and "
+        f"invalidation rule, or stage per call instead): {unlisted}"
+    )
+
+
+def test_no_listed_memo_is_stale():
+    stale = sorted((set(MEMOS) | REGISTRIES) - _scan())
+    assert not stale, f"listed memos that no longer exist: {stale}"

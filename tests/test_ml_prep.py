@@ -6,18 +6,15 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import Counter, defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.ml_prep import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.ml_prep import (
     BAL_BAND,
     K_ANON,
     KHOP_TOPK,
@@ -27,7 +24,7 @@ from secdb_spark.operators.ml_prep import (  # noqa: E402
     XCORR_A,
     XCORR_B,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -22,12 +22,9 @@ dispersion_index, supply_concentration, assortativity, mannwhitney_u
 
 from __future__ import annotations
 
-import sys
 from fractions import Fraction
 
 from hypothesis import given, settings, strategies as st
-
-sys.path.insert(0, "/root/repo")
 
 # just past the LONG wrap point for a squared quantized value
 BOUND = 3_100_000_000  # quantized; raw |v| = 3.1e7 at scale=2

@@ -16,14 +16,9 @@ silently.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
-from plan_audit import ALLOWED_MULTISCAN, audit_one  # noqa: E402
+from tools.plan_audit import ALLOWED_MULTISCAN, audit_one
 
 SF_DIR = "/root/testdata/sf0.001"
 

@@ -10,15 +10,12 @@ import contextlib
 import io
 import os
 import re
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 
@@ -183,10 +180,10 @@ def test_rollup_reaggregates_partials_not_raw(spark):
     assert "Generate explode" in final, final
 
 
-def test_partitioned_sink_prunes_directories(spark):
+def test_partitioned_sink_prunes_directories(spark, tmp_path):
     """A year-filtered read over snk_partitioned's layout must carry the
     predicate as a PartitionFilter (directory pruning), not a data filter."""
-    import tempfile, uuid, os
+    import os
 
     from secdb_spark.catalog import table
     import pyspark.sql.functions as F
@@ -194,7 +191,7 @@ def test_partitioned_sink_prunes_directories(spark):
     o = table(spark, SF_DIR, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
-    out = tempfile.mkdtemp(prefix=f"secdb_prune_{uuid.uuid4().hex[:8]}_")
+    out = str(tmp_path)
     o.repartition("o_year").write.mode("overwrite").partitionBy("o_year").parquet(out)
     back = spark.read.parquet(out).filter(F.col("o_year") == 1995)
     buf = io.StringIO()

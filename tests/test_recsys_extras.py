@@ -3,24 +3,21 @@
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter, defaultdict
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.recsys_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.recsys_extras import (
     CF_MIN_CO,
     CF_SEEDS,
     CF_TOPK,
     LSH_EVAL_DEN,
     LSH_EVAL_NUM,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

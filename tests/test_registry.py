@@ -9,14 +9,11 @@ CORRECTNESS row.  These tests pin the contract.
 from __future__ import annotations
 
 import json
-import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+from secdb_spark import registry
 
-from secdb_spark import registry  # noqa: E402
-
-ROOT = Path("/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _driver_recorded_green() -> set[str]:

@@ -7,11 +7,7 @@ threshold compare).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark import api  # noqa: E402
+from secdb_spark import api
 
 
 def test_drawdown_negative_series_guarded(spark):

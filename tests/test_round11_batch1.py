@@ -7,13 +7,9 @@ tools/selfcheck.py; these tests pin the properties a hash can't express.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 SF = "/root/testdata/sf0.001"
 

@@ -8,13 +8,10 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 SF = "/root/testdata/sf0.001"
 

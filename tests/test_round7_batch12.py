@@ -5,26 +5,23 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import Counter
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.eval_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.eval_extras import (
     IVF_EVAL_K,
     IVF_EVAL_MOD,
 )
-from secdb_spark.operators.llm_pipeline import (  # noqa: E402
+from secdb_spark.operators.llm_pipeline import (
     IVF_SEED_TAG,
     N_CENTROIDS,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

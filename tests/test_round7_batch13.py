@@ -3,20 +3,17 @@
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter
 from itertools import combinations
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras12 import BRC_ANCHOR  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras12 import BRC_ANCHOR
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -4,23 +4,20 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras13 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras13 import (
     ATTR_WINDOW_DAYS,
     CAP_SALT,
     MAX_LAG,
     SOURCE_CAP,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

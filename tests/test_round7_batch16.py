@@ -3,24 +3,21 @@
 from __future__ import annotations
 
 import hashlib
-import sys
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras14 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras14 import (
     FAST_A,
     FAST_K,
     SESSION_GAP_US,
     SLOW_A,
     SLOW_K,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

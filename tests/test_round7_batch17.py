@@ -4,19 +4,16 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import Counter
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras15 import RIP_PS  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras15 import RIP_PS
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -4,20 +4,17 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import Counter
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras18 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras18 import (
     DUP_PREFIX_WORDS,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

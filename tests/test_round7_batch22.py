@@ -3,22 +3,19 @@
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.text_analysis import SEQ_LEN  # noqa: E402
-from secdb_spark.operators.warehouse_extras20 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.text_analysis import SEQ_LEN
+from secdb_spark.operators.warehouse_extras20 import (
     HURST_WINDOWS,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -3,22 +3,19 @@
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.corpus_extras2 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.corpus_extras2 import (
     STOP_K_BIG,
     STOP_K_SMALL,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -3,22 +3,19 @@
 from __future__ import annotations
 
 import hashlib
-import sys
 from collections import Counter, defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras18 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras18 import (
     DUP_PREFIX_WORDS,
 )
-from secdb_spark.operators.warehouse_extras24 import QLEVELS  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.operators.warehouse_extras24 import QLEVELS
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -3,18 +3,15 @@
 from __future__ import annotations
 
 import hashlib
-import sys
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.stats_extras3 import SRM_CHI2_CRIT  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.stats_extras3 import SRM_CHI2_CRIT
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -3,23 +3,20 @@
 from __future__ import annotations
 
 import hashlib
-import sys
 from collections import defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.geo_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.geo_extras import (
     CELL_MD,
     LAT_RANGE,
     LON_RANGE,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

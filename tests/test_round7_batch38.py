@@ -2,18 +2,14 @@
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

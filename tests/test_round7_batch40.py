@@ -3,21 +3,18 @@
 from __future__ import annotations
 
 import hashlib
-import sys
 from collections import Counter, defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.text_analysis import LANGID_MARKERS  # noqa: E402
-from secdb_spark.operators.warehouse_extras28 import SWEEP_SEEDS  # noqa: E402
-from secdb_spark.operators.warehouse_extras34 import ECDF_PROBES  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.text_analysis import LANGID_MARKERS
+from secdb_spark.operators.warehouse_extras28 import SWEEP_SEEDS
+from secdb_spark.operators.warehouse_extras34 import ECDF_PROBES
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

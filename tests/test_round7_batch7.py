@@ -5,18 +5,15 @@ from __future__ import annotations
 
 import math
 import re
-import sys
 from collections import Counter
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.stats_extras2 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.stats_extras2 import (
     KS_A,
     KS_B,
     MW_A,
@@ -24,11 +21,11 @@ from secdb_spark.operators.stats_extras2 import (  # noqa: E402
     WT_A,
     WT_B,
 )
-from secdb_spark.operators.warehouse_extras9 import (  # noqa: E402
+from secdb_spark.operators.warehouse_extras9 import (
     RANK_SPLIT,
     STOCH_DAYS,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 
@@ -332,7 +329,6 @@ def test_corpus_word_len_dist_vs_bruteforce(q, spark):
 
 
 # --- plan pins (SCALE.md §28) ----------------------------------------------
-
 
 import contextlib
 import io

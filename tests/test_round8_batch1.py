@@ -3,18 +3,15 @@
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter, defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.curation_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.curation_extras import (
     QG_MAX_TOKS,
     QG_MIN_TOKS,
     QG_TTR_DEN,
@@ -22,13 +19,13 @@ from secdb_spark.operators.curation_extras import (  # noqa: E402
     QG_WLEN_HI,
     QG_WLEN_LO,
 )
-from secdb_spark.operators.curation_extras2 import (  # noqa: E402
+from secdb_spark.operators.curation_extras2 import (
     ANNEAL_P2_PERMILLE,
     DEDUP_CURVE_ORDERS,
     LN_SCALE,
     VOCAB_TOPK,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

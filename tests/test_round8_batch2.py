@@ -5,18 +5,15 @@ from __future__ import annotations
 
 import json
 import math
-import sys
 from collections import defaultdict
 from datetime import date
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras35 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras35 import (
     ATR_ALPHA,
     ATR_K,
     BETA_ANCHOR,
@@ -27,7 +24,7 @@ from secdb_spark.operators.warehouse_extras35 import (  # noqa: E402
     MACD_SLOW_ALPHA,
     WMA_WEIGHTS,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -11,14 +11,11 @@ instead of in the driver's CORRECTNESS file a round later.
 from __future__ import annotations
 
 import glob
-import sys
 
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from secdb_spark.catalog import SCHEMAS, TABLES, events_ts_unit  # noqa: E402
+from secdb_spark.catalog import SCHEMAS, TABLES, events_ts_unit
 
 SF_DIRS = sorted(glob.glob("/root/testdata/sf*"))
 

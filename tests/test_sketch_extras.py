@@ -6,17 +6,14 @@ negatives, KMV coordination, hashing-trick mass conservation)."""
 from __future__ import annotations
 
 import hashlib
-import sys
 from collections import Counter, defaultdict
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.sketch_extras import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.sketch_extras import (
     BLOOM_BITS,
     BLOOM_HASHES,
     BOTTOMK,
@@ -25,7 +22,7 @@ from secdb_spark.operators.sketch_extras import (  # noqa: E402
     HASH_DIM,
     KMV_SPACE,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

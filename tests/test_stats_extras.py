@@ -5,19 +5,16 @@ from __future__ import annotations
 
 import hashlib
 import math
-import sys
 from collections import defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.stats_extras import KM_LN_SCALE, VAL_SCALE, Z95  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.stats_extras import KM_LN_SCALE, VAL_SCALE, Z95
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -2,13 +2,9 @@
 
 from __future__ import annotations
 
-import sys
+from conftest import SF_DIR
 
-sys.path.insert(0, "/root/repo")
-
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 
@@ -126,10 +122,7 @@ def test_xbrl_context_resolution_multi_dimension(spark):
     """Generated filings carry 6 contexts incl. a two-dimensional one; every
     fact must resolve to ITS context's period + dimension map, with values
     matching the generator's ground-truth function."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/fixtures")
-    import gen_xbrl as g
+    from fixtures import gen_xbrl as g
 
     facts = QUERIES["src_xbrl_etl"](spark, SF_DIR).toPandas()
     acc = g.accession(3, 2, False)  # company 3, Q3, base filing
@@ -161,10 +154,7 @@ def test_xbrl_context_resolution_multi_dimension(spark):
 def test_xbrl_supersedence_latest_accession_wins(spark):
     """Every company amended Q2: the superseded facts view must contain the
     amendment's facts and NONE of the original Q2 filing's."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/fixtures")
-    import gen_xbrl as g
+    from fixtures import gen_xbrl as g
 
     facts = QUERIES["xbrl_supersede"](spark, SF_DIR).toPandas()
     for ci in (0, 7, 19):
@@ -187,10 +177,7 @@ def test_xbrl_supersedence_latest_accession_wins(spark):
 def test_xbrl_metrics_standardization(spark):
     """Per-filing standardized metrics: pivot correctness, derived margin,
     amendment supersedence, and no dimensional leakage."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/fixtures")
-    import gen_xbrl as g
+    from fixtures import gen_xbrl as g
 
     m = QUERIES["xbrl_metrics"](spark, SF_DIR).toPandas().set_index("accession")
     # 80 surviving generated filings (20 Q2 bases superseded); the 4

@@ -5,14 +5,11 @@ from __future__ import annotations
 
 import contextlib
 import io
-import sys
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.operators import warehouse_extras  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.operators import warehouse_extras
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -5,21 +5,18 @@ from __future__ import annotations
 import itertools
 import json
 import math
-import sys
 from collections import Counter, defaultdict
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras37 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras37 import (
     COSUPPLY_MIN_ORDERS,
     MIN_PAIR_SUPPORT,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -8,17 +8,14 @@ cannot go green silently.
 from __future__ import annotations
 
 import math
-import sys
 from collections import Counter
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -8,25 +8,22 @@ cannot go green silently.
 from __future__ import annotations
 
 import math
-import sys
 from collections import defaultdict
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras5 import (  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras5 import (
     BOLL_DAYS,
     BOLL_K,
     CHURN_DAYS,
     DUP_BUCKET,
     DUP_DAYS,
 )
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

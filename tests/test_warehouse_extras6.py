@@ -4,19 +4,16 @@
 from __future__ import annotations
 
 import math
-import sys
 import zlib
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.catalog import table  # noqa: E402
-from secdb_spark.operators.warehouse_extras6 import NORM_SCALE  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.catalog import table
+from secdb_spark.operators.warehouse_extras6 import NORM_SCALE
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -6,16 +6,12 @@ silently weaken what is being certified."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from conftest import SF_DIR
 
-from conftest import SF_DIR  # noqa: E402
-
-from secdb_spark.operators.xbrl_analytics import _GEN, GEN_CIKS  # noqa: E402
-from secdb_spark.registry import all_queries  # noqa: E402
+from secdb_spark.operators.xbrl_analytics import _GEN, GEN_CIKS
+from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
 

@@ -27,10 +27,11 @@ import argparse
 import shutil
 import sys
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.plan_audit import audit_df  # noqa: E402
 

@@ -15,8 +15,10 @@ import os
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 # Per-query baseline seconds from BASELINE.md's noop-methodology tables
 BASELINE_Q = {
@@ -71,7 +73,7 @@ def main() -> int:
             capture_output=True,
             text=True,
             env=env,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         lines = [
             l for l in out.stdout.splitlines() if l.startswith('{"metric"')
@@ -119,7 +121,7 @@ def main() -> int:
         "host": cpu_stamp(cpus),
         "date": time.strftime("%Y-%m-%d"),
     }
-    path = f"/root/repo/BENCH_IDLE_r{rnd}.json"
+    path = ROOT / f"BENCH_IDLE_r{rnd}.json"
     with open(path, "w") as fh:
         json.dump(doc, fh, indent=1)
     print(f"wrote {path}: best {best['value']} s, geomean {geo}x baseline")

@@ -1,13 +1,15 @@
 """Generate COVERAGE.md — the SURVEY §2 op-id -> implementation matrix.
 
-Run: python tools/coverage_report.py  (writes /root/repo/COVERAGE.md)
+Run: python tools/coverage_report.py  (writes COVERAGE.md at the repo root)
 """
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 SURVEY_SECTIONS = {
     "§2.A sources/sinks": "src_parquet src_csv src_json src_text snk_parquet snk_csv snk_sqlite src_stream_file src_xbrl_etl",
@@ -120,7 +122,7 @@ def main() -> None:
         lines.append(f"Unlisted registered ops (add to a section!): {unlisted}")
     if missing:
         lines.append(f"MISSING ops: {missing}")
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(ROOT / "COVERAGE.md", "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote COVERAGE.md: {len(queries)} ops, missing={missing}, unlisted={unlisted}")
 

@@ -12,8 +12,9 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float]:

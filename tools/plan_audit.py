@@ -28,8 +28,9 @@ import argparse
 import re
 import sys
 from collections import Counter
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 # Ops allowed to scan one table >= FLAG_AT times, each with the reason the
 # multi-pass is the DESIGN rather than a Catalyst recompute accident.

@@ -17,8 +17,9 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from secdb_spark.verify import (  # noqa: E402
     canon_cell,  # noqa: F401  (re-exported: tests import from here)
