@@ -185,6 +185,28 @@ def table_split_units(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(p).metadata.num_row_groups
 
 
+def spread_scan(
+    df: DataFrame, sf_dir: str, name: str, key: str, max_rows: int
+) -> DataFrame:
+    """Scan-spread gate (guide §2.5 'input skew'): `df`, read from table
+    `name`, hash-repartitioned on `key` into one partition per core when
+    the table has fewer row groups than the session has cores and at
+    most `max_rows` rows; otherwise `df` unchanged.  A single-row-group
+    file runs the whole scan stage, and whatever compute is fused into
+    it, as ONE task; the explicit partition count matters because AQE
+    coalesces a key-only sub-MB shuffle back to one partition.  Hash on
+    a key, not round-robin: a keyless repartition pays a sort first.  At
+    warehouse scale the table has many row groups and no shuffle is
+    added."""
+    ncores = df.sparkSession.sparkContext.defaultParallelism
+    if (
+        table_split_units(sf_dir, name) < ncores
+        and table_rows(sf_dir, name) <= max_rows
+    ):
+        return df.repartition(ncores, key)
+    return df
+
+
 @lru_cache(maxsize=None)
 def events_ts_unit(sf_dir: str) -> str:
     """Time unit of events.ts as written in the parquet footer: 'ns', 'us'

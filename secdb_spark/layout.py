@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from .session import scratch_dir
+
 TARGET_FILE_BYTES = 256 * 1024 * 1024  # 256 MB — SCALE.md prescription
 
 
@@ -52,40 +54,19 @@ def write_bucketed(
     joins/aggs on that key need no shuffle at READ time. This is the 100 TB
     answer to the orders⋈lineitem shuffle (SCALE.md §2).
 
-    Orphan-location guard: a managed-table DIRECTORY can survive from a
-    previous session while the fresh session's in-memory metastore has no
-    such table (the verify driver's vanilla session over a reused working
-    dir reproduces this) — saveAsTable then throws LOCATION_ALREADY_EXISTS
-    even in overwrite mode, because overwrite only covers tables the
-    catalog knows about.  Drop the table if registered, then remove any
-    orphaned local directory before writing.
-
-    The orphan path must follow the metastore's own layout rules, not a
-    guess: the default database stores managed tables at <wh>/<table>,
-    every other database at <wh>/<db>.db/<table>, and the warehouse conf
-    is a URI whose path may be percent-encoded — resolving all three
-    keeps the rmtree aimed at the directory saveAsTable would actually
-    claim (a mis-resolved guard both misses the real orphan and, in a
-    name collision, could delete a default-db directory it doesn't own)."""
-    import os
-    import shutil
-    from urllib.parse import unquote, urlparse
-
+    The table is EXTERNAL, its files in a fresh `session.scratch_dir`:
+    they leave with the process instead of collecting in a driver-owned
+    session's warehouse (the default `spark-warehouse/` under the
+    working directory), and a managed-table directory left there by an
+    earlier session cannot collide with the write."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS `{table_name}`")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", ""))
-    if wh.scheme in ("", "file") and wh.path:
-        db = spark.catalog.currentDatabase()
-        base = unquote(wh.path)
-        if db != "default":
-            base = os.path.join(base, f"{db.lower()}.db")
-        shutil.rmtree(
-            os.path.join(base, table_name.lower()), ignore_errors=True
-        )
     w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
     if sort_col:
         w = w.sortBy(sort_col)
-    w.format("parquet").saveAsTable(table_name)
+    w.format("parquet").option("path", scratch_dir("bucketed")).saveAsTable(
+        table_name
+    )
 
 
 def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows, table_split_units
+from ..catalog import spread_scan, table, table_rows
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_bucketed_topk
 from ._helpers import pin, r4
@@ -364,22 +364,13 @@ PQ_SUB_D = 16   # dims per subspace (4 x 16 = the 64-dim corpus)
 PQ_K = 8        # sub-centroids per subspace
 _PQ_SEED_SQL = "md5('pqseed:' || CAST(vec_id AS VARCHAR))"
 
-#: (spark app id, sf_dir) -> collected PQ seed rows; the md5-ordered
-#: full-table sort+limit is a real Spark job, and embed_pq_codes /
-#: ann_pq_adc_topk need the IDENTICAL seed set — one collect, not two.
-_PQ_SEED_CACHE: dict = {}
 
-
-def _pq_seeds(spark, sf_dir, emb):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_SEED_CACHE:
-        seed_h = F.md5(
-            F.concat(F.lit("pqseed:"), F.col("vec_id").cast("string"))
-        )
-        _PQ_SEED_CACHE[key] = (
-            emb.orderBy(seed_h, "vec_id").limit(PQ_K).select("e").collect()
-        )
-    return _PQ_SEED_CACHE[key]
+def _pq_seeds(emb: DataFrame) -> list:
+    """The PQ_K md5-ordered seed rows (one sort+limit job): the
+    codebook embed_pq_codes encodes against and ann_pq_adc_topk's
+    distance tables read, collected once per call and passed to both."""
+    seed_h = F.md5(F.concat(F.lit("pqseed:"), F.col("vec_id").cast("string")))
+    return emb.orderBy(seed_h, "vec_id").limit(PQ_K).select("e").collect()
 
 
 def _pq_best_cte(m: int) -> str:
@@ -432,10 +423,18 @@ def embed_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: {PQ_K} seed rows broadcast; encoding is a map-side
     {PQ_M}x{PQ_K}-way fold inside WholeStageCodegen; the only shuffle is
     the final argmin groupBy on vec_id."""
-    emb = table(spark, sf_dir, "embeddings").select(
+    return _pq_codes(spark, sf_dir, _pq_seeds(_pq_embeddings(spark, sf_dir)))
+
+
+def _pq_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    seeds = _pq_seeds(spark, sf_dir, emb)
+
+
+def _pq_codes(spark: SparkSession, sf_dir: str, seeds: list) -> DataFrame:
+    """embed_pq_codes' body over already-collected seed rows."""
+    emb = _pq_embeddings(spark, sf_dir)
     seeds_df = spark.createDataFrame(
         [(i, list(r.e)) for i, r in enumerate(seeds)],
         "c_idx int, c array<double>",
@@ -907,21 +906,13 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair-keyed aggregate) with the textbook table-scan form; candidates
     carry {PQ_M} smallints instead of the raw vector — the 16-32x memory
     compression that lets the corpus live in RAM."""
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    # Scan-spread gate (guide §2.5): the benched embeddings table is one
-    # parquet row group, which would run the whole distance-table build
-    # AND the nested-loop pair evaluation in ONE task; at warehouse scale
-    # (many row groups) the gate never fires and no shuffle is added.
-    ncores = spark.sparkContext.defaultParallelism
-    if (
-        table_split_units(sf_dir, "embeddings") < ncores
-        and table_rows(sf_dir, "embeddings") <= 1_000_000
-    ):
-        emb = emb.repartition(ncores, "vec_id")
-    codes = embed_pq_codes(spark, sf_dir)
-    seeds = _pq_seeds(spark, sf_dir, emb)
+    emb = _pq_embeddings(spark, sf_dir)
+    seeds = _pq_seeds(emb)
+    codes = _pq_codes(spark, sf_dir, seeds)
+    # Scan-spread gate: the benched embeddings table is one parquet row
+    # group, which would run the whole distance-table build AND the
+    # nested-loop pair evaluation in ONE task.
+    emb = spread_scan(emb, sf_dir, "embeddings", "vec_id", 1_000_000)
 
     # Per-subspace distance table dt{m}[j+1] = d²(e[m-slice], seed_j[m-
     # slice]): the IDENTICAL strict fold the (m, j)-join form evaluated

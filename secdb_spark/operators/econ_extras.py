@@ -196,8 +196,6 @@ def price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # chi2_independence — contingency-table independence test
 # ---------------------------------------------------------------------------
 
-CHI2_CRIT_E4 = {16: 263_000}  # df=16 -> 26.30 at alpha=0.05, 1e4 fixed point
-
 
 @register(
     "chi2_independence",

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows, table_split_units
+from ..catalog import spread_scan
 from ..registry import register
 from ._helpers import pin, r4
 from .llm_pipeline import _IVF_SEED_SQL, N_CENTROIDS, _emb, ann_ivf_assign
@@ -142,12 +142,7 @@ def ivf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |Q|xN fold stream ran as ONE task regardless of core count; the
     # footer-gated hash repartition fans it out.  Never fires at
     # warehouse scale.
-    ncores = spark.sparkContext.defaultParallelism
-    if (
-        table_split_units(sf_dir, "embeddings") < ncores
-        and table_rows(sf_dir, "embeddings") <= 200_000
-    ):
-        emb_n = emb_n.repartition(ncores, "vec_id")
+    emb_n = spread_scan(emb_n, sf_dir, "embeddings", "vec_id", 200_000)
     sim = dot / (F.col("qnorm") * F.col("cnorm"))
     cp = (
         emb_n.crossJoin(F.broadcast(q_n))

@@ -20,6 +20,7 @@ Scale design notes:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 from functools import reduce
 
@@ -27,8 +28,9 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows, table_split_units
+from ..catalog import spread_scan, table, table_rows
 from ..registry import register
+from ..session import memo
 from ._helpers import pin
 
 N_MINHASH = 16
@@ -115,24 +117,11 @@ def sim_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spread_docs(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame:
-    """Scan-spread gate (r13, guide §2.5 'input skew'): a single-row-group
-    parquet file caps the map stage at ONE task no matter the core count
-    (parquet assigns a row group to exactly one task), so compute-heavy
-    per-token pipelines (tokenize + hash + aggregate) run single-threaded
-    at the benched scale.  When scan parallelism is row-group-bound AND
-    the corpus is gate-small, one cheap hash repartition on doc_id
-    (shuffles just the raw text once) spreads the work; the explicit
-    partition count matters because AQE coalesces a key-only sub-MB
-    shuffle back to one partition, undoing the spread.  At warehouse
-    scale the corpus has many row groups / files and no shuffle is
-    added."""
-    ncores = spark.sparkContext.defaultParallelism
-    if (
-        table_split_units(sf_dir, "documents") < ncores
-        and table_rows(sf_dir, "documents") <= MASK_BROADCAST_DOCS
-    ):
-        return d.repartition(ncores, "doc_id")
-    return d
+    """`d` (documents or a subset) through the documents scan-spread
+    gate: compute-heavy per-token pipelines (tokenize + hash + aggregate)
+    otherwise run single-threaded on the benched single-row-group
+    corpus."""
+    return spread_scan(d, sf_dir, "documents", "doc_id", MASK_BROADCAST_DOCS)
 
 
 def _jaccard_pairs(
@@ -469,10 +458,6 @@ VOCAB_PROBE_DOCS = 256
 # the masks arrive by shuffle join keyed on doc id.
 MASK_BROADCAST_DOCS = 2_000_000
 
-# sf_dir -> (gate, sorted dictionary | None); see _mask_vocab.
-_VOCAB_CACHE: dict[tuple[str, int], list[str] | None] = {}
-
-
 def _mask_vocab(spark: SparkSession, sf_dir: str) -> list[str] | None:
     """The corpus's FULL sorted dictionary if it fits MASK_MAX_VOCAB
     tokens, else None (open vocab).  Replaces round 2's unconditional
@@ -489,23 +474,23 @@ def _mask_vocab(spark: SparkSession, sf_dir: str) -> list[str] | None:
        the shuffle; the collect is bounded at cap+1 rows).
 
     The mask kernel is only ever chosen with the complete dictionary in
-    hand, so dispatch stays exactness-preserving.  Cached per (sf_dir,
-    gate): kernel choice is a table property, not per-plan work — repeat
-    invocations (bench iterations, registry enumeration) pay nothing.
-    The gate is part of the key so tests monkeypatching MASK_MAX_VOCAB
+    hand, so dispatch stays exactness-preserving.  The dictionary is held
+    in `session.memo`, keyed on (sf_dir, MASK_MAX_VOCAB) and read from
+    documents.parquet: a repeat call in one Spark application skips both
+    probes, and a corpus rewritten at the same path is probed again.  The
+    gate is part of the key so tests monkeypatching MASK_MAX_VOCAB
     observe their forced kernel."""
-    key = (sf_dir, MASK_MAX_VOCAB)
-    if key in _VOCAB_CACHE:
-        return _VOCAB_CACHE[key]
-    d = table(spark, sf_dir, "documents")
-    sampled = (
-        d.select("text").limit(VOCAB_PROBE_DOCS)
-        .select(F.explode(_tokens()).alias("tok"))
-        .distinct()
-        .count()
-    )
-    vocab: list[str] | None = None
-    if 0 < sampled <= MASK_MAX_VOCAB:
+
+    def build() -> list[str] | None:
+        d = table(spark, sf_dir, "documents")
+        sampled = (
+            d.select("text").limit(VOCAB_PROBE_DOCS)
+            .select(F.explode(_tokens()).alias("tok"))
+            .distinct()
+            .count()
+        )
+        if not 0 < sampled <= MASK_MAX_VOCAB:
+            return None
         rows = (
             d.select(F.explode(_tokens()).alias("tok"))
             .distinct()
@@ -513,9 +498,11 @@ def _mask_vocab(spark: SparkSession, sf_dir: str) -> list[str] | None:
             .collect()
         )
         if 0 < len(rows) <= MASK_MAX_VOCAB:
-            vocab = sorted(r.tok for r in rows)
-    _VOCAB_CACHE[key] = vocab
-    return vocab
+            return sorted(r.tok for r in rows)
+        return None
+
+    key = ("vocab", os.path.abspath(sf_dir), MASK_MAX_VOCAB)
+    return memo(spark, key, [os.path.join(sf_dir, "documents.parquet")], build)
 
 
 def _vocab_mask_words(vocab: list[str], tokens_col) -> list:

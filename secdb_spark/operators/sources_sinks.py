@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from ..catalog import SCHEMAS, table
 from ..registry import register
-from ..session import scratch_dir
+from ..session import memo, scratch_dir
 from ._helpers import dsum, pin, sql_dsum
 
 FIXTURES_DIR = os.path.join(os.path.dirname(__file__), "..", "..", "fixtures")
@@ -435,15 +435,6 @@ def _parse_filing(path: str) -> list[tuple]:
     return out
 
 
-#: parsed-facts memo per Spark application (key: applicationId):
-#: the seven consumers (src_xbrl_etl, xbrl_filings, xbrl_supersede,
-#: xbrl_metrics, build_secdb, and the xbrl_q_* analytics quartet) each
-#: used to re-run the full ElementTree parse of the 104 fixture
-#: instances — ~4× the XBRL family's verify wall (VERDICT r6 "What's
-#: wrong" #3).  The checkpointed frame is ~10k rows (model-sized).
-_XBRL_FACTS_CACHE: dict[str, DataFrame] = {}
-
-
 def _xbrl_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filing -> facts extraction (the reference's core ETL, SURVEY §3.1)
     as a manifest-driven distributed parse: manifest DF of filing paths ->
@@ -452,27 +443,22 @@ def _xbrl_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixtures/xbrl) + 100 generated multi-context/dimensioned/amended
     instances (fixtures/xbrl_gen, see fixtures/gen_xbrl.py).
 
-    The parse runs ONCE per Spark application: the result is
-    localCheckpoint'ed (eager) and memoized on applicationId, so every
-    downstream XBRL op reads the materialized fact partitions instead of
-    re-parsing the XML.  The fixture set is repo-local and immutable
-    within a run, so the memo cannot go stale.
+    The result is localCheckpoint'ed (eager, ~10k rows) and held in
+    `session.memo` with the filing paths as its inputs: the seven
+    consumers (src_xbrl_etl, xbrl_filings, xbrl_supersede, xbrl_metrics,
+    build_secdb and the xbrl_q_* analytics) read the materialized fact
+    partitions instead of each re-running the parse (VERDICT r6 "What's
+    wrong" #3), and a filing rewritten, added or removed parses again.
 
     The reference used RaptorXML (proprietary, absent); context
     resolution, dimensions and supersedence semantics follow the public
     XBRL 2.1 spec."""
     import glob
 
-    key = spark.sparkContext.applicationId
-    cached = _XBRL_FACTS_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     paths = sorted(
         glob.glob(os.path.join(os.path.abspath(FIXTURES_DIR), "xbrl", "*.xml"))
         + glob.glob(os.path.join(os.path.abspath(FIXTURES_DIR), "xbrl_gen", "*.xml"))
     )
-    manifest = spark.createDataFrame([(p,) for p in paths], "path string")
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -481,13 +467,15 @@ def _xbrl_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out.extend(_parse_filing(path))
             yield pd.DataFrame(out, columns=FACT_COLS)
 
-    facts = (
-        manifest.repartition(8)
-        .mapInPandas(parse, FACT_SCHEMA)
-        .localCheckpoint(eager=True)
-    )
-    _XBRL_FACTS_CACHE[key] = facts
-    return facts
+    def build() -> DataFrame:
+        manifest = spark.createDataFrame([(p,) for p in paths], "path string")
+        return (
+            manifest.repartition(8)
+            .mapInPandas(parse, FACT_SCHEMA)
+            .localCheckpoint(eager=True)
+        )
+
+    return memo(spark, ("xbrl_facts",), paths, build)
 
 
 #: Facts of the 4 hand-written fixtures (fixtures/xbrl/*.xml) as spec

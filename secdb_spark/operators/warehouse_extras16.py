@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows, table_split_units
+from ..catalog import spread_scan, table
 from ..registry import register
 from ..session import scratch_dir
 from ._global_order import bucketed_global_rank, ntile_from_rank
@@ -231,12 +231,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task regardless of core count; when scan parallelism is
     # row-group-bound and the table is gate-small, one cheap hash
     # repartition spreads the fold.  Never fires at warehouse scale.
-    ncores = spark.sparkContext.defaultParallelism
-    if (
-        table_split_units(sf_dir, "embeddings") < ncores
-        and table_rows(sf_dir, "embeddings") <= 200_000
-    ):
-        emb_n = emb_n.repartition(ncores, "vec_id")
+    emb_n = spread_scan(emb_n, sf_dir, "embeddings", "vec_id", 200_000)
     sim = dot / (F.col("qnorm") * F.col("cnorm"))
     cp = (
         emb_n.crossJoin(F.broadcast(q_n))

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows, table_split_units
+from ..catalog import spread_scan, table
 from ..registry import register
 from ..session import scratch_dir
 from ._helpers import pin, DEC, dsum, r4, sql_dsum
@@ -391,20 +391,11 @@ def data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     certify values; the 100-TB swap is approx_count_distinct (one pass,
     no Expand) — the HLL path is the agg_hll_sketch op."""
     o = table(spark, sf_dir, "orders")
-    # scan-spread gate (r14, guide §2.5): the multi-distinct plans as an
-    # Expand (rows x 7 branches) inside the SCAN stage, and orders is one
-    # parquet row group at the benched SFs — the whole Expand+partial-agg
-    # ran as ONE task.  When scan parallelism is row-group-bound and the
-    # table is gate-small, one hash repartition on the unique key spreads
-    # it (hash, not round-robin: keyless repartition pays the
-    # sort-before-repartition pass).  Never fires at warehouse scale.
-    # Aggregates are order-insensitive, so results are unchanged.
-    ncores = spark.sparkContext.defaultParallelism
-    if (
-        table_split_units(sf_dir, "orders") < ncores
-        and table_rows(sf_dir, "orders") <= 1_000_000
-    ):
-        o = o.repartition(ncores, "o_orderkey")
+    # scan-spread gate (r14): the multi-distinct plans as an Expand (rows
+    # x 7 branches) inside the SCAN stage, and orders is one parquet row
+    # group at the benched SFs — the whole Expand+partial-agg ran as ONE
+    # task.  Aggregates are order-insensitive, so results are unchanged.
+    o = spread_scan(o, sf_dir, "orders", "o_orderkey", 1_000_000)
     aggs = []
     for c in _PROFILE_COLS:
         aggs += [
@@ -1131,9 +1122,6 @@ def snk_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         dsum(F.col("o_totalprice")).alias("revenue"),
     )
-
-
-BENFORD_EXPECTED = {d: __import__("math").log10(1 + 1 / d) for d in range(1, 10)}
 
 
 @register(

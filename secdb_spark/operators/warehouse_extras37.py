@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table
 from ..registry import register
+from ..session import memo
 from ._helpers import he4, pin, sql_he4
 from .llm_pipeline import N_BANDS, N_MINHASH, _dn_sig_sql, _tokens
 from .sql_surface import _views
@@ -52,40 +53,19 @@ def cooccur_pairs(df: DataFrame, key: str, node: str, min_count: int) -> DataFra
     )
 
 
-#: (applicationId, abs sf_dir, dataset fingerprint, NO_PIN flag) ->
-#: pinned co-supply edge frame.  The three graph kernels over the
-#: co-supply graph (triangle count, BFS layers, connected components)
-#: plus the certified edge-list op all consume the SAME thresholded edge
-#: list; memoizing the pinned frame per session+dataset makes the
-#: expensive pair generation run ONCE when several of them execute in
-#: one session (the driver's certification sweep, the bench suite)
-#: instead of once per query.  The fingerprint (lineitem.parquet mtime
-#: + size) invalidates the memo when the files under sf_dir are
-#: REGENERATED inside one Spark application, and the memo is bounded:
-#: beyond _COSUPPLY_MEMO_MAX datasets the oldest entry is evicted and
-#: its checkpointed blocks released (r12 ADVICE).
-_COSUPPLY_MEMO: dict[tuple, DataFrame] = {}
-_COSUPPLY_MEMO_MAX = 4
-
-
-def _dataset_fingerprint(sf_dir: str) -> tuple:
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (0, 0)
-
-
 def cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Thresholded supplier co-supply edge list — (ea, eb, n_orders) with
     ea < eb and n_orders >= COSUPPLY_MIN_ORDERS distinct shared orders —
-    pinned once per (session, dataset) and shared by graph_triangle_count,
-    graph_bfs_layers, graph_connected_components and the certified
-    graph_cosupply_edges surface (r11 judge directive #2: the 16x probe
-    showed inline pair-gen at ~90% of BFS wall; one shared pinned kernel
-    reduces the graph ops to flat joins over the materialized edges).
+    pinned once and shared by graph_triangle_count, graph_bfs_layers,
+    graph_connected_components and the certified graph_cosupply_edges
+    surface (r11 judge directive #2: the 16x probe showed inline
+    pair-gen at ~90% of BFS wall; one shared pinned kernel reduces the
+    graph ops to flat joins over the materialized edges).
+
+    The pinned frame is held in `session.memo`, keyed on the dataset
+    and the SECDB_SPARK_NO_PIN switch, so the pair generation runs once
+    when several graph ops execute in one Spark application; rewriting
+    lineitem.parquet, or a new application, builds it again.
 
     Scale: at 100 TB the memoized localCheckpoint becomes a write-time
     bucketed edge TABLE (bucketBy supplier, sorted) refreshed with the
@@ -93,34 +73,25 @@ def cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same trade at interactive scale."""
     import os
 
+    def build() -> DataFrame:
+        li = table(spark, sf_dir, "lineitem")
+        os_ = li.select(
+            F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
+        ).distinct()
+        return pin(
+            cooccur_pairs(os_, "o", "s", COSUPPLY_MIN_ORDERS).select(
+                F.col("n1").alias("ea"),
+                F.col("n2").alias("eb"),
+                F.col("n").alias("n_orders"),
+            )
+        )
+
     key = (
-        spark.sparkContext.applicationId,
+        "cosupply",
         os.path.abspath(sf_dir),
-        _dataset_fingerprint(sf_dir),
         bool(os.environ.get("SECDB_SPARK_NO_PIN")),
     )
-    cached = _COSUPPLY_MEMO.get(key)
-    if cached is not None:
-        return cached
-    li = table(spark, sf_dir, "lineitem")
-    os_ = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
-    ).distinct()
-    e = pin(
-        cooccur_pairs(os_, "o", "s", COSUPPLY_MIN_ORDERS).select(
-            F.col("n1").alias("ea"),
-            F.col("n2").alias("eb"),
-            F.col("n").alias("n_orders"),
-        )
-    )
-    while len(_COSUPPLY_MEMO) >= _COSUPPLY_MEMO_MAX:
-        old = _COSUPPLY_MEMO.pop(next(iter(_COSUPPLY_MEMO)))  # oldest first
-        try:  # release the evicted entry's checkpointed blocks
-            old.unpersist()
-        except Exception:
-            pass
-    _COSUPPLY_MEMO[key] = e
-    return e
+    return memo(spark, key, [os.path.join(sf_dir, "lineitem.parquet")], build)
 
 
 #: the oracle-side twin of cosupply_edges — every co-supply graph oracle

@@ -14,7 +14,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Configs that are *required for correctness* on the driver's testdata and
 # must therefore also be applied at runtime to sessions we did not build
@@ -54,6 +54,62 @@ def scratch_dir(tag: str) -> str:
         _scratch_root = tempfile.mkdtemp(prefix="secdb_")
         atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
     return tempfile.mkdtemp(prefix=f"{tag}_", dir=_scratch_root)
+
+
+#: key -> ((applicationId, (path, stat) of each input), value); see `memo`
+_MEMO: dict = {}
+_MEMO_MAX = 4
+
+
+def _stat(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
+def _release(value) -> None:
+    """Unpersist a DataFrame that leaves the store.  This frees a cached
+    frame's blocks; a localCheckpoint's blocks stay readable by callers
+    still holding the frame, and Spark's ContextCleaner frees them once
+    the last reference is garbage-collected."""
+    if isinstance(value, DataFrame):
+        try:
+            value.unpersist()
+        except Exception:
+            pass
+
+
+def memo(spark: SparkSession, key: tuple, inputs, build):
+    """``build()``'s result, reused by later calls with the same ``key``
+    while nothing it read has changed: an entry hits only under the same
+    Spark applicationId and the same ``(st_mtime_ns, st_size)`` for every
+    path in ``inputs``, so a file rewritten at the same path is read
+    again.  A miss runs ``build()`` and replaces the key's entry.  The
+    store holds at most ``_MEMO_MAX`` entries, the oldest evicted first;
+    a DataFrame that leaves it is unpersisted."""
+    stamp = (
+        spark.sparkContext.applicationId,
+        tuple((p, _stat(p)) for p in inputs),
+    )
+    entry = _MEMO.get(key)
+    if entry is not None and entry[0] == stamp:
+        return entry[1]
+    value = build()
+    if key in _MEMO:
+        _release(_MEMO.pop(key)[1])
+    while len(_MEMO) >= _MEMO_MAX:
+        _release(_MEMO.pop(next(iter(_MEMO)))[1])  # oldest first
+    _MEMO[key] = (stamp, value)
+    return value
+
+
+def clear_memos() -> None:
+    """Empty the `memo` store, so the next call of every memoized kernel
+    runs cold."""
+    while _MEMO:
+        _release(_MEMO.popitem()[1][1])
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

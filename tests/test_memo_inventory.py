@@ -15,26 +15,13 @@ PKG = Path(__file__).resolve().parents[1] / "secdb_spark"
 
 #: (path under secdb_spark/, name) -> (key, invalidation rule)
 MEMOS = {
-    ("operators/llm_pipeline.py", "_VOCAB_CACHE"): (
-        "(sf_dir, MASK_MAX_VOCAB)",
-        "never within the process: a corpus rewritten at the same sf_dir "
-        "keeps the old dictionary",
-    ),
-    ("operators/sources_sinks.py", "_XBRL_FACTS_CACHE"): (
-        "Spark applicationId",
-        "a new Spark application re-parses; the parsed filings are the "
-        "repo fixtures, immutable within a run",
-    ),
-    ("operators/warehouse_extras37.py", "_COSUPPLY_MEMO"): (
-        "(applicationId, abspath(sf_dir), lineitem.parquet mtime and size, "
-        "SECDB_SPARK_NO_PIN)",
-        "a rewritten lineitem file changes the key; at most "
-        "_COSUPPLY_MEMO_MAX entries, the oldest evicted and unpersisted",
-    ),
-    ("operators/curation_extras.py", "_PQ_SEED_CACHE"): (
-        "(applicationId, sf_dir)",
-        "a new Spark application; a corpus rewritten at the same sf_dir "
-        "inside one application keeps the old seeds",
+    ("session.py", "_MEMO"): (
+        "a caller's key: (\"cosupply\", abspath(sf_dir), SECDB_SPARK_NO_PIN), "
+        "(\"vocab\", abspath(sf_dir), MASK_MAX_VOCAB), (\"xbrl_facts\",)",
+        "hits only under the same applicationId and the same (path, "
+        "st_mtime_ns, st_size) of every input file; a miss replaces the "
+        "key's entry; at most _MEMO_MAX entries, the oldest evicted and "
+        "unpersisted",
     ),
     ("catalog.py", "table_rows"): (
         "(sf_dir, table name) via lru_cache",

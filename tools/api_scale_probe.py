@@ -228,7 +228,7 @@ def main() -> None:
                 synth_docs(spark, mult).write.parquet(
                     f"{sf_dir}/documents.parquet"
                 )
-                walls[mult] = sum(time_op(spark, op, sf_dir, 1))
+                walls[mult] = sum(time_op(spark, op, sf_dir, 1)[:2])
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
         print(

@@ -17,11 +17,15 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float]:
-    """(build_s, exec_s) of `fn(spark, sf_dir)` to the noop sink: n + 1
-    runs, the first discarded (file listing, codegen), the best of the
-    rest by total."""
-    best = None
+def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float, float]:
+    """(build_s, exec_s, cold_s) of `fn(spark, sf_dir)` to the noop sink:
+    n + 1 runs.  The first runs from an empty `session.memo` and pays
+    file listing and codegen; its total is cold_s, and build_s / exec_s
+    are the best of the rest by total."""
+    from secdb_spark.session import clear_memos
+
+    clear_memos()
+    best = cold = None
     for i in range(n + 1):
         t0 = time.time()
         df = fn(spark, sf_dir)
@@ -29,11 +33,12 @@ def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float]:
         df.write.mode("overwrite").format("noop").save()
         t2 = time.time()
         if i == 0:
+            cold = t2 - t0
             continue
         cur = (t1 - t0, t2 - t1)
         if best is None or sum(cur) < sum(best):
             best = cur
-    return best
+    return (*best, cold)
 
 
 def main() -> int:
@@ -55,10 +60,10 @@ def main() -> int:
 
     for op in args.ops:
         spark.sparkContext.setJobDescription(f"op_ab: {op}")
-        best = time_op(spark, queries[op], args.sf, args.n)
+        build, exec_, cold = time_op(spark, queries[op], args.sf, args.n)
         print(
-            f"{op:36s} build {best[0]:7.2f}  exec {best[1]:7.2f}  "
-            f"total {sum(best):7.2f}",
+            f"{op:36s} build {build:7.2f}  exec {exec_:7.2f}  "
+            f"total {build + exec_:7.2f}  cold {cold:7.2f}",
             flush=True,
         )
         spark.sparkContext.setJobDescription(None)

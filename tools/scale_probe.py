@@ -5,7 +5,8 @@ tables, each written as `{name}.parquet/` with several part files, the
 layout `catalog.table`, `table_rows` and `table_split_units` already
 read — and times each op by id on both directories through op_ab's
 `time_op` (build = plan construction + eager pins, exec = noop sink;
-the first run of each op at each scale is discarded as warm-up).
+the first run of each op at each scale is the cold column — it starts
+from an empty `session.memo` — and is left out of build and exec).
 Near-linear growth of the total (ratio ~N for scan-bound, ~N·log for
 sort-bound) is the evidence that a plan has no super-linear term (the
 thing that kills you at 100 TB).
@@ -146,21 +147,21 @@ def main() -> None:
         synthesize(spark, DEFAULT_SF_DIR, out, args.mult)
         m = args.mult
         print(
-            f"| op | 1x build | 1x exec | {m}x build | {m}x exec "
-            f"| ratio (linear={m}.0) |"
+            f"| op | 1x build | 1x exec | 1x cold | {m}x build | {m}x exec "
+            f"| {m}x cold | ratio (linear={m}.0) |"
         )
-        print("| --- | --- | --- | --- | --- | --- |", flush=True)
+        print("| --- | --- | --- | --- | --- | --- | --- | --- |", flush=True)
         for op in ops:
             try:
-                b1, e1 = time_op(spark, queries[op], DEFAULT_SF_DIR, 2)
-                bn, en = time_op(spark, queries[op], out, 2)
+                b1, e1, c1 = time_op(spark, queries[op], DEFAULT_SF_DIR, 2)
+                bn, en, cn = time_op(spark, queries[op], out, 2)
             except Exception as exc:  # one failed op must not lose the table
                 print(f"| {op} | did not finish: {type(exc).__name__} "
-                      "| | | | |", flush=True)
+                      "| | | | | | |", flush=True)
                 continue
             print(
-                f"| {op} | {b1:.2f} s | {e1:.2f} s | {bn:.2f} s "
-                f"| {en:.2f} s | {(bn + en) / (b1 + e1):.2f} |",
+                f"| {op} | {b1:.2f} s | {e1:.2f} s | {c1:.2f} s | {bn:.2f} s "
+                f"| {en:.2f} s | {cn:.2f} s | {(bn + en) / (b1 + e1):.2f} |",
                 flush=True,
             )
     finally:
