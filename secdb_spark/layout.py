@@ -54,19 +54,19 @@ def write_bucketed(
     joins/aggs on that key need no shuffle at READ time. This is the 100 TB
     answer to the orders⋈lineitem shuffle (SCALE.md §2).
 
-    The table is EXTERNAL, its files in a fresh `session.scratch_dir`:
-    they leave with the process instead of collecting in a driver-owned
-    session's warehouse (the default `spark-warehouse/` under the
-    working directory), and a managed-table directory left there by an
-    earlier session cannot collide with the write."""
+    The table is EXTERNAL, its files in one `session.scratch_dir` path
+    per table name that each write overwrites: they leave with the
+    process instead of collecting in a driver-owned session's warehouse
+    (the default `spark-warehouse/` under the working directory), a
+    managed-table directory left there by an earlier session cannot
+    collide with the write, and repeated writes keep one copy."""
     spark = df.sparkSession
     spark.sql(f"DROP TABLE IF EXISTS `{table_name}`")
     w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
     if sort_col:
         w = w.sortBy(sort_col)
-    w.format("parquet").option("path", scratch_dir("bucketed")).saveAsTable(
-        table_name
-    )
+    path = scratch_dir(f"bucketed_{table_name}", fresh=False)
+    w.format("parquet").option("path", path).saveAsTable(table_name)
 
 
 def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:

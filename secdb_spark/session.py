@@ -16,6 +16,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .pydaemon import stamp
+
 # Configs that are *required for correctness* on the driver's testdata and
 # must therefore also be applied at runtime to sessions we did not build
 # (the verify driver passes us its own SparkSession).
@@ -41,32 +43,38 @@ RUNTIME_CONFS = {
 
 _scratch_root: str | None = None
 
+#: the directory that holds the ``secdb_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def scratch_dir(tag: str) -> str:
-    """A fresh directory for files an op stages (sink round trips, stream
-    inputs, the default warehouse).  Every directory lives under one
-    ``secdb_*`` root per process, made on the first call under
+
+def scratch_dir(tag: str, fresh: bool = True, under: str | None = None) -> str:
+    """A fresh directory for files the engine stages (sink round trips,
+    stream inputs, the default warehouse).  Every directory lives under
+    one ``secdb_*`` root per process, made on the first call under
     ``tempfile.gettempdir()`` (so ``TMPDIR`` moves it) and removed when
     the process exits.  Each call gets its own directory, so a repeated
-    op never reads what an earlier call wrote."""
+    op never reads what an earlier call wrote.
+
+    ``fresh=False`` gives ``<root>/<tag>`` on every call, not made here:
+    the home of data that each write replaces.  ``under`` makes the
+    directory there, outside the root, and removes it at exit too: a
+    path whose length does not depend on ``TMPDIR``."""
     global _scratch_root
+    if under is not None:
+        path = tempfile.mkdtemp(prefix=f"secdb_{tag}_", dir=under)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        return path
     if _scratch_root is None:
         _scratch_root = tempfile.mkdtemp(prefix="secdb_")
         atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    if not fresh:
+        return os.path.join(_scratch_root, tag)
     return tempfile.mkdtemp(prefix=f"{tag}_", dir=_scratch_root)
 
 
 #: key -> ((applicationId, (path, stat) of each input), value); see `memo`
 _MEMO: dict = {}
 _MEMO_MAX = 4
-
-
-def _stat(path: str) -> tuple[int, int] | None:
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    return (st.st_mtime_ns, st.st_size)
 
 
 def _release(value) -> None:
@@ -89,19 +97,19 @@ def memo(spark: SparkSession, key: tuple, inputs, build):
     again.  A miss runs ``build()`` and replaces the key's entry.  The
     store holds at most ``_MEMO_MAX`` entries, the oldest evicted first;
     a DataFrame that leaves it is unpersisted."""
-    stamp = (
+    state = (
         spark.sparkContext.applicationId,
-        tuple((p, _stat(p)) for p in inputs),
+        tuple((p, stamp(p)) for p in inputs),
     )
     entry = _MEMO.get(key)
-    if entry is not None and entry[0] == stamp:
+    if entry is not None and entry[0] == state:
         return entry[1]
     value = build()
     if key in _MEMO:
         _release(_MEMO.pop(key)[1])
     while len(_MEMO) >= _MEMO_MAX:
         _release(_MEMO.pop(next(iter(_MEMO)))[1])  # oldest first
-    _MEMO[key] = (stamp, value)
+    _MEMO[key] = (state, value)
     return value
 
 
@@ -150,6 +158,37 @@ def get_spark(app_name: str = "secdb_spark", shuffle_partitions: int | None = No
             os.environ.get("SPARK_GRAFT_WAREHOUSE") or scratch_dir("wh"),
         )
     )
+    # Python workers run the mapInPandas / applyInPandas / pandas_udf
+    # kernels, the XBRL parse and the SQLite sink.  A trivial Python RDD job
+    # took 96 / 112 / 199 ms at 1 / 4 / 8 partitions with none of the three
+    # confs below, 63 / 67 / 114 ms with the first two and 23 / 27 / 36 ms
+    # with all three; a JVM-only job takes 23-28 ms (4 vCPU, SCALE.md §83).
+    b = (
+        # pyspark's worker calls importlib.invalidate_caches() on every
+        # task, which re-read each zip archive on its path (pyspark.zip,
+        # py4j, the spark-core jar): 75-97 ms per task.  This daemon
+        # re-reads an archive only when it changes.
+        b.config("spark.python.daemon.module", "secdb_spark.pydaemon")
+        # Workers import the daemon, and kernels pickled by reference (the
+        # XBRL parse), from the package root whatever the working directory.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+    )
+    # Unix-domain sockets between the JVM and the workers remove a ~40 ms
+    # delayed-ACK stall per task that TCP_NODELAY did not.  Spark names
+    # each socket "<dir>/.<uuid4>.sock" and AF_UNIX paths hold 107 bytes,
+    # so the directory is a short one under /tmp: under a long TMPDIR (a
+    # perfbench run's, a pytest tmp_path) the bind would fail every Python
+    # task.  Without a writable /tmp the session keeps TCP.  A running
+    # session keeps its sockets, so only a new one gets a directory.
+    if SparkSession.getActiveSession() is None:
+        try:
+            sock_dir = scratch_dir("sock", under="/tmp")
+        except OSError:
+            pass
+        else:
+            b = b.config("spark.python.unix.domain.socket.enabled", "true").config(
+                "spark.python.unix.domain.socket.dir", sock_dir
+            )
     for k, v in RUNTIME_CONFS.items():
         b = b.config(k, v)
     return apply_runtime_confs(b.getOrCreate())

@@ -180,3 +180,24 @@ def test_write_bucketed_survives_orphaned_table_dir(spark):
             f.write("stale")
     out = all_queries()["join_bucketed"](spark, SF_DIR).collect()
     assert len(out) > 0
+
+
+
+def test_repeated_join_bucketed_keeps_one_copy_per_table(spark):
+    """Each write of a bucketed table replaces the table's one directory
+    under the scratch root: three `join_bucketed` calls leave one copy of
+    each table, and the third call's answer equals the first's."""
+    import hashlib
+    import os
+
+    from secdb_spark import session
+    from secdb_spark.registry import all_queries
+
+    op = all_queries()["join_bucketed"]
+    first = sorted(op(spark, SF_DIR).collect())
+    for _ in range(2):
+        last = sorted(op(spark, SF_DIR).collect())
+    assert last == first
+    tag = hashlib.sha1(SF_DIR.encode()).hexdigest()[:8]
+    copies = [d for d in os.listdir(session._scratch_root) if tag in d]
+    assert sorted(copies) == [f"bucketed_secdb_lb_{tag}", f"bucketed_secdb_ob_{tag}"]

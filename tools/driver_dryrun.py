@@ -13,6 +13,7 @@ Usage: python tools/driver_dryrun.py [--sf /root/testdata/sf0.01]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 from pathlib import Path
@@ -32,6 +33,11 @@ def main() -> int:
 
     from selfcheck import canon_rows
 
+    # The vanilla session's Python workers find secdb_spark only through
+    # their working directory, which they inherit from the JVM: start it
+    # in the repo root.
+    args.sf = os.path.abspath(args.sf)
+    os.chdir(ROOT)
     # deliberately vanilla: the driver does not apply our configs
     spark = (
         SparkSession.builder.master("local[16]")
