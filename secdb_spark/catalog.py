@@ -5,9 +5,11 @@ Design principles (SURVEY §1):
   types), so nothing here relies on schema inference.
 - `events.ts` is INT64 timestamp in the parquet footer whose unit has
   varied across driver data generations (NANOS in rounds 1-2, MICROS from
-  round 3).  The unit is probed from the footer once per sf_dir
-  (`events_ts_unit`) and the exact integer conversion to µs follows it;
-  DuckDB's native read truncates to µs identically.
+  round 3).  The unit is read from the footer (`events_ts_unit`) and the
+  exact integer conversion to µs follows it; DuckDB's native read
+  truncates to µs identically.
+- Footer reads go through one memo, `footers`, keyed on the file listing
+  and each file's `(st_mtime_ns, st_size)`; every size gate asks `fits`.
 - Loaders take `sf_dir` so every query is scale-invariant: the same code
   runs sf0.001 locally, sf0.01 in verify, sf0.1 in bench, and a 100 TB
   partitioned layout in production (directory of many files instead of one).
@@ -22,12 +24,12 @@ time (verified: .explain shows ReadSchema with only referenced columns).
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from .pydaemon import stamp
 from .session import apply_runtime_confs
 
 TABLES = (
@@ -142,47 +144,52 @@ SCHEMAS: dict[str, T.StructType] = {
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-@lru_cache(maxsize=None)
-def table_rows(sf_dir: str, name: str) -> int:
-    """Exact row count from parquet footer metadata — a driver-side footer
-    read, NOT a Spark job.  Used by size-gated kernel dispatch (broadcast
-    vs bucketed ANN kernels): a dispatch gate needs the table's cardinality
-    before the plan is built, and running `df.count()` there puts a full
-    Spark job on the hot path of every invocation (the round-2 bench
-    regression).  Works for a single file or a directory of part files; at
-    warehouse scale this is the same information the catalog's table
-    statistics serve.  Both kernels behind every gate are exact, so a
-    stale count could only ever change speed, never answers."""
+#: table path -> (the (file, stamp) of every file read, their footers)
+_FOOTERS: dict[str, tuple[tuple, tuple]] = {}
+
+
+def footers(sf_dir: str, name: str) -> tuple:
+    """Parquet footers of table `name`, one per file (a single file or a
+    directory's sorted part files) — a driver-side read, never a Spark
+    job.  Reused while the file listing and each file's `(st_mtime_ns,
+    st_size)` are unchanged, so a table rewritten at the same path is
+    read again."""
     import pyarrow.parquet as pq
 
     p = Path(sf_dir) / f"{name}.parquet"
-    if p.is_dir():
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows for f in sorted(p.rglob("*.parquet"))
-        )
-    return pq.ParquetFile(p).metadata.num_rows
+    files = sorted(map(str, p.rglob("*.parquet"))) if p.is_dir() else [str(p)]
+    state = tuple((f, stamp(f)) for f in files)
+    entry = _FOOTERS.get(str(p))
+    if entry is None or entry[0] != state:
+        entry = (state, tuple(pq.read_metadata(f) for f in files))
+        _FOOTERS[str(p)] = entry
+    return entry[1]
 
 
-@lru_cache(maxsize=None)
+def table_rows(sf_dir: str, name: str) -> int:
+    """Exact row count from the parquet footers, re-read when a file's
+    `(st_mtime_ns, st_size)` or the part-file listing changes (`footers`)
+    — NOT a Spark job: a gate needs the count before the plan is built,
+    and `df.count()` there put a full job on every invocation's hot path
+    (the round-2 bench regression).  At warehouse scale this is the
+    information the catalog's table statistics serve."""
+    return sum(m.num_rows for m in footers(sf_dir, name))
+
+
 def table_split_units(sf_dir: str, name: str) -> int:
     """Total parquet row groups across the table's files — the hard upper
     bound on scan-stage parallelism (a row group is read by exactly one
     task, so a single-row-group file caps the whole map side at ONE core
-    no matter how it is split).  Driver-side footer read, cached like
-    table_rows; used by the scan-spread gates (r13): when this is far
-    below the session's core count AND the table is small, compute-heavy
-    per-row pipelines insert one cheap repartition so tokenize/hash work
-    parallelizes — at warehouse scale the table has many row groups and
-    the gate never fires."""
-    import pyarrow.parquet as pq
+    no matter how it is split).  Used by the scan-spread gate."""
+    return sum(m.num_row_groups for m in footers(sf_dir, name))
 
-    p = Path(sf_dir) / f"{name}.parquet"
-    if p.is_dir():
-        return sum(
-            pq.ParquetFile(f).metadata.num_row_groups
-            for f in sorted(p.rglob("*.parquet"))
-        )
-    return pq.ParquetFile(p).metadata.num_row_groups
+
+def fits(sf_dir: str, bound: int, *tables: str) -> bool:
+    """The size gate behind every kernel choice: `tables`' footer row
+    counts, summed, are at most `bound` — the single-partition or
+    broadcast kernel runs, else the distributed one; both are exact.  Ops
+    call it as `catalog.fits`, so one monkeypatch forces every gate."""
+    return sum(table_rows(sf_dir, t) for t in tables) <= bound
 
 
 def spread_scan(
@@ -190,8 +197,8 @@ def spread_scan(
 ) -> DataFrame:
     """Scan-spread gate (guide §2.5 'input skew'): `df`, read from table
     `name`, hash-repartitioned on `key` into one partition per core when
-    the table has fewer row groups than the session has cores and at
-    most `max_rows` rows; otherwise `df` unchanged.  A single-row-group
+    the table has at most `max_rows` rows and fewer row groups than the
+    session has cores; otherwise `df` unchanged.  A single-row-group
     file runs the whole scan stage, and whatever compute is fused into
     it, as ONE task; the explicit partition count matters because AQE
     coalesces a key-only sub-MB shuffle back to one partition.  Hash on
@@ -199,29 +206,19 @@ def spread_scan(
     warehouse scale the table has many row groups and no shuffle is
     added."""
     ncores = df.sparkSession.sparkContext.defaultParallelism
-    if (
-        table_split_units(sf_dir, name) < ncores
-        and table_rows(sf_dir, name) <= max_rows
-    ):
+    if fits(sf_dir, max_rows, name) and table_split_units(sf_dir, name) < ncores:
         return df.repartition(ncores, key)
     return df
 
 
-@lru_cache(maxsize=None)
 def events_ts_unit(sf_dir: str) -> str:
-    """Time unit of events.ts as written in the parquet footer: 'ns', 'us'
-    or 'ms'.  Probed ONCE per sf_dir from footer metadata (driver-side file
-    read, not a Spark job) because the driver's data generator has emitted
-    both TIMESTAMP(NANOS) (rounds 1-2) and TIMESTAMP(MICROS) (round 3+)
-    footers for the same logical column — a hard-coded unit silently shifts
-    every event timestamp 1000x (the round-3 stream_* / win_lag_lead
-    mismatches).  Plain INT64 with no timestamp logical type falls back to
-    'ns' (the survey-time encoding)."""
-    import pyarrow.parquet as pq
-
-    p = Path(sf_dir) / "events.parquet"
-    f = sorted(p.rglob("*.parquet"))[0] if p.is_dir() else p
-    schema = pq.ParquetFile(f).schema
+    """Time unit of events.ts in the first file's footer: 'ns', 'us' or
+    'ms'.  The driver's data generator has emitted both TIMESTAMP(NANOS)
+    (rounds 1-2) and TIMESTAMP(MICROS) (round 3+) for the same column — a
+    hard-coded or stale unit silently shifts every event timestamp 1000x
+    (the round-3 stream_* / win_lag_lead mismatches).  Plain INT64 with
+    no timestamp logical type falls back to 'ns' (the survey encoding)."""
+    schema = footers(sf_dir, "events")[0].schema
     lt = str(schema.column(schema.names.index("ts")).logical_type)
     for token, unit in (
         ("timeUnit=nanoseconds", "ns"),

@@ -39,8 +39,8 @@ from ._helpers import DEC, pin
 
 #: Above this many input rows, operators with a global-order step switch
 #: from the single-partition window (exact, cheapest at aggregate scale)
-#: to the bucketed two-pass kernel.  Probed via parquet-footer row counts
-#: (catalog.table_rows) — never a Spark job in the dispatch path.
+#: to the bucketed two-pass kernel.  Asked through `catalog.fits` on
+#: parquet-footer row counts — never a Spark job in the dispatch path.
 GLOBAL_WINDOW_GATE = 2_000_000
 
 

@@ -15,7 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import pin, r4
@@ -115,7 +116,7 @@ def length_pareto_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pattern): the kernel input is <= one row per document, so the
         # documents footer row count bounds it — below the gate the
         # textbook window replaces the quantile action + two pins.
-        small=table_rows(sf_dir, "documents") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "documents"),
     )
     j = (
         dv.join(cum.select("source", "v", F.col("_cw").alias("cw")),

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import spread_scan, table, table_rows
+from .. import catalog
+from ..catalog import spread_scan, table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_bucketed_topk
 from ._helpers import pin, r4
@@ -628,8 +629,7 @@ def embed_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate the top-k runs through `_global_order.grouped_bucketed_topk`
     (bucket-count prefilter — only rows in buckets whose exclusive
     prefix count < k can win; survivors ≈ k + one bucket per cluster);
-    below it, the plain per-cluster window.  Equality pinned in
-    tests/test_global_window_gates.py."""
+    below it, the plain per-cluster window (tests/test_size_gates.py)."""
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
@@ -658,7 +658,7 @@ def embed_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("m.d2").alias("d2"),
         )
     )
-    if table_rows(sf_dir, "embeddings") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "embeddings"):
         ranked = grouped_bucketed_topk(
             assigned, ["cluster"], "d2", ["vec_id"], CORESET_K, out="rank"
         )

@@ -18,7 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._helpers import pin, DEC, he4, r4, sql_he4
 from .curation_extras import (
@@ -517,7 +518,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc) <= the documents footer row count; below the gate each call
     # drops its quantile action + two pins (this op pays the kernel
     # TWICE, so the saving doubles).
-    small = table_rows(sf_dir, "documents") <= GLOBAL_WINDOW_GATE
+    small = catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "documents")
     ct = grouped_range_prefix_sum(
         j, ["source"], "doc_id", "n_tokens", out="cum_tokens", small=small
     ).select("source", "doc_id", "cum_tokens")

@@ -28,7 +28,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import spread_scan, table, table_rows
+from .. import catalog
+from ..catalog import spread_scan, table
 from ..registry import register
 from ..session import memo
 from ._helpers import pin
@@ -113,7 +114,9 @@ def sim_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     are then verified with EXACT Jaccard on the FULL token sets, so the
     filter affects recall only — and the theorem makes recall 1."""
     d = _spread_docs(spark, sf_dir, table(spark, sf_dir, "documents"))
-    return _jaccard_pairs(d, n_docs=table_rows(sf_dir, "documents"))
+    return _jaccard_pairs(
+        d, allpairs=catalog.fits(sf_dir, JACCARD_ALLPAIRS_DOCS, "documents")
+    )
 
 
 def _spread_docs(spark: SparkSession, sf_dir: str, d: DataFrame) -> DataFrame:
@@ -128,18 +131,18 @@ def _jaccard_pairs(
     d: DataFrame,
     tokens=None,
     threshold: float | None = None,
-    n_docs: int | None = None,
+    allpairs: bool = False,
 ) -> DataFrame:
     """Prefix-filtered exact-Jaccard pair pipeline over any (doc_id, text)
     DataFrame — see sim_jaccard for the losslessness argument.  `tokens`
     overrides the element expression (default: distinct word set), e.g.
     word-bigram shingles for dedup_shingle; the prefix-filter theorem is
-    independent of what the set elements are.  `n_docs` is an optional
-    corpus-size HINT (registered callers pass the parquet-footer row
-    count — never a Spark job): with a closed dictionary AND a corpus
-    under JACCARD_ALLPAIRS_DOCS it dispatches to the all-pairs bitmask
-    kernel (r14, the sim_containment precedent); without a hint the
-    prefix-filtered path runs unconditionally."""
+    independent of what the set elements are.  `allpairs` says the corpus
+    is under JACCARD_ALLPAIRS_DOCS (registered callers ask `catalog.fits`
+    on the documents footer — never a Spark job): with a closed
+    dictionary as well it dispatches to the all-pairs bitmask kernel
+    (r14, the sim_containment precedent); otherwise the prefix-filtered
+    path runs."""
     if threshold is None:
         threshold = JACCARD_THRESHOLD
     # r13 kernel rewrite (guide §2.3 "shuffle fewer bytes"): every stage
@@ -256,11 +259,7 @@ def _jaccard_pairs(
             ],
             F.lit(0),
         )
-        if (
-            n_docs is not None
-            and n_docs <= JACCARD_ALLPAIRS_DOCS
-            and threshold > 0
-        ):
+        if allpairs and threshold > 0:
             # ALL-PAIRS bitmask kernel (r14; the sim_containment r13
             # precedent, guide §1.2 first-principles): on a closed
             # dictionary the exact Jaccard of ANY pair is a popcount
@@ -834,7 +833,7 @@ def _dedup_near_pairs(
             *[f"m{w}" for w in range(n_words)],
             "n",
         ).localCheckpoint(eager=True)
-        in_gate = table_rows(sf_dir, "documents") <= MASK_BROADCAST_DOCS
+        in_gate = catalog.fits(sf_dir, MASK_BROADCAST_DOCS, "documents")
         pairs_raw = _band_pairs(sigmask, bcast=in_gate)
         ma = sigmask.select(
             F.col("doc_id").alias("doc_a"),
@@ -910,7 +909,7 @@ def _dedup_near_pairs(
         "doc_id", *_band_cols(), "hset", "n"
     ).localCheckpoint(eager=True)
     pairs_raw = _band_pairs(
-        sigmask, bcast=table_rows(sf_dir, "documents") <= MASK_BROADCAST_DOCS
+        sigmask, bcast=catalog.fits(sf_dir, MASK_BROADCAST_DOCS, "documents")
     )
     sa = sigmask.select(
         F.col("doc_id").alias("doc_a"),
@@ -1112,12 +1111,11 @@ def _topk_broadcast(spark: SparkSession, emb: DataFrame, k: int = TOP_K) -> Data
 
 
 def _cosine_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Dispatch on the parquet-footer row count (a driver-side metadata
-    # read), NOT emb.count() — the count was a full Spark job inside the
-    # benched hot path, run once per invocation (round-2's q_cosine_topk
-    # +68% regression).  Both kernels are exact; the gate is perf-only.
+    # Dispatch on the footer row count, NOT emb.count() — the count was
+    # a full Spark job inside the benched hot path (round-2's
+    # q_cosine_topk +68% regression).
     emb = _emb(spark, sf_dir)
-    if table_rows(sf_dir, "embeddings") <= BROADCAST_MAX_VECTORS:
+    if catalog.fits(sf_dir, BROADCAST_MAX_VECTORS, "embeddings"):
         return _topk_broadcast(spark, emb)
     return _topk_bucketed(spark, emb, probe=N_CENTROIDS)
 
@@ -1476,9 +1474,7 @@ def embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = _emb(spark, sf_dir)
-    # Footer-metadata dispatch — no Spark job on the hot path (see
-    # _cosine_topk_exact).
-    if table_rows(sf_dir, "embeddings") > BROADCAST_MAX_VECTORS:
+    if not catalog.fits(sf_dir, BROADCAST_MAX_VECTORS, "embeddings"):
         return _pairs_blocked(spark, emb, threshold=0.4)
     pdf = emb.toPandas()  # gated by BROADCAST_MAX_VECTORS above
     ids = pdf["vec_id"].to_numpy()

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .. import catalog
 from ..catalog import table
 from ..registry import register
 from ._helpers import pin, r4
@@ -226,12 +227,11 @@ def lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     their plans."""
     from .llm_pipeline import _mask_vocab
     from .similarity_extras import CONTAIN_ALLPAIRS_DOCS
-    from ..catalog import table_rows
 
     vocab = _mask_vocab(spark, sf_dir)
     if (
         vocab is not None
-        and table_rows(sf_dir, "documents") <= CONTAIN_ALLPAIRS_DOCS
+        and catalog.fits(sf_dir, CONTAIN_ALLPAIRS_DOCS, "documents")
     ):
         return _lsh_eval_grouped(spark, sf_dir, vocab)
     return _lsh_eval_postings(spark, sf_dir)

@@ -19,7 +19,8 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import (
     GLOBAL_WINDOW_GATE,
@@ -190,7 +191,7 @@ def sim_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = _mask_vocab(spark, sf_dir)
     if (
         vocab is not None
-        and table_rows(sf_dir, "documents") <= CONTAIN_ALLPAIRS_DOCS
+        and catalog.fits(sf_dir, CONTAIN_ALLPAIRS_DOCS, "documents")
     ):
         # r13 BITMASK ALL-PAIRS kernel (guide §1.2 first-principles): on
         # a closed-dictionary corpus the postings self-join is the WRONG
@@ -352,11 +353,10 @@ def feat_quantile_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
     count: below the gate, the plain NTILE window; above it, the
     `_global_order` bucketed rank kernel + `ntile_from_rank`
     (approx-quantile splits broadcast back, rank offsets via a tiny
-    self-join) — the same dispatch part_abc_pareto/customer_rfm use.
-    Equality pinned in tests/test_global_window_gates.py."""
+    self-join) — the same dispatch part_abc_pareto/customer_rfm use."""
     c = table(spark, sf_dir, "customer")
-    n = table_rows(sf_dir, "customer")
-    if n > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "customer"):
+        n = F.lit(catalog.table_rows(sf_dir, "customer")).cast("long")
         ranked = bucketed_global_rank(
             c.select("c_custkey", "c_acctbal"),
             "c_acctbal",
@@ -366,9 +366,7 @@ def feat_quantile_bin(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = ranked.select(
             "c_custkey",
             "c_acctbal",
-            ntile_from_rank(
-                F.col("_r"), F.lit(n).cast("long"), QBINS
-            ).alias("bin"),
+            ntile_from_rank(F.col("_r"), n, QBINS).alias("bin"),
         )
     else:
         w = Window.orderBy("c_acctbal", "c_custkey")

@@ -23,7 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import r4
@@ -104,7 +105,7 @@ def stat_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         out="_cum",
         # r14 small-path opt-in (guide §1.2): d is <= one row per event,
         # so the events footer row count bounds the kernel input.
-        small=table_rows(sf_dir, "events") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "events"),
     ).withColumn("cum", F.col("_cum").cast("long"))
     # kernel re-aggregates to (v, _v=sum(t)); c1/t recovered via join back
     c = d.join(cum.select("v", "cum"), "v").withColumn(
@@ -204,7 +205,7 @@ def stat_ks_2samp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = grouped_range_prefix_sum(
         weighted, [], "v", "w", out="_cum",
         # r14 small-path opt-in: same events-footer bound as above.
-        small=table_rows(sf_dir, "events") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "events"),
     )
     m = cum.agg(
         F.max(F.abs(F.col("_cum").cast("long"))).alias("dmax")

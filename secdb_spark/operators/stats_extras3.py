@@ -15,7 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import pin, r4
@@ -307,7 +308,7 @@ def stat_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         "one",
         out="_cum",
-        small=table_rows(sf_dir, "orders") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "orders"),
     )
     ng = cum.groupBy("grp").agg(F.sum("_v").cast("long").alias("n"))
     med = (

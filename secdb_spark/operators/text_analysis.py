@@ -11,7 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._helpers import pin
 from ._global_order import GLOBAL_WINDOW_GATE, bucketed_prefix_sum
@@ -497,12 +498,11 @@ def seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     count: below the gate, one ordered window over the doc list; above
     it, `_global_order.bucketed_prefix_sum` (inclusive, minus the row's
     own count for the exclusive offset; integer token counts in decimal
-    addends, so accumulation order is bit-irrelevant).  Equality pinned
-    in tests/test_global_window_gates.py."""
+    addends, so accumulation order is bit-irrelevant)."""
     d = table(spark, sf_dir, "documents")
     toks_arr = _toks()
     counts = d.select("doc_id", F.size(toks_arr).alias("n_toks"))
-    if table_rows(sf_dir, "documents") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "documents"):
         offsets = bucketed_prefix_sum(
             counts, "doc_id", [], "n_toks", out="_incl"
         ).withColumn(

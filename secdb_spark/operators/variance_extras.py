@@ -10,7 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, bucketed_prefix_sum
 from ._helpers import r4
@@ -151,8 +152,7 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream but still data-sized at 10^9 docs, so they dual-kernel on
     the documents footer row count: below the gate, one ordered window;
     above it, two `_global_order.bucketed_prefix_sum` passes (integer
-    addends in decimal — accumulation order bit-irrelevant).  Equality
-    pinned in tests/test_global_window_gates.py."""
+    addends in decimal — accumulation order bit-irrelevant)."""
     docs = table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
@@ -169,7 +169,7 @@ def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         F.coalesce("new_terms", F.lit(0)).alias("new_terms"),
     )
-    if table_rows(sf_dir, "documents") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "documents"):
         cum = bucketed_prefix_sum(
             joined, "doc_id", [], "n_tokens", out="_ct"
         )

@@ -27,7 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import (
     GLOBAL_WINDOW_GATE,
@@ -559,7 +560,7 @@ def dedup_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The empty-shingle guard (docs under 2 words) must filter the DOC, not
     produce an empty set: Jaccard with an empty set is 0/0."""
-    from .llm_pipeline import _jaccard_pairs, _spread_docs
+    from .llm_pipeline import JACCARD_ALLPAIRS_DOCS, _jaccard_pairs, _spread_docs
 
     d = _spread_docs(spark, sf_dir, table(spark, sf_dir, "documents"))
     w = F.split("text", " ")
@@ -576,9 +577,9 @@ def dedup_shingle(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         tokens=F.sort_array(shingles),
         threshold=SHINGLE_THRESHOLD,
-        # corpus-size hint from the parquet footer (upper bound: the
-        # >=2-words filter only shrinks it) for the all-pairs dispatch
-        n_docs=table_rows(sf_dir, "documents"),
+        # the documents footer bounds the corpus (the >=2-words filter
+        # only shrinks it) for the all-pairs dispatch
+        allpairs=catalog.fits(sf_dir, JACCARD_ALLPAIRS_DOCS, "documents"),
     )
 
 
@@ -801,15 +802,14 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — no Spark job): below the gate, three ntile windows over the
     model-sized aggregate; above it, `_rfm_scaled` — bucketed global
     ranks (approx-quantile splits broadcast back, no single-partition
-    Exchange; _global_order.py) + ntile_from_rank.  Equality of the two
-    kernels is pinned in tests/test_warehouse_extras.py."""
+    Exchange; _global_order.py) + ntile_from_rank."""
     o = table(spark, sf_dir, "orders")
     base = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("frequency"),
         dsum(F.col("o_totalprice")).alias("monetary"),
     )
-    if table_rows(sf_dir, "orders") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "orders"):
         return _rfm_scaled(base)
     r = F.ntile(4).over(Window.orderBy("last_order", "o_custkey"))
     f_ = F.ntile(4).over(Window.orderBy("frequency", "o_custkey"))
@@ -933,7 +933,7 @@ def part_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tot = rev.agg(dsum(F.col("revenue")).alias("total"))
-    if table_rows(sf_dir, "lineitem") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "lineitem"):
         cum = bucketed_prefix_sum(
             rev, "revenue", ["l_partkey"], "revenue", desc=True, out="_cum"
         )

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .. import catalog
 from ..catalog import table
 from ..registry import register
 from ._global_order import grouped_bucketed_topk
@@ -528,7 +529,7 @@ def source_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ECDF steps at values only other sources have), so the weight frame
     is sources x distinct-values — bounded by the length-value domain,
     not the corpus — with zero-filled source counts."""
-    from ._global_order import grouped_range_prefix_sum
+    from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 
     d = table(spark, sf_dir, "documents").select(
         "source", F.col("n_chars").alias("v")
@@ -550,16 +551,13 @@ def source_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
             - (F.col("ct") - F.col("c")) * F.col("n_s"),
         )
     )
-    from ..catalog import table_rows
-    from ._global_order import GLOBAL_WINDOW_GATE
-
     cum = grouped_range_prefix_sum(
         w,
         ["source"],
         "v",
         "wt",
         out="_cum",
-        small=table_rows(sf_dir, "documents") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "documents"),
     )
     m = cum.groupBy("source").agg(
         F.max(F.abs(F.col("_cum").cast("long"))).alias("dmax")

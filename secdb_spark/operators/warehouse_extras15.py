@@ -14,7 +14,8 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import pin, r4
@@ -218,7 +219,7 @@ def reorder_interval_percentiles(
         g.withColumn("one", F.lit(1)), [], "gap", "one", out="_cum",
         # r14 small-path opt-in (guide §1.2): one gap row per order at
         # most, so the orders footer row count bounds the kernel input.
-        small=table_rows(sf_dir, "orders") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "orders"),
     )
     tot = cum.agg(F.sum("_v").cast("long").alias("n"))
     j = cum.crossJoin(F.broadcast(tot))

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import (
     GLOBAL_WINDOW_GATE,
@@ -105,7 +106,7 @@ def gap_expfit_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, ["event_type"], "gap_s", "c", out="_cum",
         # r14 small-path opt-in (guide §1.2): d is <= one row per event
         # (distinct (type, gap) spine), events footer bounds it.
-        small=table_rows(sf_dir, "events") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "events"),
     ).withColumn("cw", F.col("_cum").cast("long"))
     j = (
         d.join(cum.select("event_type", "gap_s", "cw"), ["event_type", "gap_s"])

@@ -15,7 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import pin, r4
@@ -97,7 +98,7 @@ def spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
             col,
             "c",
             out="_cw",
-            small=table_rows(sf_dir, "lineitem") <= GLOBAL_WINDOW_GATE,
+            small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "lineitem"),
         )
         return cum.select(
             "l_returnflag", col,

@@ -15,7 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._helpers import pin, r4
 
@@ -185,12 +186,12 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then by b every round).  Join strategy never changes results;
     # above the gate the distributed shape is unchanged.
     # Gate size: the live set is bounded by the node count, itself
-    # bounded by |customers| + |suppliers| — two parquet-footer reads,
-    # taken once before the rounds, never a Spark job.
+    # bounded by |customers| + |suppliers| (footer reads, no Spark job).
     from .warehouse_extras4 import PR_BROADCAST_NODES
 
-    n_node_bound = sum(table_rows(sf_dir, t) for t in ("customer", "supplier"))
-    broadcast_live = n_node_bound <= PR_BROADCAST_NODES
+    broadcast_live = catalog.fits(
+        sf_dir, PR_BROADCAST_NODES, "customer", "supplier"
+    )
     lives = []
     for i in range(1, KCORE_ROUNDS + 1):
         live = pin(

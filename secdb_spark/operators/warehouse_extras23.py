@@ -15,7 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import r4
@@ -151,7 +152,7 @@ def heavy_user_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         cv, [], "c", "users", out="_cw",
         # r14 small-path opt-in (guide §1.2): cv is one row per distinct
         # activity level <= users <= events footer rows.
-        small=table_rows(sf_dir, "events") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "events"),
     )
     nu = cv.agg(F.sum("users").cast("long").alias("nu"))
     thr = (

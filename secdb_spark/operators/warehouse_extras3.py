@@ -14,7 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, bucketed_prefix_min
 from ._helpers import pin, dsum, r4, sql_dsum
@@ -117,7 +118,7 @@ def _lsh_group_pairs(spark: SparkSession, sf_dir: str):
     a pair appears iff some band key matches, n_bands is the number of
     matching bands either way."""
     groups, gk = _lsh_group_sigs(spark, sf_dir)
-    if table_rows(sf_dir, "documents") <= LSH_ALLPAIRS_DOCS:
+    if catalog.fits(sf_dir, LSH_ALLPAIRS_DOCS, "documents"):
         a = gk.select(
             F.col("gid").alias("ga"),
             *[F.col(f"bk{b}").alias(f"abk{b}") for b in range(LSH_BANDS)],
@@ -467,14 +468,13 @@ def skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer row count: below the gate, the single ordered window; above
     it, `_global_order.bucketed_prefix_min` (exclusive running min with
     no single-partition Exchange — min is idempotent, so bucket splits
-    can't change it).  Equality pinned in
-    tests/test_global_window_gates.py.  Raw parquet doubles compare
-    bit-identically in both engines; nothing here derives new floats."""
+    can't change it).  Raw parquet doubles compare bit-identically in
+    both engines; nothing here derives new floats."""
     p = table(spark, sf_dir, "part")
     pts = p.select(
         F.col("p_retailprice").alias("price"), F.col("p_size").alias("psize")
     ).distinct()
-    if table_rows(sf_dir, "part") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "part"):
         flagged = bucketed_prefix_min(
             pts, "price", ["psize"], "psize", out="prev_min"
         )

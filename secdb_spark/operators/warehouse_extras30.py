@@ -13,7 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import pin, r4
@@ -262,7 +263,7 @@ def ship_lag_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         out="_cum",
         # r14 small-path opt-in (guide §1.2): one lag row per lineitem
         # (1:1 fact-key join), lineitem footer rows bound the input.
-        small=table_rows(sf_dir, "lineitem") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "lineitem"),
     )
     tot = cum.groupBy("flag").agg(F.sum("_v").cast("long").alias("n"))
     j = cum.join(F.broadcast(tot), "flag")

@@ -15,7 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import r4
@@ -166,7 +167,7 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["g"], "s", "one", out="_cum",
         # r14 small-path opt-in (guide §1.2): one spend row per customer
         # with an order <= orders footer rows.
-        small=table_rows(sf_dir, "orders") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "orders"),
     )
     tot = cum.agg(F.sum("_v").cast("long").alias("n"))
     j = cum.crossJoin(F.broadcast(tot))

@@ -15,6 +15,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from .. import catalog
 from ..catalog import table
 from ..registry import register
 from ._helpers import he4, pin, sql_he4
@@ -741,13 +742,12 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     above, bucketed_global_rank (approx-quantile buckets, no
     single-partition Exchange) — rank semantics identical by the unique
     tie-break."""
-    from ..catalog import table_rows
     from ._global_order import GLOBAL_WINDOW_GATE, bucketed_global_rank
 
     li = table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("v"), "l_orderkey", "l_linenumber"
     )
-    if table_rows(sf_dir, "lineitem") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "lineitem"):
         ranked = bucketed_global_rank(
             li, "v", ["l_orderkey", "l_linenumber"], out="r"
         )

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import r4, sql_dsum
@@ -283,14 +284,13 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     (flag, price) (peers-included RANGE semantics BY CONSTRUCTION, one
     map-side-combinable shuffle), bucketize prices, local cumsum per
     (flag, bucket), tiny broadcast offsets — no low-cardinality funnel
-    anywhere; the crossing-point min then rides the bucketed frame.
-    Equality pinned in tests/test_global_window_gates.py."""
+    anywhere; the crossing-point min then rides the bucketed frame."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.col("l_extendedprice").alias("price"),
         F.floor(F.col("l_quantity") + 0.5).cast("long").alias("w"),
     )
-    if table_rows(sf_dir, "lineitem") > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "lineitem"):
         cum = grouped_range_prefix_sum(
             li, ["l_returnflag"], "price", "w", out="_cum"
         )

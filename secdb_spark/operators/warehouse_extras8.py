@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_range_prefix_sum
 from ._helpers import pin, r4
@@ -1065,7 +1066,7 @@ def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "price",
         "one",
         out="_cum",
-        small=table_rows(sf_dir, "lineitem") <= GLOBAL_WINDOW_GATE,
+        small=catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "lineitem"),
     )
     tot = cum.groupBy("l_returnflag").agg(
         F.sum("_v").cast("long").alias("n")

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table, table_rows
+from .. import catalog
+from ..catalog import table
 from ..registry import register
 from ._global_order import (
     GLOBAL_WINDOW_GATE,
@@ -84,11 +85,10 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     a FACT-table global window, the one case where the single-partition
     funnel hits raw data rather than an aggregate, so the gate matters
     most here.  The total row count comes from the same parquet footers
-    (exact, no extra job).  Kernel equality is pinned in
-    tests/test_global_window_gates.py."""
+    (exact, no extra job)."""
     o = table(spark, sf_dir, "orders")
-    n = table_rows(sf_dir, "orders")
-    if n > GLOBAL_WINDOW_GATE:
+    if not catalog.fits(sf_dir, GLOBAL_WINDOW_GATE, "orders"):
+        n = F.lit(catalog.table_rows(sf_dir, "orders")).cast("long")
         ranked = bucketed_global_rank(
             o.select("o_orderkey", "o_totalprice"),
             "o_totalprice",
@@ -96,10 +96,7 @@ def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
             out="_r",
         )
         return ranked.select(
-            "o_orderkey",
-            ntile_from_rank(F.col("_r"), F.lit(n).cast("long"), 4).alias(
-                "quartile"
-            ),
+            "o_orderkey", ntile_from_rank(F.col("_r"), n, 4).alias("quartile")
         )
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return o.select("o_orderkey", F.ntile(4).over(w).alias("quartile"))

@@ -2,11 +2,18 @@
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+
+def above_gates(monkeypatch):
+    """Force every size gate to its large-input branch: `catalog.fits`,
+    the one predicate each gate asks, answers False until `monkeypatch`
+    undoes it."""
+    from secdb_spark import catalog
+
+    monkeypatch.setattr(catalog, "fits", lambda *_: False)
 
 
 @pytest.fixture(scope="session")
@@ -19,10 +26,8 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    from secdb_spark.verify import duckdb_connect
+
+    con = duckdb_connect(SF_DIR)
     yield con
     con.close()

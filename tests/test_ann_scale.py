@@ -12,9 +12,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from secdb_spark.operators import llm_pipeline as lp
+from conftest import SF_DIR, above_gates
 
-SF_DIR = "/root/testdata/sf0.001"
+from secdb_spark.operators import llm_pipeline as lp
 
 
 def _topk_set(df):
@@ -87,7 +87,7 @@ def test_blocked_pairs_equals_broadcast(spark):
 def test_no_corpus_collect_above_gate(spark, monkeypatch):
     """Above BROADCAST_MAX_VECTORS the exact op must route to the bucketed
     kernel (no toPandas of the corpus)."""
-    monkeypatch.setattr(lp, "BROADCAST_MAX_VECTORS", 0)
+    above_gates(monkeypatch)
 
     def boom(self):  # any driver collect of the emb table would call this
         raise AssertionError("toPandas() called above the broadcast gate")

@@ -10,7 +10,7 @@ import pytest
 from conftest import SF_DIR
 
 from secdb_spark.registry import all_oracles, all_queries
-from tools.selfcheck import canon_rows
+from secdb_spark.verify import compare_frames
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -23,9 +23,5 @@ def test_operator(name, spark, duck):
     if name not in ORACLES:
         assert len(spdf) >= 0  # rows-only class: smoke (runs, stable schema)
         return
-    opdf = duck.execute(ORACLES[name]).fetchdf()
-    assert sorted(spdf.columns) == sorted(opdf.columns)
-    assert len(spdf) == len(opdf)
-    srows, orows = canon_rows(spdf), canon_rows(opdf)
-    mism = [(a, b) for a, b in zip(srows, orows) if a != b]
-    assert not mism, f"{len(mism)} mismatched rows; first: {mism[:2]}"
+    res = compare_frames(name, spdf, duck.execute(ORACLES[name]).fetchdf())
+    assert res.ok, res.detail

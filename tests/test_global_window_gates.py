@@ -1,12 +1,11 @@
-"""Global-window gate dispatch: dual-kernel equality pins for the five
-ops gated in round 7 (win_ntile, seq_pack, vocab_growth,
-feat_quantile_bin, skyline_2d — VERDICT r6 "What's wrong" #2), plan pins
-that the scale kernels contain no single-partition Sort/Window feed, and
-a source-level sweep that CLOSES THE CLASS: any new ungated global
-window in the operators package — a partition-less ordering or a bare
-whole-frame `Window.partitionBy()` — fails the sweep until it is either
-gated on GLOBAL_WINDOW_GATE or consciously allowlisted with a
-model-sized-input justification."""
+"""Global-window gates: plan pins that the above-gate kernels contain no
+single-partition Sort/Window feed, and a source-level sweep that CLOSES
+THE CLASS: any new ungated global window in the operators package — a
+partition-less ordering or a bare whole-frame `Window.partitionBy()` —
+fails the sweep until it is either gated on GLOBAL_WINDOW_GATE (through
+`catalog.fits`) or consciously allowlisted with a model-sized-input
+justification.  That each gated op's above-gate kernel matches its
+DuckDB oracle is pinned in tests/test_size_gates.py."""
 
 from __future__ import annotations
 
@@ -14,89 +13,12 @@ import ast
 import contextlib
 import io
 import pathlib
-import re
 
-from conftest import SF_DIR
+from conftest import SF_DIR, above_gates
 
-from secdb_spark.operators import (
-    curation_extras,
-    similarity_extras,
-    text_analysis,
-    variance_extras,
-    warehouse_extras3,
-    warehouse_extras5,
-    windows,
-)
 from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
-
-GATED = {
-    "win_ntile": windows,
-    "seq_pack": text_analysis,
-    "vocab_growth": variance_extras,
-    "feat_quantile_bin": similarity_extras,
-    "skyline_2d": warehouse_extras3,
-    # low-cardinality-partition funnel (3 return flags = 3 tasks), caught
-    # super-linear by the 16x probe — grouped_range_prefix_sum kernel
-    "agg_weighted_median": warehouse_extras5,
-    # K=8 clusters: per-cluster top-k funnel — grouped_bucketed_topk kernel
-    "embed_coreset": curation_extras,
-}
-
-
-def _canon(df):
-    pdf = df.toPandas()
-    cols = sorted(pdf.columns)
-    return pdf[cols].sort_values(cols).reset_index(drop=True)
-
-
-def _scale_kernel_equals_window_kernel(spark, monkeypatch, name, mod):
-    small = _canon(QUERIES[name](spark, SF_DIR))
-    monkeypatch.setattr(mod, "GLOBAL_WINDOW_GATE", 0)
-    scaled = _canon(QUERIES[name](spark, SF_DIR))
-    monkeypatch.undo()
-    assert small.equals(scaled), f"{name}: kernels diverge\n{small}\n{scaled}"
-
-
-def test_win_ntile_dual_kernel(spark, monkeypatch):
-    _scale_kernel_equals_window_kernel(spark, monkeypatch, "win_ntile", windows)
-
-
-def test_seq_pack_dual_kernel(spark, monkeypatch):
-    _scale_kernel_equals_window_kernel(
-        spark, monkeypatch, "seq_pack", text_analysis
-    )
-
-
-def test_vocab_growth_dual_kernel(spark, monkeypatch):
-    _scale_kernel_equals_window_kernel(
-        spark, monkeypatch, "vocab_growth", variance_extras
-    )
-
-
-def test_feat_quantile_bin_dual_kernel(spark, monkeypatch):
-    _scale_kernel_equals_window_kernel(
-        spark, monkeypatch, "feat_quantile_bin", similarity_extras
-    )
-
-
-def test_skyline_2d_dual_kernel(spark, monkeypatch):
-    _scale_kernel_equals_window_kernel(
-        spark, monkeypatch, "skyline_2d", warehouse_extras3
-    )
-
-
-def test_weighted_median_dual_kernel(spark, monkeypatch):
-    _scale_kernel_equals_window_kernel(
-        spark, monkeypatch, "agg_weighted_median", warehouse_extras5
-    )
-
-
-def test_embed_coreset_dual_kernel(spark, monkeypatch):
-    _scale_kernel_equals_window_kernel(
-        spark, monkeypatch, "embed_coreset", curation_extras
-    )
 
 
 def _single_partition_sort_parents(plan: str) -> list[str]:
@@ -112,15 +34,14 @@ def _single_partition_sort_parents(plan: str) -> list[str]:
 
 
 def test_scale_kernels_have_no_single_partition_window(spark, monkeypatch):
-    for name, mod in GATED.items():
-        monkeypatch.setattr(mod, "GLOBAL_WINDOW_GATE", 0)
+    above_gates(monkeypatch)
+    for name in sorted(func for _, func in GATED_FUNCS):
         df = QUERIES[name](spark, SF_DIR)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain()
         bad = _single_partition_sort_parents(buf.getvalue())
         assert not bad, f"{name} scale kernel has a global-window funnel: {bad}"
-        monkeypatch.undo()
 
 
 # --- source sweep: the class is closed -----------------------------------
@@ -130,10 +51,11 @@ def test_scale_kernels_have_no_single_partition_window(spark, monkeypatch):
 # `Window.partitionBy()` / `Window.partitionBy(*by)` whose `by` defaults
 # to None/empty, ordered or not (an unordered one is a whole-frame
 # aggregate, which also runs in one partition) — must be either
-# (a) inside a function that dispatches on GLOBAL_WINDOW_GATE (the
-# below-gate branch of a dual kernel), or (b) allowlisted here with a
-# model-sized-input justification.  Adding a new ungated site anywhere
-# fails this test until it is gated or consciously added below.
+# (a) inside a function that dispatches on GLOBAL_WINDOW_GATE through
+# `catalog.fits` (the below-gate branch of a dual kernel), or
+# (b) allowlisted here with a model-sized-input justification.  Adding
+# a new ungated site anywhere fails this test until it is gated or
+# consciously added below.
 
 OPS_DIR = pathlib.Path(__file__).resolve().parent.parent / "secdb_spark" / "operators"
 
@@ -176,7 +98,8 @@ MODEL_SIZED_ALLOWLIST = {
 }
 
 #: functions whose global-window use is the below-gate branch of a
-#: GLOBAL_WINDOW_GATE dual kernel (gate presence asserted below)
+#: GLOBAL_WINDOW_GATE dual kernel (gate presence asserted below); each is
+#: also a registered op, and their above-gate plans are pinned above
 GATED_FUNCS = {
     ("windows.py", "win_ntile"),
     ("text_analysis.py", "seq_pack"),
@@ -280,13 +203,26 @@ def test_allowlist_has_no_stale_entries():
     assert not stale, f"MODEL_SIZED_ALLOWLIST entries match no site: {stale}"
 
 
+def _asks_the_gate(func) -> bool:
+    return any(
+        isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "fits"
+        and isinstance(n.func.value, ast.Name)
+        and n.func.value.id == "catalog"
+        for n in ast.walk(func)
+    )
+
+
 def test_gated_funcs_actually_dispatch_on_the_gate():
-    """The gate can't be silently deleted: every dual-kernel function's
-    source must reference GLOBAL_WINDOW_GATE."""
-    for fname, func in sorted(GATED_FUNCS):
-        src = (OPS_DIR / fname).read_text()
-        m = re.search(rf"^def {func}\(.*?(?=^def |^@register|\Z)", src, re.S | re.M)
-        assert m, f"{fname}:{func} not found"
-        assert "GLOBAL_WINDOW_GATE" in m.group(0), (
-            f"{fname}:{func} lost its GLOBAL_WINDOW_GATE dispatch"
-        )
+    """The gate can't be silently deleted: every dual-kernel function
+    must call `catalog.fits`."""
+    defs = {
+        (path.name, node.name): node
+        for path in sorted(OPS_DIR.glob("*.py"))
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    for key in sorted(GATED_FUNCS):
+        assert key in defs, f"{key} not found"
+        assert _asks_the_gate(defs[key]), f"{key} lost its catalog.fits dispatch"

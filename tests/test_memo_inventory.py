@@ -23,19 +23,11 @@ MEMOS = {
         "key's entry; at most _MEMO_MAX entries, the oldest evicted and "
         "unpersisted",
     ),
-    ("catalog.py", "table_rows"): (
-        "(sf_dir, table name) via lru_cache",
-        "never within the process: a footer read, so a stale count can "
-        "change only which exact kernel a gate picks",
-    ),
-    ("catalog.py", "table_split_units"): (
-        "(sf_dir, table name) via lru_cache",
-        "never within the process: a footer read feeding the scan-spread "
-        "gates, which change speed only",
-    ),
-    ("catalog.py", "events_ts_unit"): (
-        "sf_dir via lru_cache",
-        "never within the process: events.ts's footer unit at first read",
+    ("catalog.py", "_FOOTERS"): (
+        "the table's path, sf_dir/name.parquet",
+        "hits only under the same file listing and the same (path, "
+        "st_mtime_ns, st_size) of every file it read; a miss re-reads the "
+        "footers and replaces the entry; one entry per table path",
     ),
 }
 

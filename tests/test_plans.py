@@ -13,7 +13,7 @@ import re
 
 import pytest
 
-from conftest import SF_DIR
+from conftest import SF_DIR, above_gates
 
 from secdb_spark.registry import all_queries
 
@@ -635,26 +635,20 @@ def test_ann_lsh_exact_signatures_scan_fused(spark):
     assert n_ex <= 2, f"expected only bucket-rollup exchanges, got {n_ex}"
 
 
-def test_sim_containment_joins_on_term_postings(spark):
+def test_sim_containment_joins_on_term_postings(spark, monkeypatch):
     """Below the all-pairs gate (r13): ONE deliberate broadcast
     nested-loop pass whose join condition fuses the popcount floor —
     no unfiltered cartesian row ever materializes.  Above the gate:
     candidates must form through the term equi-join (posting lists),
     never a cartesian of documents."""
-    import secdb_spark.operators.similarity_extras as se
-
     p = plan_of(spark, "sim_containment")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" in p and "bit_count" in p, (
         "gated bitmask kernel must fuse the common-terms floor into the "
         "broadcast nested-loop condition"
     )
-    old = se.CONTAIN_ALLPAIRS_DOCS
-    se.CONTAIN_ALLPAIRS_DOCS = 0
-    try:
-        p2 = plan_of(spark, "sim_containment")
-    finally:
-        se.CONTAIN_ALLPAIRS_DOCS = old
+    above_gates(monkeypatch)
+    p2 = plan_of(spark, "sim_containment")
     assert "CartesianProduct" not in p2 and "BroadcastNestedLoopJoin" not in p2
 
 

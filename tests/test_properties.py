@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import SF_DIR
+from conftest import SF_DIR, above_gates
 
 from secdb_spark.registry import all_queries
 
@@ -301,7 +301,7 @@ def test_dedup_near_mask_and_array_kernels_agree(spark, monkeypatch):
     from secdb_spark.operators import llm_pipeline as lp
 
     fast = lp.dedup_near(spark, SF_DIR)  # default: broadcast verify-first
-    monkeypatch.setattr(lp, "MASK_BROADCAST_DOCS", 0)  # force shuffle-mask
+    above_gates(monkeypatch)  # shuffle-mask
     mid = lp.dedup_near(spark, SF_DIR)
     monkeypatch.setattr(lp, "MASK_MAX_VOCAB", 0)  # force open-vocab kernel
     slow = lp.dedup_near(spark, SF_DIR)
@@ -552,7 +552,7 @@ def test_coverage_sweep_matches_bruteforce_union(spark):
 
 
 def test_jaccard_allpairs_kernel_agrees_with_prefix_path(spark):
-    """r14 all-pairs bitmask kernel (closed dictionary + n_docs hint):
+    """r14 all-pairs bitmask kernel (closed dictionary + allpairs):
     its fused-condition BNLJ must select EXACTLY the pairs the
     prefix-filtered path emits, including pairs exactly AT the
     threshold (J == 0.8 via strict-subset sets sized 4 and 5 — the
@@ -575,7 +575,7 @@ def test_jaccard_allpairs_kernel_agrees_with_prefix_path(spark):
     }
     allpairs = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in _jaccard_pairs(sdf, threshold=0.8, n_docs=len(docs)).collect()
+        for r in _jaccard_pairs(sdf, threshold=0.8, allpairs=True).collect()
     }
     assert prefix == allpairs
     assert prefix, "boundary corpus must contain J == 0.8 pairs"

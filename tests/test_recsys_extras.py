@@ -7,7 +7,7 @@ from collections import Counter, defaultdict
 
 import pytest
 
-from conftest import SF_DIR
+from conftest import SF_DIR, above_gates
 
 from secdb_spark.catalog import table
 from secdb_spark.operators.recsys_extras import (
@@ -120,23 +120,14 @@ def test_simhash_pairs_blocking_is_lossless(q, spark):
     assert len(expected) > 0, "fixture corpus must contain near-dup sigs"
 
 
-def test_lsh_eval_grouped_equals_postings_path(q, spark):
+def test_lsh_eval_grouped_equals_postings_path(q, spark, monkeypatch):
     """The r13 group-contracted bitmask kernel is an optimization, never
     a semantics change: forcing the all-pairs gate off must route
     lsh_eval through the original postings-join truth and produce the
     IDENTICAL five-column row."""
-    import secdb_spark.operators.similarity_extras as se
-    from secdb_spark.registry import all_queries
-
     fast = q("lsh_eval").iloc[0]
-    old = se.CONTAIN_ALLPAIRS_DOCS
-    se.CONTAIN_ALLPAIRS_DOCS = 0
-    try:
-        slow = (
-            all_queries()["lsh_eval"](spark, SF_DIR).toPandas().iloc[0]
-        )
-    finally:
-        se.CONTAIN_ALLPAIRS_DOCS = old
+    above_gates(monkeypatch)
+    slow = all_queries()["lsh_eval"](spark, SF_DIR).toPandas().iloc[0]
     for col in (
         "n_true",
         "n_candidates",

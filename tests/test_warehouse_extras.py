@@ -6,9 +6,8 @@ from __future__ import annotations
 import contextlib
 import io
 
-from conftest import SF_DIR
+from conftest import SF_DIR, above_gates
 
-from secdb_spark.operators import warehouse_extras
 from secdb_spark.registry import all_queries
 
 QUERIES = all_queries()
@@ -24,7 +23,7 @@ def test_rfm_scale_kernel_equals_window_kernel(spark, monkeypatch):
     """Both customer_rfm kernels are exact: the bucketed-rank + arithmetic-
     ntile scale path must reproduce the ntile-window path bit-for-bit."""
     small = _canon(QUERIES["customer_rfm"](spark, SF_DIR))
-    monkeypatch.setattr(warehouse_extras, "GLOBAL_WINDOW_GATE", 0)
+    above_gates(monkeypatch)
     scaled = _canon(QUERIES["customer_rfm"](spark, SF_DIR))
     assert small.equals(scaled)
 
@@ -34,7 +33,7 @@ def test_pareto_scale_kernel_equals_window_kernel(spark, monkeypatch):
     to the single-partition running sum, so cum_share and the A/B/C class
     breaks must match exactly."""
     small = _canon(QUERIES["part_abc_pareto"](spark, SF_DIR))
-    monkeypatch.setattr(warehouse_extras, "GLOBAL_WINDOW_GATE", 0)
+    above_gates(monkeypatch)
     scaled = _canon(QUERIES["part_abc_pareto"](spark, SF_DIR))
     assert small.equals(scaled)
 
@@ -57,7 +56,7 @@ def test_scale_kernels_have_no_single_partition_window(spark, monkeypatch):
     """The point of the scale kernels: no global-window funnel — every
     Exchange SinglePartition left in the plan is a 1-row scalar total
     (HashAggregate parent), never a Sort/Window feed."""
-    monkeypatch.setattr(warehouse_extras, "GLOBAL_WINDOW_GATE", 0)
+    above_gates(monkeypatch)
     for name in ("customer_rfm", "part_abc_pareto"):
         df = QUERIES[name](spark, SF_DIR)
         buf = io.StringIO()

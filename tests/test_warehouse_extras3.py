@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import SF_DIR
+from conftest import SF_DIR, above_gates
 
 from secdb_spark.registry import all_queries
 
@@ -145,7 +145,7 @@ def test_pmi_bigrams_ranked_and_supported(q):
     assert len(s) <= 50
 
 
-def test_lsh_group_pairs_allpairs_equals_bucket_join(spark):
+def test_lsh_group_pairs_allpairs_equals_bucket_join(spark, monkeypatch):
     """r14 all-pairs band-compare path: below LSH_ALLPAIRS_DOCS the
     banded bucket self-join is replaced by a BNLJ whose condition is
     "some band key equal" and whose n_bands is the sum of band-key
@@ -156,12 +156,8 @@ def test_lsh_group_pairs_allpairs_equals_bucket_join(spark):
     sf = "/root/testdata/sf0.001"
     _, gp_allpairs = W3._lsh_group_pairs(spark, sf)
     rows_ap = {(r.ga, r.gb, r.n_bands) for r in gp_allpairs.collect()}
-    orig = W3.LSH_ALLPAIRS_DOCS
-    W3.LSH_ALLPAIRS_DOCS = -1  # force the bucket-join path
-    try:
-        _, gp_bucket = W3._lsh_group_pairs(spark, sf)
-        rows_bk = {(r.ga, r.gb, r.n_bands) for r in gp_bucket.collect()}
-    finally:
-        W3.LSH_ALLPAIRS_DOCS = orig
+    above_gates(monkeypatch)  # the bucket-join path
+    _, gp_bucket = W3._lsh_group_pairs(spark, sf)
+    rows_bk = {(r.ga, r.gb, r.n_bands) for r in gp_bucket.collect()}
     assert rows_ap == rows_bk
     assert rows_ap, "sf0.001 corpus must produce band collisions"

@@ -20,7 +20,6 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
-sys.path.insert(0, str(ROOT / "tools"))
 
 
 def main() -> int:
@@ -28,10 +27,9 @@ def main() -> int:
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     args = ap.parse_args()
 
-    import duckdb
     from pyspark.sql import SparkSession
 
-    from selfcheck import canon_rows
+    from secdb_spark.verify import compare_frames, duckdb_connect
 
     # The vanilla session's Python workers find secdb_spark only through
     # their working directory, which they inherit from the JVM: start it
@@ -51,27 +49,17 @@ def main() -> int:
     print(f"entry(): {n_entry} rows (driver requires > 0)")
 
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = duckdb_connect(args.sf)
 
     t0 = time.time()
     fails = []
     for name in sorted(qs):
         try:
             sp = qs[name](spark, args.sf).toPandas()
-            if name in osql:
-                du = con.execute(osql[name]).fetchdf()
-                if (
-                    sorted(sp.columns) != sorted(du.columns)
-                    or len(sp) != len(du)
-                    or canon_rows(sp) != canon_rows(du)
-                ):
-                    fails.append((name, "mismatch"))
+            if name in osql and not compare_frames(
+                name, sp, con.execute(osql[name]).fetchdf()
+            ).ok:
+                fails.append((name, "mismatch"))
         except Exception as ex:  # noqa: BLE001
             fails.append((name, f"{type(ex).__name__}: {str(ex)[:140]}"))
     dt = time.time() - t0

@@ -21,12 +21,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from secdb_spark.verify import (  # noqa: E402
-    canon_cell,  # noqa: F401  (re-exported: tests import from here)
-    canon_rows,  # noqa: F401
-    compare_frames,
-    duckdb_connect,
-)
+from secdb_spark.verify import compare_frames, duckdb_connect  # noqa: E402
 
 
 def run_one(name, spark, con, sf_dir, queries, oracles, verbose=False):
