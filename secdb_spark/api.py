@@ -3228,6 +3228,16 @@ def plan_scan_census(df: DataFrame, execute: bool = False) -> DataFrame:
     re-executes its upstream down to the scans.  A pipeline that reads a
     fact table 18x instead of 1x is an 18x cost bug that is invisible in
     the API and obvious in this census.  Returns (source, n_scans)."""
+    per, n_exchanges = _scan_census(df, execute)
+    rows = [(str(k), int(v)) for k, v in sorted(per.items())]
+    rows.append(("_exchanges", n_exchanges))
+    return df.sparkSession.createDataFrame(rows, "source string, n_scans int")
+
+
+def _scan_census(df: DataFrame, execute: bool = False):
+    """(Counter of scans per source, Exchange count) of df's formatted
+    physical plan — the body of `plan_scan_census` and of the repo's plan
+    audits (`tools/plan_audit.py`, `tools/api_plan_audit.py`)."""
     import re as _re
     from collections import Counter as _Counter
 
@@ -3243,10 +3253,7 @@ def plan_scan_census(df: DataFrame, execute: bool = False) -> DataFrame:
         if len(locs) == len(scans)
         else _Counter(t[1] or f"anon_{i}" for i, t in enumerate(scans))
     )
-    n_exchanges = len(_re.findall(r"\(\d+\) Exchange", plan))
-    rows = [(str(k), int(v)) for k, v in sorted(per.items())]
-    rows.append(("_exchanges", n_exchanges))
-    return df.sparkSession.createDataFrame(rows, "source string, n_scans int")
+    return per, len(_re.findall(r"\(\d+\) Exchange", plan))
 
 
 def assert_single_scan(df: DataFrame, max_scans: int = 2,

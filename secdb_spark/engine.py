@@ -44,10 +44,11 @@ class Engine:
     ) -> None:
         self.sf_dir = sf_dir
         self.spark = apply_runtime_confs(spark) if spark else get_spark("secdb-engine")
-        register_views(self.spark, sf_dir)
 
     def sql(self, query: str) -> DataFrame:
-        """Ad-hoc SQL over the registered table views (lazy DataFrame)."""
+        """Ad-hoc SQL over this engine's table views (lazy DataFrame),
+        bound first to its own corpus by `catalog.register_views`."""
+        register_views(self.spark, self.sf_dir)
         return self.spark.sql(query)
 
     def table(self, name: str) -> DataFrame:

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..catalog import table
+from ..catalog import register_views, table
 from ..registry import register
 from ._helpers import davg, dsum, dsum_scaled, r4, sql_davg, sql_dsum, sql_dsum_scaled
 
@@ -241,12 +241,12 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets via SQL (DataFrame API has no direct form)."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
+    register_views(spark, sf_dir)
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus,
                {sql_dsum('l_extendedprice')} AS sum_price
-        FROM lineitem_gs
+        FROM lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         """
     )

@@ -20,29 +20,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import load
+from ..catalog import register_views
 from ..registry import register
 from ._helpers import sql_dsum
-
-_VIEW_TAG = "sqlsurface"
-
-
-def _views(spark: SparkSession, sf_dir: str) -> None:
-    """Register the catalog as temp views (idempotent per session+sf)."""
-    key = f"{_VIEW_TAG}:{sf_dir}"
-    if getattr(spark, "_secdb_views", None) == key:
-        return
-    for name, df in load(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    spark._secdb_views = key  # type: ignore[attr-defined]
-
 
 def _sql_op(name: str, spark_sql: str, oracle: str | None = None):
     """Register an op whose implementation is literally spark.sql(text)."""
 
     @register(name, oracle=oracle if oracle is not None else spark_sql)
     def run(spark: SparkSession, sf_dir: str, _q=spark_sql) -> DataFrame:
-        _views(spark, sf_dir)
+        register_views(spark, sf_dir)
         return spark.sql(_q)
 
     run.__name__ = name

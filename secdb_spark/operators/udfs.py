@@ -17,7 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..catalog import table
+from ..catalog import register_views, table
 from ..registry import register
 
 
@@ -155,9 +155,9 @@ def udtf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (tok,)
 
     spark.udtf.register("secdb_tokenize", Tokenize)
-    table(spark, sf_dir, "documents").createOrReplaceTempView("documents_udtf")
+    register_views(spark, sf_dir)
     return spark.sql(
-        "SELECT doc_id, t.tok FROM documents_udtf, LATERAL secdb_tokenize(text) t"
+        "SELECT doc_id, t.tok FROM documents, LATERAL secdb_tokenize(text) t"
     )
 
 

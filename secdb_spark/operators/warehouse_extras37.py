@@ -14,12 +14,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table
+from ..catalog import register_views, table
 from ..registry import register
 from ..session import memo
 from ._helpers import he4, pin, sql_he4
 from .llm_pipeline import N_BANDS, N_MINHASH, _dn_sig_sql, _tokens
-from .sql_surface import _views
 
 DEC12 = "decimal(38,12)"
 DEC18 = "decimal(38,18)"
@@ -708,7 +707,7 @@ def sql_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: Catalyst decorrelates the lateral into a ranked window over
     a hash join on the correlation key — no per-row re-execution; the
     plan is the same top-k-per-group shape as win_topk_group."""
-    _views(spark, sf_dir)
+    register_views(spark, sf_dir)
     return spark.sql(_LATERAL_SQL)
 
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..catalog import table
+from ..catalog import register_views, table
 from ..registry import register
 from ._helpers import pin, dsum_scaled, sql_dsum_scaled
 from .warehouse_extras2 import MINHASH_SEEDS
@@ -1157,7 +1157,7 @@ def sql_qualify(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite (window in a derived table, WHERE on the rank).  Catalyst
     plans both the same way a QUALIFY would: one Exchange on the
     partition key, rank, filter.  Tie-safe via (cents DESC, orderkey)."""
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT o_custkey, o_orderkey, cents FROM (
@@ -1195,7 +1195,7 @@ def sql_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: UNPIVOT is a map-side expression (3x row fan-out, no
     shuffle); the aggregate map-side-combines into 3 groups."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT measure, CAST(count(*) AS BIGINT) AS n,
@@ -1230,7 +1230,7 @@ def sql_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one hash aggregate, all filters evaluated per-row
     map-side — the single-scan replacement for N filtered subqueries."""
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT l_returnflag,

@@ -23,7 +23,7 @@ from .pydaemon import stamp
 # (the verify driver passes us its own SparkSession).
 RUNTIME_CONFS = {
     # events.parquet stores TIMESTAMP(NANOS); Spark 4.x refuses it unless
-    # read as raw int64 nanos (SURVEY §1.3). catalog.load converts to
+    # read as raw int64 nanos (SURVEY §1.3). catalog.table converts to
     # timestamp_micros exactly via integer `div 1000`.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow transfer for pandas_udf / applyInPandas / mapInPandas paths.
@@ -141,15 +141,6 @@ def get_spark(app_name: str = "secdb_spark", shuffle_partitions: int | None = No
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Input-split sizing knob. Measured A/B at sf0.1 (3 bench runs per
-        # setting): 2 MB splits speed the flagship agg ~40% in isolation
-        # (3 tasks -> ~6 on an 11 MB file) but LOSE overall (median 2.70 s
-        # vs 2.54 s) — extra map tasks tax every shuffle/window query. The
-        # default stays; the env knob remains for bigger local corpora.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
         # saveAsTable targets (bucketed tables, layout tests) land in the
         # scratch root, not the repo working dir (static conf — builder-time
         # only)

@@ -3,8 +3,9 @@ is keyed on and what invalidates it.  A memo holds state across calls, so
 any harness that warms up and then times a call measures the memo's hit,
 not the op's work; the list keeps that state visible.  The AST scan
 fails on an unlisted memo — a module-level empty container that a
-function stores into, or an `lru_cache` / `functools.cache` — and on a
-listed entry that no longer exists."""
+function stores into, an `lru_cache` / `functools.cache`, or an
+attribute that a module-level function stores on an object it receives
+(`spark._mark = key`) — and on a listed entry that no longer exists."""
 
 from __future__ import annotations
 
@@ -17,7 +18,8 @@ PKG = Path(__file__).resolve().parents[1] / "secdb_spark"
 MEMOS = {
     ("session.py", "_MEMO"): (
         "a caller's key: (\"cosupply\", abspath(sf_dir), SECDB_SPARK_NO_PIN), "
-        "(\"vocab\", abspath(sf_dir), MASK_MAX_VOCAB), (\"xbrl_facts\",)",
+        "(\"vocab\", abspath(sf_dir), MASK_MAX_VOCAB), (\"xbrl_facts\",), "
+        "(\"views\", the SparkSession's sessionUUID)",
         "hits only under the same applicationId and the same (path, "
         "st_mtime_ns, st_size) of every input file; a miss replaces the "
         "key's entry; at most _MEMO_MAX entries, the oldest evicted and "
@@ -28,6 +30,12 @@ MEMOS = {
         "hits only under the same file listing and the same (path, "
         "st_mtime_ns, st_size) of every file it read; a miss re-reads the "
         "footers and replaces the entry; one entry per table path",
+    ),
+    ("pydaemon.py", "_secdb_stamp"): (
+        "one per zipimporter, on the importer: the (st_mtime_ns, st_size) "
+        "of its archive",
+        "the archive's index is re-read when its stamp differs from the "
+        "stored one or the archive cannot be stat'ed",
     ),
 }
 
@@ -82,6 +90,25 @@ def _stored_into(func) -> set[str]:
     return names
 
 
+def _attrs_stored_on_params(func) -> set[str]:
+    """Attributes a function stores on one of its own parameters."""
+    a = func.args
+    params = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+    names = set()
+    for node in ast.walk(func):
+        if (isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Store)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in params):
+            names.add(node.attr)
+        elif (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+              and node.func.id == "setattr" and len(node.args) > 1
+              and isinstance(node.args[0], ast.Name)
+              and node.args[0].id in params
+              and isinstance(node.args[1], ast.Constant)):
+            names.add(node.args[1].value)
+    return names
+
+
 def _is_cache_decorator(dec) -> bool:
     target = dec.func if isinstance(dec, ast.Call) else dec
     name = target.id if isinstance(target, ast.Name) else getattr(target, "attr", None)
@@ -94,11 +121,16 @@ def _scan() -> set[tuple[str, str]]:
         rel = path.relative_to(PKG).as_posix()
         tree = ast.parse(path.read_text())
         containers = _module_containers(tree)
+        # a method's stores on `self` are the object's own state
+        methods = {id(f) for c in ast.walk(tree) if isinstance(c, ast.ClassDef)
+                   for f in c.body}
         for node in ast.walk(tree):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 found |= {(rel, n) for n in _stored_into(node) & containers}
                 if any(_is_cache_decorator(d) for d in node.decorator_list):
                     found.add((rel, node.name))
+                if id(node) not in methods:
+                    found |= {(rel, n) for n in _attrs_stored_on_params(node)}
     return found
 
 

@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from tools.plan_audit import audit_df  # noqa: E402
-
 # api functions allowed to scan one fixture >= FLAG_AT times, with the
 # reason the multi-pass is the design.  Keep justified — this list is
 # the audit's contract, mirroring plan_audit.ALLOWED_MULTISCAN.
@@ -761,7 +759,7 @@ def run_sweep(spark, only=None, flag_at: int = 3, verbose: bool = True):
         # unchanged.
         def one(name):
             try:
-                per_path, exchanges = audit_df(catalog[name]())
+                per_path, exchanges = api._scan_census(catalog[name]())
             except Exception as exc:  # noqa: BLE001
                 return name, None, str(exc).splitlines()[0][:120]
             return name, (dict(per_path), exchanges), None

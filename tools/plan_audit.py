@@ -25,12 +25,12 @@ Exit code 0 iff no op (outside the documented allowlist) reaches
 from __future__ import annotations
 
 import argparse
-import re
 import sys
-from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+from secdb_spark.api import _scan_census as audit_df  # noqa: E402
 
 # Ops allowed to scan one table >= FLAG_AT times, each with the reason the
 # multi-pass is the DESIGN rather than a Catalyst recompute accident.
@@ -43,36 +43,6 @@ ALLOWED_MULTISCAN: dict[str, str] = {
     "sql_tpch_q18": "canonical TPC-H text: IN-subquery re-scans lineitem",
     "sql_tpch_q21": "canonical TPC-H text: EXISTS/NOT EXISTS re-scan l2/l3",
 }
-
-SCAN_RE = re.compile(r"Scan (?:parquet|csv|json|text)[^\n]*?\[[^\]]*\]\s")
-# file path appears in the plan detail section as Location: ...[path]
-LOC_RE = re.compile(r"Location: \S+ \[([^\]]*)\]")
-
-
-def audit_df(df, execute=False):
-    """Scan/exchange census of ONE DataFrame's physical plan — the unit
-    both sweeps share (registry ops here; api.* functions in
-    api_plan_audit.py)."""
-    if execute:
-        # Materialize through the noop sink, then read the FINAL adaptive
-        # plan: under AQE, exchange/stage reuse only shows after
-        # execution, so the static count overstates ops whose duplicate
-        # subtrees DO collapse at runtime.  Post-exec scans are the real
-        # scan bill.
-        df.write.mode("overwrite").format("noop").save()
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-    # formatted mode prints one "(N) Scan parquet <table>" line per scan
-    # node in the tree plus a detail block holding its Location.
-    scans = re.findall(r"\(\d+\) Scan (parquet|csv|json|text) ?(\S*)", plan)
-    locs = LOC_RE.findall(plan)
-    per_path = Counter(locs) if len(locs) == len(scans) else Counter(
-        t[1] or f"anon_{i}" for i, t in enumerate(scans)
-    )
-    exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
-    return per_path, exchanges
-
 
 def audit_one(name, fn, spark, sf_dir, execute=False):
     return audit_df(fn(spark, sf_dir), execute=execute)
