@@ -79,7 +79,7 @@ def _settle_host() -> dict:
 
 def main() -> None:
     from secdb_spark.registry import all_queries
-    from secdb_spark.session import clear_memos, get_spark
+    from secdb_spark.session import clear_memos, codegen_compiles, get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -104,6 +104,7 @@ def main() -> None:
 
     results: dict[str, float] = {}
     cold: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     for label, op in HEADLINE.items():
         if op not in queries:
             continue
@@ -126,11 +127,13 @@ def main() -> None:
         # median of 3 keeps total bench wall-clock bounded
         n_runs = 3 if warm > 5.0 else 5
         times = []
+        c0 = codegen_compiles(spark)
         for _ in range(n_runs):
             t0 = time.time()
             run()
             times.append(time.time() - t0)
         results[label] = round(sorted(times)[n_runs // 2], 4)
+        compiles[label] = codegen_compiles(spark) - c0
 
     total = round(sum(results.values()), 4)
     print(
@@ -155,6 +158,12 @@ def main() -> None:
                 # each family's untimed first run, from an empty memo:
                 # what a cold call costs, beside the warm medians above
                 "cold": cold,
+                # generated classes compiled during each family's timed
+                # runs: nonzero means Spark's generated-code cache missed.
+                # The runs repeat one family back to back, so they cannot
+                # show a class evicted by other families' classes between
+                # two calls; an interleaved mix (perfbench) can.
+                "codegen_compiles": compiles,
             }
         )
     )

@@ -77,6 +77,17 @@ _MEMO: dict = {}
 _MEMO_MAX = 4
 
 
+def _app_id(sc) -> str:
+    """``sc.applicationId``, read over py4j once per SparkContext and
+    kept on it: the id is fixed for the context's life, and each read
+    costs two py4j round trips (0.10-0.13 ms on a 4-vCPU host)."""
+    try:
+        return sc._secdb_app_id
+    except AttributeError:
+        sc._secdb_app_id = sc.applicationId
+        return sc._secdb_app_id
+
+
 def _release(value) -> None:
     """Unpersist a DataFrame that leaves the store.  This frees a cached
     frame's blocks; a localCheckpoint's blocks stay readable by callers
@@ -98,7 +109,7 @@ def memo(spark: SparkSession, key: tuple, inputs, build):
     store holds at most ``_MEMO_MAX`` entries, the oldest evicted first;
     a DataFrame that leaves it is unpersisted."""
     state = (
-        spark.sparkContext.applicationId,
+        _app_id(spark.sparkContext),
         tuple((p, stamp(p)) for p in inputs),
     )
     entry = _MEMO.get(key)
@@ -120,6 +131,15 @@ def clear_memos() -> None:
         _release(_MEMO.popitem()[1][1])
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes compiled by Janino in this JVM so far: the count
+    of Spark's ``CodegenMetrics.METRIC_COMPILATION_TIME``.  A difference
+    across a call is the classes the call missed in Spark's generated-code
+    cache (see `get_spark`)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply required dynamic configs to an existing session (driver-owned)."""
     for k, v in RUNTIME_CONFS.items():
@@ -139,6 +159,16 @@ def get_spark(app_name: str = "secdb_spark", shuffle_partitions: int | None = No
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Spark compiles each whole-stage-codegen class once and keeps it in
+        # an LRU of this many entries (default 100, static conf).  One
+        # perfbench pass needs about 145 classes on registry_mix and 103 on
+        # headline, and its calls interleave, so at 100 every timed pass
+        # recompiled 94-105 and 45-62 of them.  Both workloads and both
+        # sinks in one session use 250 classes; at 2000 a repeated pass
+        # compiles none.  The bigger bound cost no memory: that session
+        # ended with 169 MB of Metaspace and 78 MB of code heap, against
+        # 174 / 84 MB at 100 (4 vCPU, SCALE.md §84).
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # saveAsTable targets (bucketed tables, layout tests) land in the

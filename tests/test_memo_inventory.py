@@ -25,6 +25,11 @@ MEMOS = {
         "key's entry; at most _MEMO_MAX entries, the oldest evicted and "
         "unpersisted",
     ),
+    ("session.py", "_secdb_app_id"): (
+        "one per SparkContext, on the context: its applicationId",
+        "none needed: the id is fixed for the context's life, and a new "
+        "context is a new object, which reads its own id",
+    ),
     ("catalog.py", "_FOOTERS"): (
         "the table's path, sf_dir/name.parquet",
         "hits only under the same file listing and the same (path, "

@@ -45,6 +45,38 @@ def test_memo_hits_until_an_input_or_the_application_changes(tmp_path):
     assert not session._MEMO
 
 
+class _Context:
+    """Stands in for a SparkContext: counts its applicationId reads."""
+
+    def __init__(self, app_id: str):
+        self.app_id, self.reads = app_id, 0
+
+    @property
+    def applicationId(self):
+        self.reads += 1
+        return self.app_id
+
+
+def test_memo_reads_the_application_id_once_per_context():
+    session.clear_memos()
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    ctx = _Context("a1")
+    spark = SimpleNamespace(sparkContext=ctx)
+    v = session.memo(spark, ("k",), [], build)
+    for _ in range(3):
+        assert session.memo(spark, ("k",), [], build) is v
+    assert ctx.reads == 1  # hits under the same context make no read
+    fresh = _Context("a2")  # a new context misses
+    assert session.memo(SimpleNamespace(sparkContext=fresh), ("k",), [], build) is not v
+    assert fresh.reads == 1 and len(calls) == 2
+    session.clear_memos()
+
+
 def _suffix_tokens(path) -> None:
     """Rewrite documents.parquet in place with every token suffixed, so
     the corpus's dictionary changes and its row count does not."""

@@ -1,6 +1,7 @@
 """Standalone per-op A/B timer: build (plan construction + eager pins)
 and exec (noop sink) split, N warm repetitions after one discarded
-warm-up, one op per line.  The round-14 measurement harness — sweep
+warm-up, one op per line, with the generated classes compiled in the
+cold run and in the warm runs.  The round-14 measurement harness — sweep
 rankings lie under contention (r13 memory note), so every optimization
 decision this round is made from THIS tool's numbers on an idle host.
 
@@ -17,15 +18,20 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float, float]:
-    """(build_s, exec_s, cold_s) of `fn(spark, sf_dir)` to the noop sink:
-    n + 1 runs.  The first runs from an empty `session.memo` and pays
-    file listing and codegen; its total is cold_s, and build_s / exec_s
-    are the best of the rest by total."""
-    from secdb_spark.session import clear_memos
+def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float, float, int, int]:
+    """(build_s, exec_s, cold_s, cold_compiles, warm_compiles) of
+    `fn(spark, sf_dir)` to the noop sink: n + 1 runs.  The first runs from
+    an empty `session.memo` and pays file listing and codegen; its total
+    is cold_s, and build_s / exec_s are the best of the rest by total.
+    The compiles are generated classes Janino compiled during the cold
+    run and during all warm runs together.  Warm runs repeated back to
+    back cannot show a class evicted by other ops' classes between two
+    calls of this op: only an interleaved mix (perfbench) can."""
+    from secdb_spark.session import clear_memos, codegen_compiles
 
     clear_memos()
     best = cold = None
+    c0 = codegen_compiles(spark)
     for i in range(n + 1):
         t0 = time.time()
         df = fn(spark, sf_dir)
@@ -34,11 +40,12 @@ def time_op(spark, fn, sf_dir: str, n: int) -> tuple[float, float, float]:
         t2 = time.time()
         if i == 0:
             cold = t2 - t0
+            c1 = codegen_compiles(spark)
             continue
         cur = (t1 - t0, t2 - t1)
         if best is None or sum(cur) < sum(best):
             best = cur
-    return (*best, cold)
+    return (*best, cold, c1 - c0, codegen_compiles(spark) - c1)
 
 
 def main() -> int:
@@ -60,10 +67,13 @@ def main() -> int:
 
     for op in args.ops:
         spark.sparkContext.setJobDescription(f"op_ab: {op}")
-        build, exec_, cold = time_op(spark, queries[op], args.sf, args.n)
+        build, exec_, cold, cold_cg, warm_cg = time_op(
+            spark, queries[op], args.sf, args.n
+        )
         print(
             f"{op:36s} build {build:7.2f}  exec {exec_:7.2f}  "
-            f"total {build + exec_:7.2f}  cold {cold:7.2f}",
+            f"total {build + exec_:7.2f}  cold {cold:7.2f}  "
+            f"compiles cold {cold_cg:4d} warm {warm_cg:4d}",
             flush=True,
         )
         spark.sparkContext.setJobDescription(None)

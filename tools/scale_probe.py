@@ -153,8 +153,8 @@ def main() -> None:
         print("| --- | --- | --- | --- | --- | --- | --- | --- |", flush=True)
         for op in ops:
             try:
-                b1, e1, c1 = time_op(spark, queries[op], DEFAULT_SF_DIR, 2)
-                bn, en, cn = time_op(spark, queries[op], out, 2)
+                b1, e1, c1, *_ = time_op(spark, queries[op], DEFAULT_SF_DIR, 2)
+                bn, en, cn, *_ = time_op(spark, queries[op], out, 2)
             except Exception as exc:  # one failed op must not lose the table
                 print(f"| {op} | did not finish: {type(exc).__name__} "
                       "| | | | | | |", flush=True)
