@@ -52,7 +52,7 @@ from .registry import _load_operators
 # imported first.
 _load_operators()
 
-from .operators._helpers import he4, pin  # noqa: E402
+from .operators._helpers import he4, pin, require_integral_id  # noqa: E402
 
 from .operators._global_order import (  # noqa: E402
     bucketed_global_rank,
@@ -63,9 +63,21 @@ from .operators._global_order import (  # noqa: E402
 
 # Shared kernels: one body each, beside the registry op bound to it.
 from .operators.aggregations import histogram  # noqa: E402
+from .operators.curation_extras import (  # noqa: E402
+    hapax_by_group,
+    matryoshka_report,
+)
+from .operators.econ_extras import novelty_score  # noqa: E402
+from .operators.embed_extras import embedding_dim_stats  # noqa: E402
 from .operators.ivm_extras import topk_ties  # noqa: E402
-from .operators.llm_pipeline import exact_dup_clusters  # noqa: E402
+from .operators.llm_pipeline import ann_topk, exact_dup_clusters  # noqa: E402
+from .operators.pipeline_extras import bm25_scores, kmeans_assign  # noqa: E402
+from .operators.sketch_extras import (  # noqa: E402
+    bottomk_sample,
+    hash_features,
+)
 from .operators.stats_extras2 import welch_ttest  # noqa: E402
+from .operators.text_analysis import chunk_text, token_stats  # noqa: E402
 from .operators.timeseries import (  # noqa: E402
     funnel,
     retention_cohorts,
@@ -76,25 +88,43 @@ from .operators.timeseries import (  # noqa: E402
 )
 from .operators.warehouse_extras import (  # noqa: E402
     last_touch,
+    path_topk,
     rolling_active,
     running_distinct,
     window_conversion,
 )
-from .operators.warehouse_extras2 import linfit, streaks  # noqa: E402
-from .operators.warehouse_extras3 import skew_kurt  # noqa: E402
+from .operators.warehouse_extras2 import (  # noqa: E402
+    benford,
+    linfit,
+    ohlc,
+    streaks,
+    tfidf,
+)
+from .operators.warehouse_extras3 import (  # noqa: E402
+    dow_hour_heatmap,
+    skew_kurt,
+)
 from .operators.warehouse_extras4 import (  # noqa: E402
     burst_detect,
     drawdown,
     gini,
     hhi,
+    lexical_diversity,
+    repetition_score,
+    skew_report,
+    token_entropy,
     vwap,
 )
-from .operators.warehouse_extras6 import autocorr  # noqa: E402
+from .operators.warehouse_extras6 import (  # noqa: E402
+    autocorr,
+    embedding_norms,
+)
 from .operators.warehouse_extras7 import (  # noqa: E402
     cumulative_entities,
     fill_forward,
     moving_median,
     reset_cumsum,
+    zipf_slope,
 )
 from .operators.warehouse_extras8 import (  # noqa: E402
     bounce_rate,
@@ -106,42 +136,41 @@ from .operators.warehouse_extras8 import (  # noqa: E402
     trend_slope,
 )
 from .operators.warehouse_extras9 import cusum, gap_hist  # noqa: E402
+from .operators.warehouse_extras10 import stickiness  # noqa: E402
 from .operators.warehouse_extras13 import theil  # noqa: E402
 from .operators.warehouse_extras36 import (  # noqa: E402
     binom_test,
+    boilerplate_sentences,
+    bpe_merge_candidates,
+    char_trigram_score,
     fisher_exact,
 )
 from .operators.warehouse_extras37 import (  # noqa: E402
     ar1_fit,
     kendall_tau,
     mode_exact,
+    retention_matrix,
 )
 from .operators.warehouse_extras38 import (  # noqa: E402
     drawdown_duration,
     ols_forecast,
+    tfidf_topk,
+    token_source_mi,
     weighted_percentiles,
+    weighted_sample,
 )
 from .operators.warehouse_extras39 import (  # noqa: E402
     adf_stat,
     bartlett,
     jarque_bera,
 )
+from .operators.warehouse_extras40 import (  # noqa: E402
+    chunk_sliding,
+    dup_ngram_share,
+    script_mix,
+)
 from .operators.windows import ewma  # noqa: E402
 
-
-def _require_integral_id(df: DataFrame, id_col: str, fn_name: str) -> None:
-    """Vector-kernel ids must be integral: the Arrow kernel schemas carry
-    bigint ids, and a silent cast('long') would turn string/UUID ids into
-    NULLs — breaking results AND the self-match exclusion."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    id_type = df.schema[id_col].dataType
-    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
-        raise TypeError(
-            f"{fn_name}: id column '{id_col}' must be integral "
-            f"(got {id_type.simpleString()}); map string/UUID ids to a "
-            "surrogate long first"
-        )
 
 __all__ = [
     "normalize_text",
@@ -747,49 +776,6 @@ def quality_flags(df: DataFrame, text_col: str, min_toks: int = 20,
 # --- events ----------------------------------------------------------------
 
 
-def chunk_text(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    width: int = 32,
-    stride: int = 24,
-) -> DataFrame:
-    """Sliding-window token chunking on ANY (id, text) table
-    (text_chunk's algebra with width/stride parameterized) — the step
-    between a raw corpus and an embedding index in a RAG pipeline.
-    Returns (id_col, chunk_id, chunk, n_toks); windows overlap by
-    width - stride tokens so no boundary context is lost.
-
-    Scale shape: chunk starts come from sequence + slice + posexplode
-    entirely inside codegen — a map-only stage, ZERO shuffles, fused
-    into the scan; slice() shares the one token array instead of
-    re-materializing the document per window."""
-    if width < 1 or stride < 1:
-        raise ValueError("width and stride must be >= 1")
-    toks = F.split(F.col(text_col), " ")
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(stride)
-    )
-    chunks = F.transform(
-        starts, lambda i: F.array_join(F.slice(toks, i, width), " ")
-    )
-    lens = F.transform(
-        starts,
-        lambda i: F.least(F.lit(width), F.size(toks) - i + 1).cast("bigint"),
-    )
-    return df.select(
-        id_col,
-        F.posexplode(F.arrays_zip(chunks.alias("c"), lens.alias("n"))).alias(
-            "chunk_id", "z"
-        ),
-    ).select(
-        id_col,
-        F.col("chunk_id").cast("bigint").alias("chunk_id"),
-        F.col("z.c").alias("chunk"),
-        F.col("z.n").alias("n_toks"),
-    )
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -939,7 +925,7 @@ def cosine_topk(
     string/UUID ids to a surrogate long first."""
     from .operators.llm_pipeline import N_CENTROIDS, _topk_bucketed
 
-    _require_integral_id(emb, id_col, "cosine_topk")
+    require_integral_id(emb, id_col, "cosine_topk")
     renamed = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("e"),
@@ -1031,130 +1017,6 @@ def normalize_vectors(
         norm > 0, F.transform(F.col(vec_col), lambda x: x / norm)
     )
     return df.withColumn("l2_norm", norm).withColumn(out_col, unit)
-
-
-def ann_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_bits: int = 8,
-    seed: int = 20240813,
-) -> DataFrame:
-    """Approximate cosine top-k on ANY (id, embedding) table (ann_lsh's
-    algebra with k / bits / seed parameterized): each vector buckets by
-    the sign pattern of `n_bits` seeded random-hyperplane projections
-    (SimHash for cosine), queries multiprobe their own bucket plus every
-    Hamming-1 neighbor, and each bucket's candidates are scanned only by
-    the queries probing it.  Returns (query_id, neighbor_id, sim).
-    Data-independent (no centroid build) — use cosine_topk for the exact
-    answer when the corpus is small enough.
-
-    Scale shape: the hyperplane matrix is regenerated identically in
-    every task from the seed (O(bits x dim) constants, nothing collected
-    or broadcast); candidates hash-partition by bucket, so each query
-    scans ~ (1 + n_bits) / 2^n_bits of the corpus instead of all of
-    it."""
-    if k < 1 or not 1 <= n_bits <= 24:
-        raise ValueError("k must be >= 1 and n_bits in [1, 24]")
-    _require_integral_id(df, id_col, "ann_topk")
-    import pandas as pd  # noqa: F401 — mapInPandas batches
-
-    from collections.abc import Iterator
-
-    emb = df.select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("e"),
-    )
-    assign_schema = "bucket int, vec_id long, e array<double>"
-
-    def code_of(Qn, planes):
-        import numpy as np
-
-        bits = (Qn @ planes.T) >= 0.0
-        return (bits @ (1 << np.arange(n_bits))).astype("int32")
-
-    def assign(batches: "Iterator") -> "Iterator":
-        import numpy as np
-
-        for b in batches:
-            if b.empty:
-                continue
-            planes = np.random.RandomState(seed).standard_normal(
-                (n_bits, len(b["e"].iloc[0]))
-            )
-            Q = np.stack(b["e"].to_numpy())
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {"bucket": code_of(Qn, planes), "vec_id": b["vec_id"],
-                 "e": list(Qn)}
-            )
-
-    def probe_fn(batches: "Iterator") -> "Iterator":
-        import numpy as np
-
-        for b in batches:
-            if b.empty:
-                continue
-            planes = np.random.RandomState(seed).standard_normal(
-                (n_bits, len(b["e"].iloc[0]))
-            )
-            Q = np.stack(b["e"].to_numpy())
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-            own = code_of(Qn, planes)
-            out_b, out_id, out_e = [], [], []
-            for r in range(len(own)):
-                for bk in [int(own[r])] + [
-                    int(own[r]) ^ (1 << j) for j in range(n_bits)
-                ]:
-                    out_b.append(bk)
-                    out_id.append(b["vec_id"].iloc[r])
-                    out_e.append(Qn[r])
-            yield pd.DataFrame(
-                {"bucket": out_b, "vec_id": out_id, "e": out_e}
-            )
-
-    cand = emb.mapInPandas(assign, assign_schema)
-    probes = emb.mapInPandas(probe_fn, assign_schema)
-
-    def bucket_topk(cands, queries):
-        import numpy as np
-
-        if cands.empty or queries.empty:
-            return pd.DataFrame(
-                columns=["query_id", "neighbor_id", "sim"]
-            ).astype({"query_id": "int64", "neighbor_id": "int64",
-                      "sim": "float64"})
-        C = np.stack(cands["e"].to_numpy())
-        c_ids = cands["vec_id"].to_numpy()
-        Q = np.stack(queries["e"].to_numpy())
-        q_ids = queries["vec_id"].to_numpy()
-        S = np.round(Q @ C.T, 6)
-        out = []
-        for r in range(S.shape[0]):
-            s = S[r].copy()
-            s[c_ids == q_ids[r]] = -np.inf
-            for j in np.lexsort((c_ids, -s))[:k]:
-                if s[j] == -np.inf:
-                    continue
-                out.append((int(q_ids[r]), int(c_ids[j]), float(s[j])))
-        return pd.DataFrame(out, columns=["query_id", "neighbor_id", "sim"])
-
-    per_bucket = (
-        cand.groupby("bucket")
-        .cogroup(probes.groupby("bucket"))
-        .applyInPandas(
-            bucket_topk, "query_id long, neighbor_id long, sim double"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        per_bucket.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 def percentile_disc(
@@ -1511,57 +1373,6 @@ def simhash_near_dups(
     )
 
 
-def bm25_scores(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """BM25 score of every document against `query_terms` on ANY
-    (id, text) table — text_bm25's certified algebra: one tokenize pass
-    feeds per-doc lengths (pinned: corpus stats + the score join read
-    it) and the query-filtered tf (pinned: df + the score join); idf
-    and corpus stats broadcast.  Returns (id_col, bm25) for documents
-    matching >= 1 query term."""
-    if not query_terms:
-        raise ValueError("bm25_scores: query_terms must be non-empty")
-    toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok"),
-    )
-    dl = pin(toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl")))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = pin(
-        toks.filter(F.col("tok").isin(*query_terms))
-        .groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    score = (
-        idf
-        * F.col("tf")
-        * (k1 + 1.0)
-        / (
-            F.col("tf")
-            + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-        )
-    )
-    return (
-        tf.join(F.broadcast(dfreq), "tok")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-        .groupBy(id_col)
-        .agg(F.round(F.sum(score), 4).alias("bm25"))
-    )
-
-
 def stratified_sample(
     df: DataFrame,
     strata_cols: list[str],
@@ -1629,29 +1440,6 @@ def decontaminate(
         .join(eval_grams, "_g")
         .groupBy(id_col)
         .agg(F.count_distinct("_g").cast("bigint").alias("n_shared_grams"))
-    )
-
-
-def token_stats(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Token cost accounting on ANY (id, text) table (text_tokens_bpe's
-    algebra): BPE-ish regex segmentation (letter / digit / punctuation
-    runs), whitespace split, and the chars/4 estimator — the standard
-    trio for sizing a training corpus.  Map-only scan, zero shuffles,
-    no UDF.  Returns (id_col, n_bpe_tokens, n_ws_tokens, n_est_tokens)."""
-    from .operators.text_analysis import BPE_ISH_PATTERN
-
-    pat = BPE_ISH_PATTERN.replace(chr(92), chr(92) * 2)
-    return df.select(
-        id_col,
-        F.size(
-            F.expr(f"regexp_extract_all({text_col}, '{pat}', 0)")
-        ).alias("n_bpe_tokens"),
-        F.size(F.split(text_col, " ")).alias("n_ws_tokens"),
-        F.ceil(F.length(text_col) / 4.0).alias("n_est_tokens"),
     )
 
 
@@ -2377,112 +2165,6 @@ def jaccard_neighbors(
     )
 
 
-def char_trigram_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Per-document average log-probability under the corpus char-trigram
-    MLE model on ANY (id, text) table (text_char_trigram_lm's algebra) —
-    the cheap LM quality / language-fit score.  Integer micro-nat
-    quantization; the model is vocabulary-bounded, pinned, broadcast.
-    Returns (id_col, n_trigrams, avg_logp)."""
-    d = df.filter(F.length(text_col) >= 3)
-    tris = d.select(
-        F.col(id_col).alias("_id"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length(text_col) - 2),
-                lambda i: F.col(text_col).substr(i, F.lit(3)),
-            )
-        ).alias("_tri"),
-    )
-    model = pin(
-        tris.groupBy("_tri").agg(F.count(F.lit(1)).cast("long").alias("_c"))
-    )
-    total = model.agg(F.sum("_c").cast("long").alias("_total"))
-    model_t = model.crossJoin(F.broadcast(total))
-    scored = tris.join(F.broadcast(model_t), "_tri").select(
-        "_id",
-        F.floor(
-            F.ln(F.col("_c").cast("double") / F.col("_total")) * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("_lp6"),
-    )
-    return scored.groupBy("_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_trigrams"),
-        he4(
-            F.sum("_lp6").cast("double") / 1000000 / F.count(F.lit(1))
-        ).alias("avg_logp"),
-    ).withColumnRenamed("_id", id_col)
-
-
-def bpe_merge_candidates(
-    df: DataFrame,
-    text_col: str,
-    k: int = 50,
-) -> DataFrame:
-    """Top-k adjacent character-pair merge candidates across ANY text
-    column (bpe_merge_topk's algebra with k parameterized) — one round
-    of distributed BPE training.  Returns (pair, n_pair, rn), tie-safe
-    (count desc, pair asc)."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    words = df.select(
-        F.explode(F.split(text_col, " ")).alias("_w")
-    ).filter(F.length("_w") >= 2)
-    pairs = words.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("_w") - 1),
-                lambda i: F.col("_w").substr(i, F.lit(2)),
-            )
-        ).alias("pair")
-    )
-    counted = pairs.groupBy("pair").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pair")
-    )
-    top = counted.orderBy(F.col("n_pair").desc(), F.col("pair")).limit(k)
-    w = Window.orderBy(F.col("n_pair").desc(), F.col("pair"))
-    return top.withColumn("rn", F.row_number().over(w).cast("int"))
-
-
-def boilerplate_sentences(
-    df: DataFrame,
-    group_col: str,
-    id_col: str,
-    text_col: str,
-    min_docs: int = 5,
-    min_len: int = 10,
-) -> DataFrame:
-    """Boilerplate audit per group on ANY (group, id, text) table
-    (corpus_boilerplate_sentences' algebra with thresholds
-    parameterized): sentences recurring in >= min_docs distinct
-    documents of the same group — the cleanup pass document-level dedup
-    cannot see.  Returns (group_col, n_distinct_sentences,
-    n_boilerplate, boilerplate_share)."""
-    sents = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(text_col, r"\.\s+")).alias("_s"),
-    ).select(
-        "_g", "_id", F.trim("_s").alias("_sent")
-    ).filter(F.length("_sent") >= min_len)
-    per_sent = sents.groupBy("_g", "_sent").agg(
-        F.countDistinct("_id").cast("long").alias("_nd")
-    )
-    boiler = F.count_if(F.col("_nd") >= min_docs)
-    return per_sent.groupBy("_g").agg(
-        F.count(F.lit(1)).cast("long").alias("n_distinct_sentences"),
-        boiler.cast("long").alias("n_boilerplate"),
-        he4(boiler.cast("double") / F.count(F.lit(1))).alias(
-            "boilerplate_share"
-        ),
-    ).withColumnRenamed("_g", group_col)
-
-
 def pii_scrub(
     df: DataFrame,
     text_col: str,
@@ -2536,103 +2218,6 @@ def train_test_split(
         F.when(bucket < bp[0], "train")
         .when(bucket < bp[0] + bp[1], "valid")
         .otherwise("test"),
-    )
-
-
-def tfidf(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-) -> DataFrame:
-    """Top-k TF-IDF terms per document on ANY (id, text) table
-    (tfidf_topk's algebra with k parameterized): idf quantizes to an
-    integer (floor(ln(N/df)*1e6 + 0.5)) so score = tf * idf6 is exact
-    bigint arithmetic.  Returns (id_col, term, score, rn).
-
-    Scale shape: ONE tokenize pass (tf pinned, df derived from it);
-    the vocabulary-bounded idf side broadcasts onto the tf stream
-    (hash-joining would shuffle tf by token and collapse on Zipf-hot
-    terms); the top-k window shares the doc partitioning."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    toks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.split(text_col, " ")).alias("term"),
-    )
-    tf = pin(
-        toks.groupBy("_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-    nd = df.agg(F.count(F.lit(1)).alias("_n"))
-    idf = dfreq.crossJoin(F.broadcast(nd)).select(
-        "term",
-        F.floor(
-            F.log(F.col("_n").cast("double") / F.col("_df")) * 1_000_000
-            + 0.5
-        )
-        .cast("long")
-        .alias("_idf6"),
-    )
-    scored = tf.join(F.broadcast(idf), "term").select(
-        "_id", "term", (F.col("tf") * F.col("_idf6")).alias("score")
-    )
-    w = Window.partitionBy("_id").orderBy(F.col("score").desc(), "term")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .withColumnRenamed("_id", id_col)
-    )
-
-
-def kmeans_assign(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 8,
-    seed_salt: str = "kmseed:",
-) -> DataFrame:
-    """One seeded Lloyd iteration on ANY (id, vector) table
-    (embed_kmeans' algebra with k parameterized): deterministic
-    md5-ordered seed centroids, nearest-centroid assignment.  Returns
-    (id_col, cluster, dist).  The full iterative fit drifts across
-    engines by nature — this is the exactly-certifiable kernel; loop it
-    yourself if you want Lloyd convergence.
-
-    Scale shape: k seed rows collect to the driver (model-sized) and
-    re-enter as a broadcast; assignment is a map-side k-way fold per
-    vector — no shuffle except the final min-by-struct groupBy."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    seed_key = F.md5(
-        F.concat(F.lit(seed_salt), F.col(id_col).cast("string"))
-    )
-    seeds = (
-        df.orderBy(seed_key, id_col)
-        .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("_c"))
-        .collect()
-    )
-    seeds_df = df.sparkSession.createDataFrame(
-        [(i, list(r._c)) for i, r in enumerate(seeds)],
-        "_cidx int, _c array<double>",
-    )
-    e_d = F.col(vec_col).cast("array<double>")
-    d2 = F.aggregate(
-        F.zip_with(e_d, F.col("_c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = df.select(F.col(id_col).alias("_id"), vec_col).crossJoin(
-        F.broadcast(seeds_df)
-    ).select("_id", "_cidx", d2.alias("_d2"))
-    best = pairs.groupBy("_id").agg(
-        F.min(F.struct("_d2", "_cidx")).alias("_m")
-    )
-    return best.select(
-        F.col("_id").alias(id_col),
-        F.col("_m._cidx").alias("cluster"),
-        F.round(F.sqrt(F.col("_m._d2")), 6).alias("dist"),
     )
 
 
@@ -3063,36 +2648,6 @@ def price_index(
     )
 
 
-def retention_matrix(
-    df: DataFrame,
-    entity_col: str,
-    ts_col: str,
-) -> DataFrame:
-    """Cohort retention triangle on ANY (entity, timestamp) activity
-    table (retention_triangle's algebra with entity/time parameterized):
-    entities cohorted by first-activity month, counted distinct at each
-    month-age since.  Returns (cohort_month, age_months, n_active).
-
-    Scale shape: first-activity frame is one combinable groupBy on the
-    entity key; the join back is co-partitioned on the same key; output
-    is calendar^2-bounded (months x ages), never fact-sized."""
-    o = df.select(
-        F.col(entity_col).alias("_e"),
-        F.date_trunc("month", F.col(ts_col)).alias("_mo"),
-    )
-    first = o.groupBy("_e").agg(F.min("_mo").alias("_m0"))
-    return (
-        o.join(first, "_e")
-        .groupBy(
-            F.col("_m0").alias("cohort_month"),
-            F.months_between(F.col("_mo"), F.col("_m0"))
-            .cast("int")
-            .alias("age_months"),
-        )
-        .agg(F.countDistinct("_e").cast("long").alias("n_active"))
-    )
-
-
 def stream_running_stats(
     sdf: DataFrame,
     key_cols: list[str],
@@ -3335,36 +2890,6 @@ def kcore(
     return (
         u.groupBy(F.col("_a").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
-
-
-def benford(df: DataFrame, val_col: str) -> DataFrame:
-    """Benford's-law first-digit audit of ANY numeric column >= 1
-    (audit_benford's algebra): observed first-digit shares against the
-    expected log10(1 + 1/d) — the financial-data-quality screen for
-    generated or corrupted values.  Rows below 1 drop (no leading
-    digit).  Returns (d, n_obs, observed, expected) for digits present.
-
-    Scale shape: one scan -> 9-group aggregate + broadcast total."""
-    digits = df.filter(F.col(val_col) >= 1).select(
-        F.substring(
-            F.floor(F.col(val_col)).cast("long").cast("string"), 1, 1
-        )
-        .cast("int")
-        .alias("d")
-    )
-    tot = digits.agg(F.count(F.lit(1)).alias("_n_total"))
-    return (
-        digits.groupBy("d")
-        .agg(F.count(F.lit(1)).alias("n_obs"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "d",
-            "n_obs",
-            F.round(F.col("n_obs").cast("double") / F.col("_n_total"), 4)
-            .alias("observed"),
-            F.round(F.log10(1 + 1 / F.col("d")), 4).alias("expected"),
-        )
     )
 
 
@@ -4172,47 +3697,6 @@ def seasonal_decompose(
     )
 
 
-def ohlc(
-    df: DataFrame,
-    val_col: str,
-    order_col: str,
-    bucket_col: str,
-    by: list[str] | None = None,
-    tie_cols: list[str] | None = None,
-) -> DataFrame:
-    """OHLC resampling of ANY tick frame (ts_ohlc's algebra with columns
-    parameterized) — the financial bar-chart aggregate: per (by, bucket),
-    the first/last/extreme values plus tick count and summed volume.
-    Pre-compute the bucket column (e.g. date_trunc('hour', ts)); pass
-    tie_cols so open/close are total-order deterministic.  Open/close
-    come from tie-safe row_number flags folded into the same aggregate —
-    both windows and the groupBy share one (by, bucket) partitioning, so
-    the whole kernel is a single Exchange.  Open/close/high/low are
-    UNROUNDED single values; only the order-sensitive volume sum goes
-    through the decimal quantizer.  Returns
-    (by..., bucket, open, high, low, close, n_ticks, volume)."""
-    from .operators._helpers import dsum, r4
-
-    by = by or []
-    tie_cols = tie_cols or []
-    pw = Window.partitionBy(*by, bucket_col)
-    w_a = pw.orderBy(F.col(order_col).asc(), *[F.col(c).asc() for c in tie_cols])
-    w_d = pw.orderBy(
-        F.col(order_col).desc(), *[F.col(c).desc() for c in tie_cols]
-    )
-    flagged = df.withColumn("_rn_a", F.row_number().over(w_a)).withColumn(
-        "_rn_d", F.row_number().over(w_d)
-    )
-    return flagged.groupBy(*by, bucket_col).agg(
-        F.max(F.when(F.col("_rn_a") == 1, F.col(val_col))).alias("open"),
-        F.max(val_col).alias("high"),
-        F.min(val_col).alias("low"),
-        F.max(F.when(F.col("_rn_d") == 1, F.col(val_col))).alias("close"),
-        F.count(F.lit(1)).alias("n_ticks"),
-        r4(dsum(F.col(val_col))).alias("volume"),
-    )
-
-
 def pmi_bigrams(
     df: DataFrame,
     text_col: str,
@@ -4272,62 +3756,6 @@ def pmi_bigrams(
         )
         .orderBy(F.col("pmi6").desc(), "w1", "w2")
         .limit(k)
-    )
-
-
-def zipf_slope(
-    df: DataFrame,
-    text_col: str,
-) -> DataFrame:
-    """Zipf slope of ANY corpus' rank-frequency curve
-    (corpus_zipf_slope's algebra with the column parameterized): the
-    least-squares slope of ln(freq) on ln(rank) — natural corpora sit
-    near -1; a slope far from it flags templated/machine-generated
-    text, the corpus-level screen a training-data pipeline runs before
-    accepting a new source.  ln values quantize to 1e6 fixed-point so
-    the regression moments are exact decimal integers.  Returns one row
-    (n_terms, zipf_slope).
-
-    Scale: one tokenize scan -> term counts (combinable) -> a rank
-    window over the |vocab|-sized aggregate (model-sized spine) -> one
-    5-moment pass."""
-    from .operators._helpers import r4
-
-    d0 = "decimal(38,0)"
-    ln_scale = 10**6
-    tf = (
-        df.select(F.explode(F.split(F.col(text_col), " ")).alias("_term"))
-        .groupBy("_term")
-        .agg(F.count(F.lit(1)).alias("_freq"))
-    )
-    ranked = tf.select(
-        "_freq",
-        F.row_number()
-        .over(Window.orderBy(F.desc("_freq"), "_term"))
-        .alias("_rnk"),
-    )
-    x = F.floor(
-        F.log(F.col("_rnk").cast("double")) * ln_scale + 0.5
-    ).cast("long")
-    y = F.floor(
-        F.log(F.col("_freq").cast("double")) * ln_scale + 0.5
-    ).cast("long")
-    # quantized |ln| is bounded ~7.1e8 so the LONG product cannot wrap
-    # here, but the operands still widen first for family uniformity
-    q = ranked.select(x.cast(d0).alias("_x"), y.cast(d0).alias("_y"))
-    m = q.agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.col("_x")).alias("_sx"),
-        F.sum(F.col("_y")).alias("_sy"),
-        F.sum(F.col("_x") * F.col("_x")).alias("_sxx"),
-        F.sum(F.col("_x") * F.col("_y")).alias("_sxy"),
-    )
-    nd = F.col("_n").cast(d0)
-    num = nd * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-    den = nd * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-    return m.select(
-        F.col("_n").cast("long").alias("n_terms"),
-        r4(num.cast("double") / den.cast("double")).alias("zipf_slope"),
     )
 
 
@@ -4473,69 +3901,6 @@ def cms(
     )
 
 
-def bottomk_sample(
-    df: DataFrame,
-    id_col: str,
-    k: int = 100,
-    space: int = 1_000_000_000,
-) -> DataFrame:
-    """Bottom-k (KMV) sample of ANY id column (sample_bottomk's algebra
-    with column and k parameterized): the k rows with the smallest md5
-    hash values — simultaneously (a) a uniform sample without
-    replacement, (b) COORDINATED across dataset versions (an unchanged
-    id keeps its hash, so successive snapshots share most of their
-    sample — what makes A/B-stable eval sets), and (c) a distinct-count
-    estimator (n_hat ~ (k-1)*space/kth_hash).  A deterministic pure
-    function of the ids — reproducible, unlike reservoir sampling whose
-    result depends on partition visit order.  Returns (id, hv, rk).
-
-    Scale: per-partition bottom-k via TakeOrderedAndProject (heap +
-    merge, no global sort); the hash is map-side scan work."""
-    from .operators.pipeline_extras import _hash_bucket
-
-    h = df.select(
-        F.col(id_col),
-        _hash_bucket(
-            F.concat(F.lit("kmv:"), F.col(id_col).cast("string")), space
-        ).alias("hv"),
-    )
-    topk = h.orderBy("hv", id_col).limit(k)
-    w = Window.orderBy("hv", id_col)
-    return topk.select(
-        id_col,
-        F.col("hv").cast("long").alias("hv"),
-        F.row_number().over(w).cast("long").alias("rk"),
-    )
-
-
-def hash_features(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    dim: int = 32,
-) -> DataFrame:
-    """The hashing trick over ANY text column (feat_hashing's algebra
-    with columns and dimension parameterized): whitespace tokens map to
-    a fixed dim-bucket count vector via md5 — the stateless vectorizer
-    (no vocabulary fit, no OOV problem, collision noise bounded by
-    dimension).  Emitted in sparse (id, bucket, cnt) form — the
-    driver-safe serialization of a vector column and the natural input
-    to a sparse matmul.  Returns (id, bucket, cnt).
-
-    Scale: tokenize-explode -> two-key grouped count, map-side
-    combinable; NO vocabulary state anywhere — nothing to broadcast,
-    nothing to version at 100 TB."""
-    from .operators.pipeline_extras import _hash_bucket
-
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("_term")
-    )
-    bucket = _hash_bucket(F.concat(F.lit("fh:"), F.col("_term")), dim)
-    return toks.groupBy(
-        id_col, bucket.cast("int").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-
-
 def period_growth(
     df: DataFrame,
     val_col: str,
@@ -4563,43 +3928,6 @@ def period_growth(
         r4((F.col(val_col) / F.lag(val_col).over(w) - 1) * 100).alias(
             "growth_pct"
         ),
-    )
-
-
-def path_topk(
-    df: DataFrame,
-    entity_col: str,
-    step_col: str,
-    order_cols: list[str],
-    k: int = 10,
-    steps: int = 3,
-) -> DataFrame:
-    """Top-k most frequent `steps`-step event paths of ANY
-    (entity, step, order) stream (event_path_topk's algebra with
-    columns, k and path length parameterized) — the clickstream
-    path-mining query: steps-1 lead() windows on ONE entity shuffle
-    build the path string in place (no self-joins), paths aggregate
-    map-side (the |step values|^steps domain collapses early), and the
-    top-k is ORDER-BY-complete with (n DESC, path) tie keys — never a
-    bare LIMIT.  Pass tie-breaking order_cols.  Returns (path, n).
-
-    Scale: the only full-stream cost is the entity window; the counted
-    table is bounded by the path domain."""
-    w = Window.partitionBy(entity_col).orderBy(*order_cols)
-    parts = [F.col(step_col)] + [
-        F.lead(step_col, i).over(w) for i in range(1, steps)
-    ]
-    path = F.concat_ws(">", *parts)
-    # concat_ws silently drops nulls: a short path means a lead ran off
-    # the partition end — keep only complete paths
-    paths = df.select(path.alias("path")).filter(
-        F.size(F.split("path", ">")) == steps
-    )
-    return (
-        paths.groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "path")
-        .limit(k)
     )
 
 
@@ -4932,44 +4260,6 @@ def fk_check(
     )
 
 
-def skew_report(
-    df: DataFrame,
-    key_col: str,
-    k: int = 20,
-) -> DataFrame:
-    """Join-key skew diagnostics for ANY key column (data_skew_report's
-    algebra with the column and k parameterized): the k hottest values
-    with their row share (ppm) and multiple-of-mean (percent) — the
-    report that decides whether a planned join needs salting or AQE
-    skew splitting.  All ratios via integer division of exact counts
-    (no floats at all).  Returns (key, cnt, share_ppm, x_mean_pct).
-
-    Scale: one map-side-combinable key count, a broadcast-sized scalar
-    total cross-joined in, and bounded top-k (TakeOrderedAndProject) —
-    the profiling pass a 100 TB ETL runs BEFORE choosing its join
-    strategy."""
-    counts = df.groupBy(F.col(key_col).alias("key")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    tot = counts.agg(
-        F.sum("cnt").cast("bigint").alias("_n"),
-        F.count(F.lit(1)).cast("bigint").alias("_nk"),
-    )
-    return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            "key",
-            "cnt",
-            F.expr("CAST(cnt * 1000000 div _n AS BIGINT)").alias("share_ppm"),
-            F.expr("CAST(cnt * 100 * _nk div _n AS BIGINT)").alias(
-                "x_mean_pct"
-            ),
-        )
-        .orderBy(F.desc("cnt"), "key")
-        .limit(k)
-    )
-
-
 def ltv_curve(
     df: DataFrame,
     id_col: str,
@@ -5021,55 +4311,6 @@ def ltv_curve(
         "value_c",
         "n_active",
         F.sum("value_c").over(w).cast("bigint").alias("cum_value_c"),
-    )
-
-
-def stickiness(
-    df: DataFrame,
-    id_col: str,
-    ts_col: str,
-    anchor: str,
-    window: int = 7,
-) -> DataFrame:
-    """Engagement stickiness per day of ANY activity stream
-    (stickiness_ratio's algebra with columns, anchor and window
-    parameterized): DAU / trailing-`window`-day active users (the
-    DAU/WAU ratio — 1.0 means every weekly user shows up daily).  The
-    rolling DISTINCT cannot ride a windowed aggregate; the scale shape
-    is the cover-set explode: each distinct (id, day) activity row fans
-    out to the `window` future days it keeps the entity 'weekly-active'
-    for, and the trailing count becomes a plain combinable
-    count-distinct per cover day.  Cover days beyond the corpus or on
-    activity gaps drop out via the inner join.  Returns
-    (day, dau, wau, stickiness).
-
-    Scale: raw events reduce to distinct (id, day) FIRST; the x-window
-    expansion runs on the reduced table — a vanishing fraction of the
-    event stream."""
-    from .operators._helpers import r4
-
-    act = df.select(
-        F.col(id_col).alias("_id"),
-        F.datediff(
-            F.date_trunc("day", F.col(ts_col)),
-            F.lit(anchor).cast("timestamp"),
-        ).alias("_di"),
-    ).distinct()
-    dau = act.groupBy("_di").agg(F.count(F.lit(1)).alias("dau"))
-    cover = act.select(
-        "_id",
-        F.explode(
-            F.sequence(F.col("_di"), F.col("_di") + (window - 1))
-        ).alias("_di"),
-    ).distinct()
-    wau = cover.groupBy("_di").agg(F.count(F.lit(1)).alias("wau"))
-    return dau.join(wau, "_di").select(
-        F.date_add(F.lit(anchor).cast("date"), F.col("_di").cast("int"))
-        .cast("timestamp")
-        .alias("day"),
-        "dau",
-        "wau",
-        r4(F.col("dau").cast("double") / F.col("wau")).alias("stickiness"),
     )
 
 
@@ -5453,152 +4694,6 @@ def transition_matrix(
     )
 
 
-def lexical_diversity(
-    df: DataFrame,
-    by: list[str],
-    text_col: str,
-) -> DataFrame:
-    """Lexical-diversity profile of ANY text column per group
-    (text_ttr's algebra with columns parameterized): type-token ratio
-    and hapax-legomenon fraction, both 1e6-quantized ratios of exact
-    whitespace-token counts.  Low TTR + low hapax flags repetitive
-    machine-generated text — the classic cheap companions to the
-    repetition gate in corpus curation.  Returns (by..., n_tokens,
-    n_types, n_hapax, ttr6, hapax6).
-
-    Scale: two cascaded map-side-combinable aggregates ((by, term) then
-    by) — partial-agg before every Exchange, all codegen."""
-    tok = df.select(
-        *by, F.explode(F.split(F.col(text_col), " ")).alias("_term")
-    )
-    tc = tok.groupBy(*by, "_term").agg(F.count(F.lit(1)).alias("_c"))
-    types = F.count(F.lit(1))
-    toks = F.sum("_c")
-    hapax = F.sum(F.when(F.col("_c") == 1, 1).otherwise(0))
-    return tc.groupBy(*by).agg(
-        toks.cast("bigint").alias("n_tokens"),
-        types.cast("bigint").alias("n_types"),
-        hapax.cast("bigint").alias("n_hapax"),
-        F.floor(types.cast("double") / toks * 1e6 + 0.5)
-        .cast("bigint")
-        .alias("ttr6"),
-        F.floor(hapax.cast("double") / types * 1e6 + 0.5)
-        .cast("bigint")
-        .alias("hapax6"),
-    )
-
-
-def repetition_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Repeated-trigram fraction of ANY text column per row
-    (text_repetition's algebra with columns parameterized) — the
-    Gopher-style repetition quality gate (high duplicate-n-gram mass
-    flags boilerplate and spam).  rep = 1 - unique/total word trigrams,
-    1e6-quantized after a single double division of two exact counts;
-    rows with fewer than 3 tokens emit no output.  Returns
-    (id, n_tri, n_uniq, rep6).
-
-    Scale: one tokenize scan -> explode -> one hash aggregate on the id
-    (count + count-distinct in the same pass via the distinct-agg
-    rewrite).  No joins, no driver traffic."""
-    d = df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
-    )
-    tri = d.filter(F.size("_toks") >= 3).select(
-        id_col,
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(_toks) - 3),"
-                " i -> concat_ws(' ', _toks[i], _toks[i + 1], _toks[i + 2]))"
-            )
-        ).alias("_g"),
-    )
-    return tri.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tri"),
-        F.count_distinct("_g").alias("n_uniq"),
-        F.floor(
-            (
-                F.lit(1.0)
-                - F.count_distinct("_g").cast("double") / F.count(F.lit(1))
-            )
-            * 1e6
-            + 0.5
-        )
-        .cast("bigint")
-        .alias("rep6"),
-    )
-
-
-def token_entropy(
-    df: DataFrame,
-    by: list[str],
-    text_col: str,
-) -> DataFrame:
-    """Token-distribution Shannon entropy (nats, 1e6-quantized) of ANY
-    text column per group (text_entropy_tokens' algebra with columns
-    parameterized) — the information-density quality signal: near-zero
-    entropy marks keyword-stuffed or template docs, high entropy marks
-    diverse prose.  H = ln(T) - sum(c*ln c)/T from exact counts; the
-    per-term c*ln(c) terms are DECIMAL(38,12)-quantized before the
-    order-dependent sum (ulp differences in ln land far below the
-    quantization step).  Returns (by..., n_tokens, ent6).
-
-    Scale: tokenize -> two hash aggregates, BOTH map-side combinable —
-    each Exchange carries partial aggregates, never the raw exploded
-    token stream; entirely JVM-side codegen."""
-    tok = df.select(
-        *by, F.explode(F.split(F.col(text_col), " ")).alias("_term")
-    )
-    tc = tok.groupBy(*by, "_term").agg(F.count(F.lit(1)).alias("_c"))
-    t = F.sum("_c")
-    s = F.sum(
-        (F.col("_c") * F.log(F.col("_c").cast("double"))).cast(
-            "decimal(38,12)"
-        )
-    )
-    return tc.groupBy(*by).agg(
-        t.cast("bigint").alias("n_tokens"),
-        F.floor((F.log(t.cast("double")) - s.cast("double") / t) * 1e6 + 0.5)
-        .cast("bigint")
-        .alias("ent6"),
-    )
-
-
-def hapax_by_group(
-    df: DataFrame,
-    by: list[str],
-    text_col: str,
-) -> DataFrame:
-    """Hapax legomenon share per group of ANY text column
-    (text_hapax_ratio's algebra with columns parameterized): the
-    fraction of each group's LOWERCASED vocabulary occurring exactly
-    once.  High hapax means noisy / OCR-damaged / tail-heavy text; a
-    collapsing ratio means templated text — both corpus-acquisition QC
-    signals.  Returns (by..., n_tokens, vocab, hapax, hapax_ratio).
-
-    Scale: two cascaded combinable aggregates; the token stream
-    shuffles once on (by, term)."""
-    from .operators._helpers import r4
-
-    toks = df.select(
-        *by,
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("_term"),
-    )
-    tc = toks.groupBy(*by, "_term").agg(F.count(F.lit(1)).alias("_cnt"))
-    hap = F.when(F.col("_cnt") == 1, 1).otherwise(0)
-    return tc.groupBy(*by).agg(
-        F.sum("_cnt").cast("long").alias("n_tokens"),
-        F.count(F.lit(1)).cast("long").alias("vocab"),
-        F.sum(hap).cast("long").alias("hapax"),
-        r4(F.sum(hap).cast("double") / F.count(F.lit(1))).alias(
-            "hapax_ratio"
-        ),
-    )
-
-
 def latency_percentiles(
     df: DataFrame,
     val_col: str,
@@ -5811,54 +4906,6 @@ def cross_entropy(
     )
 
 
-def novelty_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """Trigram novelty of ANY (id, text) corpus (text_novelty's algebra
-    with columns parameterized): the share of each document's distinct
-    word trigrams that appear in NO other document — the
-    self-information screen complementing repetition_score (within-doc
-    boilerplate): low novelty means the document is assembled from
-    corpus-common spans, the profile of templated/spun content.  Pure
-    integer counting.  Returns (id, n_trigrams, n_unique, novelty).
-
-    Scale: trigram explode -> distinct (id, gram) -> gram document
-    frequencies (all combinable) -> join df back on the gram key;
-    Zipf-hot grams dominate the join's build side — the same hot-gram
-    cap as containment_pairs applies as corpora grow."""
-    from .operators._helpers import pin, r4
-
-    toks = df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
-    )
-    tri = toks.select(
-        id_col,
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(_toks) - 2), "
-                "p -> concat_ws(' ', _toks[p-1], _toks[p], _toks[p+1]))"
-            )
-        ).alias("_g"),
-    )
-    # pinned: dtri feeds the document-frequency aggregate AND the join
-    dtri = pin(tri.distinct())
-    freq = dtri.groupBy("_g").agg(F.count(F.lit(1)).alias("_ndocs"))
-    return (
-        dtri.join(freq, "_g")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_trigrams"),
-            F.count_if(F.col("_ndocs") == 1).alias("n_unique"),
-            r4(
-                F.count_if(F.col("_ndocs") == 1).cast("double")
-                / F.count(F.lit(1))
-            ).alias("novelty"),
-        )
-    )
-
-
 def otd_rate(
     df: DataFrame,
     by: list[str],
@@ -6032,135 +5079,6 @@ def size_dist(
         .over(Window.partitionBy())
         .cast("long")
         .alias("total_groups"),
-    )
-
-
-def dow_hour_heatmap(
-    df: DataFrame,
-    ts_col: str,
-    val_col: str | None = None,
-) -> DataFrame:
-    """Seasonality heatmap of ANY timestamp column (events_dow_hour's
-    algebra with columns parameterized): row count (and optionally
-    summed value) by (ISO weekday, hour-of-day) — the load-profile
-    matrix behind capacity planning and anomaly baselines.  Weekday is
-    weekday()+1 (Monday=1, the ISO convention — dayofweek() is NOT
-    portable across engines).  Returns (dow, hr, n[, total_value]).
-
-    Scale: map-side extraction, one 168-key aggregate — the cheapest
-    shuffle there is."""
-    from .operators._helpers import dsum, r4
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if val_col is not None:
-        aggs.append(r4(dsum(F.col(val_col))).alias("total_value"))
-    return df.groupBy(
-        (F.weekday(ts_col) + 1).cast("int").alias("dow"),
-        F.hour(ts_col).cast("int").alias("hr"),
-    ).agg(*aggs)
-
-
-def embedding_dim_stats(
-    df: DataFrame,
-    vec_col: str,
-) -> DataFrame:
-    """Per-dimension mean/std/min/max over ANY embedding column
-    (embed_dim_stats' algebra with the column parameterized) — the
-    whitening / dead-dimension / clipped-dimension diagnostic run
-    before any ANN index is trusted.  posexplode fans each vector into
-    dims rows, but the aggregate is map-side combinable on the
-    dims-sized pos key, so every partition reduces to |dims| rows
-    before the single Exchange — one pass regardless of corpus size.
-    Moments use the exact DECIMAL(38,6) sum path; min/max are exact
-    unrounded singles.  Returns (pos, n, mean, std, vmin, vmax)."""
-    from .operators._helpers import DEC, r4
-
-    e = df.select(
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "x")
-    )
-    n = F.count(F.lit(1))
-    sd = F.sum(F.col("x").cast(DEC)).cast("double")
-    sq = F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double")
-    return e.groupBy("pos").agg(
-        n.cast("long").alias("n"),
-        r4(sd / n).alias("mean"),
-        r4(
-            F.sqrt(
-                F.greatest(F.lit(0.0), (sq - sd * sd / n) / (n - F.lit(1)))
-            )
-        ).alias("std"),
-        F.min("x").alias("vmin"),
-        F.max("x").alias("vmax"),
-    )
-
-
-def embedding_norms(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    scale: int = 12,
-) -> DataFrame:
-    """Exact L2 norm per vector of ANY embedding column (embed_norm's
-    algebra with columns and the fixed-point scale parameterized) — the
-    normalization audit for a vector corpus (cosine kernels assume
-    unit-ish norms; this is how you check).  Each x^2 is one IEEE
-    multiply quantized to a 10^scale fixed-point bigint, so the
-    reduction is EXACT integer addition — order-independent where a raw
-    float fold depends on reduction order.  Returns (id, dim, l2_norm),
-    round 4.
-
-    Scale: the whole kernel is a scan-fused F.aggregate lambda — NO
-    explode, NO shuffle, zero Exchanges; int64 headroom holds
-    unit-scale vectors to ~1e5 dims at scale 12."""
-    from .operators._helpers import r4
-
-    q = 10**scale
-    acc = F.aggregate(
-        vec_col,
-        F.lit(0).cast("long"),
-        lambda a, x: a
-        + F.floor(x.cast("double") * x.cast("double") * q + 0.5).cast(
-            "long"
-        ),
-    )
-    return df.select(
-        id_col,
-        F.size(vec_col).alias("dim"),
-        r4(F.sqrt(acc.cast("double") / q)).alias("l2_norm"),
-    )
-
-
-def matryoshka_report(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    keep_dims: int,
-) -> DataFrame:
-    """Matryoshka-style truncation report over ANY embedding column
-    (embed_matryoshka_truncate's algebra with columns and the kept
-    prefix parameterized; Kusupati et al., NeurIPS'22): how much of
-    each vector's energy survives keeping only the first `keep_dims`
-    dimensions — the measurement that decides whether a cheap truncated
-    index can serve first-stage retrieval.  Exact via strict-left-fold
-    norms in fixed IEEE trees (round 6 on derived values).  Returns
-    (id, norm_full, norm_half, energy_ratio).
-
-    Scale: map-only, fused into the scan — zero shuffles at any
-    corpus size."""
-    e = F.col(vec_col).cast("array<double>")
-
-    def sq_fold(col):
-        return F.aggregate(
-            F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-
-    full_sq = sq_fold(e)
-    half_sq = sq_fold(F.slice(e, 1, keep_dims))
-    return df.select(
-        id_col,
-        F.round(F.sqrt(full_sq), 6).alias("norm_full"),
-        F.round(F.sqrt(half_sq), 6).alias("norm_half"),
-        F.round(half_sq / full_sq, 6).alias("energy_ratio"),
     )
 
 
@@ -6578,7 +5496,10 @@ def assortativity(
     signal).  Pass a DEDUPLICATED edge list.  Five exact BIGINT moments
     in one combinable pass; the correlation is one IEEE tree (deg^2
     sums widen to DECIMAL(38,0) past ~3e9 edges per node).  Returns one
-    row (n_edges, assortativity), round 4."""
+    row (n_edges, assortativity), round 4.  An edge list whose source
+    (or destination) degrees are all equal has zero degree variance:
+    the closing division then raises DIVIDE_BY_ZERO (Spark's ANSI mode)
+    rather than returning NULL."""
     from .operators._helpers import pin, r4
 
     e = pin(
@@ -6801,71 +5722,6 @@ def calc_check(
     )
 
 
-def tfidf_topk(
-    df: DataFrame,
-    group_col: str,
-    text_col: str,
-    k: int = 5,
-) -> DataFrame:
-    """Top-k TF-IDF terms per group of ANY corpus (corpus_tfidf_topk's
-    algebra with columns and k parameterized) — the domain-signature
-    head a curator reads per source/domain/shard.  idf = ln((n_groups+1) /
-    df) quantized e6; score = tf * idf_q as an exact DECIMAL-widened
-    integer product; ORDER-BY-complete per-group head with term
-    tiebreak.  Returns (group, rk, term, tf, score_q).
-
-    Scale: one tokenize scan into a pinned (group, term) aggregate;
-    every later shuffle is vocabulary-bounded."""
-    from .operators._helpers import pin as _pin
-
-    d0 = "decimal(38,0)"
-    toks = df.select(
-        F.col(group_col).alias("_g"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    st = _pin(
-        toks.groupBy("_g", "term").agg(
-            F.count(F.lit(1)).cast("long").alias("tf")
-        )
-    )
-    ns = st.agg((F.count_distinct("_g") + 1).cast("double").alias("_ns"))
-    idf = (
-        st.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .crossJoin(F.broadcast(ns))
-        .select(
-            "term",
-            F.floor(F.log(F.col("_ns") / F.col("_df")) * 1_000_000 + 0.5)
-            .cast("long")
-            .alias("idf_q"),
-        )
-    )
-    sc = (
-        st.join(idf, "term")
-        .filter(F.col("idf_q") > 0)
-        .select(
-            "_g",
-            "term",
-            "tf",
-            (F.col("tf").cast(d0) * F.col("idf_q").cast(d0))
-            .cast("long")
-            .alias("score_q"),
-        )
-    )
-    w = Window.partitionBy("_g").orderBy(F.desc("score_q"), "term")
-    return (
-        sc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            F.col("_g").alias(group_col),
-            F.col("rk").cast("int").alias("rk"),
-            "term",
-            "tf",
-            "score_q",
-        )
-    )
-
-
 def bfs_layers(
     edges: DataFrame,
     src_col: str,
@@ -7022,72 +5878,6 @@ def nearest_value_join(
     )
 
 
-def token_source_mi(
-    df: DataFrame,
-    group_col: str,
-    text_col: str,
-    top_n: int = 40,
-) -> DataFrame:
-    """Token <-> group mutual information over the corpus-wide top-n
-    terms of ANY corpus (corpus_token_source_mi's algebra with columns
-    and head size parameterized) — which head terms are group
-    signatures vs corpus-wide glue.  Joint restricted to the head
-    vocabulary; each cell contributes p(t,g) * ln(p(t,g)/(p(t)p(g))),
-    DEC18-quantized pre-sum; presented in micro-nats.  Returns
-    (term, ct, mi_micro).
-
-    Scale: one tokenize scan into a pinned (term, group) aggregate;
-    the head list broadcasts back, bounding every later frame."""
-    from .operators._helpers import pin as _pin
-
-    dec18 = "decimal(38,18)"
-    toks = df.select(
-        F.col(group_col).alias("_g"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
-    ).filter(F.col("term") != "")
-    cts = _pin(
-        toks.groupBy("term", "_g").agg(
-            F.count(F.lit(1)).cast("long").alias("_c")
-        )
-    )
-    top = (
-        cts.groupBy("term")
-        .agg(F.sum("_c").cast("long").alias("ct"))
-        .orderBy(F.desc("ct"), "term")
-        .limit(top_n)
-    )
-    r = _pin(cts.join(F.broadcast(top), "term"))
-    cs = r.groupBy("_g").agg(F.sum("_c").cast("long").alias("_cs"))
-    tt = r.agg(F.sum("_c").cast("long").alias("_t"))
-    cd = F.col("_c").cast("double")
-    td = F.col("_t").cast("double")
-    contrib = (
-        r.join(cs, "_g")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "term",
-            "ct",
-            (
-                (cd / td)
-                * F.log(
-                    (cd * td)
-                    / (
-                        F.col("ct").cast("double")
-                        * F.col("_cs").cast("double")
-                    )
-                )
-            )
-            .cast(dec18)
-            .alias("_q"),
-        )
-    )
-    return contrib.groupBy("term", "ct").agg(
-        F.floor(F.sum("_q").cast("double") * 1_000_000 + 0.5)
-        .cast("long")
-        .alias("mi_micro")
-    )
-
-
 def largest_remainder_alloc(
     df: DataFrame,
     group_col: str,
@@ -7149,54 +5939,6 @@ def largest_remainder_alloc(
         )
         .cast("long")
         .alias("alloc"),
-    )
-
-
-def weighted_sample(
-    df: DataFrame,
-    key_col: str,
-    weight_col: str,
-    k: int = 20,
-    salt: str = "ws:",
-) -> DataFrame:
-    """Deterministic weighted sampling WITHOUT replacement of ANY keyed
-    frame (sample_weighted_topk's Efraimidis-Spirakis priority sampling
-    with columns, k and salt parameterized): u = md5-uniform(0, 1] of
-    the salted key, priority = -ln(u) / weight, k smallest priorities —
-    weight-proportional, reproducible, and repartition-stable because u
-    is a pure function of the key.  Weights must be positive.  Returns
-    (rk, key_col, key_e12).
-
-    Scale: priorities are map-side expressions fused into the scan; the
-    top-k is TakeOrderedAndProject — partial top-k per partition, never
-    a global sort."""
-    hex13 = float(16**13)
-    hn = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))),
-            1, 13,
-        ),
-        16, 10,
-    ).cast("long")
-    key = -F.log((hn + 1) / F.lit(hex13)) / F.col(weight_col)
-    # NULL keys hash to NULL priorities (which sort FIRST and would
-    # hijack the sample) and non-positive weights have no ES meaning —
-    # both are excluded, not sampled (r11 review)
-    t = df.filter(
-        F.col(key_col).isNotNull() & (F.col(weight_col) > 0)
-    ).select(F.col(key_col), key.alias("__secdb_key"))
-    w = Window.orderBy("__secdb_key", key_col)
-    return (
-        t.orderBy("__secdb_key", key_col)
-        .limit(k)
-        .withColumn("rk", F.row_number().over(w))
-        .select(
-            F.col("rk").cast("int").alias("rk"),
-            key_col,
-            F.floor(F.col("__secdb_key") * 1_000_000_000_000 + 0.5)
-            .cast("long")
-            .alias("key_e12"),
-        )
     )
 
 
@@ -7293,44 +6035,6 @@ def image_histogram(
 # ---------------------------------------------------------------------------
 
 
-def script_mix(df: DataFrame, group_cols: list[str], text_col: str) -> DataFrame:
-    """Character-class composition per group over ANY text column
-    (doc_script_mix's algebra with the grouping parameterized): letter /
-    digit / space / other shares of total characters via the
-    strip-and-diff regex idiom.  Returns (group_cols..., n_docs,
-    n_chars, letter_share, digit_share, space_share, other_share),
-    shares he4.
-
-    Scale: map-side regexps reduce each row to four ints at the scan;
-    ONE combinable aggregate keyed by the group."""
-    from .operators._helpers import he4
-
-    def stripped(pat: str):
-        return F.length(text_col) - F.length(
-            F.regexp_replace(F.col(text_col), pat, "")
-        )
-
-    c = df.select(
-        *group_cols,
-        F.length(text_col).alias("_n"),
-        stripped("[A-Za-z]").alias("_l"),
-        stripped("[0-9]").alias("_d"),
-        stripped("[ ]").alias("_s"),
-    )
-    tot = F.sum("_n")
-    return c.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        tot.cast("long").alias("n_chars"),
-        he4(F.sum("_l").cast("double") / tot.cast("double")).alias("letter_share"),
-        he4(F.sum("_d").cast("double") / tot.cast("double")).alias("digit_share"),
-        he4(F.sum("_s").cast("double") / tot.cast("double")).alias("space_share"),
-        he4(
-            (tot - F.sum("_l") - F.sum("_d") - F.sum("_s")).cast("double")
-            / tot.cast("double")
-        ).alias("other_share"),
-    )
-
-
 def kl_uniform_reweight(
     df: DataFrame, group_col: str, mass_col: str
 ) -> DataFrame:
@@ -7366,90 +6070,6 @@ def kl_uniform_reweight(
         F.floor(pt * (F.log(pt) - F.log(pa)) * 1000000 + 0.5)
         .cast("long")
         .alias("kl_term_unats"),
-    )
-
-
-def dup_ngram_share(
-    df: DataFrame,
-    id_col: str,
-    group_col: str,
-    text_col: str,
-    n: int = 5,
-) -> DataFrame:
-    """Cross-document duplicate n-gram OCCUPANCY per group over ANY
-    corpus (corpus_dup_ngram_share's algebra with n parameterized): the
-    share of word-n-gram occurrences in the group whose gram appears in
-    >= 2 distinct documents corpus-wide.  Returns (group_col, n_grams,
-    n_dup_grams, dup_share he4).
-
-    Requires each id to belong to exactly ONE group (true for any
-    provenance column): per-gram doc frequency is then the sum of
-    per-group distinct counts, so the explode is consumed by a single
-    map-side-combinable (gram, group) aggregate and the rollup +
-    classify join run over the much smaller aggregated frame.
-
-    Scale: gram-keyed equi-shuffles only, never all-pairs."""
-    from .operators._helpers import he4
-
-    w = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(w) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(w, i + k) for k in range(n)]
-        ),
-    )
-    g = df.filter(F.size(w) >= n).select(
-        F.col(id_col).alias("_id"),
-        group_col,
-        F.explode(grams).alias("_gram"),
-    )
-    a1 = g.groupBy("_gram", group_col).agg(
-        F.count(F.lit(1)).cast("long").alias("_n_occ"),
-        F.count_distinct("_id").cast("long").alias("_n_docs"),
-    )
-    d = a1.groupBy("_gram").agg(F.sum("_n_docs").cast("long").alias("_nd"))
-    j = a1.join(d, "_gram")
-    dup = F.sum(F.when(F.col("_nd") >= 2, F.col("_n_occ")).otherwise(0))
-    tot = F.sum("_n_occ")
-    return j.groupBy(group_col).agg(
-        tot.cast("long").alias("n_grams"),
-        dup.cast("long").alias("n_dup_grams"),
-        he4(dup.cast("double") / tot.cast("double")).alias("dup_share"),
-    )
-
-
-def chunk_sliding(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = 200,
-    stride: int = 150,
-) -> DataFrame:
-    """Sliding-window chunking of ANY text column (text_chunk_sliding's
-    algebra with the geometry parameterized) — window-char chunks every
-    stride chars, each with index, offset, actual length, and md5.
-    chunk_text gives the disjoint-block variant; overlap preserves
-    boundary context for retrieval.  Returns (id_col, chunk_idx,
-    start_pos, chunk_len, chunk_md5).
-
-    Empty (or NULL) texts yield no chunks — the filter below is load-
-    bearing: an unguarded sequence(1, 0) raises at runtime in Spark
-    while SQL generate_series(1, 0) returns no rows (r12 ADVICE).
-
-    Scale: map-only sequence+explode fused into the scan; no shuffle."""
-    if stride <= 0 or window <= 0:
-        raise ValueError("window and stride must be positive")
-    starts = F.sequence(F.lit(1), F.length(text_col), F.lit(stride))
-    ex = df.filter(F.length(text_col) >= 1).select(
-        id_col, text_col, F.explode(starts).alias("_i")
-    )
-    chunk = F.col(text_col).substr(F.col("_i"), F.lit(window))
-    return ex.select(
-        id_col,
-        F.expr(f"CAST((_i - 1) div {stride} + 1 AS INT)").alias("chunk_idx"),
-        F.col("_i").cast("long").alias("start_pos"),
-        F.length(chunk).cast("long").alias("chunk_len"),
-        F.md5(chunk).alias("chunk_md5"),
     )
 
 

@@ -117,3 +117,36 @@ def pin(df: "DataFrame") -> "DataFrame":  # noqa: F821 (forward ref)
     if os.environ.get("SECDB_SPARK_NO_PIN"):
         return df
     return df.localCheckpoint(eager=True)
+
+
+def check_free(columns, *names: str) -> None:
+    """Raise ValueError naming the first of ``names`` that is already in
+    ``columns`` (the caller's columns a kernel carries along;
+    case-insensitively, as Spark resolves names).  A kernel calls this
+    with the columns it adds, so that ``withColumn`` or a join never
+    silently replaces or shadows a caller column of the same name.
+    Python-side only: the plan does not change."""
+    have = {c.lower() for c in columns}
+    for name in names:
+        if name.lower() in have:
+            raise ValueError(
+                f"input column {name!r} collides with a column this "
+                f"function adds; rename it"
+            )
+
+
+def require_integral_id(
+    df: "DataFrame", id_col: str, fn_name: str  # noqa: F821
+) -> None:
+    """Vector-kernel ids must be integral: the Arrow kernel schemas carry
+    bigint ids, and a silent cast('long') would turn string/UUID ids into
+    NULLs — breaking results AND the self-match exclusion."""
+    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
+
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
+        raise TypeError(
+            f"{fn_name}: id column '{id_col}' must be integral "
+            f"(got {id_type.simpleString()}); map string/UUID ids to a "
+            "surrogate long first"
+        )

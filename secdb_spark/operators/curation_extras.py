@@ -23,7 +23,7 @@ from .. import catalog
 from ..catalog import spread_scan, table
 from ..registry import register
 from ._global_order import GLOBAL_WINDOW_GATE, grouped_bucketed_topk
-from ._helpers import pin, r4
+from ._helpers import check_free, pin, r4
 
 # ---------------------------------------------------------------------------
 # doc_quality_gate — Gopher-style composite filter funnel, per source
@@ -273,6 +273,34 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_hapax_ratio — hapax legomenon share per source
 # ---------------------------------------------------------------------------
 
+def hapax_by_group(
+    df: DataFrame,
+    by: list[str],
+    text_col: str,
+) -> DataFrame:
+    """Hapax legomenon share per group of ANY text column
+    (text_hapax_ratio's algebra with columns parameterized): the
+    fraction of each group's LOWERCASED vocabulary occurring exactly
+    once.  High hapax means noisy / OCR-damaged / tail-heavy text; a
+    collapsing ratio means templated text — both corpus-acquisition QC
+    signals.  Returns (by..., n_tokens, vocab, hapax, hapax_ratio).
+
+    Scale: two cascaded combinable aggregates; the token stream
+    shuffles once on (by, term)."""
+    check_free(by, "term", "cnt")
+    toks = df.select(
+        *by, F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term")
+    )
+    tc = toks.groupBy(*by, "term").agg(F.count(F.lit(1)).alias("cnt"))
+    hap = F.when(F.col("cnt") == 1, 1).otherwise(0)
+    return tc.groupBy(*by).agg(
+        F.sum("cnt").cast("long").alias("n_tokens"),
+        F.count(F.lit(1)).cast("long").alias("vocab"),
+        F.sum(hap).cast("long").alias("hapax"),
+        r4(F.sum(hap).cast("double") / F.count(F.lit(1))).alias("hapax_ratio"),
+    )
+
+
 @register(
     "text_hapax_ratio",
     oracle="""
@@ -299,18 +327,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve.  Two cascaded combinable aggregates (term counts, then
     per-source rollup); the token stream shuffles once on (source,
     term)."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source", F.explode(F.split(F.lower(F.col("text")), " ")).alias("term")
-    )
-    tc = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("cnt"))
-    hap = F.when(F.col("cnt") == 1, 1).otherwise(0)
-    return tc.groupBy("source").agg(
-        F.sum("cnt").cast("long").alias("n_tokens"),
-        F.count(F.lit(1)).cast("long").alias("vocab"),
-        F.sum(hap).cast("long").alias("hapax"),
-        r4(F.sum(hap).cast("double") / F.count(F.lit(1))).alias("hapax_ratio"),
-    )
+    return hapax_by_group(table(spark, sf_dir, "documents"), ["source"], "text")
 
 
 # ---------------------------------------------------------------------------
@@ -476,6 +493,43 @@ def _pq_codes(spark: SparkSession, sf_dir: str, seeds: list) -> DataFrame:
 MRL_HALF_D = 32  # truncation width (half the 64-dim corpus)
 
 
+def matryoshka_report(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    keep_dims: int,
+) -> DataFrame:
+    """Matryoshka-style truncation report over ANY embedding column
+    (embed_matryoshka_truncate's algebra with columns and the kept
+    prefix parameterized; Kusupati et al., NeurIPS'22): how much of
+    each vector's energy survives keeping only the first `keep_dims`
+    dimensions — the measurement that decides whether a cheap truncated
+    index can serve first-stage retrieval.  Exact via strict-left-fold
+    norms in fixed IEEE trees (round 6 on derived values).  Returns
+    (id, norm_full, norm_half, energy_ratio).
+
+    Scale: map-only, fused into the scan — zero shuffles at any
+    corpus size."""
+    check_free([id_col], "e")
+    emb = df.select(
+        id_col, F.col(vec_col).cast("array<double>").alias("e")
+    )
+
+    def sq_fold(col):
+        return F.aggregate(
+            F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
+        )
+
+    full_sq = sq_fold(F.col("e"))
+    half_sq = sq_fold(F.slice(F.col("e"), 1, keep_dims))
+    return emb.select(
+        id_col,
+        F.round(F.sqrt(full_sq), 6).alias("norm_full"),
+        F.round(F.sqrt(half_sq), 6).alias("norm_half"),
+        F.round(half_sq / full_sq, 6).alias("energy_ratio"),
+    )
+
+
 @register(
     "embed_matryoshka_truncate",
     oracle=f"""
@@ -504,22 +558,8 @@ def embed_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     strict-left-fold norms in fixed IEEE trees (round 6 on the derived
     values); map-only, fused into the scan — zero shuffles at any
     scale."""
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-
-    def sq_fold(col):
-        return F.aggregate(
-            F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-
-    full_sq = sq_fold(F.col("e"))
-    half_sq = sq_fold(F.slice(F.col("e"), 1, MRL_HALF_D))
-    return emb.select(
-        "vec_id",
-        F.round(F.sqrt(full_sq), 6).alias("norm_full"),
-        F.round(F.sqrt(half_sq), 6).alias("norm_half"),
-        F.round(half_sq / full_sq, 6).alias("energy_ratio"),
+    return matryoshka_report(
+        table(spark, sf_dir, "embeddings"), "vec_id", "embedding", MRL_HALF_D
     )
 
 

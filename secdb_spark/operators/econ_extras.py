@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._helpers import r4
+from ._helpers import check_free, r4
 
 D0 = "decimal(38,0)"
 LN_SCALE = 10**6
@@ -23,6 +23,70 @@ LN_SCALE = 10**6
 # ---------------------------------------------------------------------------
 # text_novelty — share of a doc's trigrams that appear nowhere else
 # ---------------------------------------------------------------------------
+
+def novelty_score(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """Trigram novelty of ANY (id, text) corpus (text_novelty's algebra
+    with columns parameterized): the share of each document's distinct
+    word trigrams that appear in NO other document — the
+    self-information screen complementing repetition_score (within-doc
+    boilerplate): low novelty means the document is assembled from
+    corpus-common spans, the profile of templated/spun content.  Pure
+    integer counting.  Returns (id, n_trigrams, n_unique, novelty).
+
+    Scale: per-doc trigram dedup is map-side; two combinable aggregates
+    over the exploded stream and one left join of two id-keyed
+    aggregates — no distinct shuffle, no gram-keyed join."""
+    check_free([id_col], "toks", "g")
+    # r14 restructure (guide §2.3 "aggregate before you shuffle", §2.4):
+    # the old shape ran `tri.distinct()` (a full-stream shuffle) TWICE —
+    # the distinct frame fed both the df aggregate and the join, and
+    # Catalyst has no cross-DAG CSE — then re-shuffled the whole
+    # (doc, gram) stream a third time through the gram-keyed join.  Per-
+    # doc dedup is map-side (array_distinct before the explode), so the
+    # distinct shuffle disappears; and a gram with document frequency 1
+    # belongs to exactly one doc — its min doc_id — so per-doc unique
+    # counts come from the gram aggregate alone and the big join
+    # disappears.  What remains: two map-side-combinable aggregates over
+    # the exploded stream and one left join of two doc-keyed aggregates.
+    toks = df.select(id_col, F.split(text_col, " ").alias("toks"))
+    tri = toks.select(
+        id_col,
+        F.explode(
+            F.array_distinct(
+                F.expr(
+                    "transform(sequence(1, size(toks) - 2), "
+                    "p -> concat_ws(' ', toks[p-1], toks[p], toks[p+1]))"
+                )
+            )
+        ).alias("g"),
+    )
+    per_doc = tri.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_trigrams")
+    )
+    singles = (
+        tri.groupBy("g")
+        .agg(
+            F.count(F.lit(1)).alias("ndocs"),
+            F.min(id_col).alias("d0"),
+        )
+        .filter(F.col("ndocs") == 1)
+        .groupBy(F.col("d0").alias(id_col))
+        .agg(F.count(F.lit(1)).alias("n_unique"))
+    )
+    return per_doc.join(singles, id_col, "left").select(
+        id_col,
+        "n_trigrams",
+        F.coalesce("n_unique", F.lit(0)).alias("n_unique"),
+        r4(
+            F.coalesce("n_unique", F.lit(0)).cast("double")
+            / F.col("n_trigrams")
+        ).alias("novelty"),
+    )
+
 
 @register(
     "text_novelty",
@@ -60,56 +124,12 @@ def text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf-hot grams dominate the join's build side exactly as in
     sim_containment — the same hot-gram cap applies when corpora grow;
     output is one row per document."""
-    # r14 restructure (guide §2.3 "aggregate before you shuffle", §2.4):
-    # the old shape ran `tri.distinct()` (a full-stream shuffle) TWICE —
-    # the distinct frame fed both the df aggregate and the join, and
-    # Catalyst has no cross-DAG CSE — then re-shuffled the whole
-    # (doc, gram) stream a third time through the gram-keyed join.  Per-
-    # doc dedup is map-side (array_distinct before the explode), so the
-    # distinct shuffle disappears; and a gram with document frequency 1
-    # belongs to exactly one doc — its min doc_id — so per-doc unique
-    # counts come from the gram aggregate alone and the big join
-    # disappears.  What remains: two map-side-combinable aggregates over
-    # the exploded stream and one left join of two doc-keyed aggregates.
     # Scan-spread gate: the trigram build is the compute-heavy per-row
     # stage this corpus runs on one row group.
     from .llm_pipeline import _spread_docs
 
     docs = _spread_docs(spark, sf_dir, table(spark, sf_dir, "documents"))
-    toks = docs.select("doc_id", F.split("text", " ").alias("toks"))
-    tri = toks.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(toks) - 2), "
-                    "p -> concat_ws(' ', toks[p-1], toks[p], toks[p+1]))"
-                )
-            )
-        ).alias("g"),
-    )
-    per_doc = tri.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_trigrams")
-    )
-    singles = (
-        tri.groupBy("g")
-        .agg(
-            F.count(F.lit(1)).alias("ndocs"),
-            F.min("doc_id").alias("d0"),
-        )
-        .filter(F.col("ndocs") == 1)
-        .groupBy(F.col("d0").alias("doc_id"))
-        .agg(F.count(F.lit(1)).alias("n_unique"))
-    )
-    return per_doc.join(singles, "doc_id", "left").select(
-        "doc_id",
-        "n_trigrams",
-        F.coalesce("n_unique", F.lit(0)).alias("n_unique"),
-        r4(
-            F.coalesce("n_unique", F.lit(0)).cast("double")
-            / F.col("n_trigrams")
-        ).alias("novelty"),
-    )
+    return novelty_score(docs, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------

@@ -39,14 +39,14 @@ _CENT_SQL = """
 """
 
 
-def _exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("pos", "xf"),
+def _exploded(df: DataFrame, vec_col: str, *keep: str) -> DataFrame:
+    """(keep..., pos, x): one row per vector component of `vec_col`,
+    pos as long and x as double."""
+    return df.select(
+        *keep,
+        F.posexplode(vec_col).alias("pos", "xf"),
     ).select(
-        "vec_id",
-        "label",
+        *keep,
         F.col("pos").cast("long").alias("pos"),
         F.col("xf").cast("double").alias("x"),
     )
@@ -63,6 +63,40 @@ def _centroids(e: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # embed_dim_stats — per-dimension moment profile of the embedding corpus
 # ---------------------------------------------------------------------------
+
+def embedding_dim_stats(
+    df: DataFrame,
+    vec_col: str,
+) -> DataFrame:
+    """Per-dimension mean/std/min/max over ANY embedding column
+    (embed_dim_stats' algebra with the column parameterized) — the
+    whitening / dead-dimension / clipped-dimension diagnostic run
+    before any ANN index is trusted.  posexplode fans each vector into
+    dims rows, but the aggregate is map-side combinable on the
+    dims-sized pos key, so every partition reduces to |dims| rows
+    before the single Exchange — one pass regardless of corpus size.
+    Moments use the exact DECIMAL(38,6) sum path (float inputs are
+    exact as doubles; x and x*x quantize identically in both engines);
+    min/max are exact unrounded singles.  Returns (pos, n, mean, std,
+    vmin, vmax)."""
+    e = _exploded(df, vec_col)
+    n = F.count(F.lit(1))
+    sd = F.sum(F.col("x").cast(DEC)).cast("double")
+    sq = F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double")
+    return e.groupBy("pos").agg(
+        n.cast("long").alias("n"),
+        r4(sd / n).alias("mean"),
+        r4(
+            F.sqrt(
+                F.greatest(
+                    F.lit(0.0), (sq - sd * sd / n) / (n - F.lit(1))
+                )
+            )
+        ).alias("std"),
+        F.min("x").alias("vmin"),
+        F.max("x").alias("vmax"),
+    )
+
 
 @register(
     "embed_dim_stats",
@@ -92,23 +126,7 @@ def embed_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size.  Moments use the exact DECIMAL(38,6) sum path (float
     inputs are exact as doubles; x and x*x quantize identically in both
     engines); min/max are exact unrounded singles."""
-    e = _exploded(spark, sf_dir)
-    n = F.count(F.lit(1))
-    sd = F.sum(F.col("x").cast(DEC)).cast("double")
-    sq = F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double")
-    return e.groupBy("pos").agg(
-        n.cast("long").alias("n"),
-        r4(sd / n).alias("mean"),
-        r4(
-            F.sqrt(
-                F.greatest(
-                    F.lit(0.0), (sq - sd * sd / n) / (n - F.lit(1))
-                )
-            )
-        ).alias("std"),
-        F.min("x").alias("vmin"),
-        F.max("x").alias("vmax"),
-    )
+    return embedding_dim_stats(table(spark, sf_dir, "embeddings"), "embedding")
 
 
 # ---------------------------------------------------------------------------
@@ -154,7 +172,9 @@ def embed_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispatches to `grouped_bucketed_topk` — low-cardinality label groups
     never funnel the corpus through |labels| tasks (the §6 anti-pattern
     the kernel exists for).  Ranks are tie-safed on vec_id."""
-    e = _exploded(spark, sf_dir)
+    e = _exploded(
+        table(spark, sf_dir, "embeddings"), "embedding", "vec_id", "label"
+    )
     cent = _centroids(e)
     tq = F.floor(
         (F.col("x") - F.col("c")) * (F.col("x") - F.col("c")) * 1000000
@@ -229,7 +249,9 @@ def embed_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, with zero candidate generation and zero windows.  Distances
     are exact e6-quantized BIGINTs end to end; the single derived double
     (avg_margin) divides exact integers in identical trees."""
-    e = _exploded(spark, sf_dir)
+    e = _exploded(
+        table(spark, sf_dir, "embeddings"), "embedding", "vec_id", "label"
+    )
     cent = _centroids(e).withColumnRenamed("label", "clabel")
     tq = F.floor(
         (F.col("x") - F.col("c")) * (F.col("x") - F.col("c")) * 1000000

@@ -32,7 +32,7 @@ from .. import catalog
 from ..catalog import spread_scan, table
 from ..registry import register
 from ..session import memo
-from ._helpers import pin
+from ._helpers import pin, require_integral_id
 
 N_MINHASH = 16
 N_BANDS = 4  # 4 rows per band
@@ -1266,36 +1266,48 @@ LSH_BITS = 6          # random-hyperplane sign bits -> 2^6 buckets
 LSH_SEED = 20240813   # hyperplane RNG seed (deterministic index build)
 
 
-@register("ann_lsh", oracle=None)  # R class: approximate by design
-def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN — the second scale path next to ann_ivf (data-
-    independent, no centroid build): each vector's bucket is the sign
-    pattern of LSH_BITS random-hyperplane projections (Charikar'02 SimHash
-    for cosine); candidates hash-partition by bucket, queries MULTIPROBE
-    their own bucket plus every Hamming-1 neighbor (flip one bit), and
-    each bucket's candidates are scanned only by the queries probing it —
-    the same cogroup economics as ann_ivf with zero training.  The
-    hyperplane matrix is seeded numpy (LSH_BITS x dim, regenerated
-    identically in every task — nothing is collected or broadcast beyond
-    the O(bits*dim) constants).  On the near-random synthetic corpus
-    recall@5 is ~0.23 while scanning ~11% of the corpus — ~2.1x better
-    than equal-cost random scanning, which is the honest ceiling for
-    data-independent LSH on unclustered data (tests/test_ann_scale.py
-    pins both the recall ratio and the scan economics)."""
+def ann_topk(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 5,
+    n_bits: int = 8,
+    seed: int = 20240813,
+) -> DataFrame:
+    """Approximate cosine top-k on ANY (id, embedding) table (ann_lsh's
+    algebra with k / bits / seed parameterized): each vector buckets by
+    the sign pattern of `n_bits` seeded random-hyperplane projections
+    (SimHash for cosine), queries multiprobe their own bucket plus every
+    Hamming-1 neighbor, and each bucket's candidates are scanned only by
+    the queries probing it.  Returns (query_id, neighbor_id, sim).
+    Data-independent (no centroid build) — use cosine_topk for the exact
+    answer when the corpus is small enough.
+
+    Scale shape: the hyperplane matrix is regenerated identically in
+    every task from the seed (O(bits x dim) constants, nothing collected
+    or broadcast); candidates hash-partition by bucket, so each query
+    scans ~ (1 + n_bits) / 2^n_bits of the corpus instead of all of
+    it."""
+    if k < 1 or not 1 <= n_bits <= 24:
+        raise ValueError("k must be >= 1 and n_bits in [1, 24]")
+    require_integral_id(df, id_col, "ann_topk")
     import numpy as np
 
-    emb = _emb(spark, sf_dir)
+    emb = df.select(
+        F.col(id_col).cast("long").alias("vec_id"),
+        F.col(vec_col).cast("array<double>").alias("e"),
+    )
 
     def code_of(Qn: "np.ndarray", planes: "np.ndarray") -> "np.ndarray":
         bits = (Qn @ planes.T) >= 0.0
-        return (bits @ (1 << np.arange(LSH_BITS))).astype("int32")
+        return (bits @ (1 << np.arange(n_bits))).astype("int32")
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             if b.empty:
                 continue
-            planes = np.random.RandomState(LSH_SEED).standard_normal(
-                (LSH_BITS, len(b["e"].iloc[0]))
+            planes = np.random.RandomState(seed).standard_normal(
+                (n_bits, len(b["e"].iloc[0]))
             )
             Q = np.stack(b["e"].to_numpy())
             Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
@@ -1307,8 +1319,8 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in batches:
             if b.empty:
                 continue
-            planes = np.random.RandomState(LSH_SEED).standard_normal(
-                (LSH_BITS, len(b["e"].iloc[0]))
+            planes = np.random.RandomState(seed).standard_normal(
+                (n_bits, len(b["e"].iloc[0]))
             )
             Q = np.stack(b["e"].to_numpy())
             Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
@@ -1316,7 +1328,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_b, out_id, out_e = [], [], []
             for r in range(len(own)):
                 probes = [int(own[r])] + [
-                    int(own[r]) ^ (1 << j) for j in range(LSH_BITS)
+                    int(own[r]) ^ (1 << j) for j in range(n_bits)
                 ]
                 for bk in probes:
                     out_b.append(bk)
@@ -1339,7 +1351,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in range(S.shape[0]):
             s = S[r].copy()
             s[c_ids == q_ids[r]] = -np.inf
-            order = np.lexsort((c_ids, -s))[:TOP_K]
+            order = np.lexsort((c_ids, -s))[:k]
             for j in order:
                 if s[j] == -np.inf:
                     continue
@@ -1356,8 +1368,30 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         per_bucket.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
+        .filter(F.col("rn") <= k)
         .drop("rn")
+    )
+
+
+@register("ann_lsh", oracle=None)  # R class: approximate by design
+def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed ANN — the second scale path next to ann_ivf (data-
+    independent, no centroid build): each vector's bucket is the sign
+    pattern of LSH_BITS random-hyperplane projections (Charikar'02 SimHash
+    for cosine); candidates hash-partition by bucket, queries MULTIPROBE
+    their own bucket plus every Hamming-1 neighbor (flip one bit), and
+    each bucket's candidates are scanned only by the queries probing it —
+    the same cogroup economics as ann_ivf with zero training.  The
+    hyperplane matrix is seeded numpy (LSH_BITS x dim, regenerated
+    identically in every task — nothing is collected or broadcast beyond
+    the O(bits*dim) constants).  On the near-random synthetic corpus
+    recall@5 is ~0.23 while scanning ~11% of the corpus — ~2.1x better
+    than equal-cost random scanning, which is the honest ceiling for
+    data-independent LSH on unclustered data (tests/test_ann_scale.py
+    pins both the recall ratio and the scan economics)."""
+    return ann_topk(
+        table(spark, sf_dir, "embeddings"), "vec_id", "embedding", TOP_K,
+        LSH_BITS, LSH_SEED,
     )
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._helpers import pin
+from ._helpers import check_free, pin
 
 # The embeddings corpus dimension, pinned by embed_centroid's DuckDB oracle
 # (generate_series(1, EMBED_DIM)); the Spark side raises on any other dim.
@@ -713,6 +713,58 @@ def _kmeans_seed_expr(vec_id_col):
 _KMEANS_SEED_SQL = "md5('kmseed:' || CAST(vec_id AS VARCHAR))"
 
 
+def kmeans_assign(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 8,
+    seed_salt: str = "kmseed:",
+) -> DataFrame:
+    """One seeded Lloyd iteration on ANY (id, vector) table
+    (embed_kmeans' algebra with k parameterized): deterministic
+    md5-ordered seed centroids, nearest-centroid assignment.  Returns
+    (id_col, cluster, dist).  The full iterative fit drifts across
+    engines by nature — this is the exactly-certifiable kernel; loop it
+    yourself if you want Lloyd convergence.
+
+    Scale shape: k seed rows collect to the driver (model-sized) and
+    re-enter as a broadcast; assignment is a map-side k-way fold per
+    vector — no shuffle except the final min-by-struct groupBy."""
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    check_free([id_col, vec_col], "c_idx", "c", "d2", "m")
+    seed_key = F.md5(
+        F.concat(F.lit(seed_salt), F.col(id_col).cast("string"))
+    )
+    seeds = (
+        df.orderBy(seed_key, id_col)
+        .limit(k)
+        .select(F.col(vec_col).cast("array<double>").alias("c"))
+        .collect()
+    )
+    seeds_df = df.sparkSession.createDataFrame(
+        [(i, list(r.c)) for i, r in enumerate(seeds)],
+        "c_idx int, c array<double>",
+    )
+    e_d = F.col(vec_col).cast("array<double>")
+    d2 = F.aggregate(
+        F.zip_with(e_d, F.col("c"), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    pairs = df.select(id_col, vec_col).crossJoin(
+        F.broadcast(seeds_df)
+    ).select(id_col, "c_idx", d2.alias("d2"))
+    best = pairs.groupBy(id_col).agg(
+        F.min(F.struct("d2", "c_idx")).alias("m")
+    )
+    return best.select(
+        id_col,
+        F.col("m.c_idx").alias("cluster"),
+        F.round(F.sqrt(F.col("m.d2")), 6).alias("dist"),
+    )
+
+
 @register(
     "embed_kmeans",
     oracle=f"""
@@ -761,33 +813,8 @@ def embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector inside WholeStageCodegen — no shuffle except the final
     min-by-struct groupBy on vec_id, which the K-row crossJoin keeps at
     K× map width (K=8)."""
-    emb = table(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.orderBy(_kmeans_seed_expr(F.col("vec_id")), "vec_id")
-        .limit(KMEANS_K)
-        .select(F.col("embedding").cast("array<double>").alias("c"))
-        .collect()
-    )
-    seeds_df = spark.createDataFrame(
-        [(i, list(r.c)) for i, r in enumerate(seeds)],
-        "c_idx int, c array<double>",
-    )
-    e_d = F.col("embedding").cast("array<double>")
-    d2 = F.aggregate(
-        F.zip_with(e_d, F.col("c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = emb.select("vec_id", "embedding").crossJoin(
-        F.broadcast(seeds_df)
-    ).select("vec_id", "c_idx", d2.alias("d2"))
-    best = pairs.groupBy("vec_id").agg(
-        F.min(F.struct("d2", "c_idx")).alias("m")
-    )
-    return best.select(
-        "vec_id",
-        F.col("m.c_idx").alias("cluster"),
-        F.round(F.sqrt(F.col("m.d2")), 6).alias("dist"),
+    return kmeans_assign(
+        table(spark, sf_dir, "embeddings"), "vec_id", "embedding", KMEANS_K
     )
 
 
@@ -904,6 +931,60 @@ BM25_B = 0.75
 BM25_QUERY = ("join", "merge", "vector")  # fixed retrieval query terms
 
 
+def bm25_scores(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    query_terms: list[str],
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """BM25 score of every document against `query_terms` on ANY
+    (id, text) table — text_bm25's certified algebra: one tokenize pass
+    feeds per-doc lengths (pinned: corpus stats + the score join read
+    it) and the query-filtered tf (pinned: df + the score join); idf
+    and corpus stats broadcast.  Returns (id_col, bm25) for documents
+    matching >= 1 query term."""
+    if not query_terms:
+        raise ValueError("bm25_scores: query_terms must be non-empty")
+    check_free([id_col], "tok", "dl", "tf", "df", "n_docs", "avgdl")
+    toks = df.select(
+        id_col, F.explode(F.split(F.lower(text_col), " ")).alias("tok")
+    )
+    # dl and tf each feed two consumers: pinned so tokenize runs once
+    # per side (plan-audit, SCALE.md §50).
+    dl = pin(toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl")))
+    stats = dl.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    tf = pin(
+        toks.filter(F.col("tok").isin(*query_terms))
+        .groupBy(id_col, "tok")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    idf = F.log(
+        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+    )
+    score = (
+        idf
+        * F.col("tf")
+        * (k1 + 1.0)
+        / (
+            F.col("tf")
+            + k1
+            * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+        )
+    )
+    return (
+        tf.join(F.broadcast(dfreq), "tok")
+        .join(dl, id_col)
+        .crossJoin(F.broadcast(stats))
+        .groupBy(id_col)
+        .agg(F.round(F.sum(score), 4).alias("bm25"))
+    )
+
+
 @register(
     "text_bm25",
     oracle=f"""
@@ -946,39 +1027,7 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     containing each term — no second scan), and the score assembles via
     two broadcast joins.  At 100 TB the heavy side (tf per doc) shuffles
     once on doc_id; df and stats are model-sized."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    )
-    # dl and tf each feed two consumers: pinned so tokenize runs once
-    # per side (plan-audit, SCALE.md §50).
-    dl = pin(toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    tf = pin(
-        toks.filter(F.col("tok").isin(*BM25_QUERY))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-    )
-    score = (
-        idf
-        * F.col("tf")
-        * (BM25_K1 + 1.0)
-        / (
-            F.col("tf")
-            + BM25_K1
-            * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-        )
-    )
-    return (
-        tf.join(F.broadcast(df), "tok")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(score), 4).alias("bm25"))
+    return bm25_scores(
+        table(spark, sf_dir, "documents"), "doc_id", "text", BM25_QUERY,
+        BM25_K1, BM25_B,
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._helpers import pin
+from ._helpers import check_free, pin
 from .pipeline_extras import _hash_bucket, _sql_hash_bucket
 
 # ---------------------------------------------------------------------------
@@ -226,6 +226,40 @@ BOTTOMK = 100
 KMV_SPACE = 1_000_000_000
 
 
+def bottomk_sample(
+    df: DataFrame,
+    id_col: str,
+    k: int = 100,
+    space: int = 1_000_000_000,
+) -> DataFrame:
+    """Bottom-k (KMV) sample of ANY id column (sample_bottomk's algebra
+    with column and k parameterized): the k rows with the smallest md5
+    hash values — simultaneously (a) a uniform sample without
+    replacement, (b) COORDINATED across dataset versions (an unchanged
+    id keeps its hash, so successive snapshots share most of their
+    sample — what makes A/B-stable eval sets), and (c) a distinct-count
+    estimator (n_hat ~ (k-1)*space/kth_hash).  A deterministic pure
+    function of the ids — reproducible, unlike reservoir sampling whose
+    result depends on partition visit order.  Returns (id, hv, rk).
+
+    Scale: per-partition bottom-k via TakeOrderedAndProject (heap +
+    merge, no global sort); the hash is map-side scan work."""
+    check_free([id_col], "hv")
+    h = df.select(
+        id_col,
+        _hash_bucket(
+            F.concat(F.lit("kmv:"), F.col(id_col).cast("string")), space
+        ).alias("hv"),
+    )
+    topk = h.orderBy("hv", id_col).limit(k)
+    w = Window.orderBy("hv", id_col)
+    return topk.select(
+        id_col,
+        F.col("hv").cast("long").alias("hv"),
+        F.row_number().over(w).cast("long").alias("rk"),
+    )
+
+
 @register(
     "sample_bottomk",
     oracle=f"""
@@ -253,19 +287,8 @@ def sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-partition bottom-k via TakeOrderedAndProject (heap +
     merge, no global sort); the hash is map-side scan work."""
-    d = table(spark, sf_dir, "documents")
-    h = d.select(
-        "doc_id",
-        _hash_bucket(
-            F.concat(F.lit("kmv:"), F.col("doc_id").cast("string")), KMV_SPACE
-        ).alias("hv"),
-    )
-    topk = h.orderBy("hv", "doc_id").limit(BOTTOMK)
-    w = Window.orderBy("hv", "doc_id")
-    return topk.select(
-        "doc_id",
-        F.col("hv").cast("long").alias("hv"),
-        F.row_number().over(w).cast("long").alias("rk"),
+    return bottomk_sample(
+        table(spark, sf_dir, "documents"), "doc_id", BOTTOMK, KMV_SPACE
     )
 
 
@@ -274,6 +297,33 @@ def sample_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 HASH_DIM = 32
+
+
+def hash_features(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    dim: int = 32,
+) -> DataFrame:
+    """The hashing trick over ANY text column (feat_hashing's algebra
+    with columns and dimension parameterized): whitespace tokens map to
+    a fixed dim-bucket count vector via md5 — the stateless vectorizer
+    (no vocabulary fit, no OOV problem, collision noise bounded by
+    dimension).  Emitted in sparse (id, bucket, cnt) form — the
+    driver-safe serialization of a vector column and the natural input
+    to a sparse matmul.  Returns (id, bucket, cnt).
+
+    Scale: tokenize-explode -> two-key grouped count, map-side
+    combinable; NO vocabulary state anywhere — nothing to broadcast,
+    nothing to version at 100 TB."""
+    check_free([id_col], "term", "bucket")
+    toks = df.select(
+        id_col, F.explode(F.split(text_col, " ")).alias("term")
+    )
+    bucket = _hash_bucket(F.concat(F.lit("fh:"), F.col("term")), dim)
+    return toks.groupBy(
+        id_col, bucket.cast("int").alias("bucket")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 @register(
@@ -301,10 +351,6 @@ def feat_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: tokenize-explode → two-key grouped count, map-side
     combinable; no vocabulary state anywhere (THE selling point at
     100 TB: nothing to broadcast, nothing to version)."""
-    toks = table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
+    return hash_features(
+        table(spark, sf_dir, "documents"), "doc_id", "text", HASH_DIM
     )
-    bucket = _hash_bucket(F.concat(F.lit("fh:"), F.col("term")), HASH_DIM)
-    return toks.groupBy(
-        "doc_id", bucket.cast("int").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("cnt"))

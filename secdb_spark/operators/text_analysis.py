@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .. import catalog
 from ..catalog import table
 from ..registry import register
-from ._helpers import pin
+from ._helpers import check_free, pin
 from ._global_order import GLOBAL_WINDOW_GATE, bucketed_prefix_sum
 
 STOPWORDS = ("a", "the")  # corpus vocabulary is a 31-word soup (FIXTURES.md)
@@ -302,6 +302,29 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_ISH_PATTERN = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 
 
+def token_stats(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """Token cost accounting on ANY (id, text) table (text_tokens_bpe's
+    algebra): BPE-ish regex segmentation (letter / digit / punctuation
+    runs), whitespace split, and the chars/4 estimator — the standard
+    trio for sizing a training corpus.  Map-only scan, zero shuffles,
+    no UDF.  Returns (id_col, n_bpe_tokens, n_ws_tokens, n_est_tokens)."""
+    return df.select(
+        id_col,
+        # Spark SQL string literals process backslash escapes -> double them
+        F.size(
+            F.expr(
+                f"regexp_extract_all({text_col}, '{BPE_ISH_PATTERN.replace(chr(92), chr(92) * 2)}', 0)"
+            )
+        ).alias("n_bpe_tokens"),
+        F.size(F.split(text_col, " ")).alias("n_ws_tokens"),
+        F.ceil(F.length(text_col) / 4.0).alias("n_est_tokens"),
+    )
+
+
 @register(
     "text_tokens_bpe",
     oracle=f"""
@@ -315,19 +338,9 @@ BPE_ISH_PATTERN = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
 def text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting three ways: BPE-ish regex segmentation (letters /
     digits / punctuation runs), whitespace split, and the chars/4
-    estimator — the standard cost-accounting trio for training data."""
-    d = table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        # Spark SQL string literals process backslash escapes -> double them
-        F.size(
-            F.expr(
-                f"regexp_extract_all(text, '{BPE_ISH_PATTERN.replace(chr(92), chr(92) * 2)}', 0)"
-            )
-        ).alias("n_bpe_tokens"),
-        F.size(F.split("text", " ")).alias("n_ws_tokens"),
-        F.ceil(F.length("text") / 4.0).alias("n_est_tokens"),
-    )
+    estimator — the standard cost-accounting trio for training data:
+    the `token_stats` kernel on the corpus."""
+    return token_stats(table(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register(
@@ -577,6 +590,50 @@ CHUNK_W = 32  # chunk width (tokens)
 CHUNK_S = 24  # stride (tokens) -> 8-token overlap between chunks
 
 
+def chunk_text(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    width: int = 32,
+    stride: int = 24,
+) -> DataFrame:
+    """Sliding-window token chunking on ANY (id, text) table
+    (text_chunk's algebra with width/stride parameterized) — the step
+    between a raw corpus and an embedding index in a RAG pipeline.
+    Returns (id_col, chunk_id, chunk, n_toks); windows overlap by
+    width - stride tokens so no boundary context is lost.
+
+    Scale shape: chunk starts come from sequence + slice + posexplode
+    entirely inside codegen — a map-only stage, ZERO shuffles, fused
+    into the scan; slice() shares the one token array instead of
+    re-materializing the document per window."""
+    if width < 1 or stride < 1:
+        raise ValueError("width and stride must be >= 1")
+    check_free([id_col], "chunk_id", "z")
+    toks = F.split(text_col, " ")
+    starts = F.sequence(
+        F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(stride)
+    )
+    chunks = F.transform(
+        starts, lambda i: F.array_join(F.slice(toks, i, width), " ")
+    )
+    lens = F.transform(
+        starts,
+        lambda i: F.least(F.lit(width), F.size(toks) - i + 1).cast("bigint"),
+    )
+    return df.select(
+        id_col,
+        F.posexplode(F.arrays_zip(chunks.alias("c"), lens.alias("n"))).alias(
+            "chunk_id", "z"
+        ),
+    ).select(
+        id_col,
+        F.col("chunk_id").cast("bigint").alias("chunk_id"),
+        F.col("z.c").alias("chunk"),
+        F.col("z.n").alias("n_toks"),
+    )
+
+
 @register(
     "text_chunk",
     oracle=f"""
@@ -596,37 +653,14 @@ CHUNK_S = 24  # stride (tokens) -> 8-token overlap between chunks
 )
 def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document chunking — the step between a raw corpus
-    and an embedding index in every RAG pipeline: width-W token windows
-    at stride S (W-S tokens of overlap so no boundary context is lost).
-    Chunk starts come from `sequence` + `slice` + `posexplode` entirely
-    inside codegen — a map-only stage with ZERO shuffles that fuses into
-    the scan; output order and ids are deterministic (chunk_id is the
-    window ordinal).  At 100 TB chunking is embarrassingly parallel and
-    the only design decision that matters is emitting chunks without
-    re-materializing the document per window — slice() shares the one
-    token array."""
-    d = table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(CHUNK_S)
-    )
-    chunks = F.transform(
-        starts, lambda i: F.array_join(F.slice(toks, i, CHUNK_W), " ")
-    )
-    lens = F.transform(
-        starts,
-        lambda i: F.least(F.lit(CHUNK_W), F.size(toks) - i + 1).cast("bigint"),
-    )
-    return d.select(
-        "doc_id",
-        F.posexplode(F.arrays_zip(chunks.alias("c"), lens.alias("n"))).alias(
-            "chunk_id", "z"
-        ),
-    ).select(
-        "doc_id",
-        F.col("chunk_id").cast("bigint").alias("chunk_id"),
-        F.col("z.c").alias("chunk"),
-        F.col("z.n").alias("n_toks"),
+    and an embedding index in every RAG pipeline: the `chunk_text`
+    kernel at width CHUNK_W, stride CHUNK_S.  Output ids are
+    deterministic (chunk_id is the window ordinal).  At 100 TB chunking
+    is embarrassingly parallel and the only design decision that matters
+    is emitting chunks without re-materializing the document per window
+    — slice() shares the one token array."""
+    return chunk_text(
+        table(spark, sf_dir, "documents"), "doc_id", "text", CHUNK_W, CHUNK_S
     )
 
 

@@ -722,6 +722,44 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 PATH_TOPK = 10
 
 
+def path_topk(
+    df: DataFrame,
+    entity_col: str,
+    step_col: str,
+    order_cols: list[str],
+    k: int = 10,
+    steps: int = 3,
+) -> DataFrame:
+    """Top-k most frequent `steps`-step event paths of ANY
+    (entity, step, order) stream (event_path_topk's algebra with
+    columns, k and path length parameterized) — the clickstream
+    path-mining query: steps-1 lead() windows on ONE entity shuffle
+    build the path string in place (no self-joins), paths aggregate
+    map-side (the |step values|^steps domain collapses early), and the
+    top-k is ORDER-BY-complete with (n DESC, path) tie keys — never a
+    bare LIMIT.  Pass tie-breaking order_cols.  Returns (path, n).
+
+    Scale: the only full-stream cost is the entity window; the counted
+    table is bounded by the path domain."""
+    w = Window.partitionBy(entity_col).orderBy(*order_cols)
+    path = F.concat_ws(
+        ">",
+        F.col(step_col),
+        *[F.lead(step_col, i).over(w) for i in range(1, steps)],
+    )
+    # concat_ws silently drops nulls: a short path means a lead ran off
+    # the partition end — keep only complete paths
+    paths = df.select(path.alias("path")).filter(
+        F.size(F.split("path", ">")) == steps
+    )
+    return (
+        paths.groupBy("path")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .orderBy(F.col("n").desc(), "path")
+        .limit(k)
+    )
+
+
 @register(
     "event_path_topk",
     oracle=f"""
@@ -746,24 +784,9 @@ def event_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER-BY-complete with (n DESC, path) — never a bare LIMIT
     (§4.4.4).  Scale: the only full-stream cost is the user_id window;
     the counted table is bounded by the path domain."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    path = F.concat_ws(
-        ">",
-        F.col("event_type"),
-        F.lead("event_type", 1).over(w),
-        F.lead("event_type", 2).over(w),
-    )
-    # concat_ws silently drops nulls: a short path means a lead ran off
-    # the partition end — keep only complete 3-step paths
-    paths = ev.select(path.alias("path")).filter(
-        F.size(F.split("path", ">")) == 3
-    )
-    return (
-        paths.groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), "path")
-        .limit(PATH_TOPK)
+    return path_topk(
+        table(spark, sf_dir, "events"), "user_id", "event_type",
+        ["ts", "event_id"], PATH_TOPK,
     )
 
 

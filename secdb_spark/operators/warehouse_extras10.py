@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import table
 from ..registry import register
 from ..session import scratch_dir
-from ._helpers import pin, dsum, r4, sql_dsum
+from ._helpers import check_free, dsum, pin, r4, sql_dsum
 
 LN2 = repr(math.log(2))  # shared literal, bit-identical both engines
 
@@ -220,6 +220,59 @@ STICKY_ANCHOR = "2024-01-01"
 STICKY_WINDOW = 7
 
 
+def stickiness(
+    df: DataFrame,
+    id_col: str,
+    ts_col: str,
+    anchor: str,
+    window: int = 7,
+) -> DataFrame:
+    """Engagement stickiness per day of ANY activity stream
+    (stickiness_ratio's algebra with columns, anchor and window
+    parameterized): DAU / trailing-`window`-day active users (the
+    DAU/WAU ratio — 1.0 means every weekly user shows up daily).  The
+    rolling DISTINCT cannot ride a windowed aggregate; the scale shape
+    is the cover-set explode: each distinct (id, day) activity row fans
+    out to the `window` future days it keeps the entity 'weekly-active'
+    for, and the trailing count becomes a plain combinable
+    count-distinct per cover day.  Cover days beyond the corpus or on
+    activity gaps drop out via the inner join.  Returns
+    (day, dau, wau, stickiness).
+
+    Scale: raw events reduce to distinct (id, day) FIRST; the x-window
+    expansion runs on the reduced table — a vanishing fraction of the
+    event stream."""
+    check_free([id_col], "di")
+    act = (
+        df
+        .select(
+            id_col,
+            F.datediff(
+                F.date_trunc("day", F.col(ts_col)),
+                F.lit(anchor).cast("timestamp"),
+            ).alias("di"),
+        )
+        .distinct()
+    )
+    dau = act.groupBy("di").agg(F.count(F.lit(1)).alias("dau"))
+    cover = act.select(
+        id_col,
+        F.explode(
+            F.sequence(F.col("di"), F.col("di") + (window - 1))
+        ).alias("di"),
+    ).distinct()
+    wau = cover.groupBy("di").agg(F.count(F.lit(1)).alias("wau"))
+    j = dau.join(wau, "di")
+    return j.select(
+        F.date_add(
+            F.lit(anchor).cast("date"), F.col("di").cast("int")
+        ).cast("timestamp").alias("day"),
+        "dau",
+        "wau",
+        r4(F.col("dau").cast("double") / F.col("wau")).alias("stickiness"),
+    )
+
+
 @register(
     "stickiness_ratio",
     oracle=f"""
@@ -254,33 +307,9 @@ def stickiness_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-sized day key.  Cover days beyond the corpus or on
     activity gaps drop out via the inner join (matching the oracle's
     BETWEEN self-join exactly)."""
-    act = (
-        table(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.datediff(
-                F.date_trunc("day", F.col("ts")),
-                F.lit(STICKY_ANCHOR).cast("timestamp"),
-            ).alias("di"),
-        )
-        .distinct()
-    )
-    dau = act.groupBy("di").agg(F.count(F.lit(1)).alias("dau"))
-    cover = act.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("di"), F.col("di") + (STICKY_WINDOW - 1))
-        ).alias("di"),
-    ).distinct()
-    wau = cover.groupBy("di").agg(F.count(F.lit(1)).alias("wau"))
-    j = dau.join(wau, "di")
-    return j.select(
-        F.date_add(
-            F.lit(STICKY_ANCHOR).cast("date"), F.col("di").cast("int")
-        ).cast("timestamp").alias("day"),
-        "dau",
-        "wau",
-        r4(F.col("dau").cast("double") / F.col("wau")).alias("stickiness"),
+    return stickiness(
+        table(spark, sf_dir, "events"), "user_id", "ts", STICKY_ANCHOR,
+        STICKY_WINDOW,
     )
 
 

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import spread_scan, table
 from ..registry import register
 from ..session import scratch_dir
-from ._helpers import pin, DEC, dsum, r4, sql_dsum
+from ._helpers import DEC, check_free, dsum, pin, r4, sql_dsum
 
 TOPK_PAIRS = 20
 MIN_PAIR_SUPPORT = 2  # baskets a pair must co-occur in (assoc/graph ops)
@@ -414,6 +414,56 @@ def data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def tfidf(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = 3,
+) -> DataFrame:
+    """Top-k TF-IDF terms per document on ANY (id, text) table
+    (tfidf_topk's algebra with k parameterized): idf quantizes to an
+    integer (floor(ln(N/df)*1e6 + 0.5)) so score = tf * idf6 is exact
+    bigint arithmetic.  Returns (id_col, term, score, rn).
+
+    Scale shape: ONE tokenize pass (tf pinned, df derived from it);
+    the vocabulary-bounded idf side broadcasts onto the tf stream
+    (hash-joining would shuffle tf by token and collapse on Zipf-hot
+    terms); the top-k window shares the doc partitioning."""
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    check_free([id_col], "term", "tf", "idf6", "score", "rn")
+    toks = df.select(
+        id_col, F.explode(F.split(text_col, " ")).alias("term")
+    )
+    # ONE tokenize pass: tf is pinned and df derives from it (each tf
+    # row is one distinct (doc, term), so count(*) per term IS the
+    # document frequency) — un-pinned, tf and df each re-tokenized the
+    # corpus (plan-audit, SCALE.md §50).
+    tf = pin(
+        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    )
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    nd = df.agg(F.count(F.lit(1)).alias("n_docs"))
+    idf = dfreq.crossJoin(F.broadcast(nd)).select(
+        "term",
+        F.floor(
+            F.log(F.col("n_docs").cast("double") / F.col("df")) * 1_000_000
+            + 0.5
+        )
+        .cast("long")
+        .alias("idf6"),
+    )
+    scored = tf.join(F.broadcast(idf), "term").select(
+        id_col, "term", (F.col("tf") * F.col("idf6")).alias("score")
+    )
+    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), "term")
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("int"))
+        .filter(F.col("rn") <= k)
+        .select(id_col, "term", "score", "rn")
+    )
+
+
 @register(
     "tfidf_topk",
     oracle=f"""
@@ -447,36 +497,8 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     joining would shuffle tf by token and collapse on Zipf-hot terms
     (the text_unigram_logprob lesson); the top-k window shares the
     doc_id partitioning of the tf aggregate."""
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    )
-    # ONE tokenize pass: tf is pinned and df derives from it (each tf
-    # row is one distinct (doc, term), so count(*) per term IS the
-    # document frequency) — un-pinned, tf and df each re-tokenized the
-    # corpus (plan-audit, SCALE.md §50).
-    tf = pin(
-        toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    nd = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    idf = df.crossJoin(F.broadcast(nd)).select(
-        "term",
-        F.floor(
-            F.log(F.col("n_docs").cast("double") / F.col("df")) * 1_000_000
-            + 0.5
-        )
-        .cast("long")
-        .alias("idf6"),
-    )
-    scored = tf.join(F.broadcast(idf), "term").select(
-        "doc_id", "term", (F.col("tf") * F.col("idf6")).alias("score")
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), "term")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= TFIDF_TOPK)
-        .select("doc_id", "term", "score", "rn")
+    return tfidf(
+        table(spark, sf_dir, "documents"), "doc_id", "text", TFIDF_TOPK
     )
 
 
@@ -561,6 +583,46 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ohlc(
+    df: DataFrame,
+    val_col: str,
+    order_col: str,
+    bucket_col: str,
+    by: list[str] | None = None,
+    tie_cols: list[str] | None = None,
+) -> DataFrame:
+    """OHLC resampling of ANY tick frame (ts_ohlc's algebra with columns
+    parameterized) — the financial bar-chart aggregate: per (by, bucket),
+    the first/last/extreme values plus tick count and summed volume.
+    Pre-compute the bucket column (e.g. date_trunc('hour', ts)); pass
+    tie_cols so open/close are total-order deterministic.  Open/close
+    come from tie-safe row_number flags folded into the same aggregate —
+    both windows and the groupBy share one (by, bucket) partitioning, so
+    the whole kernel is a single Exchange.  Open/close/high/low are
+    UNROUNDED single values; only the order-sensitive volume sum goes
+    through the decimal quantizer.  Returns
+    (by..., bucket, open, high, low, close, n_ticks, volume)."""
+    by = by or []
+    tie_cols = tie_cols or []
+    check_free(df.columns, "rn_a", "rn_d")
+    pw = Window.partitionBy(*by, bucket_col)
+    w_a = pw.orderBy(F.col(order_col).asc(), *[F.col(c).asc() for c in tie_cols])
+    w_d = pw.orderBy(
+        F.col(order_col).desc(), *[F.col(c).desc() for c in tie_cols]
+    )
+    flagged = df.withColumn("rn_a", F.row_number().over(w_a)).withColumn(
+        "rn_d", F.row_number().over(w_d)
+    )
+    return flagged.groupBy(*by, bucket_col).agg(
+        F.max(F.when(F.col("rn_a") == 1, F.col(val_col))).alias("open"),
+        F.max(val_col).alias("high"),
+        F.min(val_col).alias("low"),
+        F.max(F.when(F.col("rn_d") == 1, F.col(val_col))).alias("close"),
+        F.count(F.lit(1)).alias("n_ticks"),
+        r4(dsum(F.col(val_col))).alias("volume"),
+    )
+
+
 @register(
     "ts_ohlc",
     oracle=f"""
@@ -596,20 +658,7 @@ def ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").withColumn(
         "bucket", F.date_trunc("hour", "ts")
     )
-    pw = Window.partitionBy("event_type", "bucket")
-    w_a = pw.orderBy("ts", "event_id")
-    w_d = pw.orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    flagged = ev.withColumn("rn_a", F.row_number().over(w_a)).withColumn(
-        "rn_d", F.row_number().over(w_d)
-    )
-    return flagged.groupBy("event_type", "bucket").agg(
-        F.max(F.when(F.col("rn_a") == 1, F.col("value"))).alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max(F.when(F.col("rn_d") == 1, F.col("value"))).alias("close"),
-        F.count(F.lit(1)).alias("n_ticks"),
-        r4(dsum(F.col("value"))).alias("volume"),
-    )
+    return ohlc(ev, "value", "ts", "bucket", ["event_type"], ["event_id"])
 
 
 PII_EMAIL = "[a-z0-9._]+@[a-z0-9.-]+"
@@ -1124,6 +1173,39 @@ def snk_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def benford(df: DataFrame, val_col: str) -> DataFrame:
+    """Benford's-law first-digit audit of ANY numeric column >= 1
+    (audit_benford's algebra): observed first-digit shares against the
+    expected log10(1 + 1/d) — the financial-data-quality screen for
+    generated or corrupted values.  Rows below 1 drop (no leading
+    digit).  Returns (d, n_obs, observed, expected) for digits present.
+
+    Scale shape: one scan -> 9-group aggregate + broadcast total."""
+    li = df.filter(F.col(val_col) >= 1)
+    digits = li.select(
+        F.substring(
+            F.floor(F.col(val_col)).cast("long").cast("string"), 1, 1
+        )
+        .cast("int")
+        .alias("d")
+    )
+    tot = digits.agg(F.count(F.lit(1)).alias("n_total"))
+    expected = F.round(F.log10(1 + 1 / F.col("d")), 4)
+    return (
+        digits.groupBy("d")
+        .agg(F.count(F.lit(1)).alias("n_obs"))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "d",
+            "n_obs",
+            r4(F.col("n_obs").cast("double") / F.col("n_total")).alias(
+                "observed"
+            ),
+            expected.alias("expected"),
+        )
+    )
+
+
 @register(
     "audit_benford",
     oracle="""
@@ -1147,26 +1229,4 @@ def audit_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shares are single IEEE divisions of exact counts; expected values
     are closed-form.  One tiny 9-row aggregate + a broadcast 1-row
     total."""
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_extendedprice") >= 1)
-    digits = li.select(
-        F.substring(
-            F.floor(F.col("l_extendedprice")).cast("long").cast("string"), 1, 1
-        )
-        .cast("int")
-        .alias("d")
-    )
-    tot = digits.agg(F.count(F.lit(1)).alias("n_total"))
-    expected = F.round(F.log10(1 + 1 / F.col("d")), 4)
-    return (
-        digits.groupBy("d")
-        .agg(F.count(F.lit(1)).alias("n_obs"))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "d",
-            "n_obs",
-            r4(F.col("n_obs").cast("double") / F.col("n_total")).alias(
-                "observed"
-            ),
-            expected.alias("expected"),
-        )
-    )
+    return benford(table(spark, sf_dir, "lineitem"), "l_extendedprice")

@@ -804,6 +804,29 @@ def fn_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def dow_hour_heatmap(
+    df: DataFrame,
+    ts_col: str,
+    val_col: str | None = None,
+) -> DataFrame:
+    """Seasonality heatmap of ANY timestamp column (events_dow_hour's
+    algebra with columns parameterized): row count (and optionally
+    summed value) by (ISO weekday, hour-of-day) — the load-profile
+    matrix behind capacity planning and anomaly baselines.  Weekday is
+    weekday()+1 (Monday=1, the ISO convention — dayofweek() is NOT
+    portable across engines).  Returns (dow, hr, n[, total_value]).
+
+    Scale: map-side extraction, one 168-key aggregate — the cheapest
+    shuffle there is."""
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if val_col is not None:
+        aggs.append(r4(dsum(F.col(val_col))).alias("total_value"))
+    return df.groupBy(
+        (F.weekday(ts_col) + 1).cast("int").alias("dow"),
+        F.hour(ts_col).cast("int").alias("hr"),
+    ).agg(*aggs)
+
+
 @register(
     "events_dow_hour",
     oracle=f"""
@@ -822,11 +845,4 @@ def events_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Monday=1) — pinned here because dayofweek() does NOT (Sunday=1
     there, Sunday=0 in DuckDB's dayofweek).  Map-side extraction, one
     168-key aggregate: the cheapest shuffle there is."""
-    ev = table(spark, sf_dir, "events")
-    return ev.groupBy(
-        (F.weekday("ts") + 1).cast("int").alias("dow"),
-        F.hour("ts").cast("int").alias("hr"),
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        r4(dsum(F.col("value"))).alias("total_value"),
-    )
+    return dow_hour_heatmap(table(spark, sf_dir, "events"), "ts", "value")

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .. import catalog
 from ..catalog import table
 from ..registry import register
-from ._helpers import he4, pin, sql_he4
+from ._helpers import check_free, he4, pin, sql_he4
 
 DEC12 = "decimal(38,12)"
 SQRT365 = repr(math.sqrt(365.0))
@@ -970,6 +970,38 @@ def fn_collate_lcase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BPE_TOPK = 50
 
+def bpe_merge_candidates(
+    df: DataFrame,
+    text_col: str,
+    k: int = 50,
+) -> DataFrame:
+    """Top-k adjacent character-pair merge candidates across ANY text
+    column (bpe_merge_topk's algebra with k parameterized) — one round
+    of distributed BPE training.  Returns (pair, n_pair, rn), tie-safe
+    (count desc, pair asc)."""
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    words = df.select(
+        F.explode(F.split(text_col, " ")).alias("w")
+    ).filter(F.length("w") >= 2)
+    pairs = words.select(
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.length("w") - 1),
+                lambda i: F.col("w").substr(i, F.lit(2)),
+            )
+        ).alias("pair")
+    )
+    counted = pairs.groupBy("pair").agg(
+        F.count(F.lit(1)).cast("long").alias("n_pair")
+    )
+    top = counted.orderBy(
+        F.col("n_pair").desc(), F.col("pair")
+    ).limit(k)
+    w = Window.orderBy(F.col("n_pair").desc(), F.col("pair"))
+    return top.withColumn("rn", F.row_number().over(w).cast("int"))
+
+
 @register(
     "bpe_merge_topk",
     oracle=f"""
@@ -1001,26 +1033,9 @@ def bpe_merge_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen, no UDF); one combinable count shuffle on the pair key
     (vocabulary-bounded cardinality: |charset|^2); the global top-k is
     a TakeOrderedAndProject, never a full sort."""
-    d = table(spark, sf_dir, "documents")
-    words = d.select(
-        F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.length("w") >= 2)
-    pairs = words.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("w") - 1),
-                lambda i: F.col("w").substr(i, F.lit(2)),
-            )
-        ).alias("pair")
+    return bpe_merge_candidates(
+        table(spark, sf_dir, "documents"), "text", _BPE_TOPK
     )
-    counted = pairs.groupBy("pair").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pair")
-    )
-    top = counted.orderBy(
-        F.col("n_pair").desc(), F.col("pair")
-    ).limit(_BPE_TOPK)
-    w = Window.orderBy(F.col("n_pair").desc(), F.col("pair"))
-    return top.withColumn("rn", F.row_number().over(w).cast("int"))
 
 
 # ---------------------------------------------------------------------------
@@ -1095,6 +1110,50 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text_char_trigram_lm — char-trigram LM score per document
 # ---------------------------------------------------------------------------
 
+def char_trigram_score(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """Per-document average log-probability under the corpus char-trigram
+    MLE model on ANY (id, text) table (text_char_trigram_lm's algebra) —
+    the cheap LM quality / language-fit score.  Integer micro-nat
+    quantization; the model is vocabulary-bounded, pinned, broadcast.
+    Returns (id_col, n_trigrams, avg_logp)."""
+    check_free([id_col], "tri", "c", "total", "lp6")
+    d = df.filter(F.length(text_col) >= 3)
+    tris = d.select(
+        id_col,
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(1), F.length(text_col) - 2),
+                lambda i: F.col(text_col).substr(i, F.lit(3)),
+            )
+        ).alias("tri"),
+    )
+    model = pin(
+        tris.groupBy("tri")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    total = model.agg(F.sum("c").cast("long").alias("total"))
+    model_t = model.crossJoin(F.broadcast(total))
+    scored = tris.join(F.broadcast(model_t), "tri").select(
+        id_col,
+        F.floor(
+            F.ln(F.col("c").cast("double") / F.col("total")) * 1000000
+            + F.lit(0.5)
+        )
+        .cast("long")
+        .alias("lp6"),
+    )
+    return scored.groupBy(id_col).agg(
+        F.count(F.lit(1)).cast("long").alias("n_trigrams"),
+        he4(
+            F.sum("lp6").cast("double") / 1000000 / F.count(F.lit(1))
+        ).alias("avg_logp"),
+    )
+
+
 @register(
     "text_char_trigram_lm",
     oracle=f"""
@@ -1132,46 +1191,16 @@ def text_char_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into the scoring join, so the corpus is scanned twice
     (model build + scoring) and shuffled only on doc_id for the final
     combinable aggregate."""
-    d = table(spark, sf_dir, "documents").filter(F.length("text") >= 3)
     # scan-spread gate (r14, guide §2.5): both tokenize passes (model
     # build + scoring) explode ~4M substr trigrams inside the scan
     # stage, and documents is one parquet row group at the benched SFs —
     # each pass ran as ONE task.  The footer-gated repartition spreads
     # both (2.03 -> 0.48 s warm at sf0.1); never fires at warehouse
-    # scale.
+    # scale.  The kernel's length filter pushes below it.
     from .llm_pipeline import _spread_docs
 
-    d = _spread_docs(spark, sf_dir, d)
-    tris = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.length("text") - 2),
-                lambda i: F.col("text").substr(i, F.lit(3)),
-            )
-        ).alias("tri"),
-    )
-    model = pin(
-        tris.groupBy("tri")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    total = model.agg(F.sum("c").cast("long").alias("total"))
-    model_t = model.crossJoin(F.broadcast(total))
-    scored = tris.join(F.broadcast(model_t), "tri").select(
-        "doc_id",
-        F.floor(
-            F.ln(F.col("c").cast("double") / F.col("total")) * 1000000
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("lp6"),
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_trigrams"),
-        he4(
-            F.sum("lp6").cast("double") / 1000000 / F.count(F.lit(1))
-        ).alias("avg_logp"),
-    )
+    d = _spread_docs(spark, sf_dir, table(spark, sf_dir, "documents"))
+    return char_trigram_score(d, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -1180,6 +1209,48 @@ def text_char_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BOILER_MIN_DOCS = 5
 _BOILER_MIN_LEN = 10
+
+def boilerplate_sentences(
+    df: DataFrame,
+    group_col: str,
+    id_col: str,
+    text_col: str,
+    min_docs: int = 5,
+    min_len: int = 10,
+) -> DataFrame:
+    """Boilerplate audit per group on ANY (group, id, text) table
+    (corpus_boilerplate_sentences' algebra with thresholds
+    parameterized): sentences recurring in >= min_docs distinct
+    documents of the same group — the cleanup pass document-level dedup
+    cannot see.  Returns (group_col, n_distinct_sentences,
+    n_boilerplate, boilerplate_share).
+
+    Scale: sentence explode is map-side; the (group, sentence)
+    aggregate is one combinable shuffle keyed well above group
+    cardinality (no skew funnel); the distinct-doc count inside it is
+    the one Expand pass.  Spark's split() drops trailing empties where
+    DuckDB keeps them — the length filter makes both sides identical
+    before anything counts."""
+    check_free([group_col, id_col], "s", "sent", "n_docs")
+    sents = df.select(
+        group_col,
+        id_col,
+        F.explode(F.split(text_col, r"\.\s+")).alias("s"),
+    ).select(
+        group_col, id_col, F.trim("s").alias("sent")
+    ).filter(F.length("sent") >= min_len)
+    per_sent = sents.groupBy(group_col, "sent").agg(
+        F.countDistinct(id_col).cast("long").alias("n_docs")
+    )
+    boiler = F.count_if(F.col("n_docs") >= min_docs)
+    return per_sent.groupBy(group_col).agg(
+        F.count(F.lit(1)).cast("long").alias("n_distinct_sentences"),
+        boiler.cast("long").alias("n_boilerplate"),
+        he4(boiler.cast("double") / F.count(F.lit(1))).alias(
+            "boilerplate_share"
+        ),
+    )
+
 
 @register(
     "corpus_boilerplate_sentences",
@@ -1217,22 +1288,7 @@ def corpus_boilerplate_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one Expand pass.  Spark's split() drops trailing empties where
     DuckDB keeps them — the length filter makes both sides identical
     before anything counts."""
-    d = table(spark, sf_dir, "documents")
-    sents = d.select(
-        "source",
-        "doc_id",
-        F.explode(F.split("text", r"\.\s+")).alias("s"),
-    ).select(
-        "source", "doc_id", F.trim("s").alias("sent")
-    ).filter(F.length("sent") >= _BOILER_MIN_LEN)
-    per_sent = sents.groupBy("source", "sent").agg(
-        F.countDistinct("doc_id").cast("long").alias("n_docs")
-    )
-    boiler = F.count_if(F.col("n_docs") >= _BOILER_MIN_DOCS)
-    return per_sent.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_distinct_sentences"),
-        boiler.cast("long").alias("n_boilerplate"),
-        he4(boiler.cast("double") / F.count(F.lit(1))).alias(
-            "boilerplate_share"
-        ),
+    return boilerplate_sentences(
+        table(spark, sf_dir, "documents"), "source", "doc_id", "text",
+        _BOILER_MIN_DOCS, _BOILER_MIN_LEN,
     )

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import register_views, table
 from ..registry import register
 from ..session import memo
-from ._helpers import he4, pin, sql_he4
+from ._helpers import check_free, he4, pin, sql_he4
 from .llm_pipeline import N_BANDS, N_MINHASH, _dn_sig_sql, _tokens
 
 DEC12 = "decimal(38,12)"
@@ -638,6 +638,36 @@ def price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
 # retention_triangle — cohort-month x age retention counts
 # ---------------------------------------------------------------------------
 
+def retention_matrix(
+    df: DataFrame,
+    entity_col: str,
+    ts_col: str,
+) -> DataFrame:
+    """Cohort retention triangle on ANY (entity, timestamp) activity
+    table (retention_triangle's algebra with entity/time parameterized):
+    entities cohorted by first-activity month, counted distinct at each
+    month-age since.  Returns (cohort_month, age_months, n_active).
+
+    Scale shape: first-activity frame is one combinable groupBy on the
+    entity key; the join back is co-partitioned on the same key; output
+    is calendar^2-bounded (months x ages), never fact-sized."""
+    check_free([entity_col], "mo", "m0")
+    o = df.select(
+        entity_col, F.date_trunc("month", F.col(ts_col)).alias("mo")
+    )
+    first = o.groupBy(entity_col).agg(F.min("mo").alias("m0"))
+    return (
+        o.join(first, entity_col)
+        .groupBy(
+            F.col("m0").alias("cohort_month"),
+            F.months_between(F.col("mo"), F.col("m0")).cast("int").alias(
+                "age_months"
+            ),
+        )
+        .agg(F.countDistinct(entity_col).cast("long").alias("n_active"))
+    )
+
+
 @register(
     "retention_triangle",
     oracle="""
@@ -663,19 +693,8 @@ def retention_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer key; the join back is a co-partitioned hash join on the
     same key; output is calendar^2-bounded (months x ages), never
     fact-sized."""
-    o = table(spark, sf_dir, "orders").select(
-        "o_custkey", F.date_trunc("month", F.col("o_orderdate")).alias("mo")
-    )
-    first = o.groupBy("o_custkey").agg(F.min("mo").alias("m0"))
-    return (
-        o.join(first, "o_custkey")
-        .groupBy(
-            F.col("m0").alias("cohort_month"),
-            F.months_between(F.col("mo"), F.col("m0")).cast("int").alias(
-                "age_months"
-            ),
-        )
-        .agg(F.countDistinct("o_custkey").cast("long").alias("n_active"))
+    return retention_matrix(
+        table(spark, sf_dir, "orders"), "o_custkey", "o_orderdate"
     )
 
 

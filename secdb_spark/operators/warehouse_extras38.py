@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from ..catalog import table
 from ..registry import register
 from ..session import scratch_dir
-from ._helpers import he4, pin, sql_he4
+from ._helpers import check_free, he4, pin, sql_he4
 
 D0 = "decimal(38,0)"
 DEC18 = "decimal(38,18)"
@@ -39,6 +39,70 @@ MIX_TEMP = 0.7
 # ---------------------------------------------------------------------------
 # corpus_tfidf_topk — top-k TF-IDF terms per source
 # ---------------------------------------------------------------------------
+
+def tfidf_topk(
+    df: DataFrame,
+    group_col: str,
+    text_col: str,
+    k: int = 5,
+) -> DataFrame:
+    """Top-k TF-IDF terms per group of ANY corpus (corpus_tfidf_topk's
+    algebra with columns and k parameterized) — the domain-signature
+    head a curator reads per source/domain/shard.  idf = ln((n_groups+1) /
+    df) quantized e6; score = tf * idf_q as an exact DECIMAL-widened
+    integer product; ORDER-BY-complete per-group head with term
+    tiebreak.  Returns (group, rk, term, tf, score_q).
+
+    Scale: one tokenize scan; the (group, term) aggregate pins once
+    and feeds both the document-frequency rollup and the scoring join —
+    shuffles are vocabulary-bounded, never corpus-bounded."""
+    check_free([group_col], "term", "tf", "idf_q", "score_q", "rk")
+    toks = (
+        df.select(
+            group_col,
+            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
+        )
+        .filter(F.col("term") != "")
+    )
+    st = pin(
+        toks.groupBy(group_col, "term").agg(
+            F.count(F.lit(1)).cast("long").alias("tf")
+        )
+    )
+    ns = st.agg(
+        (F.count_distinct(group_col) + 1).cast("double").alias("ns")
+    )
+    idf = (
+        st.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .crossJoin(F.broadcast(ns))
+        .select(
+            "term",
+            F.floor(F.log(F.col("ns") / F.col("df")) * 1_000_000 + 0.5)
+            .cast("long")
+            .alias("idf_q"),
+        )
+    )
+    sc = (
+        st.join(idf, "term")
+        .filter(F.col("idf_q") > 0)
+        .select(
+            group_col,
+            "term",
+            "tf",
+            (F.col("tf").cast(D0) * F.col("idf_q").cast(D0))
+            .cast("long")
+            .alias("score_q"),
+        )
+    )
+    w = Window.partitionBy(group_col).orderBy(F.desc("score_q"), "term")
+    return (
+        sc.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(group_col, F.col("rk").cast("int").alias("rk"), "term",
+                "tf", "score_q")
+    )
+
 
 @register(
     "corpus_tfidf_topk",
@@ -84,51 +148,8 @@ def corpus_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one tokenize scan; the (source, term) aggregate pins once
     and feeds both the document-frequency rollup and the scoring join —
     shuffles are vocabulary-bounded, never corpus-bounded."""
-    toks = (
-        table(spark, sf_dir, "documents")
-        .select(
-            "source",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
-        )
-        .filter(F.col("term") != "")
-    )
-    st = pin(
-        toks.groupBy("source", "term").agg(
-            F.count(F.lit(1)).cast("long").alias("tf")
-        )
-    )
-    ns = st.agg(
-        (F.count_distinct("source") + 1).cast("double").alias("ns")
-    )
-    idf = (
-        st.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(ns))
-        .select(
-            "term",
-            F.floor(F.log(F.col("ns") / F.col("df")) * 1_000_000 + 0.5)
-            .cast("long")
-            .alias("idf_q"),
-        )
-    )
-    sc = (
-        st.join(idf, "term")
-        .filter(F.col("idf_q") > 0)
-        .select(
-            "source",
-            "term",
-            "tf",
-            (F.col("tf").cast(D0) * F.col("idf_q").cast(D0))
-            .cast("long")
-            .alias("score_q"),
-        )
-    )
-    w = Window.partitionBy("source").orderBy(F.desc("score_q"), "term")
-    return (
-        sc.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TFIDF_K)
-        .select("source", F.col("rk").cast("int").alias("rk"), "term",
-                "tf", "score_q")
+    return tfidf_topk(
+        table(spark, sf_dir, "documents"), "source", "text", TFIDF_K
     )
 
 
@@ -475,6 +496,71 @@ def join_nearest_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus_token_source_mi — token <-> source mutual information
 # ---------------------------------------------------------------------------
 
+def token_source_mi(
+    df: DataFrame,
+    group_col: str,
+    text_col: str,
+    top_n: int = 40,
+) -> DataFrame:
+    """Token <-> group mutual information over the corpus-wide top-n
+    terms of ANY corpus (corpus_token_source_mi's algebra with columns
+    and head size parameterized) — which head terms are group
+    signatures vs corpus-wide glue.  Joint restricted to the head
+    vocabulary; each cell contributes p(t,g) * ln(p(t,g)/(p(t)p(g))),
+    DEC18-quantized pre-sum; presented in micro-nats.  Returns
+    (term, ct, mi_micro).
+
+    Scale: one tokenize scan into a pinned (term, group) aggregate;
+    the head list is an ORDER-BY-complete top-k that broadcasts back,
+    so every later frame is (head-vocab x groups)-bounded."""
+    check_free([group_col], "term", "c", "ct", "cs", "t")
+    toks = (
+        df.select(
+            group_col,
+            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("term"),
+        )
+        .filter(F.col("term") != "")
+    )
+    cts = pin(
+        toks.groupBy("term", group_col).agg(
+            F.count(F.lit(1)).cast("long").alias("c")
+        )
+    )
+    top = (
+        cts.groupBy("term")
+        .agg(F.sum("c").cast("long").alias("ct"))
+        .orderBy(F.desc("ct"), "term")
+        .limit(top_n)
+    )
+    r = pin(cts.join(F.broadcast(top), "term"))
+    cs = r.groupBy(group_col).agg(F.sum("c").cast("long").alias("cs"))
+    tt = r.agg(F.sum("c").cast("long").alias("t"))
+    cd = F.col("c").cast("double")
+    td = F.col("t").cast("double")
+    contrib = (
+        r.join(cs, group_col)
+        .crossJoin(F.broadcast(tt))
+        .select(
+            "term",
+            "ct",
+            (
+                (cd / td)
+                * F.log(
+                    (cd * td)
+                    / (F.col("ct").cast("double") * F.col("cs").cast("double"))
+                )
+            )
+            .cast(DEC18)
+            .alias("q"),
+        )
+    )
+    return contrib.groupBy("term", "ct").agg(
+        F.floor(F.sum("q").cast("double") * 1_000_000 + 0.5)
+        .cast("long")
+        .alias("mi_micro")
+    )
+
+
 @register(
     "corpus_token_source_mi",
     oracle=f"""
@@ -524,51 +610,8 @@ def corpus_token_source_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one tokenize scan into a pinned (term, source) aggregate;
     the head list is an ORDER-BY-complete top-k that broadcasts back,
     so every later frame is (head-vocab x sources)-bounded."""
-    toks = (
-        table(spark, sf_dir, "documents")
-        .select(
-            "source",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("term"),
-        )
-        .filter(F.col("term") != "")
-    )
-    cts = pin(
-        toks.groupBy("term", "source").agg(
-            F.count(F.lit(1)).cast("long").alias("c")
-        )
-    )
-    top = (
-        cts.groupBy("term")
-        .agg(F.sum("c").cast("long").alias("ct"))
-        .orderBy(F.desc("ct"), "term")
-        .limit(MI_TOP_TERMS)
-    )
-    r = pin(cts.join(F.broadcast(top), "term"))
-    cs = r.groupBy("source").agg(F.sum("c").cast("long").alias("cs"))
-    tt = r.agg(F.sum("c").cast("long").alias("t"))
-    cd = F.col("c").cast("double")
-    td = F.col("t").cast("double")
-    contrib = (
-        r.join(cs, "source")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "term",
-            "ct",
-            (
-                (cd / td)
-                * F.log(
-                    (cd * td)
-                    / (F.col("ct").cast("double") * F.col("cs").cast("double"))
-                )
-            )
-            .cast(DEC18)
-            .alias("q"),
-        )
-    )
-    return contrib.groupBy("term", "ct").agg(
-        F.floor(F.sum("q").cast("double") * 1_000_000 + 0.5)
-        .cast("long")
-        .alias("mi_micro")
+    return token_source_mi(
+        table(spark, sf_dir, "documents"), "source", "text", MI_TOP_TERMS
     )
 
 
@@ -1033,6 +1076,55 @@ WSAMPLE_SALT = "ws:"
 _HEX13 = float(16**13)
 
 
+def weighted_sample(
+    df: DataFrame,
+    key_col: str,
+    weight_col: str,
+    k: int = 20,
+    salt: str = "ws:",
+) -> DataFrame:
+    """Deterministic weighted sampling WITHOUT replacement of ANY keyed
+    frame (sample_weighted_topk's Efraimidis-Spirakis priority sampling
+    with columns, k and salt parameterized): u = md5-uniform(0, 1] of
+    the salted key, priority = -ln(u) / weight, k smallest priorities —
+    weight-proportional, reproducible, and repartition-stable because u
+    is a pure function of the key.  Weights must be positive.  Returns
+    (rk, key_col, key_e12).
+
+    Scale: priorities are map-side expressions fused into the scan; the
+    top-k is TakeOrderedAndProject — partial top-k per partition, never
+    a global sort."""
+    check_free([key_col], "key", "rk")
+    hn = F.conv(
+        F.substring(
+            F.md5(F.concat(F.lit(salt),
+                           F.col(key_col).cast("string"))),
+            1, 13,
+        ),
+        16, 10,
+    ).cast("long")
+    key = -F.log((hn + 1) / F.lit(_HEX13)) / F.col(weight_col)
+    # NULL keys hash to NULL priorities (sort first, hijack the top-k)
+    # and non-positive weights have no ES meaning — excluded (r11
+    # review), not sampled
+    t = df.filter(
+        F.col(key_col).isNotNull() & (F.col(weight_col) > 0)
+    ).select(key_col, key.alias("key"))
+    w = Window.orderBy("key", key_col)
+    return (
+        t.orderBy("key", key_col)
+        .limit(k)
+        .withColumn("rk", F.row_number().over(w))
+        .select(
+            F.col("rk").cast("int").alias("rk"),
+            key_col,
+            F.floor(F.col("key") * 1_000_000_000_000 + 0.5)
+            .cast("long")
+            .alias("key_e12"),
+        )
+    )
+
+
 @register(
     "sample_weighted_topk",
     oracle=f"""
@@ -1066,34 +1158,9 @@ def sample_weighted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort) — the same shape at any corpus size, and the sample is
     stable under repartitioning because u is a pure function of the
     row key."""
-    o = table(spark, sf_dir, "orders")
-    hn = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(WSAMPLE_SALT),
-                           F.col("o_orderkey").cast("string"))),
-            1, 13,
-        ),
-        16, 10,
-    ).cast("long")
-    key = -F.log((hn + 1) / F.lit(_HEX13)) / F.col("o_totalprice")
-    # NULL keys hash to NULL priorities (sort first, hijack the top-k)
-    # and non-positive weights have no ES meaning — excluded (r11
-    # review); vacuous on this corpus, load-bearing on arbitrary ones
-    k = o.filter(
-        F.col("o_orderkey").isNotNull() & (F.col("o_totalprice") > 0)
-    ).select("o_orderkey", key.alias("key"))
-    w = Window.orderBy("key", "o_orderkey")
-    return (
-        k.orderBy("key", "o_orderkey")
-        .limit(WSAMPLE_K)
-        .withColumn("rk", F.row_number().over(w))
-        .select(
-            F.col("rk").cast("int").alias("rk"),
-            "o_orderkey",
-            F.floor(F.col("key") * 1_000_000_000_000 + 0.5)
-            .cast("long")
-            .alias("key_e12"),
-        )
+    return weighted_sample(
+        table(spark, sf_dir, "orders"), "o_orderkey", "o_totalprice",
+        WSAMPLE_K, WSAMPLE_SALT,
     )
 
 

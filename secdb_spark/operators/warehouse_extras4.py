@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..catalog import register_views, table
 from ..registry import register
-from ._helpers import pin, dsum_scaled, sql_dsum_scaled
+from ._helpers import check_free, dsum_scaled, pin, sql_dsum_scaled
 from .warehouse_extras2 import MINHASH_SEEDS
 from .warehouse_extras3 import LSH_BANDS, LSH_ROWS_PER_BAND, _sig_sql
 
@@ -313,16 +313,19 @@ _TRI_SQL = f"""
 """
 
 
-def _tri_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, g) word-trigram stream; one tokenize pass, no shuffle."""
-    d = table(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
+def _tri(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id_col, g) word-trigram stream of `df`; one tokenize pass, no
+    shuffle."""
+    check_free(df.columns, "toks")
+    check_free([id_col], "g")
+    d = df.withColumn("toks", F.split(text_col, " "))
     # guard the oracle's static unnest bound AND sequence()'s descending
     # surprise (sequence(0, -1) counts DOWN): only docs with >= 3 tokens
     # generate trigrams, mirroring the oracle's i+2 <= len predicate.
     return (
         d.filter(F.size("toks") >= 3)
         .select(
-            "doc_id",
+            id_col,
             F.explode(
                 F.expr(
                     "transform(sequence(0, size(toks) - 3),"
@@ -330,6 +333,36 @@ def _tri_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g"),
         )
+    )
+
+
+def repetition_score(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """Repeated-trigram fraction of ANY text column per row
+    (text_repetition's algebra with columns parameterized) — the
+    Gopher-style repetition quality gate (high duplicate-n-gram mass
+    flags boilerplate and spam).  rep = 1 - unique/total word trigrams,
+    1e6-quantized after a single double division of two exact counts;
+    rows with fewer than 3 tokens emit no output.  Returns
+    (id, n_tri, n_uniq, rep6).
+
+    Scale: one tokenize scan -> explode -> one hash aggregate on the id
+    (count + count-distinct in the same pass via the distinct-agg
+    rewrite).  No joins, no driver traffic."""
+    tri = _tri(df, id_col, text_col)
+    return tri.groupBy(id_col).agg(
+        F.count(F.lit(1)).alias("n_tri"),
+        F.count_distinct("g").alias("n_uniq"),
+        F.floor(
+            (F.lit(1.0) - F.count_distinct("g").cast("double") / F.count(F.lit(1)))
+            * 1e6
+            + 0.5
+        )
+        .cast("bigint")
+        .alias("rep6"),
     )
 
 
@@ -354,17 +387,38 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id (count + count distinct in the same pass via Spark's
     distinct-agg rewrite).  No joins, no driver traffic; trigram stream
     is ~3x token count and map-side-combines on doc_id."""
-    tri = _tri_spark(spark, sf_dir)
-    return tri.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tri"),
-        F.count_distinct("g").alias("n_uniq"),
+    return repetition_score(table(spark, sf_dir, "documents"), "doc_id", "text")
+
+
+def token_entropy(
+    df: DataFrame,
+    by: list[str],
+    text_col: str,
+) -> DataFrame:
+    """Token-distribution Shannon entropy (nats, 1e6-quantized) of ANY
+    text column per group (text_entropy_tokens' algebra with columns
+    parameterized) — the information-density quality signal: near-zero
+    entropy marks keyword-stuffed or template docs, high entropy marks
+    diverse prose.  H = ln(T) - sum(c*ln c)/T from exact counts; the
+    per-term c*ln(c) terms are DECIMAL(38,12)-quantized before the
+    order-dependent sum (ulp differences in ln land far below the
+    quantization step).  Returns (by..., n_tokens, ent6).
+
+    Scale: tokenize -> two hash aggregates, BOTH map-side combinable —
+    each Exchange carries partial aggregates, never the raw exploded
+    token stream; entirely JVM-side codegen."""
+    check_free(by, "term", "c")
+    tok = df.select(*by, F.explode(F.split(text_col, " ")).alias("term"))
+    tc = tok.groupBy(*by, "term").agg(F.count(F.lit(1)).alias("c"))
+    t = F.sum("c")
+    s = F.sum((F.col("c") * F.log(F.col("c").cast("double"))).cast("decimal(38,12)"))
+    return tc.groupBy(*by).agg(
+        t.cast("bigint").alias("n_tokens"),
         F.floor(
-            (F.lit(1.0) - F.count_distinct("g").cast("double") / F.count(F.lit(1)))
-            * 1e6
-            + 0.5
+            (F.log(t.cast("double")) - s.cast("double") / t) * 1e6 + 0.5
         )
         .cast("bigint")
-        .alias("rep6"),
+        .alias("ent6"),
     )
 
 
@@ -399,19 +453,38 @@ def text_entropy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates, never the raw exploded token stream — at Zipf-heavy 100
     TB corpora the first combine is the one that matters.  Entirely
     JVM-side codegen; no UDFs, no driver traffic."""
-    tok = table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    )
-    tc = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("c"))
-    t = F.sum("c")
-    s = F.sum((F.col("c") * F.log(F.col("c").cast("double"))).cast("decimal(38,12)"))
-    return tc.groupBy("doc_id").agg(
-        t.cast("bigint").alias("n_tokens"),
-        F.floor(
-            (F.log(t.cast("double")) - s.cast("double") / t) * 1e6 + 0.5
-        )
+    return token_entropy(table(spark, sf_dir, "documents"), ["doc_id"], "text")
+
+
+def lexical_diversity(
+    df: DataFrame,
+    by: list[str],
+    text_col: str,
+) -> DataFrame:
+    """Lexical-diversity profile of ANY text column per group
+    (text_ttr's algebra with columns parameterized): type-token ratio
+    and hapax-legomenon fraction, both 1e6-quantized ratios of exact
+    whitespace-token counts.  Low TTR + low hapax flags repetitive
+    machine-generated text — the classic cheap companions to the
+    repetition gate in corpus curation.  Returns (by..., n_tokens,
+    n_types, n_hapax, ttr6, hapax6).
+
+    Scale: two cascaded map-side-combinable aggregates ((by, term) then
+    by) — partial-agg before every Exchange, all codegen."""
+    check_free(by, "term", "c")
+    tok = df.select(*by, F.explode(F.split(text_col, " ")).alias("term"))
+    tc = tok.groupBy(*by, "term").agg(F.count(F.lit(1)).alias("c"))
+    types = F.count(F.lit(1))
+    toks = F.sum("c")
+    hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
+    return tc.groupBy(*by).agg(
+        toks.cast("bigint").alias("n_tokens"),
+        types.cast("bigint").alias("n_types"),
+        hapax.cast("bigint").alias("n_hapax"),
+        F.floor(types.cast("double") / toks * 1e6 + 0.5).cast("bigint").alias("ttr6"),
+        F.floor(hapax.cast("double") / types * 1e6 + 0.5)
         .cast("bigint")
-        .alias("ent6"),
+        .alias("hapax6"),
     )
 
 
@@ -443,22 +516,7 @@ def text_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: same two map-side-combinable aggregates as
     text_entropy_tokens — partial-agg before every Exchange, all
     codegen."""
-    tok = table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    )
-    tc = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("c"))
-    types = F.count(F.lit(1))
-    toks = F.sum("c")
-    hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
-    return tc.groupBy("doc_id").agg(
-        toks.cast("bigint").alias("n_tokens"),
-        types.cast("bigint").alias("n_types"),
-        hapax.cast("bigint").alias("n_hapax"),
-        F.floor(types.cast("double") / toks * 1e6 + 0.5).cast("bigint").alias("ttr6"),
-        F.floor(hapax.cast("double") / types * 1e6 + 0.5)
-        .cast("bigint")
-        .alias("hapax6"),
-    )
+    return lexical_diversity(table(spark, sf_dir, "documents"), ["doc_id"], "text")
 
 
 CORPUS_NGRAM_TOPK = 50
@@ -484,7 +542,7 @@ def corpus_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: explode -> single hash aggregate on the trigram key
     (count + distinct-doc in one pass) -> TakeOrderedAndProject for the
     bounded top-k: partial top-k per partition, never a global sort."""
-    tri = _tri_spark(spark, sf_dir)
+    tri = _tri(table(spark, sf_dir, "documents"), "doc_id", "text")
     return (
         tri.groupBy(F.col("g").alias("trigram"))
         .agg(
@@ -1304,6 +1362,42 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 SKEW_TOPK = 5
 
 
+def skew_report(
+    df: DataFrame,
+    key_col: str,
+    k: int = 20,
+) -> DataFrame:
+    """Join-key skew diagnostics for ANY key column (data_skew_report's
+    algebra with the column and k parameterized): the k hottest values
+    with their row share (ppm) and multiple-of-mean (percent) — the
+    report that decides whether a planned join needs salting or AQE
+    skew splitting.  All ratios via integer division of exact counts
+    (no floats at all).  Returns (key, cnt, share_ppm, x_mean_pct).
+
+    Scale: one map-side-combinable key count, a broadcast-sized scalar
+    total cross-joined in, and bounded top-k (TakeOrderedAndProject) —
+    the profiling pass a 100 TB ETL runs BEFORE choosing its join
+    strategy."""
+    counts = df.groupBy(F.col(key_col).alias("key")).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    tot = counts.agg(
+        F.sum("cnt").cast("bigint").alias("n"),
+        F.count(F.lit(1)).cast("bigint").alias("nk"),
+    )
+    return (
+        counts.crossJoin(F.broadcast(tot))
+        .select(
+            "key",
+            "cnt",
+            F.expr("CAST(cnt * 1000000 div n AS BIGINT)").alias("share_ppm"),
+            F.expr("CAST(cnt * 100 * nk div n AS BIGINT)").alias("x_mean_pct"),
+        )
+        .orderBy(F.desc("cnt"), "key")
+        .limit(k)
+    )
+
+
 @register(
     "data_skew_report",
     oracle=f"""
@@ -1332,22 +1426,4 @@ def data_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar total cross-joined in, and bounded top-k
     (TakeOrderedAndProject).  This is the profiling pass a 100 TB ETL
     runs BEFORE choosing its join strategy."""
-    li = table(spark, sf_dir, "lineitem")
-    k = li.groupBy(F.col("l_partkey").alias("key")).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    tot = k.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.count(F.lit(1)).cast("bigint").alias("nk"),
-    )
-    return (
-        k.crossJoin(F.broadcast(tot))
-        .select(
-            "key",
-            "cnt",
-            F.expr("CAST(cnt * 1000000 div n AS BIGINT)").alias("share_ppm"),
-            F.expr("CAST(cnt * 100 * nk div n AS BIGINT)").alias("x_mean_pct"),
-        )
-        .orderBy(F.desc("cnt"), "key")
-        .limit(SKEW_TOPK)
-    )
+    return skew_report(table(spark, sf_dir, "lineitem"), "l_partkey", SKEW_TOPK)

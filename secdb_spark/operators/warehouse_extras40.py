@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import table
 from ..registry import register
-from ._helpers import he4, pin, sql_he4
+from ._helpers import check_free, he4, pin, sql_he4
 
 #: sliding-window chunking geometry (text_chunk_sliding): window chars /
 #: stride chars — 50-char overlap so retrieval never loses a boundary
@@ -32,6 +32,51 @@ DUP_NGRAM_N = 5
 # ---------------------------------------------------------------------------
 # doc_script_mix — character-class composition per source
 # ---------------------------------------------------------------------------
+
+def script_mix(df: DataFrame, group_cols: list[str], text_col: str) -> DataFrame:
+    """Character-class composition per group over ANY text column
+    (doc_script_mix's algebra with the grouping parameterized): letter /
+    digit / space / other shares of total characters via the
+    strip-and-diff regex idiom.  Returns (group_cols..., n_docs,
+    n_chars, letter_share, digit_share, space_share, other_share),
+    shares he4.
+
+    Scale: map-side regexps reduce each row to four ints at the scan;
+    ONE combinable aggregate keyed by the group."""
+    check_free(group_cols, "n", "n_letter", "n_digit", "n_space")
+
+    def stripped(pat: str):
+        return F.length(text_col) - F.length(
+            F.regexp_replace(F.col(text_col), pat, "")
+        )
+
+    c = df.select(
+        *group_cols,
+        F.length(text_col).alias("n"),
+        stripped("[A-Za-z]").alias("n_letter"),
+        stripped("[0-9]").alias("n_digit"),
+        stripped("[ ]").alias("n_space"),
+    )
+    tot = F.sum("n")
+    return c.groupBy(*group_cols).agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        tot.cast("long").alias("n_chars"),
+        he4(F.sum("n_letter").cast("double") / tot.cast("double")).alias(
+            "letter_share"
+        ),
+        he4(F.sum("n_digit").cast("double") / tot.cast("double")).alias(
+            "digit_share"
+        ),
+        he4(F.sum("n_space").cast("double") / tot.cast("double")).alias(
+            "space_share"
+        ),
+        he4(
+            (tot - F.sum("n_letter") - F.sum("n_digit") - F.sum("n_space"))
+            .cast("double")
+            / tot.cast("double")
+        ).alias("other_share"),
+    )
+
 
 @register(
     "doc_script_mix",
@@ -74,39 +119,7 @@ def doc_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure map-side regexp expressions fused into the scan, then
     ONE combinable aggregate keyed by source — no UDF, no shuffle of
     text (the regexps reduce each doc to four ints at the scan)."""
-    d = table(spark, sf_dir, "documents")
-
-    def stripped(pat: str):
-        return F.length("text") - F.length(
-            F.regexp_replace(F.col("text"), pat, "")
-        )
-
-    c = d.select(
-        "source",
-        F.length("text").alias("n"),
-        stripped("[A-Za-z]").alias("n_letter"),
-        stripped("[0-9]").alias("n_digit"),
-        stripped("[ ]").alias("n_space"),
-    )
-    tot = F.sum("n")
-    return c.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        tot.cast("long").alias("n_chars"),
-        he4(F.sum("n_letter").cast("double") / tot.cast("double")).alias(
-            "letter_share"
-        ),
-        he4(F.sum("n_digit").cast("double") / tot.cast("double")).alias(
-            "digit_share"
-        ),
-        he4(F.sum("n_space").cast("double") / tot.cast("double")).alias(
-            "space_share"
-        ),
-        he4(
-            (tot - F.sum("n_letter") - F.sum("n_digit") - F.sum("n_space"))
-            .cast("double")
-            / tot.cast("double")
-        ).alias("other_share"),
-    )
+    return script_mix(table(spark, sf_dir, "documents"), ["source"], "text")
 
 
 # ---------------------------------------------------------------------------
@@ -207,6 +220,66 @@ def _gram_sql() -> str:
     )"""
 
 
+def dup_ngram_share(
+    df: DataFrame,
+    id_col: str,
+    group_col: str,
+    text_col: str,
+    n: int = 5,
+) -> DataFrame:
+    """Cross-document duplicate n-gram OCCUPANCY per group over ANY
+    corpus (corpus_dup_ngram_share's algebra with n parameterized): the
+    share of word-n-gram occurrences in the group whose gram appears in
+    >= 2 distinct documents corpus-wide.  Returns (group_col, n_grams,
+    n_dup_grams, dup_share he4).
+
+    Requires each id to belong to exactly ONE group (true for any
+    provenance column): per-gram doc frequency is then the sum of
+    per-group distinct counts, so the explode is consumed by a single
+    map-side-combinable (gram, group) aggregate and the rollup +
+    classify step run over the much smaller aggregated frame.
+
+    Scale: gram-keyed equi-shuffles only, never all-pairs."""
+    check_free([id_col, group_col], "gram", "n_occ", "n_docs", "nd")
+    w = F.split(text_col, " ")
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(w) - (n - 1)),
+        lambda i: F.concat_ws(
+            " ", *[F.element_at(w, i + k) for k in range(n)]
+        ),
+    )
+    g = df.filter(F.size(w) >= n).select(
+        id_col, group_col, F.explode(grams).alias("gram")
+    )
+    a1 = g.groupBy("gram", group_col).agg(
+        F.count(F.lit(1)).cast("long").alias("n_occ"),
+        F.count_distinct(id_col).cast("long").alias("n_docs"),
+    )
+    # r13 single-lineage rollup (guide §2.4): a1 had TWO consumers (the
+    # per-gram doc-frequency rollup and the classify join), and with no
+    # common-subexpression reuse Catalyst executed the explode+aggregate
+    # twice and shuffled the join.  One per-gram aggregate now carries
+    # the doc-frequency AND the per-group occurrence structs (bounded
+    # by the group count) together; the classify step is a map-side
+    # explode of that frame — one gram pass, no join.
+    per_gram = a1.groupBy("gram").agg(
+        F.sum("n_docs").cast("long").alias("nd"),
+        F.collect_list(F.struct(group_col, "n_occ")).alias("per_src"),
+    )
+    j = per_gram.select("nd", F.explode("per_src").alias("s")).select(
+        F.col(f"s.{group_col}").alias(group_col),
+        F.col("s.n_occ").alias("n_occ"),
+        "nd",
+    )
+    dup = F.sum(F.when(F.col("nd") >= 2, F.col("n_occ")).otherwise(0))
+    tot = F.sum("n_occ")
+    return j.groupBy(group_col).agg(
+        tot.cast("long").alias("n_grams"),
+        dup.cast("long").alias("n_dup_grams"),
+        he4(dup.cast("double") / tot.cast("double")).alias("dup_share"),
+    )
+
+
 @register(
     "corpus_dup_ngram_share",
     oracle=f"""
@@ -250,48 +323,48 @@ def corpus_dup_ngram_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm_pipeline import _spread_docs
 
     d = _spread_docs(spark, sf_dir, table(spark, sf_dir, "documents"))
-    w = F.split("text", " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(w) - (DUP_NGRAM_N - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(w, i + k) for k in range(DUP_NGRAM_N)]
-        ),
-    )
-    g = d.filter(F.size(w) >= DUP_NGRAM_N).select(
-        "doc_id", "source", F.explode(grams).alias("gram")
-    )
-    a1 = g.groupBy("gram", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_occ"),
-        F.count_distinct("doc_id").cast("long").alias("n_docs"),
-    )
-    # r13 single-lineage rollup (guide §2.4): a1 had TWO consumers (the
-    # per-gram doc-frequency rollup and the classify join), and with no
-    # common-subexpression reuse Catalyst executed the explode+aggregate
-    # twice and shuffled the join.  One per-gram aggregate now carries
-    # the doc-frequency AND the per-source occurrence structs (bounded
-    # by the source count) together; the classify step is a map-side
-    # explode of that frame — one gram pass, no join.
-    per_gram = a1.groupBy("gram").agg(
-        F.sum("n_docs").cast("long").alias("nd"),
-        F.collect_list(F.struct("source", "n_occ")).alias("per_src"),
-    )
-    j = per_gram.select("nd", F.explode("per_src").alias("s")).select(
-        F.col("s.source").alias("source"),
-        F.col("s.n_occ").alias("n_occ"),
-        "nd",
-    )
-    dup = F.sum(F.when(F.col("nd") >= 2, F.col("n_occ")).otherwise(0))
-    tot = F.sum("n_occ")
-    return j.groupBy("source").agg(
-        tot.cast("long").alias("n_grams"),
-        dup.cast("long").alias("n_dup_grams"),
-        he4(dup.cast("double") / tot.cast("double")).alias("dup_share"),
-    )
+    return dup_ngram_share(d, "doc_id", "source", "text", DUP_NGRAM_N)
 
 
 # ---------------------------------------------------------------------------
 # text_chunk_sliding — overlapping fixed-window chunking (RAG shape)
 # ---------------------------------------------------------------------------
+
+def chunk_sliding(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    window: int = 200,
+    stride: int = 150,
+) -> DataFrame:
+    """Sliding-window chunking of ANY text column (text_chunk_sliding's
+    algebra with the geometry parameterized) — window-char chunks every
+    stride chars, each with index, offset, actual length, and md5.
+    chunk_text gives the disjoint-block variant; overlap preserves
+    boundary context for retrieval.  Returns (id_col, chunk_idx,
+    start_pos, chunk_len, chunk_md5).
+
+    Empty (or NULL) texts yield no chunks — the filter below is load-
+    bearing: an unguarded sequence(1, 0) raises at runtime in Spark
+    while SQL generate_series(1, 0) returns no rows (r12 ADVICE).
+
+    Scale: map-only sequence+explode fused into the scan; no shuffle."""
+    if stride <= 0 or window <= 0:
+        raise ValueError("window and stride must be positive")
+    check_free([id_col, text_col], "i")
+    starts = F.sequence(F.lit(1), F.length(text_col), F.lit(stride))
+    ex = df.filter(F.length(text_col) >= 1).select(
+        id_col, text_col, F.explode(starts).alias("i")
+    )
+    chunk = F.col(text_col).substr(F.col("i"), F.lit(window))
+    return ex.select(
+        id_col,
+        F.expr(f"CAST((i - 1) div {stride} + 1 AS INT)").alias("chunk_idx"),
+        F.col("i").cast("long").alias("start_pos"),
+        F.length(chunk).cast("long").alias("chunk_len"),
+        F.md5(chunk).alias("chunk_md5"),
+    )
+
 
 @register(
     "text_chunk_sliding",
@@ -324,18 +397,8 @@ def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty text makes Spark's sequence(1, 0, stride) THROW while the
     oracle's generate_series(1, 0, stride) yields no rows (r12 ADVICE) —
     filtering first gives both engines the same no-chunks answer."""
-    d = table(spark, sf_dir, "documents")
-    starts = F.sequence(F.lit(1), F.length("text"), F.lit(CHUNK_S))
-    ex = d.filter(F.length("text") >= 1).select(
-        "doc_id", "text", F.explode(starts).alias("i")
-    )
-    chunk = F.col("text").substr(F.col("i"), F.lit(CHUNK_W))
-    return ex.select(
-        "doc_id",
-        F.expr(f"CAST((i - 1) div {CHUNK_S} + 1 AS INT)").alias("chunk_idx"),
-        F.col("i").cast("long").alias("start_pos"),
-        F.length(chunk).cast("long").alias("chunk_len"),
-        F.md5(chunk).alias("chunk_md5"),
+    return chunk_sliding(
+        table(spark, sf_dir, "documents"), "doc_id", "text", CHUNK_W, CHUNK_S
     )
 
 

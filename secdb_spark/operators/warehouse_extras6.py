@@ -198,6 +198,10 @@ def autocorr(
     fixed-point first) — e.g. a daily count or a cents total.  Returns
     (by..., n_pairs, acf), round 4.
 
+    A group whose series is constant has zero variance: the closing
+    division then raises DIVIDE_BY_ZERO (Spark's ANSI mode) rather than
+    returning NULL.  Drop constant groups first.
+
     Scale: the lag window and the moment rollup both ride the `by`
     partitioning over the pre-bucketed series, never the raw stream."""
     by = by or []
@@ -280,7 +284,42 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embed_norm — exact L2 norms via a scan-fused quantized array fold
 # ---------------------------------------------------------------------------
 
-NORM_SCALE = 10**12  # x² quantization (unit-scale components, 64 dims)
+NORM_DIGITS = 12  # x² quantization (unit-scale components, 64 dims)
+NORM_SCALE = 10**NORM_DIGITS
+
+
+def embedding_norms(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    scale: int = 12,
+) -> DataFrame:
+    """Exact L2 norm per vector of ANY embedding column (embed_norm's
+    algebra with columns and the fixed-point scale parameterized) — the
+    normalization audit for a vector corpus (cosine kernels assume
+    unit-ish norms; this is how you check).  Each x^2 is one IEEE
+    multiply quantized to a 10^scale fixed-point bigint, so the
+    reduction is EXACT integer addition — order-independent where a raw
+    float fold depends on reduction order.  Returns (id, dim, l2_norm),
+    round 4.
+
+    Scale: the whole kernel is a scan-fused F.aggregate lambda — NO
+    explode, NO shuffle, zero Exchanges; int64 headroom holds
+    unit-scale vectors to ~1e5 dims at scale 12."""
+    q = 10**scale
+    acc = F.aggregate(
+        vec_col,
+        F.lit(0).cast("long"),
+        lambda a, x: a
+        + F.floor(
+            x.cast("double") * x.cast("double") * q + 0.5
+        ).cast("long"),
+    )
+    return df.select(
+        id_col,
+        F.size(vec_col).alias("dim"),
+        r4(F.sqrt(acc.cast("double") / q)).alias("l2_norm"),
+    )
 
 
 @register(
@@ -309,19 +348,8 @@ def embed_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams through whole-stage codegen at scan speed.  Headroom:
     64 dims × unit-scale x² × 1e12 ≈ 6e13 per row — int64 holds vectors
     to ~10^5 dims."""
-    emb = table(spark, sf_dir, "embeddings")
-    acc = F.aggregate(
-        "embedding",
-        F.lit(0).cast("long"),
-        lambda a, x: a
-        + F.floor(
-            x.cast("double") * x.cast("double") * NORM_SCALE + 0.5
-        ).cast("long"),
-    )
-    return emb.select(
-        "vec_id",
-        F.size("embedding").alias("dim"),
-        r4(F.sqrt(acc.cast("double") / NORM_SCALE)).alias("l2_norm"),
+    return embedding_norms(
+        table(spark, sf_dir, "embeddings"), "vec_id", "embedding", NORM_DIGITS
     )
 
 

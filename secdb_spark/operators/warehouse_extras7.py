@@ -165,6 +165,57 @@ def orders_linecount_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 LN_SCALE = 10**6
 
 
+def zipf_slope(
+    df: DataFrame,
+    text_col: str,
+) -> DataFrame:
+    """Zipf slope of ANY corpus' rank-frequency curve
+    (corpus_zipf_slope's algebra with the column parameterized): the
+    least-squares slope of ln(freq) on ln(rank) — natural corpora sit
+    near -1; a slope far from it flags templated/machine-generated
+    text, the corpus-level screen a training-data pipeline runs before
+    accepting a new source.  ln values quantize to 1e6 fixed-point so
+    the regression moments are exact decimal integers (quantized |ln|
+    is bounded ~7.1e8, so the LONG products cannot wrap).  Returns one
+    row (n_terms, zipf_slope).
+
+    Scale: one tokenize scan -> term counts (combinable) -> a rank
+    window over the |vocab|-sized aggregate (model-sized spine) -> one
+    5-moment pass."""
+    tf = (
+        df.select(F.explode(F.split(text_col, " ")).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+    ranked = tf.select(
+        "freq",
+        F.row_number()
+        .over(Window.orderBy(F.desc("freq"), "term"))
+        .alias("rnk"),
+    )
+    x = F.floor(F.log(F.col("rnk").cast("double")) * LN_SCALE + 0.5).cast(
+        "long"
+    )
+    y = F.floor(F.log(F.col("freq").cast("double")) * LN_SCALE + 0.5).cast(
+        "long"
+    )
+    q = ranked.select(x.alias("x"), y.alias("y"))
+    m = q.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("x").cast(D0)).alias("sx"),
+        F.sum(F.col("y").cast(D0)).alias("sy"),
+        F.sum((F.col("x") * F.col("x")).cast(D0)).alias("sxx"),
+        F.sum((F.col("x") * F.col("y")).cast(D0)).alias("sxy"),
+    )
+    nd = F.col("n").cast(D0)
+    num = nd * F.col("sxy") - F.col("sx").cast(D0) * F.col("sy")
+    den = nd * F.col("sxx") - F.col("sx").cast(D0) * F.col("sx")
+    return m.select(
+        F.col("n").cast("long").alias("n_terms"),
+        r4(num.cast("double") / den.cast("double")).alias("zipf_slope"),
+    )
+
+
 @register(
     "corpus_zipf_slope",
     oracle=f"""
@@ -212,39 +263,7 @@ def corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the |vocab|-sized aggregate → one 5-moment pass.  The global
     rank window is the model-sized-spine class (§9): vocabulary, not
     corpus, determines its input."""
-    docs = table(spark, sf_dir, "documents")
-    tf = (
-        docs.select(F.explode(F.split("text", " ")).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    ranked = tf.select(
-        "freq",
-        F.row_number()
-        .over(Window.orderBy(F.desc("freq"), "term"))
-        .alias("rnk"),
-    )
-    x = F.floor(F.log(F.col("rnk").cast("double")) * LN_SCALE + 0.5).cast(
-        "long"
-    )
-    y = F.floor(F.log(F.col("freq").cast("double")) * LN_SCALE + 0.5).cast(
-        "long"
-    )
-    q = ranked.select(x.alias("x"), y.alias("y"))
-    m = q.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast(D0)).alias("sx"),
-        F.sum(F.col("y").cast(D0)).alias("sy"),
-        F.sum((F.col("x") * F.col("x")).cast(D0)).alias("sxx"),
-        F.sum((F.col("x") * F.col("y")).cast(D0)).alias("sxy"),
-    )
-    nd = F.col("n").cast(D0)
-    num = nd * F.col("sxy") - F.col("sx").cast(D0) * F.col("sy")
-    den = nd * F.col("sxx") - F.col("sx").cast(D0) * F.col("sx")
-    return m.select(
-        F.col("n").cast("long").alias("n_terms"),
-        r4(num.cast("double") / den.cast("double")).alias("zipf_slope"),
-    )
+    return zipf_slope(table(spark, sf_dir, "documents"), "text")
 
 
 # ---------------------------------------------------------------------------

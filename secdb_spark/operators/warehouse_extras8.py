@@ -571,6 +571,10 @@ def rolling_corr(
     Quantize non-integer inputs fixed-point first.  Returns
     (by..., order, corr) for rows with a full lookback, round 4.
 
+    A lookback window in which x or y is constant has zero variance:
+    the closing division then raises DIVIDE_BY_ZERO (Spark's ANSI mode)
+    rather than returning NULL.
+
     Scale: a single ROWS frame over the pre-bucketed series."""
     by = by or []
     wo = Window.partitionBy(*by).orderBy(order_col)

@@ -2858,3 +2858,18 @@ def test_interval_islands_duplicate_intervals_one_island(spark):
     ).collect()[0]
     # duplicates of [5,9] are ONE island; [0,1] is the other
     assert row.n_islands == 2 and row.covered == 5 and row.longest == 4
+
+
+def test_ohlc_caller_column_named_like_an_intermediate(spark):
+    """A caller column that shares a name with a column the kernel adds
+    raises ValueError naming it, instead of being silently overwritten
+    (open/close then read row numbers); any other name is an ordinary
+    column."""
+    rows = [(0, 1, 10.0), (0, 2, 30.0), (0, 3, 20.0)]
+    for v in ("v", "_rn_a"):
+        df = spark.createDataFrame(rows, f"b int, t int, {v} double")
+        got = api.ohlc(df, v, "t", "b").collect()[0]
+        assert (got.open, got.high, got.low, got.close) == (10.0, 30.0, 10.0, 20.0)
+    df = spark.createDataFrame(rows, "b int, t int, RN_A double")
+    with pytest.raises(ValueError, match="rn_a"):
+        api.ohlc(df, "RN_A", "t", "b")

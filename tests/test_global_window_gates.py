@@ -68,9 +68,9 @@ OPS_DIR = pathlib.Path(__file__).resolve().parent.parent / "secdb_spark" / "oper
 # the single partition holds an already-reduced frame, not the base scan.
 MODEL_SIZED_ALLOWLIST = {
     ("stats_extras.py", "survival_km"): "ordered and whole-frame windows over the distinct-event-time aggregates (study-duration-bounded)",
-    ("sketch_extras.py", "sample_bottomk"): "row_number over the k-row TakeOrderedAndProject result",
+    ("sketch_extras.py", "bottomk_sample"): "row_number over the k-row TakeOrderedAndProject result",
     ("warehouse_extras4.py", "orders_open_backlog"): "running sum over the per-day aggregate (calendar-bounded)",
-    ("warehouse_extras7.py", "corpus_zipf_slope"): "rank over the top-N term aggregate (N-bounded)",
+    ("warehouse_extras7.py", "zipf_slope"): "rank over the |vocab|-row term-frequency aggregate (vocabulary, not corpus, sizes the window)",
     ("warehouse_extras7.py", "cumulative_entities"): "running sum over the per-day aggregate (calendar-bounded)",
     ("warehouse_extras8.py", "rolling_corr"): "by=None: moment windows over ONE pre-bucketed series; ts_rolling_corr passes the per-day aggregate (calendar-bounded)",
     ("warehouse_extras9.py", "brand_rank_shift"): "ranking windows over the |brands|-row aggregate (model-sized)",
@@ -78,7 +78,7 @@ MODEL_SIZED_ALLOWLIST = {
     ("corpus_extras2.py", "corpus_stopword_coverage"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention)",
     ("warehouse_extras23.py", "key_gap_audit"): "lag over the per-4096-key-block aggregate (|keyrange|/4096-sized; widen KEY_BLOCK for larger key spaces)",
     ("warehouse_extras32.py", "decile_lift_table"): "cumulative-share windows over the 10-row decile aggregate (customer ranking is the bucketed grouped_range_prefix_sum kernel, customer_lorenz_deciles convention)",
-    ("warehouse_extras36.py", "bpe_merge_topk"): "row_number over the 50-row TakeOrderedAndProject result (sample_bottomk convention)",
+    ("warehouse_extras36.py", "bpe_merge_candidates"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention)",
     ("curation_extras2.py", "vocab_topk_coverage"): "rank over the |vocab|-row frequency aggregate (corpus_zipf_slope convention — vocabulary, not corpus, sizes the window)",
     ("warehouse_extras35.py", "ts_macd"): "EWMA lag chains over the |days|-row daily revenue aggregate (calendar-bounded series, win_ewma convention)",
     ("warehouse_extras38.py", "mix_token_budget"): "largest-remainder row_number and whole-frame total over the |sources|-row allocation aggregate (model-sized)",
@@ -94,7 +94,7 @@ MODEL_SIZED_ALLOWLIST = {
     ("warehouse_extras32.py", "part_sourcing_breadth"): "whole-frame share over the <=|nations|-row sourcing-breadth histogram",
     ("warehouse_extras6.py", "mix_temperature"): "whole-frame totals over the |sources|-row count aggregate (model-sized)",
     ("warehouse_extras7.py", "orders_linecount_dist"): "whole-frame total over the lines-per-order histogram (max fan-out rows, ~7 in TPC-H)",
-    ("warehouse_extras38.py", "sample_weighted_topk"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention; priorities are map-side, the orderBy+limit is partial top-k per partition)",
+    ("warehouse_extras38.py", "weighted_sample"): "row_number over the k-row TakeOrderedAndProject result (sample_bottomk convention; priorities are map-side, the orderBy+limit is partial top-k per partition)",
 }
 
 #: functions whose global-window use is the below-gate branch of a

@@ -42,18 +42,18 @@ FROZEN_ROUND_DIV_SITES = {
     ("corpus_extras2.py", "knn_reciprocity"),
     ("curation_extras.py", "chunk_dedup_share"),
     ("curation_extras.py", "doc_quality_gate"),
-    ("curation_extras.py", "embed_matryoshka_truncate"),
+    ("curation_extras.py", "matryoshka_report"),
     ("curation_extras.py", "mix_epoch_upsample"),
     ("curation_extras.py", "source_lang_matrix"),
-    ("curation_extras.py", "text_hapax_ratio"),
+    ("curation_extras.py", "hapax_by_group"),
     ("curation_extras.py", "token_fertility_by_lang"),
     ("econ_extras.py", "chi2_independence"),
     ("econ_extras.py", "peak_to_avg"),
     ("econ_extras.py", "price_elasticity"),
     ("econ_extras.py", "sla_attainment"),
-    ("econ_extras.py", "text_novelty"),
+    ("econ_extras.py", "novelty_score"),
     ("econ_extras.py", "top_decile_share"),
-    ("embed_extras.py", "embed_dim_stats"),
+    ("embed_extras.py", "embedding_dim_stats"),
     ("embed_extras.py", "embed_label_outliers"),
     ("embed_extras.py", "embed_margin"),
     ("eval_extras.py", "ivf_eval"),
@@ -78,7 +78,7 @@ FROZEN_ROUND_DIV_SITES = {
     ("warehouse_extras10.py", "graph_assortativity"),
     ("warehouse_extras10.py", "markov_entropy_rate"),
     ("warehouse_extras10.py", "source_cross_entropy"),
-    ("warehouse_extras10.py", "stickiness_ratio"),
+    ("warehouse_extras10.py", "stickiness"),
     ("warehouse_extras11.py", "retention_halflife"),
     ("warehouse_extras11.py", "supplier_leadtime_drift"),
     ("warehouse_extras11.py", "user_hour_entropy"),
@@ -101,7 +101,7 @@ FROZEN_ROUND_DIV_SITES = {
     ("warehouse_extras18.py", "event_trigram_transitions"),
     ("warehouse_extras19.py", "spearman_corr"),
     ("warehouse_extras2.py", "assoc_rules"),
-    ("warehouse_extras2.py", "audit_benford"),
+    ("warehouse_extras2.py", "benford"),
     ("warehouse_extras2.py", "events_entropy"),
     ("warehouse_extras2.py", "percent_of_total"),
     ("warehouse_extras2.py", "seasonal_decompose_ma"),
@@ -143,7 +143,7 @@ FROZEN_ROUND_DIV_SITES = {
     ("warehouse_extras5.py", "ts_bollinger"),
     ("warehouse_extras6.py", "autocorr"),
     ("warehouse_extras6.py", "mix_temperature"),
-    ("warehouse_extras7.py", "corpus_zipf_slope"),
+    ("warehouse_extras7.py", "zipf_slope"),
     ("warehouse_extras7.py", "events_props_stats"),
     ("warehouse_extras7.py", "moving_median"),
     ("warehouse_extras7.py", "orders_seasonality_index"),

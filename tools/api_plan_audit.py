@@ -176,8 +176,10 @@ def _catalog(api, fx, tmp: str) -> dict:
         "write_partitioned": lambda: api.write_partitioned(
             d, f"{tmp}/wp_out", "domain"
         ),
+        # the 48-byte payload is nf=3 frames of 4 x 4: one 12 x 4 bitmap
         "resize_bitmaps": lambda: api.resize_bitmaps(
-            b, "bid", "payload", "h", "w"
+            b.withColumn("h", F.col("h") * F.col("nf")),
+            "bid", "payload", "h", "w",
         ),
         "sample_frames": lambda: api.sample_frames(
             b, "bid", "payload", "nf", "h", "w"
@@ -643,7 +645,7 @@ def _catalog(api, fx, tmp: str) -> dict:
             ["stage"], "x", "y",
         ),
         "nearest_value_join": lambda: api.nearest_value_join(
-            e, q, "uid", "stage", "val", "qtime", "quote"
+            e, q, "uid", "etime", "val", "qtime", "quote"
         ),
         "token_source_mi": lambda: api.token_source_mi(
             d, "domain", "body", top_n=10
